@@ -55,7 +55,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_end_to_end_airflow_bigquery_spark.plans import QUERIES
-from etl_end_to_end_airflow_bigquery_spark.session import get_spark
+from etl_end_to_end_airflow_bigquery_spark.session import get_spark, local_cpus
 
 # Calibration canary BASKET (VERDICT r10 item 1). The single-query
 # canary under-determined machine drift: in r10 it read "machine 16%
@@ -394,7 +394,7 @@ def main() -> None:
     # record that PERF's per_query/scaling blocks read. Keep the
     # un-suffixed file (its name is part of the stdout contract) AND a
     # c{cpus}-suffixed copy so both runs survive the session.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     with open(local.replace(".json", f"_c{cpus}.json"), "w") as f:
         json.dump(record, f, indent=1)
     # Stdout: ONE scalars-only line (VERDICT r11 item 1). The driver

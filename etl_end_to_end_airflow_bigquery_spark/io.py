@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import TESTDATA_TABLES
+from .session import local_cpus
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -29,10 +30,7 @@ def _tune(spark: SparkSession) -> None:
     """
     try:
         if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_GRAFT_CPUS", "32"),
-            )
+            spark.conf.set("spark.sql.shuffle.partitions", local_cpus())
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     except Exception:

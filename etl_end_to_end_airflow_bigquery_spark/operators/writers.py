@@ -32,16 +32,24 @@ directory doesn't exist):
       v_000001_<uuid>/…parquet          (unpartitioned)
       v_000002_<uuid>/day=d1/…parquet   (partitioned; untouched leaves
                                          hardlink the previous snapshot)
+      v_*/_snapshot_meta.json           ← commit-time sidecar: per-file
+                                         stats, partition spec, layouts,
+                                         and (unpartitioned) the Spark
+                                         row schema
 
 A commit writes a fresh ``v_*`` directory, records it in ``_COMMITS``,
 then flips ``_CURRENT`` with ``os.replace`` (atomic on POSIX; on an
 object store the pointer PUT is the commit and "hardlink" becomes a
 manifest entry — the same reuse trick Iceberg/Delta manifests express).
-Readers resolve the pointer via :func:`read_table`; a reader that
-resolved the previous pointer keeps a fully-intact directory — the last
-``keep_versions`` **committed** versions are retained (the
-Delta/Iceberg snapshot-retention trade: shrink it and a very slow
-reader can lose its snapshot to cleanup, exactly like VACUUM).
+Readers resolve the pointer via :func:`read_table`, which reads an
+unpartitioned snapshot with the schema its sidecar recorded
+(``spark_schema``, copied from the data files' footers at commit) and
+so skips Spark's schema-inference job — the way Delta keeps the table
+schema in its log; any other snapshot falls back to the inferred read.
+A reader that resolved the previous pointer keeps a fully-intact
+directory — the last ``keep_versions`` **committed** versions are
+retained (the Delta/Iceberg snapshot-retention trade: shrink it and a
+very slow reader can lose its snapshot to cleanup, exactly like VACUUM).
 Retention counts only ledger-recorded snapshots, so a crash-orphaned
 ``v_*`` dir (written, never committed) can never evict a genuine
 committed predecessor (ADVICE r03); orphans themselves are swept on the
@@ -202,6 +210,10 @@ def read_table(
     (``io.read_partition_evolved``) — resolved FROM TABLE HISTORY, no
     caller-supplied paths (VERDICT r12 item 3). Time travel works the
     same way: each snapshot carries its own layout map.
+
+    An unpartitioned snapshot whose sidecar records ``spark_schema`` is
+    read with that schema, so the read starts no schema-inference job;
+    every other snapshot is read with Spark's inferred schema.
     """
     if version is None:
         vdir = _resolve_data_dir(path)
@@ -234,6 +246,14 @@ def read_table(
                 "recorded layout"
             )
         return read_partition_evolved(spark, resolved)
+    recorded = (meta or {}).get("spark_schema")
+    if recorded is not None:
+        import json
+
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(json.loads(recorded))
+        return spark.read.schema(schema).parquet(vdir)
     return spark.read.parquet(vdir)
 
 
@@ -591,11 +611,13 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _footer_minmax(fpath: str, cols: list[str] | None = None):
+def _footer_minmax(fpath, cols: list[str] | None = None):
     """(n_rows, mins, maxs) for one parquet file from its FOOTER only —
     the single stats walk shared by :func:`history_file_stats`,
     :func:`file_skip_report` and the commit-time stats manifest
     (code-review r12: per-consumer copies could diverge).
+    ``fpath`` is a path or an already-open ``pyarrow.parquet.ParquetFile``
+    (the manifest census also reads the footer's key-value metadata).
     ``cols=None`` stats EVERY leaf column (the manifest census).
     Partial-stats rule: if ANY row group lacks min/max for a
     requested column, that column's bounds are None (= must-scan) — a
@@ -604,7 +626,7 @@ def _footer_minmax(fpath: str, cols: list[str] | None = None):
     matching rows."""
     import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(fpath)
+    pf = fpath if isinstance(fpath, pq.ParquetFile) else pq.ParquetFile(fpath)
     md = pf.metadata
     if cols is None:
         cols = list(pf.schema_arrow.names)
@@ -621,18 +643,24 @@ def _footer_minmax(fpath: str, cols: list[str] | None = None):
             if st is None or not st.has_min_max:
                 complete[name] = False
                 continue
-            mins[name] = (
-                st.min if name not in mins else min(mins[name], st.min)
-            )
-            maxs[name] = (
-                st.max if name not in maxs else max(maxs[name], st.max)
-            )
+            try:
+                lo, hi = st.min, st.max
+            except NotImplementedError:
+                # pyarrow cannot decode some stats (Spark's INT64-backed
+                # decimal(p<=18)): an unknown bound, not a failed commit
+                complete[name] = False
+                continue
+            mins[name] = lo if name not in mins else min(mins[name], lo)
+            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
     out_min = {c: (mins.get(c) if complete[c] else None) for c in cols}
     out_max = {c: (maxs.get(c) if complete[c] else None) for c in cols}
     return md.num_rows, out_min, out_max
 
 
 _SNAPSHOT_META = "_snapshot_meta.json"
+# Footer key under which Spark's parquet writer stores the row schema as
+# JSON; Spark's own schema inference reads the same key.
+_SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
 _MANIFEST_DIR = "_manifest"  # sharded census parquet (underscore: hidden
                              # from Spark scans like _change_data)
 # Census entries above which the commit-time stats manifest is written
@@ -905,12 +933,14 @@ def _write_snapshot_meta(
         )
     policy = manifest_shard_files
     prev_stats: dict = {}
+    prev_schema = None
     cur = _current_version_name(path)  # pointer not yet flipped
     if cur is not None:
         prev_vdir = os.path.join(path, cur)
         prev_meta = _load_snapshot_meta(prev_vdir)
         if prev_meta:
             prev_stats = _load_census(prev_vdir) or {}
+            prev_schema = prev_meta.get("spark_schema")
             if partition_spec is None:
                 partition_spec = prev_meta.get("partition_spec")
             if layouts is None:
@@ -923,7 +953,10 @@ def _write_snapshot_meta(
                 # mode can't silently revert to inline JSON on its
                 # next maintenance commit
                 policy = prev_meta.get("manifest_shard_files")
+    import pyarrow.parquet as pq
+
     file_stats: dict = {}
+    schemas: set = set()  # Spark row schema per data file; None = absent
     for rel, fpath in _iter_data_files(vdir):
         try:
             st = os.stat(fpath)
@@ -936,8 +969,12 @@ def _write_snapshot_meta(
             and prev.get("bytes") == st.st_size
         ):
             file_stats[rel] = prev
+            schemas.add(prev_schema)
             continue
-        n_rows, mins, maxs = _footer_minmax(fpath)
+        pf = pq.ParquetFile(fpath)
+        raw_schema = (pf.metadata.metadata or {}).get(_SPARK_ROW_META)
+        schemas.add(raw_schema.decode("utf-8") if raw_schema else None)
+        n_rows, mins, maxs = _footer_minmax(pf)
         file_stats[rel] = {
             "n_rows": n_rows,
             "ino": st.st_ino,
@@ -957,6 +994,14 @@ def _write_snapshot_meta(
         # table's sharding policy (inherited above)
         "manifest_shard_files": policy,
     }
+    # The row schema every data file was written with, so read_table can
+    # skip Spark's schema-inference job. Recorded only when it is
+    # unambiguous: one flat layout (hive partition columns would come
+    # from directory names, not footers) and one schema string shared
+    # by all files.
+    only_schema = next(iter(schemas)) if len(schemas) == 1 else None
+    if partition_spec == [] and not layouts and only_schema is not None:
+        meta["spark_schema"] = only_schema
     threshold = MANIFEST_INLINE_MAX if policy is None else policy
     # No writer carries _manifest between snapshots (census is
     # per-snapshot), but remove any stray copy before (re)writing:
@@ -981,7 +1026,6 @@ def _write_snapshot_meta(
         import hashlib
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         rels = sorted(file_stats)
         mdir = os.path.join(vdir, _MANIFEST_DIR)

@@ -14,7 +14,26 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def local_cpus() -> str:
+    """Cores for ``local[n]`` and the shuffle-partition default:
+    ``$SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
+    on. ``bench.py`` names its per-core-count record after the same
+    value, so the record always matches the session it measured."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _default_driver_mem() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` when set, else half of physical memory
+    capped at 48g: a heap sized past the host lets the JVM grow until
+    the kernel kills it instead of collecting garbage."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(_MAX_DRIVER_MEM_MB, phys_mb // 2)}m"
 
 
 def get_spark(
@@ -29,7 +48,7 @@ def get_spark(
     everything set here is cluster-safe (session-scoped SQL conf only,
     plus local[] fallbacks used when no master is configured).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -37,10 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # Read parquet TIMESTAMP (isAdjustedToUTC=false) as NTZ so values
         # match the DuckDB oracle byte-for-byte regardless of host TZ.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
@@ -50,7 +66,7 @@ def get_spark(
     )
     if master is None and "SPARK_MASTER" not in os.environ:
         builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory", _default_driver_mem()
         )
     elif master is not None:
         builder = builder.master(master)

@@ -86,12 +86,26 @@ def payload_dataframe(spark: SparkSession, payload: dict[str, Any]) -> DataFrame
 
     Empty/missing fields survive as nulls — the reference's empty-guard
     (``dags/ FXRate_Reporting_Pipeline.py:41-43``) becomes a downstream
-    filter rather than a control-flow branch.
+    filter rather than a control-flow branch; missing or null ``rates``
+    becomes an empty map.
+
+    The row is handed to the JVM as an Arrow table: a Python-list
+    ``createDataFrame`` goes through ``parallelize`` and runs an extra
+    stage in Python workers on every tick, the Arrow hand-off runs none.
     """
-    row = {
-        "amount": float(payload["amount"]) if payload.get("amount") is not None else None,
-        "base": payload.get("base"),
-        "date": payload.get("date"),
-        "rates": {str(k): float(v) for k, v in (payload.get("rates") or {}).items()},
-    }
-    return spark.createDataFrame([row], schema=API_PAYLOAD_SCHEMA)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    amount = payload.get("amount")
+    # keys folded through a dict first: 1 and "1" collapse to one key
+    rates = {str(k): float(v) for k, v in (payload.get("rates") or {}).items()}
+    tbl = pa.table(
+        {
+            "amount": [float(amount) if amount is not None else None],
+            "base": [payload.get("base")],
+            "date": [payload.get("date")],
+            "rates": [list(rates.items())],
+        },
+        schema=to_arrow_schema(API_PAYLOAD_SCHEMA),
+    )
+    return spark.createDataFrame(tbl, schema=API_PAYLOAD_SCHEMA)

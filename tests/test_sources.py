@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_end_to_end_airflow_bigquery_spark.schemas import RAW_SCHEMA
@@ -44,6 +45,49 @@ def test_missing_fields_survive_as_nulls(spark):
     )
     r = rows.collect()[0]
     assert r.from_cur is None and r.date is None and r.rate == 2.0
+
+
+def _list_payload_frame(spark, payload):
+    """The Python-list construction the Arrow hand-off replaced — the
+    oracle for its rows."""
+    from etl_end_to_end_airflow_bigquery_spark.schemas import API_PAYLOAD_SCHEMA
+
+    row = {
+        "amount": float(payload["amount"]) if payload.get("amount") is not None else None,
+        "base": payload.get("base"),
+        "date": payload.get("date"),
+        "rates": {str(k): float(v) for k, v in (payload.get("rates") or {}).items()},
+    }
+    return spark.createDataFrame([row], schema=API_PAYLOAD_SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        {"amount": 1.0, "base": "EUR", "date": "2026-01-05",
+         "rates": {"USD": 1.1664, "GBP": 0.8421}},
+        {"amount": 1.0, "base": "EUR", "date": "2026-01-05"},  # no rates
+        {"amount": 1.0, "base": "EUR", "date": "2026-01-05", "rates": None},
+        {"amount": 1.0, "base": "EUR", "date": "2026-01-05", "rates": {}},
+        {"base": "EUR", "date": "2026-01-05", "rates": {"USD": 2}},  # no amount
+        {"amount": 2, "rates": {1: 3, "JPY": 170.0, 2.5: 0.1}},  # non-str keys
+        {"amount": 1.0, "rates": {1: 2.0, "1": 3.0}},  # keys collide as str
+        {},
+    ],
+    ids=["full", "rates-missing", "rates-none", "rates-empty",
+         "amount-missing", "non-string-keys", "colliding-keys", "empty"],
+)
+def test_arrow_payload_frame_rows_match_list_frame(spark, payload):
+    got = payload_dataframe(spark, payload)
+    want = _list_payload_frame(spark, payload)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    # exploded rows as a set: a Python dict crosses into the JVM as a
+    # hash map, so the list frame's map order was never the payload's
+    ts = F.to_timestamp(F.lit("2026-01-05 12:00:00"))
+    assert sorted(payload_to_rows(got, ingest_ts=ts).collect()) == sorted(
+        payload_to_rows(want, ingest_ts=ts).collect()
+    )
 
 
 class TestFileQuarantine:

@@ -583,8 +583,15 @@ def test_mg_candidates_non_string_items(spark):
         mg_candidates,
     )
 
+    # Item 42 is every other row, so it holds about half of ANY
+    # contiguous partition and outweighs the (k+1)-th count there: it
+    # survives pruning at every partition count. A uniform input would
+    # tie every item at the (k+1)-th weight in each partition, where
+    # Misra-Gries rightly keeps nothing.
     df = spark.range(0, 1000).select(
-        (F.col("id") % 7).alias("user_id")
+        F.when(F.col("id") % 2 == 0, F.lit(42))
+        .otherwise(F.col("id") % 7)
+        .alias("user_id")
     )
     got = mg_candidates(df, "user_id", 3)
     assert dict(got.dtypes)["user_id"] == "bigint"
@@ -594,7 +601,7 @@ def test_mg_candidates_non_string_items(spark):
         .agg(F.sum("mg_weight").alias("w"))
         .collect()
     }
-    assert merged and all(isinstance(k, int) for k in merged)
+    assert 42 in merged and all(isinstance(k, int) for k in merged)
 
 
 def test_footer_minmax_partial_stats_means_must_scan(tmp_path):
@@ -640,6 +647,36 @@ def test_footer_minmax_partial_stats_means_must_scan(tmp_path):
     assert pq.ParquetFile(f2).metadata.num_row_groups == 2
     n2, mins2, maxs2 = _footer_minmax(f2, ["v"])
     assert (n2, mins2["v"], maxs2["v"]) == (4, 40.0, 90.0)
+
+
+def test_footer_minmax_undecodable_stats_mean_must_scan(spark, tmp_path):
+    """Spark stores decimal(p<=18) as INT64, whose statistics pyarrow
+    cannot decode: that column's bounds are unknown (None), the other
+    columns keep theirs, and a versioned commit of such a table works."""
+    import decimal
+    import glob
+
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        _footer_minmax,
+        merge_upsert,
+        read_table,
+    )
+
+    df = spark.createDataFrame(
+        [(1, decimal.Decimal("1.5")), (5, decimal.Decimal("2.25"))],
+        "k bigint, amt decimal(18,4)",
+    )
+    out = str(tmp_path / "dec")
+    df.coalesce(1).write.parquet(out)
+    (f,) = glob.glob(out + "/*.parquet")
+    n, mins, maxs = _footer_minmax(f)
+    assert n == 2 and (mins["k"], maxs["k"]) == (1, 5)
+    assert mins["amt"] is None and maxs["amt"] is None
+    path = str(tmp_path / "t")
+    merge_upsert(spark, path, df, keys=["k"])
+    assert sorted(r.amt for r in read_table(spark, path).collect()) == [
+        decimal.Decimal("1.5000"), decimal.Decimal("2.2500")
+    ]
 
 
 @given(_split_multiset(), st.integers(min_value=1, max_value=6))
