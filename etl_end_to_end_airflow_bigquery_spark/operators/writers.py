@@ -41,6 +41,13 @@ A commit writes a fresh ``v_*`` directory, records it in ``_COMMITS``,
 then flips ``_CURRENT`` with ``os.replace`` (atomic on POSIX; on an
 object store the pointer PUT is the commit and "hardlink" becomes a
 manifest entry — the same reuse trick Iceberg/Delta manifests express).
+Each operation has ONE path form — :func:`merge_upsert`,
+:func:`delete_rows`, :func:`compact_parquet` — whatever the table's
+shape: the current snapshot's layout map decides how it is rewritten.
+A spec-evolved snapshot records the map (one layout dir per partition
+spec, :func:`evolve_partition_spec`); a flat snapshot is one layout
+rooted at the snapshot dir, partitioned by its recorded spec.
+
 Readers resolve the pointer via :func:`read_table`, which reads an
 unpartitioned snapshot with the schema its sidecar recorded
 (``spark_schema``, copied from the data files' footers at commit) and
@@ -246,15 +253,43 @@ def read_table(
                 "recorded layout"
             )
         return read_partition_evolved(spark, resolved)
+    return _read_layout(spark, vdir, meta)
+
+
+def _read_layout(spark: SparkSession, lay_dir: str, meta: dict | None):
+    """Read one layout dir (or one of its leaves) of a snapshot. A
+    sidecar that records ``spark_schema`` (flat, unpartitioned
+    snapshots only) supplies the schema, so the read starts no
+    schema-inference job; anything else is read with Spark's inferred
+    schema."""
     recorded = (meta or {}).get("spark_schema")
-    if recorded is not None:
-        import json
+    if recorded is None:
+        return spark.read.parquet(lay_dir)
+    import json
 
-        from pyspark.sql.types import StructType
+    from pyspark.sql.types import StructType
 
-        schema = StructType.fromJson(json.loads(recorded))
-        return spark.read.schema(schema).parquet(vdir)
-    return spark.read.parquet(vdir)
+    schema = StructType.fromJson(json.loads(recorded))
+    return spark.read.schema(schema).parquet(lay_dir)
+
+
+def _snapshot_layouts(vdir: str, meta: dict | None) -> list[dict]:
+    """The snapshot's layout map — what decides how delete and
+    compaction rewrite it. A spec-evolved snapshot records its map; a
+    flat snapshot is ONE layout rooted at the snapshot dir (``"."``)
+    whose partition columns are the recorded ``partition_spec``. A
+    pre-manifest snapshot records no spec: its hive leaf paths give
+    it (``day=d1/typ=a`` → ``["day", "typ"]``; a root leaf → none)."""
+    if meta and meta.get("layouts"):
+        return meta["layouts"]
+    spec = (meta or {}).get("partition_spec")
+    if spec is None:
+        leaf = max(_leaf_dirs(vdir), default=".")
+        spec = (
+            [] if leaf == "." else
+            [seg.split("=", 1)[0] for seg in leaf.split(os.sep)]
+        )
+    return [{"dir": ".", "partition_cols": list(spec)}]
 
 
 def _layout_has_data(lay_dir: str) -> bool:
@@ -1499,6 +1534,17 @@ def _commit_version(
     _sweep_versions(path, keep)
 
 
+def _commit_layouts(
+    path: str, vdir: str, layouts: list[dict], keep_versions: int
+) -> None:
+    """Commit a delete or compaction snapshot: it keeps the layout map
+    and the recorded spec (none recorded stays none), and an emptied
+    layout keeps its dir and reads as no data."""
+    for lay in layouts:
+        os.makedirs(os.path.join(vdir, lay["dir"]), exist_ok=True)
+    _commit_version(path, vdir, keep_versions)
+
+
 def _sweep_versions(path: str, keep: set[str]) -> list[int]:
     """Delete every ``v_*`` snapshot dir not in ``keep`` — the single
     sweep used by both commit-time retention and the explicit
@@ -1540,10 +1586,26 @@ def _link_tree(src: str, dst: str) -> None:
         if os.path.isdir(s):
             _link_tree(s, d)
         else:
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
+            _link_file(s, d)
+
+
+def _link_file(src: str, dst: str) -> None:
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
+def _link_leaf(src: str, dst: str) -> None:
+    """Carry one hive leaf into a new snapshot: hardlink the data files
+    directly inside ``src``, nothing else — a ``"."`` leaf is the
+    layout root, whose subdirs are other leaves (or ``_change_data`` /
+    ``_manifest``) and whose ``_snapshot_meta.json`` belongs to the old
+    snapshot."""
+    os.makedirs(dst, exist_ok=True)
+    for f in os.listdir(src):
+        if f.endswith(".parquet"):
+            _link_file(os.path.join(src, f), os.path.join(dst, f))
 
 
 def _validate_keys(df: DataFrame, keys: list[str]) -> None:
@@ -2000,6 +2062,11 @@ def merge_upsert(
     this commit: census entries above it are written as SHARDED parquet
     under ``v_*/_manifest`` (read planning then evaluates keep/skip as
     a distributed job — VERDICT r13 item 3) instead of inline JSON.
+
+    A SPEC-EVOLVED table (its snapshot records a layout map, see
+    :func:`evolve_partition_spec`) is merged across its layouts by
+    :func:`_merge_layouts`; the map decides each row's partitioning,
+    so ``partition_col`` raises there and ``emit_cdf`` is available.
     """
     if emit_cdf and partition_col is not None:
         raise ValueError(
@@ -2009,14 +2076,21 @@ def merge_upsert(
     source = source.dropDuplicates(keys)
     with _write_lock(target_path):
         cur = _current_version_name(target_path)
-        if cur is not None:
-            cur_meta = _load_snapshot_meta(os.path.join(target_path, cur))
-            if cur_meta and cur_meta.get("layouts"):
+        prev_dir = None if cur is None else os.path.join(target_path, cur)
+        meta = _load_snapshot_meta(prev_dir) if prev_dir else None
+        layouts = (meta or {}).get("layouts")
+        if layouts:
+            if partition_col is not None:
                 raise ValueError(
-                    f"{target_path!r} is a spec-evolved table (multiple "
-                    "partition layouts) — use merge_upsert_evolved"
+                    f"{target_path!r} is spec-evolved: its layout map "
+                    "decides each row's partitioning — merge without "
+                    "partition_col"
                 )
-        if partition_col is None:
+            _merge_layouts(
+                spark, target_path, prev_dir, layouts, source, keys,
+                keep_versions, emit_cdf, manifest_shard_files,
+            )
+        elif partition_col is None:
             _merge_unpartitioned(
                 spark, target_path, source, keys, keep_versions, emit_cdf,
                 manifest_shard_files,
@@ -2160,36 +2234,15 @@ def _merge_partitioned(
         shutil.rmtree(os.path.join(target_path, leaf), ignore_errors=True)
 
 
-def _reject_spec_evolved(path: str, op: str) -> None:
-    """Loud refusal for writers that rewrite the whole tree FLAT: on a
-    spec-evolved snapshot, a flat rewrite + ``_write_snapshot_meta``'s
-    layouts carry-forward would stamp a stale layout map over flat data
-    and every subsequent ``read_table`` would raise (code-review r13 —
-    the silent-table-bricking hole). Per-layout delete/compact is the
-    r14 candidate; until then refusing is the correct behavior."""
-    cur = _current_version_name(path)
-    if cur is None:
-        return
-    meta = _load_snapshot_meta(os.path.join(path, cur))
-    if meta and meta.get("layouts"):
-        raise ValueError(
-            f"{op} does not support spec-evolved tables (multiple "
-            f"partition layouts) yet: {path!r} — operate per layout, or "
-            "run the operation before evolving the spec"
-        )
-
-
 def _leaf_dirs(root: str) -> set[str]:
-    """Relative dirs under ``root`` that directly contain parquet files
-    — the FULL hive leaf paths ('.' for an unpartitioned layout). Leaf
-    grain matters for multi-column specs: day=d16 may hold one written
-    type= leaf next to an untouched one, and linking at day grain would
-    duplicate the written one."""
-    leaves: set[str] = set()
-    for r, _dirs, files in os.walk(root):
-        if any(f.endswith(".parquet") for f in files):
-            leaves.add(os.path.relpath(r, root))
-    return leaves
+    """Relative dirs under ``root`` that directly contain data files
+    — the FULL hive leaf paths ('.' for an unpartitioned layout).
+    Leaf grain matters for multi-column specs: day=d16 may hold one
+    written type= leaf next to an untouched one, and linking at day
+    grain would duplicate the written one. ``_change_data`` and
+    ``_manifest`` (parquet too, under a flat snapshot's root) are
+    skipped by :func:`_iter_data_files`' rule."""
+    return {os.path.dirname(rel) or "." for rel, _p in _iter_data_files(root)}
 
 
 def _partition_tuple_filter(cols: list[str], tuples: list[tuple]):
@@ -2223,7 +2276,7 @@ def evolve_partition_spec(
     (b) records a LAYOUT MAP in the snapshot's ``_snapshot_meta.json``:
     the old spec's tree under ``layout_000/`` (etc.) plus a fresh empty
     layout dir for the new spec, which subsequent
-    :func:`merge_upsert_evolved` commits fill. Readers
+    :func:`merge_upsert` commits fill. Readers
     (:func:`read_table`, any ``version``) resolve the map from the
     snapshot itself — table history IS the source of truth, no
     caller-supplied paths — and union the layouts by name with
@@ -2282,10 +2335,7 @@ def evolve_partition_spec(
                 if os.path.isdir(s):
                     _link_tree(s, d)
                 else:
-                    try:
-                        os.link(s, d)
-                    except OSError:
-                        shutil.copy2(s, d)
+                    _link_file(s, d)
         else:
             for lay in layouts:
                 src = os.path.join(prev_dir, lay["dir"])
@@ -2319,7 +2369,7 @@ def drop_partition_field(
     rewrite. The new layout's spec may EQUAL an earlier layout's —
     e.g. day → (day, type) → day leaves three layouts where the first
     and third share a spec; per-file spec identity is the layout dir,
-    so reads and :func:`merge_upsert_evolved` routing are unaffected
+    so reads and :func:`merge_upsert` routing are unaffected
     (Iceberg keeps a spec-id per data file for the same reason — specs
     are not required to be unique across history).
 
@@ -2349,17 +2399,21 @@ def drop_partition_field(
     return new_spec
 
 
-def merge_upsert_evolved(
+def _merge_layouts(
     spark: SparkSession,
     path: str,
+    prev_dir: str,
+    layouts: list[dict],
     source: DataFrame,
     keys: list[str],
-    keep_versions: int = 2,
-    emit_cdf: bool = False,
+    keep_versions: int,
+    emit_cdf: bool,
+    manifest_shard_files: int | None,
 ) -> None:
-    """MERGE into a SPEC-EVOLVED versioned table (one created by
-    :func:`evolve_partition_spec`): Iceberg-style copy-on-write across
-    layouts —
+    """:func:`merge_upsert` on a SPEC-EVOLVED table (one created by
+    :func:`evolve_partition_spec`), called under its write lock with
+    the current snapshot dir and its layout map: Iceberg-style
+    copy-on-write across layouts —
 
     - a source row whose key already exists in an OLD layout rewrites
       that row IN PLACE, under the old spec (rewrites keep their file's
@@ -2390,142 +2444,129 @@ def merge_upsert_evolved(
     scoped merge's lineage, so emitting the feed re-runs each scoped
     join once (both jobs read only the touched partitions).
     """
-    source = source.dropDuplicates(keys)
     _validate_keys(source, keys)
-    with _write_lock(path):
-        cur = _current_version_name(path)
-        if cur is None:
+    for lay in layouts:
+        missing = [c for c in lay["partition_cols"] if c not in keys]
+        if missing:
             raise ValueError(
-                f"{path!r} is not a versioned table (no {_CURRENT_PTR})"
+                f"layout {lay['dir']!r} partition cols {missing} must "
+                "be merge keys (row identity pins its partition)"
             )
-        prev_dir = os.path.join(path, cur)
-        meta = _load_snapshot_meta(prev_dir)
-        layouts = (meta or {}).get("layouts")
-        if not layouts:
-            raise ValueError(
-                f"{path!r} is not spec-evolved — use merge_upsert"
-            )
-        for lay in layouts:
-            missing = [c for c in lay["partition_cols"] if c not in keys]
-            if missing:
-                raise ValueError(
-                    f"layout {lay['dir']!r} partition cols {missing} must "
-                    "be merge keys (row identity pins its partition)"
-                )
-        vdir = _next_version_dir(path)
-        seq = _seq_of(os.path.basename(vdir))
-        cdf_parts: list[DataFrame] = []
-        remaining = source
-        for i, lay in enumerate(layouts):
-            cols = list(lay["partition_cols"])
-            lay_src = os.path.join(prev_dir, lay["dir"])
-            dst = os.path.join(vdir, lay["dir"])
-            active = i == len(layouts) - 1
-            has_data = _layout_has_data(lay_src)
-            if not has_data and not active:
-                os.makedirs(dst, exist_ok=True)
-                continue
-            # batch partition footprint for THIS layout's spec — a
-            # bounded driver-side list (one tuple per touched leaf)
-            parts = [
-                tuple(r)
-                for r in remaining.select(*cols).distinct().collect()
-            ] if cols else [()]
-            if has_data:
-                scoped = spark.read.parquet(lay_src)
-                if cols and parts:
-                    scoped = scoped.filter(
-                        _partition_tuple_filter(cols, parts)
-                    )
-                elif cols:
-                    scoped = scoped.filter(F.lit(False))
-            else:
-                scoped = None
-            if active:
-                upd, rest = remaining, None
-            elif scoped is None or not parts:
-                upd, rest = None, remaining
-            else:
-                lay_keys = scoped.select(*keys)
-                upd = remaining.join(lay_keys, keys, "semi")
-                rest = remaining.join(lay_keys, keys, "anti")
-            wrote = False
-            if upd is not None:
-                if scoped is not None:
-                    # refine the rewrite scope to the partitions the
-                    # matched rows actually touch; an UNPARTITIONED
-                    # layout has no tuple footprint, so probe emptiness
-                    # directly (code-review r13: the unconditional [()]
-                    # rewrote the whole historical layout on every
-                    # commit even with zero matched keys)
-                    upd_parts = (
-                        [
-                            tuple(r)
-                            for r in upd.select(*cols).distinct().collect()
-                        ]
-                        if cols
-                        else ([()] if upd.limit(1).count() > 0 else [])
-                    )
-                    if upd_parts:
-                        scoped2 = (
-                            scoped.filter(
-                                _partition_tuple_filter(cols, upd_parts)
-                            )
-                            if cols
-                            else scoped
-                        )
-                        if emit_cdf:
-                            merged, cdf = merge_upsert_cdf_df(
-                                scoped2, upd, keys, commit_version=seq
-                            )
-                            cdf_parts.append(cdf)
-                        else:
-                            merged = merge_upsert_df(scoped2, upd, keys)
-                        wrote = True
-                    else:  # no matched rows — nothing to rewrite here
-                        merged = None
-                else:
-                    # empty active layout: first data under the new spec
-                    merged = upd
-                    wrote = (
-                        bool(parts) if cols else upd.limit(1).count() > 0
-                    )
-                    if wrote and emit_cdf:
-                        cdf_parts.append(insert_only_cdf(upd, seq))
-                if wrote and merged is not None:
-                    w = merged.write.mode("overwrite")
-                    if cols:
-                        w = w.partitionBy(*cols)
-                    w.parquet(dst)
-            # carry untouched leaves of this layout through as hardlinks
-            written = _leaf_dirs(dst) if os.path.isdir(dst) else set()
-            if has_data:
-                for leaf in _leaf_dirs(lay_src):
-                    if leaf not in written:
-                        _link_tree(
-                            os.path.join(lay_src, leaf),
-                            os.path.join(dst, leaf),
-                        )
+    vdir = _next_version_dir(path)
+    seq = _seq_of(os.path.basename(vdir))
+    cdf_parts: list[DataFrame] = []
+    remaining = source
+    for i, lay in enumerate(layouts):
+        cols = list(lay["partition_cols"])
+        lay_src = os.path.join(prev_dir, lay["dir"])
+        dst = os.path.join(vdir, lay["dir"])
+        active = i == len(layouts) - 1
+        has_data = _layout_has_data(lay_src)
+        if not has_data and not active:
             os.makedirs(dst, exist_ok=True)
-            if rest is not None:
-                remaining = rest
-        if emit_cdf and cdf_parts:
-            feed = cdf_parts[0]
-            for part in cdf_parts[1:]:
-                feed = feed.unionByName(part)
-            # inside the still-uncommitted v_* dir, before the pointer
-            # flip — crash orphans data and feed together (the
-            # unpartitioned merge path's convention)
-            feed.write.mode("overwrite").parquet(
-                os.path.join(vdir, CDF_DIR)
-            )
-        _commit_version(
-            path,
-            vdir,
-            keep_versions,
-            partition_spec=list(layouts[-1]["partition_cols"]),
-            layouts=layouts,
+            continue
+        # batch partition footprint for THIS layout's spec — a
+        # bounded driver-side list (one tuple per touched leaf)
+        parts = [
+            tuple(r)
+            for r in remaining.select(*cols).distinct().collect()
+        ] if cols else [()]
+        if has_data:
+            scoped = spark.read.parquet(lay_src)
+            if cols and parts:
+                scoped = scoped.filter(
+                    _partition_tuple_filter(cols, parts)
+                )
+            elif cols:
+                scoped = scoped.filter(F.lit(False))
+        else:
+            scoped = None
+        if active:
+            upd, rest = remaining, None
+        elif scoped is None or not parts:
+            upd, rest = None, remaining
+        else:
+            lay_keys = scoped.select(*keys)
+            upd = remaining.join(lay_keys, keys, "semi")
+            rest = remaining.join(lay_keys, keys, "anti")
+        wrote = False
+        if upd is not None:
+            if scoped is not None:
+                # refine the rewrite scope to the partitions the
+                # matched rows actually touch; an UNPARTITIONED
+                # layout has no tuple footprint, so probe emptiness
+                # directly (code-review r13: the unconditional [()]
+                # rewrote the whole historical layout on every
+                # commit even with zero matched keys)
+                upd_parts = (
+                    [
+                        tuple(r)
+                        for r in upd.select(*cols).distinct().collect()
+                    ]
+                    if cols
+                    else ([()] if upd.limit(1).count() > 0 else [])
+                )
+                if upd_parts:
+                    scoped2 = (
+                        scoped.filter(
+                            _partition_tuple_filter(cols, upd_parts)
+                        )
+                        if cols
+                        else scoped
+                    )
+                    if emit_cdf:
+                        merged, cdf = merge_upsert_cdf_df(
+                            scoped2, upd, keys, commit_version=seq
+                        )
+                        cdf_parts.append(cdf)
+                    else:
+                        merged = merge_upsert_df(scoped2, upd, keys)
+                    wrote = True
+                else:  # no matched rows — nothing to rewrite here
+                    merged = None
+            else:
+                # empty active layout: first data under the new spec
+                merged = upd
+                wrote = (
+                    bool(parts) if cols else upd.limit(1).count() > 0
+                )
+                if wrote and emit_cdf:
+                    cdf_parts.append(insert_only_cdf(upd, seq))
+            if wrote and merged is not None:
+                w = merged.write.mode("overwrite")
+                if cols:
+                    w = w.partitionBy(*cols)
+                w.parquet(dst)
+        # carry untouched leaves of this layout through as hardlinks
+        written = _leaf_dirs(dst) if os.path.isdir(dst) else set()
+        if has_data:
+            for leaf in _leaf_dirs(lay_src):
+                if leaf not in written:
+                    _link_leaf(
+                        os.path.join(lay_src, leaf),
+                        os.path.join(dst, leaf),
+                    )
+        os.makedirs(dst, exist_ok=True)
+        if rest is not None:
+            remaining = rest
+    if emit_cdf and cdf_parts:
+        feed = cdf_parts[0]
+        for part in cdf_parts[1:]:
+            feed = feed.unionByName(part)
+        # inside the still-uncommitted v_* dir, before the pointer
+        # flip — crash orphans data and feed together (the
+        # unpartitioned merge path's convention)
+        feed.write.mode("overwrite").parquet(
+            os.path.join(vdir, CDF_DIR)
         )
+    _commit_version(
+        path,
+        vdir,
+        keep_versions,
+        partition_spec=list(layouts[-1]["partition_cols"]),
+        layouts=layouts,
+        manifest_shard_files=manifest_shard_files,
+    )
 
 
 def idempotent_append(
@@ -2607,23 +2648,14 @@ def append_landing_batch(
     return moved
 
 
-def _tree_parquet_bytes(d: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(d):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     shuffle: bool = False,
 ) -> int:
-    """Small-file compaction: rewrite a Parquet table into
-    ceil(total_bytes / target) files. Returns the output file count.
+    """Small-file compaction: rewrite each hive leaf into
+    ceil(leaf_bytes / target) files. Returns the output data-file count.
 
     The small-files problem is THE silent scale killer for append-heavy
     tables (a streaming sink or per-batch ``merge_upsert`` emitting
@@ -2633,17 +2665,20 @@ def compact_parquet(
     ``shuffle=True`` for an even-size rebalance when input files are
     badly skewed.
 
-    **Partitioned tables are compacted per leaf** (VERDICT r03 item 9):
-    each ``col=value`` directory is sized and rewritten independently —
-    a skewed leaf with thousands of small files is fixed without
-    touching (or even reading) well-laid-out leaves, which are
-    hardlinked through unchanged. Matches ``merge_upsert``'s
-    partition-scoped write scope.
+    **Compaction is per FULL hive leaf, per layout** (VERDICT r03 item
+    9): the snapshot's layout map (:func:`_snapshot_layouts` — a flat
+    table is one layout) lists the layouts, and each leaf under each
+    layout (multi-column leaves like day=/typ= at leaf grain, an
+    unpartitioned layout as its one ``"."`` leaf) is sized and
+    rewritten independently — a skewed leaf with thousands of small
+    files is fixed without touching (or even reading) well-laid-out
+    leaves, which are hardlinked through unchanged. Matches
+    ``merge_upsert``'s partition-scoped write scope.
 
-    Versioned tables (``_CURRENT`` pointer present) compact into a new
-    ``v_*`` snapshot + ledger commit — fully reader-safe; plain
-    directories fall back to the rename swap (single-writer contract,
-    no concurrent readers).
+    Versioned tables (``_CURRENT`` pointer present) compact into ONE
+    new ``v_*`` snapshot + ledger commit that carries the layout map —
+    fully reader-safe; plain directories swap each rewritten leaf in
+    place by rename (single-writer contract, no concurrent readers).
 
     File sizing uses local file sizes — correct for local/NFS storage.
     On an object store, swap in the Hadoop
@@ -2651,164 +2686,45 @@ def compact_parquet(
     API); the directory walk enumerates the same paths.
     """
     with _write_lock(path):
-        _reject_spec_evolved(path, "compact_parquet")
-        data_dir = _resolve_data_dir(path)
-        versioned = data_dir != path
-        leaves = (
-            [
-                d
-                for d in os.listdir(data_dir)
-                if "=" in d and os.path.isdir(os.path.join(data_dir, d))
-            ]
-            if os.path.isdir(data_dir)
-            else []
-        )
-        if leaves:
-            return _compact_partitioned(
-                spark, path, data_dir, sorted(leaves), target_file_bytes,
-                shuffle, versioned,
-            )
-        df = spark.read.parquet(data_dir)
-        n = max(1, -(-_tree_parquet_bytes(data_dir) // target_file_bytes))
-        shaped = df.repartition(n) if shuffle else df.coalesce(n)
-        if versioned:
-            vdir = _next_version_dir(path)
-            shaped.write.mode("overwrite").parquet(vdir)
-            _commit_version(path, vdir, keep_versions=2)
-            return n
-        tmp = path + f".__compact__{uuid.uuid4().hex[:8]}"
-        shaped.write.mode("overwrite").parquet(tmp)
-        _atomic_swap(tmp, path)
-        return n
-
-
-def _compact_partitioned(
-    spark: SparkSession,
-    path: str,
-    data_dir: str,
-    leaves: list[str],
-    target_file_bytes: int,
-    shuffle: bool,
-    versioned: bool,
-) -> int:
-    total_files = 0
-    if versioned:
-        vdir = _next_version_dir(path)
-        os.makedirs(vdir, exist_ok=True)
-        for leaf in leaves:
-            src = os.path.join(data_dir, leaf)
-            n_files = sum(
-                f.endswith(".parquet") for f in os.listdir(src)
-            )
-            n = max(1, -(-_tree_parquet_bytes(src) // target_file_bytes))
-            if n_files <= n:
-                # already compact: carry the leaf as hardlinks, no read
-                _link_tree(src, os.path.join(vdir, leaf))
-                total_files += n_files
-                continue
-            df = spark.read.parquet(src)  # partition col lives in the dir name
-            shaped = df.repartition(n) if shuffle else df.coalesce(n)
-            shaped.write.mode("overwrite").parquet(os.path.join(vdir, leaf))
-            total_files += n
-        _commit_version(path, vdir, keep_versions=2)
-        return total_files
-    for leaf in leaves:
-        src = os.path.join(data_dir, leaf)
-        n_files = sum(f.endswith(".parquet") for f in os.listdir(src))
-        n = max(1, -(-_tree_parquet_bytes(src) // target_file_bytes))
-        if n_files <= n:
-            total_files += n_files
-            continue
-        df = spark.read.parquet(src)
-        shaped = df.repartition(n) if shuffle else df.coalesce(n)
-        tmp = src + f".__compact__{uuid.uuid4().hex[:8]}"
-        shaped.write.mode("overwrite").parquet(tmp)
-        _atomic_swap(tmp, src)
-        total_files += n
-    return total_files
-
-
-def compact_parquet_evolved(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    shuffle: bool = False,
-) -> int:
-    """Small-file compaction ACROSS a spec-evolved table — with
-    :func:`delete_rows_evolved` this completes flat-rewriter parity
-    for evolved tables (the two operations ``_reject_spec_evolved``
-    deferred): every layout is compacted per FULL hive leaf under its
-    own spec (multi-column leaves like day=/typ= are sized at leaf
-    grain, same as the merge path's write scope), already-compact
-    leaves hardlink through unread, and ONE commit carries the layout
-    map forward. Returns the snapshot's output data-file count.
-
-    Scale: identical story to :func:`compact_parquet`'s per-leaf
-    path — a skewed leaf with thousands of streaming-sized files is
-    fixed without reading well-laid-out leaves, in any layout, and
-    readers always see a complete snapshot.
-    """
-    with _write_lock(path):
         cur = _current_version_name(path)
         if cur is None:
-            raise ValueError(
-                f"{path!r} is not a versioned table (no {_CURRENT_PTR})"
-            )
-        prev_dir = os.path.join(path, cur)
-        meta = _load_snapshot_meta(prev_dir)
-        layouts = (meta or {}).get("layouts")
-        if not layouts:
-            raise ValueError(
-                f"{path!r} is not spec-evolved — use compact_parquet"
-            )
-        vdir = _next_version_dir(path)
-        nonempty = _nonempty_layout_dirs(prev_dir, meta, layouts)
+            src_root, vdir, meta = path, None, None
+        else:
+            src_root = os.path.join(path, cur)
+            meta = _load_snapshot_meta(src_root)
+            vdir = _next_version_dir(path)
+        layouts = _snapshot_layouts(src_root, meta)
         total_files = 0
         for lay in layouts:
-            lay_src = os.path.join(prev_dir, lay["dir"])
-            dst = os.path.join(vdir, lay["dir"])
-            os.makedirs(dst, exist_ok=True)
-            if lay["dir"] not in nonempty:
-                continue
-            for leaf in sorted(_leaf_dirs(lay_src)):
-                src = (
-                    lay_src if leaf == "." else os.path.join(lay_src, leaf)
-                )
-                d = dst if leaf == "." else os.path.join(dst, leaf)
-                files = [
-                    f for f in os.listdir(src) if f.endswith(".parquet")
-                ]
+            lay_src = os.path.normpath(os.path.join(src_root, lay["dir"]))
+            # the '.' leaf first: writing it replaces its whole dir
+            leaves = sorted(_leaf_dirs(lay_src), key=lambda x: (x != ".", x))
+            for leaf in leaves:
+                src = os.path.normpath(os.path.join(lay_src, leaf))
+                files = [f for f in os.listdir(src) if f.endswith(".parquet")]
                 leaf_bytes = sum(
                     os.path.getsize(os.path.join(src, f)) for f in files
                 )
                 n = max(1, -(-leaf_bytes // target_file_bytes))
-                if len(files) <= n:
-                    # already compact: hardlink the leaf's FILES (not
-                    # _link_tree — '.' leaves would recurse into
-                    # sibling hive dirs)
-                    os.makedirs(d, exist_ok=True)
-                    for f in files:
-                        try:
-                            os.link(
-                                os.path.join(src, f), os.path.join(d, f)
-                            )
-                        except OSError:
-                            shutil.copy2(
-                                os.path.join(src, f), os.path.join(d, f)
-                            )
+                dst = None if vdir is None else os.path.normpath(
+                    os.path.join(vdir, lay["dir"], leaf)
+                )
+                if len(files) <= n:  # already compact: carried, unread
+                    if dst is not None:
+                        _link_leaf(src, dst)
                     total_files += len(files)
                     continue
-                df = spark.read.parquet(src)  # hive cols live in dir name
+                df = _read_layout(spark, src, meta)  # hive cols: dir name
                 shaped = df.repartition(n) if shuffle else df.coalesce(n)
-                shaped.write.mode("overwrite").parquet(d)
+                if dst is None:
+                    tmp = src + f".__compact__{uuid.uuid4().hex[:8]}"
+                    shaped.write.mode("overwrite").parquet(tmp)
+                    _atomic_swap(tmp, src)
+                else:
+                    shaped.write.mode("overwrite").parquet(dst)
                 total_files += n
-        _commit_version(
-            path,
-            vdir,
-            keep_versions=2,
-            partition_spec=list(layouts[-1]["partition_cols"]),
-            layouts=layouts,
-        )
+        if vdir is not None:
+            _commit_layouts(path, vdir, layouts, keep_versions=2)
         return total_files
 
 
@@ -2885,54 +2801,30 @@ def delete_rows(
     the retention sweep eventually removes the old snapshots that still
     contain the subject (keep_versions bounds how long deleted data
     remains time-travelable; set 1 for immediate physical removal at
-    the next commit). Returns the number of rows deleted.
+    the next commit). Returns the number of rows deleted. SQL DELETE
+    semantics: only rows where ``predicate`` evaluates TRUE are deleted
+    — NULL-predicate rows are kept and not counted.
+
+    Each layout of the snapshot's layout map (:func:`_snapshot_layouts`
+    — a flat table is one layout) is rewritten WITHOUT its matching
+    rows UNDER ITS OWN SPEC, scoped to the leaves that actually contain
+    matches. ONE job per layout finds them: the matching rows grouped by
+    physical file + partition tuple (bounded by the subject's spread,
+    one row per touched file, never per row) gives the touched leaves,
+    the rewrite's partition footprint and the delete count. Every
+    untouched leaf enters the new snapshot as hardlinks. A leaf whose
+    rows ALL match disappears; a layout emptied entirely stays in the
+    map with zero files (the census-driven read skips it). Deleting
+    every row of the table keeps one zero-row file in an emptied leaf,
+    so the snapshot still reads as an empty table with its schema.
 
     Single-writer via the same lock as every other writer. At 100 TB
-    pair this with a partition predicate so the rewrite is bounded by
-    the partitions the subject can live in.
+    the rewrite scope is (matching leaves) x (their layouts) — pair the
+    subject predicate with a partition bound when the subject's
+    footprint is known.
     """
-    with _write_lock(target_path):
-        _reject_spec_evolved(target_path, "delete_rows")
-        cur = read_table(spark, target_path)
-        n_before = cur.count()
-        # SQL DELETE semantics (code-review r14): only rows where the
-        # predicate is TRUE are deleted — a NULL-valued predicate
-        # (e.g. "x > 5" on a NULL x) keeps its row, same as DELETE in
-        # every SQL engine; plain NOT(pred) would silently drop it.
-        kept = cur.filter(f"NOT coalesce(({predicate}), false)")
-        vdir = _next_version_dir(target_path)
-        kept.write.mode("overwrite").parquet(vdir)
-        n_after = spark.read.parquet(vdir).count()
-        _commit_version(target_path, vdir, keep_versions)
-        return n_before - n_after
+    from urllib.parse import unquote, urlparse
 
-
-def delete_rows_evolved(
-    spark: SparkSession,
-    target_path: str,
-    predicate: str,
-    keep_versions: int = 2,
-) -> int:
-    """Subject deletion across a SPEC-EVOLVED table (closing the
-    r13-documented gap: flat rewriters refuse evolved tables because a
-    flat rewrite under a carried layout map bricks the table): each
-    layout is rewritten WITHOUT its matching rows UNDER ITS OWN SPEC,
-    scoped to the leaves that actually contain matches — the matching
-    rows' partition footprint is collected driver-side (bounded by the
-    subject's spread, one tuple per touched leaf, never per row) and
-    every untouched leaf enters the new snapshot as hardlinks. A leaf
-    whose rows ALL match simply disappears; a layout emptied entirely
-    stays in the map with zero files (the census-driven read skips
-    it). Returns the number of rows deleted. SQL DELETE semantics:
-    only rows where ``predicate`` evaluates TRUE are deleted —
-    NULL-predicate rows are kept and not counted.
-
-    Same GDPR semantics as :func:`delete_rows`: committed through the
-    versioned layout, ``keep_versions`` bounds how long the subject
-    stays time-travelable. At 100 TB the rewrite scope is
-    (matching leaves) x (their layouts) — pair the subject predicate
-    with a partition bound when the subject's footprint is known.
-    """
     with _write_lock(target_path):
         cur = _current_version_name(target_path)
         if cur is None:
@@ -2942,85 +2834,63 @@ def delete_rows_evolved(
             )
         prev_dir = os.path.join(target_path, cur)
         meta = _load_snapshot_meta(prev_dir)
-        layouts = (meta or {}).get("layouts")
-        if not layouts:
-            raise ValueError(
-                f"{target_path!r} is not spec-evolved — use delete_rows"
-            )
+        layouts = _snapshot_layouts(prev_dir, meta)
         vdir = _next_version_dir(target_path)
-        nonempty = _nonempty_layout_dirs(prev_dir, meta, layouts)
         deleted = 0
+        emptied = None  # (frame, partition cols, dir) of a deleted leaf
         for lay in layouts:
             cols = list(lay["partition_cols"])
-            lay_src = os.path.join(prev_dir, lay["dir"])
-            dst = os.path.join(vdir, lay["dir"])
-            os.makedirs(dst, exist_ok=True)
-            if lay["dir"] not in nonempty:
+            lay_src = os.path.normpath(os.path.join(prev_dir, lay["dir"]))
+            dst = os.path.normpath(os.path.join(vdir, lay["dir"]))
+            leaves = _leaf_dirs(lay_src)
+            if not leaves:
                 continue
-            df = spark.read.parquet(lay_src)
-            matches = df.filter(predicate)  # predicate IS TRUE rows
-            if cols:
-                # ONE job per layout (code-review r14: leaves, tuple
-                # footprint, and the delete count used to be three
-                # separate scans): group the matching rows by physical
-                # file + partition tuple. Leaves come from the paths
-                # Spark actually scanned (never reconstructed from
-                # values — a delete can EMPTY a leaf, so the
-                # written-dirs diff the merge path uses can't tell
-                # "untouched" from "fully deleted"); bounded by the
-                # subject's file footprint.
-                from urllib.parse import unquote, urlparse
-
-                grouped = matches.groupBy(
-                    F.input_file_name().alias("__f"), *cols
-                ).count().collect()
-                touched_leaves = {
-                    os.path.relpath(
-                        os.path.dirname(unquote(urlparse(r["__f"]).path)),
-                        lay_src,
-                    )
-                    for r in grouped
-                }
-                tuples = list(
-                    {tuple(r[c] for c in cols) for r in grouped}
+            df = _read_layout(spark, lay_src, meta)
+            # Leaves come from the paths Spark actually scanned (never
+            # reconstructed from values — a delete can EMPTY a leaf, so
+            # the written-dirs diff the merge path uses can't tell
+            # "untouched" from "fully deleted").
+            grouped = df.filter(predicate).groupBy(
+                F.input_file_name().alias("__f"), *cols
+            ).count().collect()
+            touched = {
+                os.path.relpath(
+                    os.path.dirname(unquote(urlparse(r["__f"]).path)),
+                    lay_src,
                 )
-                deleted += sum(r["count"] for r in grouped)
-                if tuples:
-                    scoped = df.filter(
-                        _partition_tuple_filter(cols, tuples)
-                    )
-                    # SQL DELETE semantics: only predicate-TRUE rows
-                    # go; NULL-predicate rows are kept (code-review
-                    # r14 — NOT(pred) silently dropped them, uncounted)
-                    kept = scoped.filter(
-                        f"NOT coalesce(({predicate}), false)"
-                    )
-                    kept.write.mode("overwrite").partitionBy(
-                        *cols
-                    ).parquet(dst)
-                written = _leaf_dirs(dst) if os.path.isdir(dst) else set()
-                for leaf in _leaf_dirs(lay_src):
-                    if leaf not in written and leaf not in touched_leaves:
-                        _link_tree(
-                            os.path.join(lay_src, leaf),
-                            os.path.join(dst, leaf),
-                        )
-            else:
-                n_match = matches.count()
-                if n_match:
-                    deleted += n_match
-                    df.filter(
-                        f"NOT coalesce(({predicate}), false)"
-                    ).write.mode("overwrite").parquet(dst)
-                else:
-                    _link_tree(lay_src, dst)
-        _commit_version(
-            target_path,
-            vdir,
-            keep_versions,
-            partition_spec=list(layouts[-1]["partition_cols"]),
-            layouts=layouts,
-        )
+                for r in grouped
+            }
+            deleted += sum(r["count"] for r in grouped)
+            if grouped:
+                tuples = list({tuple(r[c] for c in cols) for r in grouped})
+                scoped = (
+                    df.filter(_partition_tuple_filter(cols, tuples))
+                    if cols else df
+                )
+                # SQL DELETE semantics (code-review r14): NOT(pred) would
+                # silently drop the NULL-predicate rows, uncounted
+                w = scoped.filter(
+                    f"NOT coalesce(({predicate}), false)"
+                ).write.mode("overwrite")
+                if cols:
+                    w = w.partitionBy(*cols)
+                w.parquet(dst)
+                emptied = emptied or (df, cols, os.path.normpath(
+                    os.path.join(dst, min(touched))
+                ))
+            written = _leaf_dirs(dst)
+            for leaf in leaves - touched - written:
+                _link_leaf(
+                    os.path.join(lay_src, leaf), os.path.join(dst, leaf)
+                )
+        if emptied and next(_iter_data_files(vdir), None) is None:
+            # every row deleted: a partitioned write of no rows leaves
+            # no file, and a snapshot without one has no schema to read
+            df, cols, leaf_dir = emptied
+            df.limit(0).drop(*cols).write.mode("overwrite").parquet(
+                leaf_dir
+            )
+        _commit_layouts(target_path, vdir, layouts, keep_versions)
         return deleted
 
 

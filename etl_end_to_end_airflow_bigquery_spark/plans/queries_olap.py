@@ -5324,7 +5324,7 @@ def partition_evolution_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``writers.evolve_partition_spec`` records the cutover to
     (event_date, event_type) as a metadata-only snapshot (history
     hardlinked, zero rewrite), then ONE
-    ``writers.merge_upsert_evolved`` commit crosses the boundary:
+    ``writers.merge_upsert`` commit crosses the boundary:
     post-cutover rows land under the NEW spec's layout while updates to
     pre-cutover rows (event_id % {mod} == 0 re-priced x1.1) are
     rewritten IN PLACE under the OLD spec — Iceberg's
@@ -5352,7 +5352,6 @@ def partition_evolution_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.writers import (
         evolve_partition_spec,
         merge_upsert,
-        merge_upsert_evolved,
         read_table,
     )
     from ..tmputil import session_tmpdir
@@ -5379,7 +5378,7 @@ def partition_evolution_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd = pre.filter(F.col("event_id") % PEVO_UPD_MOD == 0).withColumn(
         "value", round_half_up(F.col("value") * 1.1, 2)
     )
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, post.unionByName(upd), keys=keys, keep_versions=3
     )
     table = read_table(spark, path)
@@ -5434,7 +5433,6 @@ def evolved_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         CDF_TYPE,
         evolve_partition_spec,
         merge_upsert,
-        merge_upsert_evolved,
         read_table_changes,
     )
     from ..tmputil import session_tmpdir
@@ -5461,7 +5459,7 @@ def evolved_merge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd = pre.filter(F.col("event_id") % PEVO_UPD_MOD == 0).withColumn(
         "value", round_half_up(F.col("value") * 1.1, 2)
     )
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, post.unionByName(upd), keys=keys, keep_versions=3,
         emit_cdf=True,
     )
@@ -5506,7 +5504,7 @@ def partition_spec_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACTIVE spec back to (event_date) — a third, metadata-only layout
     whose spec EQUALS the first's (per-file spec identity is the
     layout dir, Iceberg's spec-id-per-data-file, so duplicate specs
-    across history are fine). One final ``merge_upsert_evolved`` then
+    across history are fine). One final ``merge_upsert`` then
     crosses BOTH boundaries in a single commit: late rows land under
     the rolled-back active spec while in-place re-prices hit rows
     living in the first layout (×1.2, event_id %{m7}!=0 and %{m5}==0)
@@ -5531,7 +5529,6 @@ def partition_spec_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         drop_partition_field,
         evolve_partition_spec,
         merge_upsert,
-        merge_upsert_evolved,
         read_table,
     )
     from ..tmputil import session_tmpdir
@@ -5563,7 +5560,7 @@ def partition_spec_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd_a = pre.filter(F.col("event_id") % PEVO_UPD_MOD == 0).withColumn(
         "value", round_half_up(F.col("value") * 1.1, 2)
     )
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, mid.unionByName(upd_a), keys=keys, keep_versions=3
     )
 
@@ -5575,7 +5572,7 @@ def partition_spec_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd_c = mid.filter(F.col("event_id") % 3 == 0).withColumn(
         "value", round_half_up(F.col("value") * 1.3, 2)
     )
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, late.unionByName(upd_b).unionByName(upd_c),
         keys=keys, keep_versions=3,
     )
@@ -5798,13 +5795,13 @@ ESD_SUBJECT_MOD = 41  # the deleted subject class: user_id % 41 == 0
 
 
 def evolved_subject_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GDPR subject deletion ACROSS a spec-evolved table (closing the
-    gap the flat rewriters refuse loudly: a flat rewrite under a
-    carried layout map would brick the table): the
+    """GDPR subject deletion ACROSS a spec-evolved table (a flat
+    rewrite under a carried layout map would brick the table, so the
+    delete follows the snapshot's layout map): the
     ``partition_evolution_history`` fixture's table — history under
     (event_date), evolved slice under (event_date, event_type), the
     %{mod7} re-price applied across the cutover — then
-    ``writers.delete_rows_evolved`` erases every row of the subject
+    ``writers.delete_rows`` erases every row of the subject
     class user_id %{mods} == 0 in ONE commit: each layout rewritten
     without its matches UNDER ITS OWN SPEC, rewrite scope = the
     matching rows' leaf footprint per layout (collected driver-side,
@@ -5827,10 +5824,9 @@ def evolved_subject_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..operators.writers import (
-        delete_rows_evolved,
+        delete_rows,
         evolve_partition_spec,
         merge_upsert,
-        merge_upsert_evolved,
         read_table,
     )
     from ..tmputil import session_tmpdir
@@ -5857,10 +5853,10 @@ def evolved_subject_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd = pre.filter(F.col("event_id") % PEVO_UPD_MOD == 0).withColumn(
         "value", round_half_up(F.col("value") * 1.1, 2)
     )
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, post.unionByName(upd), keys=keys, keep_versions=3
     )
-    delete_rows_evolved(
+    delete_rows(
         spark, path, f"user_id % {ESD_SUBJECT_MOD} = 0", keep_versions=3
     )
     table = read_table(spark, path)
@@ -5888,13 +5884,13 @@ OLAP_QUERIES["evolved_subject_delete"] = evolved_subject_delete
 
 def evolved_compaction_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-layout small-file COMPACTION across a spec-evolved table
-    (with ``delete_rows_evolved`` this completes flat-rewriter parity —
-    the two operations the r13 guard deferred): the
+    (``compact_parquet`` follows the snapshot's layout map, as
+    ``delete_rows`` does): the
     ``partition_evolution_history`` fixture's table is built with its
     first layout deliberately FRAGMENTED (AQE partition-coalescing
     scoped off for the seeding merge, so every shuffle task writes a
     file into every touched day leaf), then
-    ``writers.compact_parquet_evolved`` rewrites each fragmented leaf
+    ``writers.compact_parquet`` rewrites each fragmented leaf
     to its size-targeted file count UNDER ITS OWN LAYOUT'S SPEC while
     already-compact leaves hardlink through unread, in ONE commit that
     carries the layout map. The report reads the compacted table.
@@ -5913,10 +5909,9 @@ def evolved_compaction_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..operators.writers import (
-        compact_parquet_evolved,
+        compact_parquet,
         evolve_partition_spec,
         merge_upsert,
-        merge_upsert_evolved,
         read_table,
     )
     from ..tmputil import session_tmpdir
@@ -5954,10 +5949,10 @@ def evolved_compaction_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd = pre.filter(F.col("event_id") % PEVO_UPD_MOD == 0).withColumn(
         "value", round_half_up(F.col("value") * 1.1, 2)
     )
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, post.unionByName(upd), keys=keys, keep_versions=3
     )
-    compact_parquet_evolved(spark, path)
+    compact_parquet(spark, path)
     table = read_table(spark, path)
     return (
         table.filter(
@@ -6177,7 +6172,7 @@ def evolved_layout_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     under a (day)-partitioned layout (``manifest_shard_files={shards}``
     → sharded census), the spec then evolves to (day, event_type), and
     the post-cutover days land under the new layout via
-    ``merge_upsert_evolved``. The census is sharded PER LAYOUT with
+    ``merge_upsert``. The census is sharded PER LAYOUT with
     census-wide per-layout column bounds in the sidecar, so the
     {band}-day ``ts`` band — entirely pre-cutover — excludes
     ``layout_001`` from ONE sidecar check: its manifest shards are
@@ -6205,7 +6200,6 @@ def evolved_layout_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.writers import (
         evolve_partition_spec,
         merge_upsert,
-        merge_upsert_evolved,
         read_table_skipping,
     )
     from ..tmputil import session_tmpdir
@@ -6226,7 +6220,7 @@ def evolved_layout_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolve_partition_spec(
         spark, path, ["day", "event_type"], keep_versions=3
     )
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, base.filter(F.col("day") >= ELP_CUT_DAY),
         keys=keys, keep_versions=3,
     )

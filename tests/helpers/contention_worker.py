@@ -16,7 +16,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from etl_end_to_end_airflow_bigquery_spark.operators.writers import (  # noqa: E402
     ConcurrentWriteError,
     merge_upsert,
-    merge_upsert_evolved,
 )
 
 
@@ -66,7 +65,7 @@ def main():
         hist_key = float(wid)  # see parent fixture: k = wid lives in
         upd = [(int(hist_key), "h0", "click", 100.0 + b)]
         batch = spark.createDataFrame(fresh + upd, schema)
-        retry(lambda: merge_upsert_evolved(
+        retry(lambda: merge_upsert(
             spark, path_b, batch, keys=["k", "day", "typ"],
             keep_versions=20,
         ))

@@ -997,7 +997,7 @@ def test_partition_spec_evolution_lifecycle(spark, tmp_path):
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
         _resolve_data_dir,
         evolve_partition_spec,
-        merge_upsert_evolved,
+        merge_upsert,
         read_table,
         snapshot_partition_spec,
         table_versions,
@@ -1034,11 +1034,11 @@ def test_partition_spec_evolution_lifecycle(spark, tmp_path):
     f_new = _one_parquet(os.path.join(v2_dir, "layout_000", "day=d2"))
     assert os.stat(f_old).st_ino == os.stat(f_new).st_ino
 
-    # plain merge_upsert must refuse the evolved table loudly
+    # the layout map decides partitioning: partition_col is refused
     with pytest.raises(ValueError, match="spec-evolved"):
         merge_upsert(
             spark, path, spark.createDataFrame(rows_v1[:1], schema),
-            keys=keys,
+            keys=keys, partition_col="day",
         )
 
     # cross-boundary merge: update one pre-evolution row + insert new
@@ -1048,7 +1048,7 @@ def test_partition_spec_evolution_lifecycle(spark, tmp_path):
          (5, "d3", "click", 5.0)],      # new key, new day -> layout_001
         schema,
     )
-    merge_upsert_evolved(spark, path, batch, keys=keys, keep_versions=10)
+    merge_upsert(spark, path, batch, keys=keys, keep_versions=10)
     want = [
         (1, "d1", "view", 1.0), (2, "d1", "click", 20.0),
         (3, "d2", "view", 3.0), (4, "d2", "view", 4.0),
@@ -1082,7 +1082,7 @@ def test_partition_spec_evolution_lifecycle(spark, tmp_path):
     assert spec == ["typ"] and [la["dir"] for la in lays] == [
         "layout_000", "layout_001", "layout_002"
     ]
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path,
         spark.createDataFrame([(6, "d9", "view", 6.0)], schema),
         keys=keys, keep_versions=10,
@@ -1203,14 +1203,13 @@ def test_read_table_skipping_prunes_and_preserves_partitions(spark, tmp_path):
     # spec-evolved snapshot: per-layout skipping still exact
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
         evolve_partition_spec,
-        merge_upsert_evolved,
     )
 
     evolve_partition_spec(spark, path, ["bucket", "day"])
     extra = spark.createDataFrame(
         [(100, "d9", 55.0)], "k int, day string, v double"
     ).withColumn("bucket", F.floor(F.col("v") / 10.0).cast("bigint"))
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, extra, keys=["k", "bucket", "day"]
     )
     got = read_table_skipping(spark, path, {"v": (50.0, 60.0)})
@@ -1235,7 +1234,7 @@ def test_merge_upsert_evolved_emits_scoped_cdf(spark, tmp_path):
     with the commit's sequence."""
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
         evolve_partition_spec,
-        merge_upsert_evolved,
+        merge_upsert,
         read_table_changes,
         table_versions,
     )
@@ -1258,7 +1257,7 @@ def test_merge_upsert_evolved_emits_scoped_cdf(spark, tmp_path):
          (5, "d3", "click", 5.0)],
         schema,
     )
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, batch, keys=keys, keep_versions=10, emit_cdf=True
     )
     seq = table_versions(path)[-1]
@@ -1274,30 +1273,248 @@ def test_merge_upsert_evolved_emits_scoped_cdf(spark, tmp_path):
     }
 
 
-def test_flat_rewriters_refuse_spec_evolved_tables(spark, tmp_path):
-    """Code-review r13: delete_rows / compact_parquet rewrite the tree
-    FLAT — on an evolved table that would stamp a stale layout map over
-    flat data and brick every reader. They must refuse loudly instead."""
+_SHAPE_SCHEMA = "k bigint, day string, typ string, v double"
+_SHAPE_KEYS = ["k", "day", "typ"]
+_SHAPES = ["flat", "partitioned", "spec_evolved"]
+
+
+def _shape_rows(n):
+    return [(k, f"d{k % 3}", "ab"[k % 2], float(k)) for k in range(n)]
+
+
+def _table_of_shape(spark, path, shape, rows):
+    """A versioned table in one of the shapes the writers rewrite:
+    flat unpartitioned, flat partitioned by day, or spec-evolved
+    (day, then day + typ) with the rows split across both layouts.
+    AQE coalescing is scoped off so every shuffle task writes its own
+    file: leaves start fragmented."""
+    half = len(rows) // 2 if shape == "spec_evolved" else len(rows)
+    prev = spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.enabled", "true"
+    )
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        merge_upsert(
+            spark, path, spark.createDataFrame(rows[:half], _SHAPE_SCHEMA),
+            keys=_SHAPE_KEYS, keep_versions=10,
+            partition_col=None if shape == "flat" else "day",
+        )
+        if shape == "spec_evolved":
+            from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+                evolve_partition_spec,
+            )
+
+            evolve_partition_spec(spark, path, ["day", "typ"],
+                                  keep_versions=10)
+            merge_upsert(
+                spark, path,
+                spark.createDataFrame(rows[half:], _SHAPE_SCHEMA),
+                keys=_SHAPE_KEYS, keep_versions=10,
+            )
+    finally:
+        spark.conf.set(
+            "spark.sql.adaptive.coalescePartitions.enabled", prev
+        )
+
+
+@pytest.mark.parametrize("shape", _SHAPES)
+def test_delete_then_compact_every_table_shape(spark, tmp_path, shape):
+    """One delete_rows and one compact_parquet for every versioned
+    table shape, both driven by the snapshot's layout map (a flat table
+    is one layout rooted at the snapshot dir): rows follow a Python
+    model, the partition spec survives, a delete matching nothing and
+    the leaves a delete did not touch keep their inodes, and
+    already-compact leaves ride through compaction unread."""
+    import os
+    from collections import Counter
+
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        _iter_data_files,
+        _resolve_data_dir,
         compact_parquet,
         delete_rows,
-        evolve_partition_spec,
-        read_table,
+        snapshot_partition_spec,
+    )
+
+    path = str(tmp_path / "tbl")
+    rows = _shape_rows(24)
+    _table_of_shape(spark, path, shape, rows)
+    spec = snapshot_partition_spec(path)
+
+    def inodes():
+        vdir = _resolve_data_dir(path)
+        return {rel: os.stat(p).st_ino for rel, p in _iter_data_files(vdir)}
+
+    def files_per_leaf(files):
+        return Counter(os.path.dirname(rel) for rel in files)
+
+    def table():
+        return sorted(
+            tuple(r)
+            for r in read_table(spark, path)
+            .select("k", "day", "typ", "v").collect()
+        )
+
+    base = inodes()
+    assert delete_rows(spark, path, "k < 0", keep_versions=10) == 0
+    assert inodes() == base, "a delete matching nothing rewrites nothing"
+
+    model = [r for r in rows if not (r[1] == "d0" and r[0] % 2 == 0)]
+    n = delete_rows(
+        spark, path, "day = 'd0' AND k % 2 = 0", keep_versions=10
+    )
+    assert n == len(rows) - len(model)
+    assert table() == model
+    assert snapshot_partition_spec(path) == spec
+    deleted = inodes()
+    untouched = [rel for rel in base if "day=" in rel and "day=d0" not in rel]
+    assert bool(untouched) == (shape != "flat")
+    for rel in untouched:
+        assert deleted[rel] == base[rel], rel
+    if shape != "flat":
+        assert all("day=" in rel for rel in deleted), sorted(deleted)
+
+    per_leaf = files_per_leaf(deleted)
+    assert max(per_leaf.values()) > 1, "fixture must be fragmented"
+    n_out = compact_parquet(spark, path, target_file_bytes=1 << 30)
+    compacted = inodes()
+    assert set(files_per_leaf(compacted).values()) == {1}
+    assert n_out == len(compacted)
+    for rel, ino in compacted.items():
+        if per_leaf[os.path.dirname(rel)] == 1:
+            assert deleted[rel] == ino, rel
+    assert table() == model
+    assert snapshot_partition_spec(path) == spec
+
+
+def test_delete_rows_keeps_partitioning_for_scoped_merges(spark, tmp_path):
+    """A delete on a day-partitioned table keeps its day= leaves, so
+    the next partition-scoped merge still carries every untouched
+    partition forward (a flat rewrite under the recorded spec left the
+    merge nothing to carry: 9 rows fell to 3)."""
+    import os
+
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        _resolve_data_dir,
+        delete_rows,
+    )
+
+    path = str(tmp_path / "tbl")
+    rows = [(k, f"d{k % 3}", float(k)) for k in range(9)]
+    merge_upsert(
+        spark, path, _frame(spark, rows), keys=["k", "day"],
+        partition_col="day",
+    )
+    assert delete_rows(spark, path, "k = 4") == 1
+    merge_upsert(
+        spark, path, _frame(spark, [(4, "d1", 40.0)]), keys=["k", "day"],
+        partition_col="day",
+    )
+    want = sorted([r for r in rows if r[0] != 4] + [(4, "d1", 40.0)])
+    assert _sorted(read_table(spark, path).select("k", "day", "v")) == want
+    vdir = _resolve_data_dir(path)
+    assert sorted(d for d in os.listdir(vdir) if d.startswith("day=")) == [
+        "day=d0", "day=d1", "day=d2"
+    ]
+
+
+def test_delete_rows_pre_sidecar_partitioned_snapshot(spark, tmp_path):
+    """A snapshot committed before the sidecar records no partition
+    spec: the delete takes it from the hive leaf paths, so it rewrites
+    only the touched leaf under day= and carries the other one."""
+    import os
+
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        _iter_data_files,
+        _resolve_data_dir,
+        delete_rows,
+    )
+
+    path = str(tmp_path / "tbl")
+    rows = [(k, f"d{k % 2}", float(k)) for k in range(10)]
+    _frame(spark, rows).write.partitionBy("day").parquet(
+        os.path.join(path, "v_000001_fixture")
+    )
+    with open(os.path.join(path, "_CURRENT"), "w") as f:
+        f.write("v_000001_fixture")
+    with open(os.path.join(path, "_COMMITS"), "w") as f:
+        f.write("v_000001_fixture\n")
+    d0 = {
+        rel: os.stat(p).st_ino
+        for rel, p in _iter_data_files(_resolve_data_dir(path))
+        if rel.startswith("day=d0")
+    }
+    assert delete_rows(spark, path, "k = 3") == 1
+    assert _sorted(read_table(spark, path).select("k", "day", "v")) == sorted(
+        r for r in rows if r[0] != 3
+    )
+    after = {
+        rel: os.stat(p).st_ino
+        for rel, p in _iter_data_files(_resolve_data_dir(path))
+    }
+    assert all(rel.startswith("day=") for rel in after), sorted(after)
+    assert {rel: after[rel] for rel in d0} == d0
+
+
+@pytest.mark.parametrize("shape", _SHAPES)
+def test_delete_everything_leaves_readable_empty_table(
+    spark, tmp_path, shape
+):
+    """Deleting every row commits a snapshot that reads as an empty
+    table with the pre-delete column names and types (a partitioned
+    write of no rows leaves no file to read a schema from), and the
+    next merge writes into it normally."""
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        delete_rows,
+    )
+
+    path = str(tmp_path / "tbl")
+    rows = _shape_rows(12)
+    _table_of_shape(spark, path, shape, rows)
+    dtypes = read_table(spark, path).dtypes
+    assert delete_rows(spark, path, "true") == len(rows)
+    empty = read_table(spark, path)
+    assert empty.count() == 0
+    assert empty.dtypes == dtypes
+    merge_upsert(
+        spark, path,
+        spark.createDataFrame([(99, "d1", "a", 9.9)], _SHAPE_SCHEMA),
+        keys=_SHAPE_KEYS,
+        partition_col="day" if shape == "partitioned" else None,
+    )
+    got = read_table(spark, path).select("k", "day", "typ", "v").collect()
+    assert [tuple(r) for r in got] == [(99, "d1", "a", 9.9)]
+
+
+def test_delete_rows_job_count(spark, tmp_path):
+    """delete_rows takes its count from the match job and reads a flat
+    snapshot with the sidecar's recorded schema: on an unpartitioned
+    1,000-row table it starts at most 3 Spark jobs (the grouped match
+    job's two stages under AQE, then the rewrite)."""
+    import uuid
+
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        delete_rows,
     )
 
     path = str(tmp_path / "tbl")
     merge_upsert(
         spark, path,
-        _frame(spark, [(1, "d1", 1.0), (2, "d2", 2.0)]),
-        keys=["k", "day"], partition_col="day",
+        spark.range(1000).selectExpr("id AS k", "id * 1.5 AS v"),
+        keys=["k"],
     )
-    evolve_partition_spec(spark, path, ["day", "k"])
-    with pytest.raises(ValueError, match="spec-evolved"):
-        delete_rows(spark, path, "v > 1.5")
-    with pytest.raises(ValueError, match="spec-evolved"):
-        compact_parquet(spark, path)
-    # and the table is still perfectly readable afterwards
-    assert read_table(spark, path).count() == 2
+    sc = spark.sparkContext
+    group = f"delete_rows_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "delete_rows job count")
+    try:
+        n = delete_rows(spark, path, "k % 10 = 4")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n == 100
+    assert read_table(spark, path).count() == 900
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 3, jobs
 
 
 def test_manifest_incomplete_census_falls_back_to_footers(spark, tmp_path):
@@ -1542,7 +1759,6 @@ def test_drop_partition_field_rollback_lifecycle(spark, tmp_path):
         drop_partition_field,
         evolve_partition_spec,
         merge_upsert,
-        merge_upsert_evolved,
         read_table,
         snapshot_partition_spec,
     )
@@ -1558,7 +1774,7 @@ def test_drop_partition_field_rollback_lifecycle(spark, tmp_path):
     )
     evolve_partition_spec(spark, path, ["day", "typ"], keep_versions=10)
     mid = [(3, "d3", "view", 3.0)]
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, spark.createDataFrame(mid, schema),
         keys=keys, keep_versions=10,
     )
@@ -1579,7 +1795,7 @@ def test_drop_partition_field_rollback_lifecycle(spark, tmp_path):
         (3, "d3", "view", 30.0),    # in-place update, layout_001
         (4, "d4", "view", 4.0),     # new key -> layout_002 (spec [day])
     ]
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, spark.createDataFrame(batch, schema),
         keys=keys, keep_versions=10,
     )
@@ -1620,7 +1836,7 @@ def test_drop_partition_field_rollback_lifecycle(spark, tmp_path):
 
     # rollback to the EMPTY spec (unpartitioned active layout)
     assert drop_partition_field(spark, path, "day", keep_versions=10) == []
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path,
         spark.createDataFrame([(5, "d5", "view", 5.0)], schema),
         keys=keys, keep_versions=10,
@@ -1756,7 +1972,7 @@ def test_sharded_manifest_spec_evolved_read(spark, tmp_path, monkeypatch):
     writers.evolve_partition_spec(spark, path, ["day", "typ"],
                                   keep_versions=5)
     batch = [(20, "d9", "view", 20.0), (1, "d1", "view", 100.0)]
-    writers.merge_upsert_evolved(
+    writers.merge_upsert(
         spark, path, spark.createDataFrame(batch, schema),
         keys=keys, keep_versions=5,
     )
@@ -1795,7 +2011,7 @@ def test_multiprocess_writer_contention_linearizes(spark, tmp_path):
     """VERDICT r13 item 7: the table write lock is load-bearing for the
     100 TB story but was proven only in-process. Two OS PROCESSES (own
     SparkSessions) race merge_upsert on one table, then
-    merge_upsert_evolved on a spec-evolved table, retrying on
+    merge_upsert on a spec-evolved table, retrying on
     ConcurrentWriteError (the documented client protocol). Proofs:
     (a) no lost update — every batch's effect is in the final state;
     (b) a reader polling MID-RACE always sees a complete committed
@@ -1887,8 +2103,8 @@ def test_multiprocess_writer_contention_linearizes(spark, tmp_path):
 
 
 def test_delete_rows_evolved_per_layout(spark, tmp_path):
-    """Subject deletion across a spec-evolved table (the gap
-    _reject_spec_evolved documents): each layout rewrites WITHOUT its
+    """Subject deletion across a spec-evolved table: each layout
+    of the snapshot's layout map rewrites WITHOUT its
     matching rows under its own spec, untouched leaves hardlink
     through, a fully-deleted leaf disappears (and must NOT be
     re-linked by the untouched-leaf carry), and time travel still
@@ -1898,10 +2114,8 @@ def test_delete_rows_evolved_per_layout(spark, tmp_path):
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
         _resolve_data_dir,
         delete_rows,
-        delete_rows_evolved,
         evolve_partition_spec,
         merge_upsert,
-        merge_upsert_evolved,
         read_table,
         table_versions,
     )
@@ -1919,20 +2133,17 @@ def test_delete_rows_evolved_per_layout(spark, tmp_path):
     )
     evolve_partition_spec(spark, path, ["day", "typ"], keep_versions=10)
     post = [(5, "d4", "view", 5.0), (6, "d4", "click", 6.0)]
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, spark.createDataFrame(post, schema),
         keys=keys, keep_versions=10,
     )
-    # plain delete_rows still refuses the evolved table loudly
-    with pytest.raises(ValueError, match="spec-evolved"):
-        delete_rows(spark, path, "id = 1")
     v1_dir = _resolve_data_dir(path)
     f_d2 = _one_parquet(os.path.join(v1_dir, "layout_000", "day=d2"))
 
     # delete: all of d1 in layout_000 (leaf d1 fully emptied), the
     # view row of d4 in layout_001 (leaf partially emptied), nothing
     # in d2/d3 (hardlinked through)
-    n = delete_rows_evolved(
+    n = delete_rows(
         spark, path, "v IN (1.0, 2.0, 5.0)", keep_versions=10
     )
     assert n == 3
@@ -1965,7 +2176,7 @@ def test_delete_rows_evolved_per_layout(spark, tmp_path):
     assert before.count() == 6
 
     # deleting everything a layout holds leaves it empty but readable
-    n2 = delete_rows_evolved(spark, path, "day = 'd4'", keep_versions=10)
+    n2 = delete_rows(spark, path, "day = 'd4'", keep_versions=10)
     assert n2 == 1
     got2 = sorted(
         tuple(r)
@@ -1976,8 +2187,8 @@ def test_delete_rows_evolved_per_layout(spark, tmp_path):
 
 
 def test_compact_parquet_evolved_per_leaf(spark, tmp_path):
-    """Per-layout compaction (the second half of flat-rewriter parity
-    for evolved tables): fragmented leaves compact under their own
+    """Per-layout compaction of a spec-evolved table: fragmented
+    leaves compact under their own
     layout's spec, already-compact leaves hardlink through unread,
     rows/values/partitioning are preserved, and the layout map carries
     forward so reads keep working."""
@@ -1987,10 +2198,8 @@ def test_compact_parquet_evolved_per_leaf(spark, tmp_path):
         _leaf_dirs,
         _resolve_data_dir,
         compact_parquet,
-        compact_parquet_evolved,
         evolve_partition_spec,
         merge_upsert,
-        merge_upsert_evolved,
         read_table,
     )
 
@@ -2020,13 +2229,10 @@ def test_compact_parquet_evolved_per_leaf(spark, tmp_path):
     evolve_partition_spec(spark, path, ["day", "typ"], keep_versions=10)
     post = [(100 + i, "d9", "view" if i % 2 else "click", float(i))
             for i in range(6)]
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path, spark.createDataFrame(post, schema).coalesce(1),
         keys=keys, keep_versions=10,
     )
-    with pytest.raises(ValueError, match="spec-evolved"):
-        compact_parquet(spark, path)
-
     v1 = _resolve_data_dir(path)
 
     def files_per_leaf(vdir, lay):
@@ -2051,7 +2257,7 @@ def test_compact_parquet_evolved_per_leaf(spark, tmp_path):
         .select("id", "day", "typ", "v").collect()
     )
 
-    n_out = compact_parquet_evolved(spark, path)
+    n_out = compact_parquet(spark, path)
     v2 = _resolve_data_dir(path)
     after0 = files_per_leaf(v2, "layout_000")
     assert set(after0.values()) == {1}, f"not compacted: {after0}"
@@ -2068,7 +2274,7 @@ def test_compact_parquet_evolved_per_leaf(spark, tmp_path):
     )
     assert got == want
     # a later evolved merge still works on the compacted snapshot
-    merge_upsert_evolved(
+    merge_upsert(
         spark, path,
         spark.createDataFrame([(999, "d9", "view", 9.9)], schema),
         keys=keys, keep_versions=10,
@@ -2158,12 +2364,11 @@ def test_sharded_census_type_tags_roundtrip_exotic_types(spark, tmp_path):
 
 def test_delete_semantics_null_predicate_rows_kept(spark, tmp_path):
     """Code-review r14: SQL DELETE semantics — a NULL-valued predicate
-    keeps its row in BOTH delete paths (plain NOT(pred) silently
-    dropped such rows, uncounted, and only in leaves that also held a
-    true match)."""
+    keeps its row on a flat and on a spec-evolved table alike (plain
+    NOT(pred) silently dropped such rows, uncounted, and only in leaves
+    that also held a true match)."""
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
         delete_rows,
-        delete_rows_evolved,
         evolve_partition_spec,
         merge_upsert,
         read_table,
@@ -2172,7 +2377,7 @@ def test_delete_semantics_null_predicate_rows_kept(spark, tmp_path):
     schema = "id bigint, day string, typ string, v double"
     keys = ["id", "day", "typ"]
 
-    # flat path
+    # flat table
     path1 = str(tmp_path / "flat")
     rows = [(1, "d1", "view", 1.0), (2, "d1", "view", None),
             (3, "d2", "view", 3.0)]
@@ -2185,12 +2390,12 @@ def test_delete_semantics_null_predicate_rows_kept(spark, tmp_path):
     )
     assert got == [(1, 1.0), (2, None)], "NULL-predicate row must stay"
 
-    # evolved path: the NULL row shares a leaf with a true match
+    # evolved table: the NULL row shares a leaf with a true match
     path2 = str(tmp_path / "evo")
     merge_upsert(spark, path2, spark.createDataFrame(rows, schema),
                  keys=keys, partition_col="day", keep_versions=5)
     evolve_partition_spec(spark, path2, ["day", "typ"], keep_versions=5)
-    n2 = delete_rows_evolved(spark, path2, "v < 2.0")
+    n2 = delete_rows(spark, path2, "v < 2.0")
     assert n2 == 1
     got2 = sorted(
         (r.id, r.v) for r in read_table(spark, path2).collect()
@@ -2241,16 +2446,16 @@ def test_manifest_shard_files_validated_and_inherited(spark, tmp_path):
     writers.evolve_partition_spec(spark, path, ["day", "typ"],
                                   keep_versions=10)
     assert meta_of().get("census_shards"), "evolve must inherit policy"
-    writers.merge_upsert_evolved(
+    writers.merge_upsert(
         spark, path,
         spark.createDataFrame([(99, "d9", "view", 9.0)], schema),
         keys=keys, keep_versions=10,
     )
     m = meta_of()
     assert m.get("census_shards") and m["manifest_shard_files"] == 2
-    writers.compact_parquet_evolved(spark, path)
+    writers.compact_parquet(spark, path)
     assert meta_of().get("census_shards"), "compaction must inherit"
-    writers.delete_rows_evolved(spark, path, "id = 99")
+    writers.delete_rows(spark, path, "id = 99")
     assert meta_of().get("census_shards"), "delete must inherit"
 
 
@@ -2386,7 +2591,7 @@ def test_layout_sharded_census_prunes_whole_layout(
     writers.evolve_partition_spec(spark, path, ["day", "typ"],
                                   keep_versions=5)
     batch = [(20, "d9", "view", 500.0), (21, "d9", "click", 520.0)]
-    writers.merge_upsert_evolved(
+    writers.merge_upsert(
         spark, path, spark.createDataFrame(batch, schema),
         keys=keys, keep_versions=5,
     )
@@ -2482,7 +2687,7 @@ def test_layout_sharded_all_layouts_excluded_returns_empty(
     )
     writers.evolve_partition_spec(spark, path, ["day", "typ"],
                                   keep_versions=5)
-    writers.merge_upsert_evolved(
+    writers.merge_upsert(
         spark, path,
         spark.createDataFrame([(20, "d9", "view", 500.0)], schema),
         keys=keys, keep_versions=5,

@@ -5,9 +5,9 @@ Wall-clock A/Bs on loop-shaped queries (connected components, BFS,
 pagerank, IVM maintenance) measure scheduler latency under whatever load
 the host carries; the number of Spark jobs a query launches is a
 deterministic property of the code. This tool runs each named query
-once into the noop sink and reports the statusTracker job-id delta —
-the per-query job count — so loop-fold claims are reproducible rather
-than quoted.
+once into the noop sink under its own job group and reports the jobs
+statusTracker recorded for that group — the per-query job count — so
+loop-fold claims are reproducible rather than quoted.
 
 Usage: python tools/job_count.py [sf_dir] query [query ...]
 """
@@ -17,7 +17,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -32,19 +32,22 @@ def main() -> int:
     from etl_end_to_end_airflow_bigquery_spark.tmputil import sweep_tmpdirs
 
     spark = get_spark("job_count")
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     # Warmup so JVM/codegen startup jobs don't land in the first query.
     QUERIES["top_orders_by_date"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
     for name in names:
-        before = tracker.getJobIdsForGroup(None)
-        hi = max(before) if before else -1
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        after = tracker.getJobIdsForGroup(None)
-        n = len([j for j in after if j > hi])
+        group = f"job_count:{name}"
+        sc.setJobGroup(group, name)
+        try:
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n = len(tracker.getJobIdsForGroup(group))
         sweep_tmpdirs()
         print(f"{n:5d} jobs  {name}")
     return 0
