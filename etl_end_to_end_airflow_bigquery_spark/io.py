@@ -100,9 +100,22 @@ def read_partition_evolved(
     long as the writer split history disjointly (the gated query's
     oracle certifies exactly that).
     """
+    return union_layouts(
+        spark,
+        [spark.read.parquet(path) for path, _cols in layouts],
+        [path for path, _c in layouts],
+    )
+
+
+def union_layouts(
+    spark: SparkSession, dfs: list[DataFrame], labels: list
+) -> DataFrame:
+    """Union per-layout frames of one logical table by NAME, after
+    :func:`assert_one_logical_schema` — the shared tail of
+    :func:`read_partition_evolved` and the versioned writers' evolved
+    reads (which read each layout with its recorded schema)."""
     _tune(spark)
-    dfs = [spark.read.parquet(path) for path, _cols in layouts]
-    assert_one_logical_schema(dfs, [path for path, _c in layouts])
+    assert_one_logical_schema(dfs, labels)
     out = dfs[0]
     for df in dfs[1:]:
         out = out.unionByName(df)

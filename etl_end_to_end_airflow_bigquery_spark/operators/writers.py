@@ -10,11 +10,13 @@ engine-level writers (SURVEY.md §2.1, §2.3, §7 step 2):
   (``dags/fx_pipeline_with_merge.py:90-103,173-189``; README.md:50-64).
   Plain Parquet has no row-level ops, so MERGE = full-outer join with
   source-wins coalesce + an atomic snapshot commit. At 100 TB you never
-  rewrite the whole table: when ``partition_col`` is given, only the
-  partitions present in the source batch are read and rewritten;
-  untouched partitions are carried into the new snapshot as hardlinks
-  (metadata-only, no data copy) — BigQuery MERGE atomicity
-  (``dags/fx_pipeline_with_merge.py:90-111``) without BigQuery.
+  rewrite the whole table: on a partitioned table (its spec is named
+  by the first write's ``partition_col`` and recorded with the
+  snapshot) only the partitions present in the source batch are read
+  and rewritten; untouched partitions are carried into the new
+  snapshot as hardlinks (metadata-only, no data copy) — BigQuery MERGE
+  atomicity (``dags/fx_pipeline_with_merge.py:90-111``) without
+  BigQuery.
 - **idempotent_append** — the check-then-insert guard
   (``dags/idempotent_fx_pipeline.py:73-87``), strengthened from the
   reference's all-or-nothing COUNT check to a per-row left-anti join
@@ -33,9 +35,10 @@ directory doesn't exist):
       v_000002_<uuid>/day=d1/…parquet   (partitioned; untouched leaves
                                          hardlink the previous snapshot)
       v_*/_snapshot_meta.json           ← commit-time sidecar: per-file
-                                         stats, partition spec, layouts,
-                                         and (unpartitioned) the Spark
-                                         row schema
+                                         stats, partition spec and
+                                         column types, layouts, and
+                                         (unpartitioned) the Spark row
+                                         schema
 
 A commit writes a fresh ``v_*`` directory, records it in ``_COMMITS``,
 then flips ``_CURRENT`` with ``os.replace`` (atomic on POSIX; on an
@@ -48,11 +51,12 @@ A spec-evolved snapshot records the map (one layout dir per partition
 spec, :func:`evolve_partition_spec`); a flat snapshot is one layout
 rooted at the snapshot dir, partitioned by its recorded spec.
 
-Readers resolve the pointer via :func:`read_table`, which reads an
-unpartitioned snapshot with the schema its sidecar recorded
-(``spark_schema``, copied from the data files' footers at commit) and
-so skips Spark's schema-inference job — the way Delta keeps the table
-schema in its log; any other snapshot falls back to the inferred read.
+Readers resolve the pointer via :func:`read_table`, which reads each
+layout with the schema its sidecar vouches for (``spark_schema``,
+copied from the data files' footers at commit, or the layout's footer
+schema, plus the recorded partition column types) and so skips Spark's
+schema-inference job — the way Delta keeps the table schema in its
+log; a snapshot without a sidecar falls back to the inferred read.
 A reader that resolved the previous pointer keeps a fully-intact
 directory — the last ``keep_versions`` **committed** versions are
 retained (the Delta/Iceberg snapshot-retention trade: shrink it and a
@@ -214,13 +218,16 @@ def read_table(
     SPEC-EVOLVED snapshots (``evolve_partition_spec``) read
     transparently: the snapshot's ``_snapshot_meta.json`` records the
     layout map, and the read is the per-layout union
-    (``io.read_partition_evolved``) — resolved FROM TABLE HISTORY, no
+    (``io.union_layouts``) — resolved FROM TABLE HISTORY, no
     caller-supplied paths (VERDICT r12 item 3). Time travel works the
     same way: each snapshot carries its own layout map.
 
-    An unpartitioned snapshot whose sidecar records ``spark_schema`` is
-    read with that schema, so the read starts no schema-inference job;
-    every other snapshot is read with Spark's inferred schema.
+    Every layout is read with the schema its sidecar vouches for
+    (:func:`_layout_schema`: the recorded ``spark_schema`` or the
+    footer's row schema, plus the recorded partition column types), so
+    the read starts no schema-inference job and partition values keep
+    their written type; a snapshot without a sidecar, or with
+    non-Spark-written files, is read with Spark's inferred schema.
     """
     if version is None:
         vdir = _resolve_data_dir(path)
@@ -237,44 +244,92 @@ def read_table(
             )
         vdir = os.path.join(path, avail[version])
     meta = _load_snapshot_meta(vdir)
-    layouts = (meta or {}).get("layouts")
-    if layouts:
-        from ..io import read_partition_evolved
-
+    if meta is None:
+        return spark.read.parquet(vdir)
+    layouts = _snapshot_layouts(vdir, meta)
+    if meta.get("layouts"):
         nonempty = _nonempty_layout_dirs(vdir, meta, layouts)
-        resolved = [
-            (os.path.join(vdir, lay["dir"]), list(lay["partition_cols"]))
-            for lay in layouts
-            if lay["dir"] in nonempty
-        ]
-        if not resolved:
+        layouts = [lay for lay in layouts if lay["dir"] in nonempty]
+        if not layouts:
             raise ValueError(
                 f"spec-evolved snapshot {vdir!r} has no data files in any "
                 "recorded layout"
             )
-        return read_partition_evolved(spark, resolved)
-    return _read_layout(spark, vdir, meta)
+    lay_dirs = [
+        os.path.normpath(os.path.join(vdir, lay["dir"])) for lay in layouts
+    ]
+    frames = [
+        _read_layout(spark, d, meta, lay["partition_cols"])
+        for d, lay in zip(lay_dirs, layouts)
+    ]
+    if not meta.get("layouts"):
+        return frames[0]
+    from ..io import union_layouts
+
+    return union_layouts(spark, frames, lay_dirs)
 
 
-def _read_layout(spark: SparkSession, lay_dir: str, meta: dict | None):
-    """Read one layout dir (or one of its leaves) of a snapshot. A
-    sidecar that records ``spark_schema`` (flat, unpartitioned
-    snapshots only) supplies the schema, so the read starts no
-    schema-inference job; anything else is read with Spark's inferred
-    schema."""
-    recorded = (meta or {}).get("spark_schema")
+def _layout_schema(lay_dir: str, meta: dict | None, cols=()):
+    """The schema to read one layout dir (or one of its leaves) with,
+    or None for Spark's inferred read. Data columns come from the
+    sidecar's ``spark_schema`` (flat, unpartitioned snapshots), else
+    from the Spark row schema in the footer of the layout's first data
+    file (hive writes keep partition columns out of footers). Partition
+    columns ``cols`` take the types the sidecar recorded from the frame
+    that wrote them (``partition_types``) — never re-inferred from
+    directory names, so ``"007"`` stays a string and a bigint key stays
+    bigint. No sidecar, a file without Spark's footer key, or an
+    untyped partition column: inference."""
+    if not meta:
+        return None
+    types = meta.get("partition_types") or {}
+    if any(c not in types for c in cols):
+        return None
+    recorded = meta.get("spark_schema")
     if recorded is None:
-        return spark.read.parquet(lay_dir)
+        first = next(_iter_data_files(lay_dir), None)
+        if first is None:
+            return None
+        import pyarrow.parquet as pq
+
+        raw = (pq.ParquetFile(first[1]).metadata.metadata or {}).get(
+            _SPARK_ROW_META
+        )
+        if raw is None:
+            return None
+        recorded = raw.decode("utf-8")
     import json
 
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import StructField, StructType
 
     schema = StructType.fromJson(json.loads(recorded))
-    return spark.read.schema(schema).parquet(lay_dir)
+    for c in cols:
+        schema = schema.add(StructField.fromJson(
+            {"name": c, "type": types[c], "nullable": True, "metadata": {}}
+        ))
+    return schema
+
+
+def _read_layout(
+    spark: SparkSession,
+    lay_dir: str,
+    meta: dict | None,
+    cols=(),
+    files: list[str] | None = None,
+):
+    """Read one layout dir (or one of its leaves, ``cols`` then empty)
+    of a snapshot — or only ``files`` under it — with
+    :func:`_layout_schema`, so the read starts no schema-inference job
+    whenever the sidecar can vouch for the schema."""
+    schema = _layout_schema(lay_dir, meta, cols)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if files is None:
+        return reader.parquet(lay_dir)
+    return reader.option("basePath", lay_dir).parquet(*files)
 
 
 def _snapshot_layouts(vdir: str, meta: dict | None) -> list[dict]:
-    """The snapshot's layout map — what decides how delete and
+    """The snapshot's layout map — what decides how merge, delete and
     compaction rewrite it. A spec-evolved snapshot records its map; a
     flat snapshot is ONE layout rooted at the snapshot dir (``"."``)
     whose partition columns are the recorded ``partition_spec``. A
@@ -293,13 +348,10 @@ def _snapshot_layouts(vdir: str, meta: dict | None) -> list[dict]:
 
 
 def _layout_has_data(lay_dir: str) -> bool:
-    """True iff any parquet file exists under the layout dir — a freshly
+    """True iff any data file exists under the layout dir — a freshly
     evolved spec has an empty active layout until its first merge, and
     an empty dir would fail the parquet scan."""
-    for _root, _dirs, files in os.walk(lay_dir):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+    return next(_iter_data_files(lay_dir), None) is not None
 
 
 def _nonempty_layout_dirs(vdir: str, meta: dict, layouts: list[dict]):
@@ -355,12 +407,12 @@ def read_table_skipping(
     always a SUPERSET of the true matches and the caller's own filter
     (push ``bounds`` down as a normal ``.filter``) finishes the job.
 
-    Partition columns survive: kept files are scanned with
-    ``basePath`` pinned to the snapshot root, so hive directory
-    columns are still inferred exactly as a whole-table scan would.
-    Spec-evolved snapshots skip per layout (each layout's basePath is
-    its own dir so the differing partition column sets don't collide)
-    and union by name.
+    Partition columns survive: kept files are scanned per layout of
+    the snapshot's layout map (:func:`_snapshot_layouts` — a flat
+    snapshot is one layout) with ``basePath`` pinned to the layout dir
+    and the layout's recorded schema (:func:`_layout_schema`), so hive
+    directory columns come back exactly as :func:`read_table` returns
+    them; a spec-evolved snapshot's layouts union by name.
 
     At 100 TB this is the manifest-planned scan every lakehouse query
     starts with: O(#files) driver-side decisions from one metadata
@@ -386,7 +438,6 @@ def read_table_skipping(
         )
     vdir = os.path.join(path, avail[version])
     meta = _load_snapshot_meta(vdir) or {}
-    meta_layouts = meta.get("layouts")
 
     kept_all: list[str] | None = None
     if meta.get("census_shards"):
@@ -458,31 +509,27 @@ def read_table_skipping(
                     break
             if not skip:
                 kept_all.append(s["path"])
-    if meta_layouts:
-        parts, labels = [], []
-        for lay in meta_layouts:
-            lay_dir = os.path.join(vdir, lay["dir"])
-            kept = [p for p in kept_all if p.startswith(lay_dir + os.sep)]
-            if kept:
-                parts.append(
-                    spark.read.option("basePath", lay_dir).parquet(*kept)
-                )
-                labels.append(lay_dir)
-        if not parts:
-            return read_table(spark, path, version=version).limit(0)
-        # same name+type union guard as the unpruned evolved read
-        # (code-review r13: the pruned path must not silently coerce
-        # the drift read_table raises on)
-        from ..io import assert_one_logical_schema
-
-        assert_one_logical_schema(parts, labels)
-        out = parts[0]
-        for df in parts[1:]:
-            out = out.unionByName(df)
-        return out
-    if not kept_all:
+    parts, labels = [], []
+    for lay in _snapshot_layouts(vdir, meta):
+        lay_dir = os.path.normpath(os.path.join(vdir, lay["dir"]))
+        kept = [
+            p for p in kept_all
+            if lay["dir"] == "."
+            or os.path.relpath(p, vdir).startswith(lay["dir"] + os.sep)
+        ]
+        if kept:
+            parts.append(_read_layout(
+                spark, lay_dir, meta, lay["partition_cols"], files=kept
+            ))
+            labels.append(lay_dir)
+    if not parts:
         return read_table(spark, path, version=version).limit(0)
-    return spark.read.option("basePath", vdir).parquet(*kept_all)
+    # same name+type union guard as the unpruned evolved read
+    # (code-review r13: the pruned path must not silently coerce the
+    # drift read_table raises on)
+    from ..io import union_layouts
+
+    return union_layouts(spark, parts, labels)
 
 
 @_functools.lru_cache(maxsize=64)
@@ -931,6 +978,7 @@ def _write_snapshot_meta(
     partition_spec: list[str] | None,
     layouts: list[dict] | None,
     manifest_shard_files: int | None = None,
+    partition_types: dict | None = None,
 ) -> None:
     """COMMIT-TIME STATS MANIFEST + per-snapshot partition spec
     (VERDICT r12 items 3-4): one footer walk at write time persists the
@@ -954,6 +1002,10 @@ def _write_snapshot_meta(
     delete). ``layouts`` is the spec-EVOLUTION map (list of
     {"dir": <rel>, "partition_cols": [...]}) for snapshots whose tree
     holds multiple hive layouts; None for single-layout tables.
+    ``partition_types`` ({col: Spark type JSON}, taken from the frame
+    the commit wrote) is merged over the previous snapshot's, so every
+    commit carries the written type of each partition column forward
+    (:func:`_layout_schema` reads directory values back with it).
 
     Written via temp-file + ``os.replace`` so the sidecar always gets a
     FRESH inode — overwriting in place would mutate the previous
@@ -969,6 +1021,7 @@ def _write_snapshot_meta(
     policy = manifest_shard_files
     prev_stats: dict = {}
     prev_schema = None
+    types = dict(partition_types or {})
     cur = _current_version_name(path)  # pointer not yet flipped
     if cur is not None:
         prev_vdir = os.path.join(path, cur)
@@ -976,6 +1029,7 @@ def _write_snapshot_meta(
         if prev_meta:
             prev_stats = _load_census(prev_vdir) or {}
             prev_schema = prev_meta.get("spark_schema")
+            types = {**prev_meta.get("partition_types", {}), **types}
             if partition_spec is None:
                 partition_spec = prev_meta.get("partition_spec")
             if layouts is None:
@@ -1037,6 +1091,8 @@ def _write_snapshot_meta(
     only_schema = next(iter(schemas)) if len(schemas) == 1 else None
     if partition_spec == [] and not layouts and only_schema is not None:
         meta["spark_schema"] = only_schema
+    if types:
+        meta["partition_types"] = types
     threshold = MANIFEST_INLINE_MAX if policy is None else policy
     # No writer carries _manifest between snapshots (census is
     # per-snapshot), but remove any stray copy before (re)writing:
@@ -1495,6 +1551,7 @@ def _commit_version(
     partition_spec: list[str] | None = None,
     layouts: list[dict] | None = None,
     manifest_shard_files: int | None = None,
+    partition_types: dict | None = None,
 ) -> None:
     """Record ``vdir`` in the ledger, flip ``_CURRENT`` to it atomically,
     then retain the newest ``keep_versions`` COMMITTED snapshots and
@@ -1511,7 +1568,8 @@ def _commit_version(
     #    v_* dir: a crash before the ledger append orphans data and
     #    manifest together
     _write_snapshot_meta(
-        path, vdir, partition_spec, layouts, manifest_shard_files
+        path, vdir, partition_spec, layouts, manifest_shard_files,
+        partition_types,
     )
     # 1. ledger append (before the flip: a crash in between leaves an
     #    extra ledger entry, which merely over-retains — never a pointer
@@ -2023,24 +2081,38 @@ def merge_upsert(
 ) -> None:
     """MERGE a source batch into a Parquet directory table.
 
-    First write creates the table. Every merge — partitioned or not —
-    commits through the versioned layout (module docstring): write a new
-    ``v_*`` snapshot, record it in the ledger, atomically flip
-    ``_CURRENT``. Readers using :func:`read_table` always see a complete
-    snapshot, concurrent with any merge (reference semantic: MERGE is
-    atomic in BigQuery, ``dags/fx_pipeline_with_merge.py:90-111``); a
-    crash mid-merge leaves the previous snapshot current and the partial
-    ``v_*`` dir is swept by the next commit's retention pass.
+    First write creates the table. Every merge commits through the
+    versioned layout (module docstring): write a new ``v_*`` snapshot,
+    record it in the ledger, atomically flip ``_CURRENT``. Readers using
+    :func:`read_table` always see a complete snapshot, concurrent with
+    any merge (reference semantic: MERGE is atomic in BigQuery,
+    ``dags/fx_pipeline_with_merge.py:90-111``); a crash mid-merge leaves
+    the previous snapshot current and the partial ``v_*`` dir is swept
+    by the next commit's retention pass.
 
-    With ``partition_col`` (must be a key and the table's physical
-    partition column), only source-touched partitions are read, merged,
-    and physically rewritten — the 100 TB-safe path: read scope and
-    write scope are both bounded by the batch's partition footprint, not
-    the table size. Untouched partitions enter the new snapshot as
-    hardlinked leaf directories (metadata-only; on an object store this
-    becomes manifest reuse). Leaf names are taken from what Spark
-    actually wrote — never reconstructed from collected values — so
-    URL-escaped renderings (':' → '%3A') cannot desynchronize.
+    The current snapshot's layout map (:func:`_snapshot_layouts`)
+    decides how the merge rewrites the table, whatever its shape
+    (:func:`_merge_layouts`): a flat snapshot is one layout partitioned
+    by its recorded spec, a spec-evolved one (:func:`evolve_partition_spec`)
+    one layout per spec. Every layout's partition columns must be among
+    ``keys`` — a row's identity pins its partition. In a partitioned
+    layout only source-touched partitions are read, merged and
+    physically rewritten — the 100 TB-safe path: read scope and write
+    scope are both bounded by the batch's partition footprint, not the
+    table size. Untouched leaves enter the new snapshot as hardlinks
+    (metadata-only; on an object store this becomes manifest reuse).
+    Leaf names are taken from what Spark actually wrote — never
+    reconstructed from collected values — so URL-escaped renderings
+    (':' → '%3A') cannot desynchronize.
+
+    ``partition_col`` names the partition column only when the merge
+    first writes the table (``None``: unpartitioned). On an existing
+    table the recorded spec decides: omit ``partition_col``, or pass
+    the active layout's one-column spec; anything else raises
+    ``ValueError`` — change a table's partitioning with
+    :func:`evolve_partition_spec`. A plain pre-versioning directory
+    (loose parquet files or hive leaves, no ``_CURRENT``) is staged by
+    hardlinks, merged like any snapshot, and retired after the commit.
 
     Single-writer: concurrent merges on the same table raise
     :class:`ConcurrentWriteError` (lost-update protection).
@@ -2053,185 +2125,69 @@ def merge_upsert(
     aggregates without rescanning the table. The feed is part of the
     snapshot: written before the commit flip, swept with its version by
     retention, and (like the snapshot itself) recomputed byte-identically
-    if a crashed merge is re-run. Unpartitioned path only — the
-    partition-scoped path bounds its read scope by partition pruning,
-    which the full-outer change join would defeat; emit the feed from a
-    partition-scoped merge by running it per-partition.
+    if a crashed merge is re-run. Each layout's scoped merge emits its
+    own slice, so on a partitioned table the feed is bounded by the
+    same partition footprint as the rewrite.
 
     ``manifest_shard_files`` overrides :data:`MANIFEST_INLINE_MAX` for
     this commit: census entries above it are written as SHARDED parquet
     under ``v_*/_manifest`` (read planning then evaluates keep/skip as
     a distributed job — VERDICT r13 item 3) instead of inline JSON.
-
-    A SPEC-EVOLVED table (its snapshot records a layout map, see
-    :func:`evolve_partition_spec`) is merged across its layouts by
-    :func:`_merge_layouts`; the map decides each row's partitioning,
-    so ``partition_col`` raises there and ``emit_cdf`` is available.
     """
-    if emit_cdf and partition_col is not None:
-        raise ValueError(
-            "emit_cdf is supported on the unpartitioned merge path; "
-            "run partition-scoped merges per-partition to scope the feed"
-        )
     source = source.dropDuplicates(keys)
     with _write_lock(target_path):
         cur = _current_version_name(target_path)
-        prev_dir = None if cur is None else os.path.join(target_path, cur)
-        meta = _load_snapshot_meta(prev_dir) if prev_dir else None
-        layouts = (meta or {}).get("layouts")
-        if layouts:
-            if partition_col is not None:
-                raise ValueError(
-                    f"{target_path!r} is spec-evolved: its layout map "
-                    "decides each row's partitioning — merge without "
-                    "partition_col"
-                )
+        legacy: list[str] = []
+        prev_dir = meta = None
+        if cur is not None:
+            prev_dir = os.path.join(target_path, cur)
+            meta = _load_snapshot_meta(prev_dir)
+        else:
+            legacy = [
+                e for e in os.listdir(target_path)
+                if e.endswith(".parquet")
+                or ("=" in e and os.path.isdir(os.path.join(target_path, e)))
+            ]
+        if legacy:
+            # pre-versioning plain directory: stage its loose files and
+            # hive leaves by hardlinks (no Spark job) as the base snapshot
+            prev_dir = os.path.join(
+                target_path, f"_stage_{uuid.uuid4().hex[:8]}"
+            )
+            os.makedirs(prev_dir)
+            for e in legacy:
+                src = os.path.join(target_path, e)
+                link = _link_tree if os.path.isdir(src) else _link_file
+                link(src, os.path.join(prev_dir, e))
+        try:
+            if prev_dir is None:
+                spec = [] if partition_col is None else [partition_col]
+                layouts = [{"dir": ".", "partition_cols": spec}]
+            else:
+                layouts = _snapshot_layouts(prev_dir, meta)
+                spec = list(layouts[-1]["partition_cols"])
+                if partition_col is not None and spec != [partition_col]:
+                    raise ValueError(
+                        f"{target_path!r} is partitioned by its recorded "
+                        f"spec {spec}, not partition_col={partition_col!r}; "
+                        "omit partition_col to follow the recorded spec, or "
+                        "change it with evolve_partition_spec"
+                    )
             _merge_layouts(
-                spark, target_path, prev_dir, layouts, source, keys,
+                spark, target_path, prev_dir, meta, layouts, source, keys,
                 keep_versions, emit_cdf, manifest_shard_files,
             )
-        elif partition_col is None:
-            _merge_unpartitioned(
-                spark, target_path, source, keys, keep_versions, emit_cdf,
-                manifest_shard_files,
-            )
-        else:
-            _merge_partitioned(
-                spark, target_path, source, keys, partition_col,
-                keep_versions, manifest_shard_files,
-            )
-
-
-def _merge_unpartitioned(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    keys: list[str],
-    keep_versions: int,
-    emit_cdf: bool = False,
-    manifest_shard_files: int | None = None,
-) -> None:
-    vdir = _next_version_dir(target_path)
-    ptr_exists = os.path.isfile(os.path.join(target_path, _CURRENT_PTR))
-    # One-time migration of a pre-versioning plain directory: its
-    # loose top-level files are the current table. Read them by
-    # explicit file list (immune to the new v_* subdir appearing in
-    # a directory listing), then retire them after the commit.
-    legacy_files = (
-        []
-        if ptr_exists
-        else [
-            os.path.join(target_path, f)
-            for f in (
-                os.listdir(target_path) if os.path.isdir(target_path) else []
-            )
-            if f.endswith(".parquet")
-        ]
-    )
-    seq = _seq_of(os.path.basename(vdir))
-    cdf = None
-    if ptr_exists:
-        base = read_table(spark, target_path)
-    elif legacy_files:
-        base = spark.read.parquet(*legacy_files)
-    else:
-        base = None
-    if base is not None:
-        if emit_cdf:
-            merged, cdf = merge_upsert_cdf_df(
-                base, source, keys, commit_version=seq
-            )
-        else:
-            merged = merge_upsert_df(base, source, keys)
-    else:
-        merged = source
-        if emit_cdf:
-            cdf = insert_only_cdf(source, seq)
-    merged.write.mode("overwrite").parquet(vdir)
-    if cdf is not None:
-        # Written inside the still-uncommitted v_* dir (after the data —
-        # the data's overwrite truncates vdir — but BEFORE the pointer
-        # flip): a crash leaves feed+data orphaned together, and the
-        # underscore dir never shows up in snapshot table scans.
-        cdf.write.mode("overwrite").parquet(os.path.join(vdir, CDF_DIR))
-    _commit_version(
-        target_path, vdir, keep_versions, partition_spec=[],
-        manifest_shard_files=manifest_shard_files,
-    )
-    for f in legacy_files:
-        with contextlib.suppress(OSError):
-            os.remove(f)
-
-
-def _merge_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    keys: list[str],
-    partition_col: str,
-    keep_versions: int,
-    manifest_shard_files: int | None = None,
-) -> None:
-    prefix = f"{partition_col}="
-    ptr_exists = os.path.isfile(os.path.join(target_path, _CURRENT_PTR))
-    legacy_leaves = (
-        []
-        if ptr_exists
-        else [
-            d
-            for d in (
-                os.listdir(target_path) if os.path.isdir(target_path) else []
-            )
-            if d.startswith(prefix)
-            and os.path.isdir(os.path.join(target_path, d))
-        ]
-    )
-    if not ptr_exists and not legacy_leaves:
-        # first write: a fresh partitioned snapshot
-        vdir = _next_version_dir(target_path)
-        source.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-        _commit_version(
-            target_path, vdir, keep_versions,
-            partition_spec=[partition_col],
-            manifest_shard_files=manifest_shard_files,
-        )
-        return
-
-    prev_dir = (
-        _resolve_data_dir(target_path) if ptr_exists else target_path
-    )
-    # Partition-scoped rewrite: enumerate the batch's partitions (a small
-    # driver-side list — one entry per touched day/key, not per row),
-    # read + merge only those partitions (partition pruning bounds the
-    # scan), then snapshot: rewritten leaves from the merge, untouched
-    # leaves hardlinked from the previous snapshot.
-    parts = [r[0] for r in source.select(partition_col).distinct().collect()]
-    target = spark.read.parquet(prev_dir)
-    scoped_target = target.filter(F.col(partition_col).isin(parts))
-    merged = merge_upsert_df(scoped_target, source, keys)
-    vdir = _next_version_dir(target_path)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    touched = {
-        d
-        for d in os.listdir(vdir)
-        if d.startswith(prefix) and os.path.isdir(os.path.join(vdir, d))
-    }
-    for leaf in os.listdir(prev_dir):
-        if (
-            leaf.startswith(prefix)
-            and leaf not in touched
-            and os.path.isdir(os.path.join(prev_dir, leaf))
-        ):
-            _link_tree(
-                os.path.join(prev_dir, leaf), os.path.join(vdir, leaf)
-            )
-    _commit_version(
-        target_path, vdir, keep_versions, partition_spec=[partition_col],
-        manifest_shard_files=manifest_shard_files,
-    )
-    # retire migrated legacy top-level leaves after the commit
-    for leaf in legacy_leaves:
-        shutil.rmtree(os.path.join(target_path, leaf), ignore_errors=True)
+        finally:
+            if legacy:
+                shutil.rmtree(prev_dir, ignore_errors=True)
+        # retire the migrated legacy files after the commit
+        for e in legacy:
+            src = os.path.join(target_path, e)
+            if os.path.isdir(src):
+                shutil.rmtree(src, ignore_errors=True)
+            else:
+                with contextlib.suppress(OSError):
+                    os.remove(src)
 
 
 def _leaf_dirs(root: str) -> set[str]:
@@ -2246,16 +2202,19 @@ def _leaf_dirs(root: str) -> set[str]:
 
 
 def _partition_tuple_filter(cols: list[str], tuples: list[tuple]):
-    """OR-of-AND equality predicate over partition columns — collected
-    from the (bounded, driver-side) distinct partition footprint of a
-    source batch; Catalyst folds it into PartitionFilters on the hive
-    scan, so the layout read prunes to exactly the touched leaves."""
+    """OR-of-AND null-safe equality predicate over partition columns —
+    collected from the (bounded, driver-side) distinct partition
+    footprint of a source batch; Catalyst folds it into
+    PartitionFilters on the hive scan, so the layout read prunes to
+    exactly the touched leaves. Null-safe: a NULL partition value
+    (hive's default partition) must match its own leaf, which the
+    rewrite replaces."""
     from functools import reduce
 
     conds = [
         reduce(
             lambda a, b: a & b,
-            [F.col(c) == F.lit(v) for c, v in zip(cols, t)],
+            [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(cols, t)],
         )
         for t in tuples
     ]
@@ -2306,41 +2265,27 @@ def evolve_partition_spec(
                 "run one normal commit (e.g. a merge) to record its "
                 "partition spec before evolving it"
             )
-        layouts = meta.get("layouts")
-        if layouts is None:
-            layouts = [
-                {
-                    "dir": "layout_000",
-                    "partition_cols": list(meta["partition_spec"]),
-                }
-            ]
-            migrate_flat = True
-        else:
-            layouts = [dict(lay) for lay in layouts]
-            migrate_flat = False
-        if list(new_partition_cols) == list(layouts[-1]["partition_cols"]):
+        old = _snapshot_layouts(prev_dir, meta)
+        if list(new_partition_cols) == list(old[-1]["partition_cols"]):
             raise ValueError(
                 f"no-op spec evolution: {new_partition_cols} is already "
                 "the active partition spec"
             )
+        # a flat snapshot's one layout moves under layout_000; only data
+        # leaves are carried (sidecar and census are per-snapshot, the
+        # change feed per-commit)
+        layouts = [
+            {"dir": f"layout_{i:03d}" if lay["dir"] == "." else lay["dir"],
+             "partition_cols": list(lay["partition_cols"])}
+            for i, lay in enumerate(old)
+        ]
         vdir = _next_version_dir(path)
-        if migrate_flat:
-            dst0 = os.path.join(vdir, "layout_000")
-            os.makedirs(dst0, exist_ok=True)
-            for entry in os.listdir(prev_dir):
-                if entry in (_SNAPSHOT_META, CDF_DIR, _MANIFEST_DIR):
-                    continue  # sidecar+census are per-snapshot; CDF per-commit
-                s = os.path.join(prev_dir, entry)
-                d = os.path.join(dst0, entry)
-                if os.path.isdir(s):
-                    _link_tree(s, d)
-                else:
-                    _link_file(s, d)
-        else:
-            for lay in layouts:
-                src = os.path.join(prev_dir, lay["dir"])
-                if os.path.isdir(src):
-                    _link_tree(src, os.path.join(vdir, lay["dir"]))
+        for src_lay, lay in zip(old, layouts):
+            src = os.path.normpath(os.path.join(prev_dir, src_lay["dir"]))
+            dst = os.path.join(vdir, lay["dir"])
+            os.makedirs(dst, exist_ok=True)
+            for leaf in _leaf_dirs(src):
+                _link_leaf(os.path.join(src, leaf), os.path.join(dst, leaf))
         new_dir = f"layout_{len(layouts):03d}"
         os.makedirs(os.path.join(vdir, new_dir), exist_ok=True)
         layouts.append(
@@ -2402,7 +2347,8 @@ def drop_partition_field(
 def _merge_layouts(
     spark: SparkSession,
     path: str,
-    prev_dir: str,
+    prev_dir: str | None,
+    meta: dict | None,
     layouts: list[dict],
     source: DataFrame,
     keys: list[str],
@@ -2410,39 +2356,31 @@ def _merge_layouts(
     emit_cdf: bool,
     manifest_shard_files: int | None,
 ) -> None:
-    """:func:`merge_upsert` on a SPEC-EVOLVED table (one created by
-    :func:`evolve_partition_spec`), called under its write lock with
-    the current snapshot dir and its layout map: Iceberg-style
-    copy-on-write across layouts —
+    """:func:`merge_upsert`'s one body, called under the table's write
+    lock with the current snapshot dir (None on the first write), its
+    sidecar and its layout map: Iceberg-style copy-on-write across
+    layouts —
 
     - a source row whose key already exists in an OLD layout rewrites
       that row IN PLACE, under the old spec (rewrites keep their file's
       original layout; history's directory shape never changes);
     - every other source row (new keys, and updates to rows already in
-      the active layout) merges into the ACTIVE layout under the new
-      spec.
+      the active layout) merges into the ACTIVE (last) layout under its
+      spec. A flat table is the one-layout case.
 
-    Contract, mirroring :func:`merge_upsert`'s partitioned path: every
-    layout's partition columns must be among ``keys`` (a row's identity
-    pins its partition, so each layout's read scope is prunable by the
-    batch's partition footprint — collected driver-side, one tuple per
-    touched leaf, never per row) and key columns must be non-null.
-    Read scope per layout = the batch's partition tuples, column-pruned
-    to ``keys`` for the membership split; write scope = leaves holding
-    matched keys, everything else hardlinked through. At 100 TB both
-    scopes are bounded by the batch, not the table.
+    Every layout's partition columns must be among ``keys``, so its
+    read scope is the batch's partition tuples (collected driver-side,
+    one per touched leaf), read with the layout's recorded schema
+    (:func:`_read_layout`). The active layout takes every remaining
+    row, so that footprint IS its write footprint (an unpartitioned
+    layout: all of it) and needs no probe of the batch; an old layout
+    first splits off the rows whose keys it holds and rewrites only the
+    leaves they touch. Everything else is hardlinked through.
 
-    ``emit_cdf=True`` additionally records the commit's change data
-    feed under ``v_*/_change_data`` (read it back with
-    :func:`read_table_changes`): each layout's scoped merge emits its
-    own pre/post-image slice via :func:`merge_upsert_cdf_df` — so the
-    feed stays bounded by the SAME partition footprint as the rewrite,
-    unlike the unpartitioned path's full-outer feed — and the active
-    layout's inserts ride :func:`insert_only_cdf` when the layout was
-    empty. Slices union by NAME (layout reads order partition columns
-    last, and differently per spec). Note the cdf frames share the
-    scoped merge's lineage, so emitting the feed re-runs each scoped
-    join once (both jobs read only the touched partitions).
+    ``emit_cdf=True``: each layout's scoped merge emits its own slice
+    via :func:`merge_upsert_cdf_df` (an empty active layout's inserts
+    via :func:`insert_only_cdf`); slices union by NAME, since layout
+    reads put partition columns last, differently per spec.
     """
     _validate_keys(source, keys)
     for lay in layouts:
@@ -2455,13 +2393,17 @@ def _merge_layouts(
     vdir = _next_version_dir(path)
     seq = _seq_of(os.path.basename(vdir))
     cdf_parts: list[DataFrame] = []
+    types: dict = {}
     remaining = source
     for i, lay in enumerate(layouts):
         cols = list(lay["partition_cols"])
-        lay_src = os.path.join(prev_dir, lay["dir"])
-        dst = os.path.join(vdir, lay["dir"])
+        lay_src = (
+            None if prev_dir is None
+            else os.path.normpath(os.path.join(prev_dir, lay["dir"]))
+        )
+        dst = os.path.normpath(os.path.join(vdir, lay["dir"]))
         active = i == len(layouts) - 1
-        has_data = _layout_has_data(lay_src)
+        has_data = lay_src is not None and _layout_has_data(lay_src)
         if not has_data and not active:
             os.makedirs(dst, exist_ok=True)
             continue
@@ -2471,101 +2413,82 @@ def _merge_layouts(
             tuple(r)
             for r in remaining.select(*cols).distinct().collect()
         ] if cols else [()]
+        scoped = None
         if has_data:
-            scoped = spark.read.parquet(lay_src)
+            scoped = _read_layout(spark, lay_src, meta, cols)
             if cols and parts:
-                scoped = scoped.filter(
-                    _partition_tuple_filter(cols, parts)
-                )
-            elif cols:
-                scoped = scoped.filter(F.lit(False))
-        else:
-            scoped = None
+                scoped = scoped.filter(_partition_tuple_filter(cols, parts))
         if active:
-            upd, rest = remaining, None
-        elif scoped is None or not parts:
-            upd, rest = None, remaining
-        else:
+            upd, upd_parts = remaining, parts
+        elif parts:
             lay_keys = scoped.select(*keys)
             upd = remaining.join(lay_keys, keys, "semi")
-            rest = remaining.join(lay_keys, keys, "anti")
-        wrote = False
-        if upd is not None:
-            if scoped is not None:
-                # refine the rewrite scope to the partitions the
-                # matched rows actually touch; an UNPARTITIONED
-                # layout has no tuple footprint, so probe emptiness
-                # directly (code-review r13: the unconditional [()]
-                # rewrote the whole historical layout on every
-                # commit even with zero matched keys)
-                upd_parts = (
-                    [
-                        tuple(r)
-                        for r in upd.select(*cols).distinct().collect()
-                    ]
-                    if cols
-                    else ([()] if upd.limit(1).count() > 0 else [])
+            remaining = remaining.join(lay_keys, keys, "anti")
+            # refine the rewrite scope to the partitions the matched
+            # rows touch; an unpartitioned layout has no tuple
+            # footprint, so probe emptiness directly (code-review r13:
+            # a historical layout must not be rewritten with zero
+            # matched keys)
+            upd_parts = (
+                [tuple(r) for r in upd.select(*cols).distinct().collect()]
+                if cols
+                else ([()] if upd.limit(1).count() > 0 else [])
+            )
+            if cols and upd_parts:
+                scoped = scoped.filter(
+                    _partition_tuple_filter(cols, upd_parts)
                 )
-                if upd_parts:
-                    scoped2 = (
-                        scoped.filter(
-                            _partition_tuple_filter(cols, upd_parts)
-                        )
-                        if cols
-                        else scoped
-                    )
-                    if emit_cdf:
-                        merged, cdf = merge_upsert_cdf_df(
-                            scoped2, upd, keys, commit_version=seq
-                        )
-                        cdf_parts.append(cdf)
-                    else:
-                        merged = merge_upsert_df(scoped2, upd, keys)
-                    wrote = True
-                else:  # no matched rows — nothing to rewrite here
-                    merged = None
+        else:
+            upd_parts = []
+        if scoped is None and not cols and prev_dir is not None:
+            # an evolved table's empty unpartitioned layout gets a file
+            # only when rows reach it (a table's first write is written
+            # even when empty, so it reads back with the batch's schema)
+            upd_parts = [()] if upd.limit(1).count() > 0 else []
+        if upd_parts:
+            if scoped is None:  # empty active layout: its first data
+                merged, cdf = upd, insert_only_cdf(upd, seq)
+            elif emit_cdf:
+                merged, cdf = merge_upsert_cdf_df(
+                    scoped, upd, keys, commit_version=seq
+                )
             else:
-                # empty active layout: first data under the new spec
-                merged = upd
-                wrote = (
-                    bool(parts) if cols else upd.limit(1).count() > 0
-                )
-                if wrote and emit_cdf:
-                    cdf_parts.append(insert_only_cdf(upd, seq))
-            if wrote and merged is not None:
-                w = merged.write.mode("overwrite")
-                if cols:
-                    w = w.partitionBy(*cols)
-                w.parquet(dst)
+                merged = merge_upsert_df(scoped, upd, keys)
+            w = merged.write.mode("overwrite")
+            if cols:
+                w = w.partitionBy(*cols)
+            w.parquet(dst)
+            types.update(
+                {c: merged.schema[c].dataType.jsonValue() for c in cols}
+            )
+            if emit_cdf:
+                cdf_parts.append(cdf)
         # carry untouched leaves of this layout through as hardlinks
         written = _leaf_dirs(dst) if os.path.isdir(dst) else set()
         if has_data:
-            for leaf in _leaf_dirs(lay_src):
-                if leaf not in written:
-                    _link_leaf(
-                        os.path.join(lay_src, leaf),
-                        os.path.join(dst, leaf),
-                    )
+            for leaf in _leaf_dirs(lay_src) - written:
+                _link_leaf(
+                    os.path.join(lay_src, leaf), os.path.join(dst, leaf)
+                )
         os.makedirs(dst, exist_ok=True)
-        if rest is not None:
-            remaining = rest
-    if emit_cdf and cdf_parts:
+    if cdf_parts:
         feed = cdf_parts[0]
         for part in cdf_parts[1:]:
             feed = feed.unionByName(part)
-        # inside the still-uncommitted v_* dir, before the pointer
-        # flip — crash orphans data and feed together (the
-        # unpartitioned merge path's convention)
-        feed.write.mode("overwrite").parquet(
-            os.path.join(vdir, CDF_DIR)
-        )
+        # inside the still-uncommitted v_* dir, after the data (a flat
+        # layout's write replaces vdir) but before the pointer flip —
+        # a crash orphans data and feed together, and the underscore
+        # dir never shows up in snapshot table scans
+        feed.write.mode("overwrite").parquet(os.path.join(vdir, CDF_DIR))
+    # the layout map is carried from the previous sidecar: a flat table
+    # records none, so read_table keeps the recorded-schema read
     _commit_version(
         path,
         vdir,
         keep_versions,
         partition_spec=list(layouts[-1]["partition_cols"]),
-        layouts=layouts,
         manifest_shard_files=manifest_shard_files,
+        partition_types=types,
     )
 
 
@@ -2845,7 +2768,7 @@ def delete_rows(
             leaves = _leaf_dirs(lay_src)
             if not leaves:
                 continue
-            df = _read_layout(spark, lay_src, meta)
+            df = _read_layout(spark, lay_src, meta, cols)
             # Leaves come from the paths Spark actually scanned (never
             # reconstructed from values — a delete can EMPTY a leaf, so
             # the written-dirs diff the merge path uses can't tell

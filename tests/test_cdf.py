@@ -176,12 +176,22 @@ def test_feed_swept_with_its_version_by_retention(spark, tmp_path, target, sourc
     assert read_table_changes(spark, path).count() == 3  # v2's feed only
 
 
-def test_emit_cdf_rejected_on_partitioned_path(spark, tmp_path, target):
-    with pytest.raises(ValueError, match="unpartitioned"):
-        merge_upsert(
-            spark, os.path.join(str(tmp_path), "t"), target, keys=["k"],
-            partition_col="day", emit_cdf=True,
-        )
+def test_emit_cdf_partitioned_equals_flat(spark, tmp_path, target, source):
+    """A partitioned table's per-layout feed is the flat table's feed:
+    same rows (by name) for the same two batches."""
+    feeds = []
+    for name, partition_col in (("flat", None), ("part", "day")):
+        path = os.path.join(str(tmp_path), name)
+        for batch in (target, source):
+            merge_upsert(
+                spark, path, batch, keys=["k", "day"],
+                partition_col=partition_col, emit_cdf=True,
+            )
+        feed = read_table_changes(spark, path)
+        feeds.append(sorted(
+            tuple(r) for r in feed.select(*sorted(feed.columns)).collect()
+        ))
+    assert feeds[0] == feeds[1] and len(feeds[0]) == 6
 
 
 def test_squash_preserves_the_signed_fold(spark, target, source):

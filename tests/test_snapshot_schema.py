@@ -168,21 +168,43 @@ def test_time_travel_reads_each_snapshots_schema(spark, tmp_path):
     assert sorted(tuple(r) for r in v2.collect()) == [(1, "a"), (2, "B")]
 
 
-def test_partitioned_and_spec_evolved_fall_back_to_inference(spark, tmp_path):
+def test_partitioned_and_spec_evolved_read_recorded_types(spark, tmp_path):
     """Hive partition columns come from directory names, not footers:
-    partitioned and spec-evolved snapshots record no schema."""
+    partitioned and spec-evolved snapshots record no row schema, but
+    record each partition column's written type; every layout is read
+    with its footer schema plus those types, so the read starts no
+    Spark job and equals the inferred read."""
     path = str(tmp_path / "p")
     df = spark.createDataFrame(
         [(1, "d1", "a", 1.0), (2, "d2", "b", 2.0)],
         "k int, day string, typ string, v double",
     )
-    merge_upsert(spark, path, df, keys=["k", "day"], partition_col="day")
-    got = _assert_inferred_read(spark, path)
+    merge_upsert(spark, path, df, keys=["k", "day", "typ"],
+                 partition_col="day")
+    meta = _load_snapshot_meta(_resolve_data_dir(path))
+    assert "spark_schema" not in meta
+    assert meta["partition_types"] == {"day": "string"}
+    before = _jobs(spark)
+    got = read_table(spark, path)
+    assert _jobs(spark) == before
     assert got.columns[-1] == "day"
+    inferred = spark.read.parquet(_resolve_data_dir(path))
+    assert got.schema == inferred.schema and _sorted(got) == _sorted(inferred)
+
     evolve_partition_spec(spark, path, ["day", "typ"])
+    merge_upsert(
+        spark, path,
+        spark.createDataFrame([(3, "d3", "c", 3.0)], df.schema),
+        keys=["k", "day", "typ"],
+    )
     meta = _load_snapshot_meta(_resolve_data_dir(path))
     assert meta["layouts"] and "spark_schema" not in meta
-    assert read_table(spark, path).count() == 2
+    assert meta["partition_types"] == {"day": "string", "typ": "string"}
+    before = _jobs(spark)
+    got = read_table(spark, path)
+    assert _jobs(spark) == before
+    assert sorted(got.columns) == sorted(df.columns)
+    assert got.count() == 3
 
 
 def test_pre_sidecar_snapshot_falls_back_and_stays_unrecorded(spark, tmp_path):

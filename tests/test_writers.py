@@ -925,9 +925,9 @@ def test_snapshot_stats_manifest_matches_footers(spark, tmp_path, target):
     )
 
     path = str(tmp_path / "tbl")
-    merge_upsert(spark, path, target, keys=["k"], partition_col="day")
+    merge_upsert(spark, path, target, keys=["k", "day"], partition_col="day")
     src = _frame(spark, [(2, "d1", 20.0)])  # touches d1 only; d2 hardlinks
-    merge_upsert(spark, path, src, keys=["k"], partition_col="day")
+    merge_upsert(spark, path, src, keys=["k", "day"], partition_col="day")
 
     vdir = _resolve_data_dir(path)
     sidecar = os.path.join(vdir, _SNAPSHOT_META)
@@ -1034,8 +1034,9 @@ def test_partition_spec_evolution_lifecycle(spark, tmp_path):
     f_new = _one_parquet(os.path.join(v2_dir, "layout_000", "day=d2"))
     assert os.stat(f_old).st_ino == os.stat(f_new).st_ino
 
-    # the layout map decides partitioning: partition_col is refused
-    with pytest.raises(ValueError, match="spec-evolved"):
+    # the layout map decides partitioning: a partition_col other than
+    # the active spec is refused
+    with pytest.raises(ValueError, match="evolve_partition_spec"):
         merge_upsert(
             spark, path, spark.createDataFrame(rows_v1[:1], schema),
             keys=keys, partition_col="day",
@@ -1515,6 +1516,47 @@ def test_delete_rows_job_count(spark, tmp_path):
     assert read_table(spark, path).count() == 900
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 3, jobs
+
+
+def _jobs_in_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return the group's job count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"writers_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "writer job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("shape, bound", [
+    ("flat", 4), ("partitioned", 7), ("spec_evolved", 21),
+])
+def test_merge_upsert_job_count(spark, tmp_path, shape, bound):
+    """The one layout merge keeps each table shape's Spark job budget:
+    an unpartitioned merge (the FX tick's) reads with the recorded
+    schema and rewrites without probing the batch (<= 4 jobs); a flat
+    partitioned merge collects its footprint once (<= 7); a merge into
+    a two-layout spec-evolved table that updates an old-layout row and
+    inserts into the active layout stays <= 21."""
+    path = str(tmp_path / "tbl")
+    rows = _shape_rows(24)
+    _table_of_shape(spark, path, shape, rows)
+    batch = spark.createDataFrame(
+        [(0, "d0", "a", -1.0), (100, "d1", "b", 100.0)], _SHAPE_SCHEMA
+    )
+    n = _jobs_in_group(spark, lambda: merge_upsert(
+        spark, path, batch, keys=_SHAPE_KEYS, keep_versions=10
+    ))
+    model = {r[0]: r for r in rows}
+    model.update({0: (0, "d0", "a", -1.0), 100: (100, "d1", "b", 100.0)})
+    got = read_table(spark, path).select("k", "day", "typ", "v")
+    assert _sorted(got) == sorted(model.values())
+    assert 0 < n <= bound, n
 
 
 def test_manifest_incomplete_census_falls_back_to_footers(spark, tmp_path):
@@ -2735,3 +2777,177 @@ def test_cdf_compact_before_zero_squashes_everything(spark, tmp_path):
         F.sum(F.col("w") * F.col("v")).alias("s")
     ).first().s
     assert abs(tot - (10.0 + 2.0 + 3.0)) < 1e-9
+
+
+_SPEC_ROWS = [
+    (k, f"d{k % 3}", "ab"[k % 2], float(k)) for k in range(9)
+]
+
+
+def _spec_case_flat_then_partition_col(spark, path, model):
+    merge_upsert(spark, path, _spec_batch(spark, _SPEC_ROWS), keys=["k"])
+    with pytest.raises(ValueError, match="evolve_partition_spec"):
+        merge_upsert(
+            spark, path, _spec_batch(spark, [(1, "d1", "b", 10.0)]),
+            keys=["k", "day"], partition_col="day",
+        )
+
+
+def _spec_case_plain_then_scoped(spark, path, model):
+    keys = ["k", "day"]
+    merge_upsert(
+        spark, path, _spec_batch(spark, _SPEC_ROWS), keys=keys,
+        partition_col="day",
+    )
+    merge_upsert(spark, path, _spec_batch(spark, [(1, "d1", "b", 10.0)]),
+                 keys=keys)
+    merge_upsert(
+        spark, path, _spec_batch(spark, [(2, "d2", "a", 20.0)]), keys=keys,
+        partition_col="day",
+    )
+    model.update({1: (1, "d1", "b", 10.0), 2: (2, "d2", "a", 20.0)})
+
+
+def _spec_case_day_table_typ_col(spark, path, model):
+    keys = ["k", "day", "typ"]
+    merge_upsert(
+        spark, path, _spec_batch(spark, _SPEC_ROWS), keys=keys,
+        partition_col="day",
+    )
+    with pytest.raises(ValueError, match="evolve_partition_spec"):
+        merge_upsert(
+            spark, path, _spec_batch(spark, [(1, "d1", "b", 10.0)]),
+            keys=keys, partition_col="typ",
+        )
+
+
+def _spec_case_partition_col_not_a_key(spark, path, model):
+    with pytest.raises(ValueError, match="must be merge keys"):
+        merge_upsert(
+            spark, path, _spec_batch(spark, _SPEC_ROWS), keys=["k"],
+            partition_col="day",
+        )
+    model.clear()
+
+
+def _spec_batch(spark, rows):
+    return spark.createDataFrame(
+        rows, "k bigint, day string, typ string, v double"
+    )
+
+
+@pytest.mark.parametrize("case", [
+    _spec_case_flat_then_partition_col,
+    _spec_case_plain_then_scoped,
+    _spec_case_day_table_typ_col,
+    _spec_case_partition_col_not_a_key,
+], ids=lambda f: f.__name__[len("_spec_case_"):])
+def test_merge_follows_recorded_partition_spec(spark, tmp_path, case):
+    """The snapshot's recorded spec, not the call's ``partition_col``,
+    decides how a merge rewrites a table: a mismatching partition_col
+    raises and leaves the table as it was, an omitted one follows the
+    recorded spec, and a partition column must be a merge key. Every
+    case ends equal to a Python model of the table."""
+    import os
+
+    path = str(tmp_path / "tbl")
+    model = {r[0]: r for r in _SPEC_ROWS}
+    case(spark, path, model)
+    if not model:
+        from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+            table_versions,
+        )
+
+        assert table_versions(path) == [] and not any(
+            e.startswith("v_") for e in os.listdir(path)
+        )
+        return
+    got = read_table(spark, path).select("k", "day", "typ", "v")
+    assert _sorted(got) == sorted(model.values())
+
+
+@pytest.mark.parametrize("op", ["merge", "delete"])
+def test_null_partition_value_merge_and_delete(spark, tmp_path, op):
+    """A NULL partition value lands in hive's default partition; the
+    scoped read must match it (null-safe), or the rewrite that replaces
+    its leaf drops the leaf's other rows — for merge and for delete."""
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        delete_rows,
+    )
+
+    schema = "k bigint, day string, v double"
+    keys = ["k", "day"]
+    path = str(tmp_path / "tbl")
+    merge_upsert(
+        spark, path,
+        spark.createDataFrame(
+            [(1, None, 1.0), (3, None, 3.0), (2, "d1", 2.0)], schema
+        ),
+        keys=keys, partition_col="day",
+    )
+    if op == "merge":
+        merge_upsert(
+            spark, path, spark.createDataFrame([(1, None, 10.0)], schema),
+            keys=keys, partition_col="day",
+        )
+        want = [(1, None, 10.0), (2, "d1", 2.0), (3, None, 3.0)]
+    else:
+        assert delete_rows(spark, path, "k = 1") == 1
+        want = [(2, "d1", 2.0), (3, None, 3.0)]
+    got = read_table(spark, path).select("k", "day", "v").collect()
+    assert sorted(tuple(r) for r in got) == want
+
+
+def test_partition_values_keep_their_written_type(spark, tmp_path):
+    """Partition columns read back with the type they were written
+    with, not the type hive directory-value inference guesses: a
+    numeric-looking string stays a string (and a later merge of its
+    key updates instead of duplicating it), after delete and compaction
+    too; a bigint column added to the spec by evolution stays bigint."""
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        compact_parquet,
+        delete_rows,
+        evolve_partition_spec,
+    )
+
+    schema = "k bigint, p string, v double"
+    path = str(tmp_path / "str")
+    merge_upsert(
+        spark, path,
+        spark.createDataFrame([(1, "007", 1.0), (2, "010", 2.0)], schema),
+        keys=["k", "p"], partition_col="p",
+    )
+    merge_upsert(
+        spark, path, spark.createDataFrame([(1, "007", 5.0)], schema),
+        keys=["k", "p"], partition_col="p",
+    )
+    for op in (
+        lambda: None,
+        lambda: delete_rows(spark, path, "k = 9"),
+        lambda: compact_parquet(spark, path),
+    ):
+        op()
+        got = read_table(spark, path)
+        assert dict(got.dtypes)["p"] == "string"
+        assert sorted(tuple(r) for r in got.select("k", "p", "v").collect()) == [
+            (1, "007", 5.0), (2, "010", 2.0)
+        ]
+
+    path = str(tmp_path / "evolved")
+    schema = "k bigint, day string, v double"
+    merge_upsert(
+        spark, path,
+        spark.createDataFrame([(1, "d1", 1.0), (2, "d2", 2.0)], schema),
+        keys=["k", "day"], partition_col="day",
+    )
+    evolve_partition_spec(spark, path, ["day", "k"])
+    merge_upsert(
+        spark, path,
+        spark.createDataFrame([(3, "d1", 3.0), (1, "d1", 10.0)], schema),
+        keys=["k", "day"],
+    )
+    got = read_table(spark, path)
+    assert dict(got.dtypes)["k"] == "bigint"
+    assert sorted(tuple(r) for r in got.select("k", "day", "v").collect()) == [
+        (1, "d1", 10.0), (2, "d2", 2.0), (3, "d1", 3.0)
+    ]
