@@ -103,24 +103,6 @@ def cosine_topk(
     )
 
 
-def lsh_buckets(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    dim: int = EMB_DIM,
-    seed: int = PLANE_SEED,
-) -> DataFrame:
-    """vec_id → LSH bucket id (random-hyperplane sign bits).
-
-    Plane dots use the same exact fold, so the sign — and therefore the
-    bucket — is engine-exact. One broadcast of P planes, one grouped sum
-    over (vec, plane) sign bits.
-    """
-    del spark  # kept in the signature for API compatibility
-    return _with_buckets(_vectors(embeddings), dim=dim, seed=seed).select(
-        "vec_id", "bucket"
-    )
-
-
 def _with_buckets(
     v: DataFrame, dim: int = EMB_DIM, seed: int = PLANE_SEED
 ) -> DataFrame:
@@ -400,7 +382,7 @@ def _sql_double(x: float) -> str:
 def _cents_arr(cent_rows) -> "F.Column":
     """Literal ``array<struct<cell,ce,cn>>`` from collected centroid
     rows — the K-row driver-side centroid state every Lloyd round
-    already materializes (``ivf_cells_kmeans``), re-entered into the
+    already materializes (:func:`_kmeans_state`), re-entered into the
     plan as a literal so assignment can run IN-ROW (guide §2.4: the
     crossJoin + argmax-aggregate exchange disappears; see
     :func:`_with_cells_lit`). Doubles round-trip driver↔plan
@@ -432,9 +414,9 @@ def _with_cells_lit(
 ) -> DataFrame:
     """``v`` + its nearest-centroid ``cell`` column, computed IN-ROW
     over a literal centroid array — a pure projection: zero exchanges,
-    zero joins, where :func:`_assign_cells` costs a broadcast cross +
-    a grouped struct-max exchange (guide §2.4 "remove shuffles
-    outright"). EXACT-identical to the aggregate spelling: the cosine
+    zero joins, where a broadcast cross + grouped struct-max argmax
+    costs an exchange (guide §2.4 "remove shuffles outright").
+    EXACT-identical to that aggregate spelling: the cosine
     is the same ``dot_fold`` fixed-point expression on the same
     doubles, and ``array_max`` over ``struct(cos_to_seed, neg_cell)``
     uses the very struct ordering ``F.max`` used — max cosine, ties →
@@ -495,30 +477,6 @@ def _probe_cells_lit(q: DataFrame, cent_rows, nprobe: int) -> DataFrame:
     )
 
 
-def _argmax_cell(scored: DataFrame) -> DataFrame:
-    """(vec_id, cell, cos_to_seed) → (vec_id, cell) keeping the highest
-    cosine, ties → lowest cell id.
-
-    Struct-max aggregation, NOT a row_number window: a grouped max gets
-    partial aggregation map-side, so only ~N pre-aggregated rows cross
-    the exchange instead of the full N·K scored cross product being
-    shuffled and sorted (VERDICT r03 item 5). The tie rule is pinned
-    inside the struct ordering (max cosine, then max of the NEGATED cell
-    = lowest cell) — fully deterministic, same result as the window
-    spelling."""
-    return (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("cos_to_seed"), (-F.col("cell")).alias("neg_cell")
-                )
-            ).alias("__m")
-        )
-        .select("vec_id", (-F.col("__m.neg_cell")).alias("cell"))
-    )
-
-
 KMEANS_ITERS = 2
 MEAN_SCALE = "1000000000000.0"  # fixed-point scale for exact centroid means
 
@@ -550,71 +508,6 @@ def _train_sample(df: DataFrame, fraction: float = TRAIN_FRACTION) -> DataFrame:
     return df.filter((h % _TRAIN_BUCKETS) < cutoff)
 
 
-def _assign_cells(v: DataFrame, centroids: DataFrame) -> DataFrame:
-    """vec_id → nearest centroid by cosine (ties → lowest cell id).
-
-    One broadcast of the K centroids, one in-row dot per (vector,
-    centroid), argmax via a partial-aggregating struct max
-    (:func:`_argmax_cell`) — O(N·K·d) compute but only ~N rows ever
-    cross the exchange."""
-    scored = (
-        v.select("vec_id", "e", "norm2")
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "cell",
-            (
-                F.expr(dot_fold("e", "ce")) / (F.sqrt("norm2") * F.sqrt("cn"))
-            ).alias("cos_to_seed"),
-        )
-    )
-    return _argmax_cell(scored)
-
-
-def ivf_cells_kmeans(
-    embeddings: DataFrame,
-    n_seeds: int = N_IVF_SEEDS,
-    n_iters: int = KMEANS_ITERS,
-    dim: int = EMB_DIM,
-    train_fraction: float = TRAIN_FRACTION,
-) -> tuple[DataFrame, DataFrame]:
-    """Production coarse quantizer: deterministic seeded Lloyd k-means
-    (VERDICT r02 item 6). Returns (cells, centroids) where cells =
-    (vec_id, cell) and centroids = (cell, ce, cn).
-
-    Init = the first ``n_seeds`` vectors by vec_id (same deterministic
-    seeding as :func:`ivf_cells`); each Lloyd round reassigns the
-    TRAINING SAMPLE (``train_fraction`` of the corpus by deterministic
-    vec_id hash — see :func:`_train_sample`) to the nearest centroid
-    and recomputes centroids as the per-cell, per-dimension mean —
-    entirely JVM-side: exact fixed-point SUMs keyed (cell, dim) with
-    map-side partial aggregation (the exchange carries K·d rows),
-    overflow-proof via a decimal(38,0) accumulator; the assignment is a
-    broadcast cross of K centroids folded by a partial-aggregating
-    struct max. Engine-exact: scaled-int sums and a pinned divide order
-    make every centroid component bit-identical in the DuckDB oracle,
-    so cell assignments — and therefore search results — hash-match.
-    Cells that lose all sampled members drop out (deterministically, in
-    both engines).
-
-    At 100 TB this is the index-build step: n_iters bounded scans of
-    the persisted training sample (FAISS practice: train on a sample,
-    assign everything), then ONE full-corpus assignment pass. Each
-    round's centroid table (K rows — bounded regardless of corpus size)
-    is materialized to the driver and re-created as a literal frame:
-    without this, every round's plan embeds COPIES of all prior rounds'
-    subtrees (cents is referenced by both the assignment and the means
-    of the next round), so the lineage grows exponentially in n_iters —
-    fatal at production iteration counts. The K-row collect is the same
-    driver-side centroid state every distributed k-means keeps (e.g.
-    Spark MLlib's KMeans); doubles round-trip bit-exactly, verified by
-    an A/B run (identical search results, ~10% faster even at 2
-    rounds).
-    """
-    va, cents = kmeans_vectors(embeddings, n_seeds, n_iters, dim, train_fraction)
-    return va.select("vec_id", "cell"), cents
-
-
 def kmeans_vectors(
     embeddings: DataFrame,
     n_seeds: int = N_IVF_SEEDS,
@@ -622,16 +515,30 @@ def kmeans_vectors(
     dim: int = EMB_DIM,
     train_fraction: float = TRAIN_FRACTION,
 ) -> tuple[DataFrame, DataFrame]:
-    """:func:`ivf_cells_kmeans` with the full vector columns kept:
-    returns (va, cents) where ``va`` is :func:`_vectors` of the corpus
-    PLUS its ``cell`` column — computed in ONE in-row projection over
-    the literal centroids (r15, guide §2.4), so callers that need
-    (e, norm2, cell) together (the IVF search lists, SemDeDup's
-    within-cell join, the residual encode) no longer pay the
-    ``v.join(cells, "vec_id")`` shuffle that re-attaching the
-    assignment used to cost. Training arithmetic is unchanged — same
-    exact fixed-point means, same tie rules — so centroids and
-    assignments are bit-identical to the r14 spelling (A/B-verified)."""
+    """Production coarse quantizer: deterministic seeded Lloyd k-means
+    (VERDICT r02 item 6). Returns (va, cents) where ``va`` is
+    :func:`_vectors` of the corpus PLUS its ``cell`` column and
+    ``cents`` = (cell, ce, cn).
+
+    Init = the first ``n_seeds`` vectors by vec_id (same deterministic
+    seeding as :func:`ivf_cells`); each Lloyd round reassigns the
+    TRAINING SAMPLE (``train_fraction`` of the corpus by deterministic
+    vec_id hash — see :func:`_train_sample`) to the nearest centroid
+    and recomputes centroids as the per-cell, per-dimension mean:
+    exact fixed-point SUMs keyed (cell, dim) with map-side partial
+    aggregation, overflow-proof via a decimal(38,0) accumulator.
+    Engine-exact: scaled-int sums and a pinned divide order make every
+    centroid component bit-identical in the DuckDB oracle, so cell
+    assignments — and therefore search results — hash-match. Cells
+    that lose all sampled members drop out (deterministically, in both
+    engines). Each round's K-row centroid table is collected and
+    re-entered as a literal (see :func:`_kmeans_state`), so the
+    unrolled Lloyd lineage does not grow with ``n_iters``.
+
+    The final assignment is ONE in-row projection over the literal
+    centroids (r15, guide §2.4), so callers that need (e, norm2, cell)
+    together (the IVF search lists, SemDeDup's within-cell join, the
+    residual encode) pay no ``v.join(cells, "vec_id")`` shuffle."""
     va, cent_rows = _kmeans_state(embeddings, n_seeds, n_iters, dim, train_fraction)
     cents = embeddings.sparkSession.createDataFrame(
         cent_rows, schema="cell bigint, ce array<double>, cn double"
@@ -884,32 +791,9 @@ def _subvectors(v: DataFrame) -> DataFrame:
     )
 
 
-def _assign_codes(sv: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, s, code): nearest sub-codeword by exact L2 (ties →
-    lowest code). d² = ‖x‖² − 2·x·c + ‖c‖² from the exact fixed-point
-    dots, so the argmin is bit-identical in any engine; the argmin
-    itself is a partial-aggregating struct max (only ~N·M pre-aggregated
-    rows cross the exchange, never N·M·K)."""
-    d2 = F.col("xn") - 2.0 * F.expr(dot_fold("x", "ce")) + F.col("cn")
-    scored = sv.join(F.broadcast(cb), "s").select(
-        "vec_id", "s", "code", d2.alias("d2")
-    )
-    return (
-        scored.groupBy("vec_id", "s")
-        .agg(
-            F.max(
-                F.struct((-F.col("d2")).alias("neg_d2"),
-                         (-F.col("code")).alias("neg_code"))
-            ).alias("__m")
-        )
-        .select("vec_id", "s", (-F.col("__m.neg_code")).alias("code"))
-    )
-
-
 # In-row nearest-sub-codeword: d² = ‖x‖² − 2·x·c + ‖c‖² from the exact
-# fixed-point dots (identical expression to _assign_codes), argmin via
-# array_max over struct(neg_d2, neg_code) — the same comparator the
-# grouped struct-max used, so ties (→ lowest code) decide identically.
+# fixed-point dots, argmin via array_max over struct(neg_d2, neg_code)
+# — max of -d², then max of -code, so ties go to the lowest code.
 def _code_argmin_sql(x: str, xn: str, cb_slot: str) -> str:
     dot = dot_fold(x, "k.ce")
     return (
@@ -994,50 +878,24 @@ _ADC_SUM_SQL = (
 )
 
 
-def pq_codebooks(
-    embeddings: DataFrame,
-    n_codes: int = PQ_K,
-    n_iters: int = PQ_ITERS,
-) -> DataFrame:
-    """Train the PQ sub-codebooks: (s, code, ce, cn), one K-entry
-    codebook per subspace (Jégou et al., "Product Quantization for
-    Nearest Neighbor Search", TPAMI 2011).
-
-    Init = the subvectors of the first ``n_codes`` vectors by vec_id
-    (deterministic, mirroring ivf_cells_kmeans seeding), refined by
-    ``n_iters`` Lloyd rounds run for ALL subspaces at once: assignment
-    is one broadcast join + struct-max argmin keyed (vec_id, s); the
-    centroid update is ONE grouped pass keyed (s, code) with
-    PQ_SUBDIM exact fixed-point decimal sums — M sub-quantizers never
-    cost M separate shuffles. Codewords that lose all members drop out
-    deterministically in both engines.
-
-    At 100 TB the codebook is M·K rows (bounded), the training scans
-    are n_iters passes over the persisted deterministic sample (FAISS
-    practice — encode everything, train on a sample), and every
-    exchange carries only partial-aggregated rows. Per round, the
-    M·K-row codebook is
-    materialized to the driver and re-created as a literal frame — the
-    same bounded-state pattern (and rationale) as ivf_cells_kmeans:
-    unrolled Lloyd lineage grows exponentially in n_iters.
-    """
-    sv = _subvectors(_vectors(embeddings))
-    spark = embeddings.sparkSession
-    rows = _pq_train_rows(sv, n_codes, n_iters)
-    return spark.createDataFrame(
-        rows, schema="s int, code bigint, ce array<double>, cn double"
-    )
-
-
 def _pq_train_rows(
     sv: DataFrame,
     n_codes: int,
     n_iters: int,
     train_fraction: float = TRAIN_FRACTION,
 ) -> list:
-    """The Lloyd loop of :func:`pq_codebooks`, over any prepared
-    subvector frame (vec_id, s, x, xn) — also trains the RESIDUAL
-    sub-quantizers of :func:`ivfpq_topk`. Refinement runs on the
+    """Train the PQ sub-codebooks (Jégou et al., "Product Quantization
+    for Nearest Neighbor Search", TPAMI 2011) over any prepared
+    subvector frame (vec_id, s, x, xn) — the raw subvectors of
+    :func:`pq_topk` or the RESIDUAL subvectors of :func:`ivfpq_topk`.
+
+    Init = the subvectors of the first ``n_codes`` vectors by vec_id
+    (deterministic, mirroring :func:`kmeans_vectors` seeding), refined
+    by ``n_iters`` Lloyd rounds run for ALL subspaces at once: the
+    centroid update is ONE grouped pass keyed (s, code) with
+    PQ_SUBDIM exact fixed-point decimal sums — M sub-quantizers never
+    cost M separate shuffles. Codewords that lose all members drop out
+    deterministically in both engines. Refinement runs on the
     deterministic training sample (:func:`_train_sample`), persisted
     across rounds; only code ASSIGNMENT (done by callers) sees the
     full corpus. Returns the collected codebook ROWS (s, code, ce, cn)
@@ -1163,6 +1021,29 @@ def pq_topk(
 # --- IVF-PQ: coarse cells + PQ-coded residuals (the FAISS IVFPQ layout) --
 
 
+def _ivf_residuals(v: DataFrame, cent_rows) -> DataFrame:
+    """(vec_id, cell, e): each vector's nearest cell and its RESIDUAL
+    ``e − centroid``, one in-row projection over the literal centroids
+    (the winning centroid rides in :func:`_with_cells_lit`'s struct, so
+    no join back to the centroid table)."""
+    return _with_cells_lit(v, cent_rows, keep_centroid=True).select(
+        "vec_id", "cell", F.expr("zip_with(e, __ce, (a, b) -> a - b)").alias("e")
+    )
+
+
+def _ivfpq_code_rows(res: DataFrame, cb_rows) -> DataFrame:
+    """The stored IVF-PQ code grain (vec_id, s, code, cell) of a
+    residual frame (:func:`_ivf_residuals`): all ``PQ_M`` sub-codes
+    encoded in-row over the codebook rows, then exploded — the one
+    encode behind both :func:`build_ivfpq_index` and
+    :func:`add_to_ivfpq_index`."""
+    return _cb_attach(res, cb_rows).select(
+        "vec_id",
+        F.posexplode(F.expr(_codes_arr_sql("e"))).alias("s", "code"),
+        "cell",
+    )
+
+
 def ivfpq_topk(
     embeddings: DataFrame,
     query_pred: str = "vec_id < 5",
@@ -1221,14 +1102,7 @@ def ivfpq_topk(
     # samples unpersist inside their loops).
     del cache_registry
     va, cent_rows = _kmeans_state(embeddings, n_seeds, kmeans_iters)
-    vac = _with_cells_lit(
-        _spread(_vectors(embeddings)), cent_rows, keep_centroid=True
-    )
-    res = vac.select(
-        "vec_id",
-        "cell",
-        F.expr("zip_with(e, __ce, (a, b) -> a - b)").alias("e"),
-    )
+    res = _ivf_residuals(_spread(_vectors(embeddings)), cent_rows)
     cb_rows = _pq_train_rows(
         _subvectors(res.select("vec_id", "e")), n_codes, pq_iters
     )
@@ -1317,12 +1191,7 @@ def build_ivfpq_index(
     # every stored value are byte-identical to the r14 build (doubles
     # round-trip parquet bit-exactly; asserted in tests).
     _, cent_rows = _kmeans_state(embeddings, n_seeds, kmeans_iters)
-    vac = _with_cells_lit(
-        _spread(_vectors(embeddings)), cent_rows, keep_centroid=True
-    )
-    res = vac.select(
-        "vec_id", "cell", F.expr("zip_with(e, __ce, (a, b) -> a - b)").alias("e")
-    )
+    res = _ivf_residuals(_spread(_vectors(embeddings)), cent_rows)
     cb_rows = _pq_train_rows(
         _subvectors(res.select("vec_id", "e")), n_codes, pq_iters
     )
@@ -1332,14 +1201,7 @@ def build_ivfpq_index(
     cb = spark.createDataFrame(
         cb_rows, schema="s int, code bigint, ce array<double>, cn double"
     )
-    codes = (
-        _cb_attach(res, cb_rows)
-        .select(
-            "vec_id",
-            F.posexplode(F.expr(_codes_arr_sql("e"))).alias("s", "code"),
-            "cell",
-        )
-    )
+    codes = _ivfpq_code_rows(res, cb_rows)
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
     cb.write.mode("overwrite").parquet(f"{path}/codebooks")
     codes.write.mode("overwrite").partitionBy("cell").parquet(
@@ -1452,16 +1314,16 @@ def add_to_ivfpq_index(
     rebuild, adds are cheap) and append their code rows to the
     partitioned code table. Append is per-cell leaf-dir parquet append —
     bounded by the new batch, never touching existing files.
+
+    The stored centroids and codebooks are bounded index metadata (K and
+    M·K rows), collected once; the encode is the one
+    :func:`build_ivfpq_index` runs, so a vector added here stores the
+    same (vec_id, s, code, cell) rows a build over it would.
     """
-    cents = spark.read.parquet(f"{path}/centroids")
-    cb = spark.read.parquet(f"{path}/codebooks")
-    v = _vectors(new_embeddings)
-    cells = _assign_cells(v, cents)
-    member = v.join(cells, "vec_id").join(F.broadcast(cents), "cell")
-    res = member.select(
-        "vec_id", F.expr("zip_with(e, ce, (a, b) -> a - b)").alias("e")
-    )
-    codes = _assign_codes(_subvectors(res), cb).join(cells, "vec_id")
+    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
+    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
+    res = _ivf_residuals(_vectors(new_embeddings), cent_rows)
+    codes = _ivfpq_code_rows(res, cb_rows)
     codes.write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
 
 

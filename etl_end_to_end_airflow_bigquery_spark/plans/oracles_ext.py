@@ -958,7 +958,7 @@ def _kmeans_ivf_oracle(
     rounds as CTE layers. Per round: assignment (argmax cosine over the
     current centroids, ties → lowest cell) then per-cell per-dimension
     exact fixed-point means — the same scaled-int BIGINT arithmetic and
-    pinned divide order as ``similarity.ivf_cells_kmeans``, so centroid
+    pinned divide order as ``similarity.kmeans_vectors``, so centroid
     components (and therefore cells and search results) are
     bit-identical across engines. Lloyd rounds read only the ``vns``
     training sample (similarity._train_sample's md5-bucket predicate);
@@ -1359,7 +1359,7 @@ def _pq_oracle(
     """Generated oracle for ``pq_topk_adc``: per-subspace Lloyd rounds
     unrolled as CTE layers, then ADC scoring — the same exact
     fixed-point dots, scaled-int centroid means, and pinned tie rules
-    as ``similarity.pq_codebooks``/``pq_topk``, so codebooks, code
+    as ``similarity._pq_train_rows``/``pq_topk``, so codebooks, code
     assignments, and ADC scores are bit-identical across engines.
     Lloyd rounds read only the ``svns`` training sample; the final
     code assignment and search read the full corpus."""

@@ -197,7 +197,7 @@ def test_ivf_nprobe_validation(spark):
 
 
 def test_kmeans_centroid_sum_survives_past_int64(spark):
-    # The centroid-mean accumulator shape from ivf_cells_kmeans: each
+    # The centroid-mean accumulator shape from kmeans_vectors: each
     # member contributes floor(e_i * 1e12) ~ 1e12, so a BIGINT sum
     # overflows past ~9.2M members per cell (ARITHMETIC_OVERFLOW under
     # the session's ANSI mode). 10M members sits past that boundary —
@@ -238,14 +238,16 @@ def test_pq_adc_recall_random_corpus(spark):
 
 
 def test_pq_codebook_shape_and_code_range(spark, clustered):
-    cb = S.pq_codebooks(clustered)
-    rows = cb.collect()
+    sv = S._subvectors(S._vectors(clustered))
+    rows = S._pq_train_rows(sv, S.PQ_K, S.PQ_ITERS)
     assert {r.s for r in rows} == set(range(S.PQ_M))
     assert all(0 <= r.code < S.PQ_K for r in rows)
     assert all(len(r.ce) == S.PQ_SUBDIM for r in rows)
-    codes = S._assign_codes(S._subvectors(S._vectors(clustered)), cb)
+    codes = S._assign_codes_member(sv, rows)
     n = clustered.count()
     assert codes.count() == n * S.PQ_M  # every vector fully encoded
+    trained = {(r.s, r.code) for r in rows}
+    assert {(r.s, r.code) for r in codes.select("s", "code").collect()} <= trained
 
 
 def test_ivfpq_recall_on_clustered(spark, clustered, cluster_truth):
@@ -363,6 +365,30 @@ def test_ivfpq_index_add_without_retraining(spark, tmp_path, clustered):
     neigh = {r.neighbor_id for r in got.collect()}
     siblings = {m * 100 + 1 for m in range(5)} - {401}
     assert neigh & siblings
+
+
+def test_ivfpq_add_encodes_like_build(spark, tmp_path, clustered):
+    """Re-adding the build vectors to a copy of the index writes exactly
+    the (vec_id, s, code, cell) rows the build stored: add and build
+    share one encode against the same quantizers."""
+    import shutil
+
+    idx = str(tmp_path / "ivfpq_build")
+    S.build_ivfpq_index(clustered, idx)
+    built = sorted(
+        map(tuple, spark.read.parquet(f"{idx}/codes")
+            .select("vec_id", "s", "code", "cell").collect())
+    )
+    copy = str(tmp_path / "ivfpq_copy")
+    shutil.copytree(idx, copy)
+    shutil.rmtree(f"{copy}/codes")
+    S.add_to_ivfpq_index(spark, copy, clustered)
+    added = sorted(
+        map(tuple, spark.read.parquet(f"{copy}/codes")
+            .select("vec_id", "s", "code", "cell").collect())
+    )
+    assert len(built) == clustered.count() * S.PQ_M
+    assert added == built
 
 
 def test_knn_graph_ranks_and_symmetry(spark):

@@ -89,7 +89,7 @@ def test_ann_lsh_same_bucket_has_near_neighbor(spark, vectors):
     res = S.ann_lsh_topk(spark, vectors, query_pred="vec_id = 0", k=4, dim=4).collect()
     ids = [r.neighbor_id for r in res]
     assert 3 not in ids  # the antipode never shares all sign bits
-    buckets = {r.vec_id: r.bucket for r in S.lsh_buckets(spark, vectors, dim=4).collect()}
+    buckets = {r.vec_id: r.bucket for r in S._with_buckets(S._vectors(vectors), dim=4).collect()}
     assert buckets[0] != buckets[3]
 
 
