@@ -2651,66 +2651,6 @@ def compact_parquet(
         return total_files
 
 
-def cluster_write(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    n_files: int | None = None,
-    partition_by: list[str] | None = None,
-) -> None:
-    """Write with range-clustered layout: rows range-partition on
-    ``cluster_by`` and sort within each file, so every parquet row-group
-    carries tight min/max bounds on those columns — the data-skipping
-    (zone-map) layout. A later scan with a ``cluster_by`` predicate
-    prunes whole files/row-groups at planning time instead of reading
-    them; at 100 TB this is the difference between touching one file and
-    touching all of them for a point/range query.
-
-    One range exchange (with a driver-side sample to pick bounds) + a
-    local sort — the standard cost of producing clustered output.
-    """
-    cols = [F.col(c) for c in cluster_by]
-    shaped = (
-        df.repartitionByRange(n_files, *cols)
-        if n_files
-        else df.repartitionByRange(*cols)
-    )
-    shaped = shaped.sortWithinPartitions(*cols)
-    writer = shaped.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_jsonl_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    order_by: str,
-) -> None:
-    """Export as sharded newline-delimited JSON — the interchange layout
-    a training run consumes (one .json file per shard, rows in a
-    deterministic order within and across shards).
-
-    ``repartitionByRange(order_by)`` + ``sortWithinPartitions`` gives a
-    total order split into contiguous shards: shard boundaries come from
-    Spark's reservoir sample of the key (one extra pass at planning),
-    and every re-run of the same frame produces the same row→shard map.
-    At 100 TB pick n_shards so each shard lands near the training
-    loader's preferred file size; the write itself is the standard
-    one-range-exchange clustered-output cost, no driver involvement.
-
-    Round-trips through sources.files.read_jsonl (same engine-portable
-    JSON lines encoding the streaming ingest path already consumes).
-    """
-    (
-        df.repartitionByRange(n_shards, F.col(order_by))
-        .sortWithinPartitions(order_by)
-        .write.mode("overwrite")
-        .json(path)
-    )
-
-
 def delete_rows(
     spark: SparkSession,
     target_path: str,
@@ -2817,77 +2757,11 @@ def delete_rows(
         return deleted
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Z-order clustered write: interleave the bits of two (min/max
-    normalized) numeric columns into one Morton key, range-partition and
-    sort on it — every parquet file then carries TIGHT min/max bounds on
-    BOTH columns, so predicates on either one (or both) skip row groups
-    at scan time. The multi-column generalization of
-    :func:`cluster_write`'s 1-D zone maps (same layout Delta/Iceberg's
-    OPTIMIZE ZORDER produces).
-
-    The only driver-side data is the 1-row min/max aggregate used to
-    normalize each column to ``bits`` levels; the interleave itself is a
-    row-local bitwise projection (codegen'd), and the write pays the
-    standard one-range-exchange clustering cost.
-    """
-    mm = df.agg(
-        F.min(col_a).alias("a_lo"),
-        F.max(col_a).alias("a_hi"),
-        F.min(col_b).alias("b_lo"),
-        F.max(col_b).alias("b_hi"),
-        (F.count(F.lit(1)) - F.count(col_a)).alias("a_nulls"),
-        (F.count(F.lit(1)) - F.count(col_b)).alias("b_nulls"),
-    ).collect()[0]
-    # Cluster columns must be numeric and non-NULL (ADVICE r04): an
-    # all-NULL column has no min/max to normalize against, and NULL in
-    # either column would NULL the Morton key and silently lump those
-    # rows into one unbounded range partition with no skipping benefit.
-    # Reject loudly — checked inside the same one-row aggregate the
-    # normalization already pays for, so validation costs no extra scan.
-    if mm.a_nulls or mm.b_nulls:
-        bad = col_a if mm.a_nulls else col_b
-        raise ValueError(
-            f"zorder_write: cluster column {bad!r} contains NULLs; "
-            "filter or impute them before clustering"
-        )
-    lvl = (1 << bits) - 1
-
-    def _norm(col: str, lo, hi) -> str:
-        span = float(hi - lo) if hi != lo else 1.0
-        return (
-            f"CAST(floor((CAST({col} AS DOUBLE) - {float(lo)!r})"
-            f" / {span!r} * {lvl}) AS BIGINT)"
-        )
-
-    na = _norm(col_a, mm.a_lo, mm.a_hi)
-    nb = _norm(col_b, mm.b_lo, mm.b_hi)
-    interleave = " + ".join(
-        f"(shiftleft((shiftright({na}, {i}) & 1), {2 * i})"
-        f" + shiftleft((shiftright({nb}, {i}) & 1), {2 * i + 1}))"
-        for i in range(bits)
-    )
-    shaped = (
-        df.withColumn("__z", F.expr(interleave))
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-    shaped.write.mode("overwrite").parquet(path)
-
-
 def _grid_norm_expr(col: str, lo, hi, bits: int) -> str:
-    """min/max normalization to ``bits`` integer levels — the SAME
-    formula (and double-op order) zorder_write uses, shared by the
-    deterministic grid writers so the relational oracle can reproduce
-    file assignment exactly."""
+    """min/max normalization to ``bits`` integer levels, shared by the
+    deterministic grid writers; the relational oracle repeats the same
+    formula (and double-op order), so it reproduces file assignment
+    exactly."""
     lvl = (1 << bits) - 1
     span = float(hi - lo) if hi != lo else 1.0
     return (
@@ -2927,18 +2801,23 @@ def zorder_write_grid(
     n_files: int = 8,
     bits: int = 16,
 ) -> None:
-    """:func:`zorder_write` with DETERMINISTIC file boundaries: the file
-    id is the top ``log2(n_files)`` bits of the Morton key (a fixed
-    grid over the normalized (a, b) plane), written as one parquet file
-    per non-empty grid cell via a hive ``__zfile=K`` layout.
+    """Z-order clustered write with DETERMINISTIC file boundaries:
+    interleave the bits of two (min/max normalized) numeric columns into
+    one Morton key; the file id is its top ``log2(n_files)`` bits (a
+    fixed grid over the normalized (a, b) plane), written as one parquet
+    file per non-empty grid cell via a hive ``__zfile=K`` layout — the
+    layout Delta/Iceberg's OPTIMIZE ZORDER produces, with boundaries
+    that are a pure function of the data.
 
-    ``repartitionByRange`` (the production writer) picks boundaries by
-    sampling — right at scale, but the per-file min/max then isn't a
-    pure function of the data, which is exactly what the skipping PROOF
-    needs (``file_skip_report`` vs a relational oracle that recomputes
-    the same grid; VERDICT r10 item 6). Each Morton cell is a rectangle
-    in (a, b) space, so every file carries tight bounds on BOTH columns
-    — 2-D predicates skip cells the way 1-D clustering can't.
+    A sampled ``repartitionByRange`` would pick boundaries that are
+    not, and the skipping PROOF needs them to be (``file_skip_report``
+    vs a relational oracle that recomputes the same grid; VERDICT r10
+    item 6). Each Morton cell is a rectangle in (a, b) space, so every
+    file carries tight bounds on BOTH columns — 2-D predicates skip
+    cells the way 1-D clustering can't. The only driver-side data is
+    the one-row min/max aggregate (:func:`_grid_minmax`), which also
+    rejects NULL cluster values: a NULL would NULL the Morton key and
+    lump those rows into one unbounded file.
     """
     if n_files & (n_files - 1) or n_files < 2:
         raise ValueError(f"n_files must be a power of two >= 2, got {n_files}")

@@ -486,38 +486,6 @@ class TestCompaction:
         assert spark.read.parquet(path).count() == 50_000
 
 
-class TestClusterWrite:
-    def test_rowgroup_bounds_are_tight_and_scan_prunes(self, spark, tmp_path):
-        import glob
-
-        import pyarrow.parquet as pq
-
-        from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-            cluster_write,
-        )
-
-        path = str(tmp_path / "clustered")
-        df = spark.range(0, 100_000).selectExpr(
-            "id AS k", "CAST(id % 97 AS DOUBLE) AS v"
-        ).repartition(8)  # scrambled input
-        cluster_write(df, path, ["k"], n_files=8)
-        files = sorted(glob.glob(path + "/part-*.parquet"))
-        assert len(files) == 8
-        # each file covers a disjoint contiguous k-range (zone-map layout)
-        spans = []
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            col = md.row_group(0).column(0)
-            lo = col.statistics.min
-            hi = md.row_group(md.num_row_groups - 1).column(0).statistics.max
-            spans.append((lo, hi))
-        spans.sort()
-        for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
-            assert hi1 < lo2  # disjoint: a point predicate hits ONE file
-        # data survives intact
-        assert spark.read.parquet(path).count() == 100_000
-
-
 class TestPartitionedCompaction:
     def test_plain_partitioned_compacts_only_skewed_leaf(self, spark, tmp_path):
         """Per-leaf compaction (VERDICT r03 item 9): the fragmented leaf
@@ -594,37 +562,6 @@ class TestPartitionedCompaction:
         assert read_table(spark, path).count() == 20
 
 
-def test_write_jsonl_shards_roundtrip(spark, tmp_path):
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        write_jsonl_shards,
-    )
-    from etl_end_to_end_airflow_bigquery_spark.sources.files import read_jsonl
-
-    df = spark.range(100).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("text "), F.col("id").cast("string")).alias("text"),
-    )
-    out = str(tmp_path / "shards")
-    write_jsonl_shards(df, out, n_shards=4, order_by="doc_id")
-
-    import glob
-    parts = glob.glob(out + "/part-*")
-    assert len(parts) == 4  # one file per shard
-
-    valid, rejected = read_jsonl(spark, out, "doc_id long, text string")
-    got = sorted((r.doc_id, r.text) for r in valid.collect())
-    assert got == [(i, f"text {i}") for i in range(100)]
-    assert rejected.count() == 0
-    valid.unpersist()
-
-    # determinism: same frame → byte-identical shard contents
-    out2 = str(tmp_path / "shards2")
-    write_jsonl_shards(df, out2, n_shards=4, order_by="doc_id")
-    def slurp(d):
-        return sorted(open(p).read() for p in glob.glob(d + "/part-*"))
-    assert slurp(out) == slurp(out2)
-
-
 def test_delete_rows_versioned_and_complete(spark, tmp_path):
     """GDPR subject delete: the subject vanishes from the current
     snapshot, the commit is versioned (readers keep a complete
@@ -693,72 +630,6 @@ def test_merge_schema_evolution(spark, tmp_path):
     with pytest.raises(ValueError, match="score"):
         merge_upsert(spark, path, batch, keys=["k"])
     assert read_table(spark, path).columns == ["k", "v"]
-
-
-def test_zorder_rejects_null_cluster_values(spark, tmp_path):
-    """ADVICE r04: NULL in a cluster column would NULL the Morton key
-    (one unbounded range partition, no skipping) and an all-NULL column
-    crashed on float(None) — both must reject loudly instead."""
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        zorder_write,
-    )
-
-    some_null = spark.createDataFrame(
-        [(1, 1), (2, None), (3, 3)], "x long, y long"
-    )
-    with pytest.raises(ValueError, match="'y' contains NULLs"):
-        zorder_write(some_null, str(tmp_path / "z1"), "x", "y")
-
-    all_null = spark.createDataFrame(
-        [(1, None), (2, None)], "x long, y long"
-    )
-    with pytest.raises(ValueError, match="'y' contains NULLs"):
-        zorder_write(all_null, str(tmp_path / "z2"), "x", "y")
-
-
-def test_zorder_bounds_both_columns(spark, tmp_path):
-    """Z-order vs 1-D clustering on a uniform 2-D grid: the 1-D layout
-    leaves the second column's per-file range at ~full span; the Morton
-    layout tightens BOTH columns' per-file ranges."""
-    import glob
-    import pyarrow.parquet as pq
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        cluster_write,
-        zorder_write,
-    )
-
-    grid = spark.createDataFrame(
-        [(x, y) for x in range(64) for y in range(64)], "x long, y long"
-    )
-
-    def mean_norm_range(path, col):
-        spans = []
-        for f in glob.glob(path + "/part-*.parquet"):
-            md = pq.read_metadata(f)
-            lo = min(md.row_group(i).column(
-                md.schema.names.index(col)).statistics.min
-                for i in range(md.num_row_groups))
-            hi = max(md.row_group(i).column(
-                md.schema.names.index(col)).statistics.max
-                for i in range(md.num_row_groups))
-            spans.append((hi - lo) / 63.0)
-        return sum(spans) / len(spans)
-
-    oned = str(tmp_path / "oned")
-    cluster_write(grid, oned, cluster_by=["x"], n_files=16)
-    zord = str(tmp_path / "zord")
-    zorder_write(grid, zord, "x", "y", n_files=16)
-
-    assert mean_norm_range(oned, "y") > 0.9   # 1-D layout: y unbounded
-    assert mean_norm_range(zord, "x") < 0.6   # z-order bounds both
-    assert mean_norm_range(zord, "y") < 0.6
-
-    # the layout is a reordering, never a mutation
-    back = spark.read.parquet(zord)
-    assert back.count() == 64 * 64
-    assert back.select(F.sum("x"), F.sum("y")).collect()[0] == (
-        grid.select(F.sum("x"), F.sum("y")).collect()[0]
-    )
 
 
 def test_table_versions_and_time_travel_read(spark, tmp_path, target):
