@@ -1,7 +1,6 @@
 """Custom stateful streaming operator: gap-based sessionization via
-``applyInPandasWithState`` AND its Spark 4 successor
-``transformWithStateInPandas`` (north-star surface: arbitrary per-key
-state the built-in windowed aggregates can't express).
+``applyInPandasWithState`` (north-star surface: arbitrary per-key state
+the built-in windowed aggregates can't express).
 
 Semantics match the batch ``sessionize_events`` query: events for a user
 belong to one session until a gap larger than ``gap`` separates them.
@@ -98,126 +97,4 @@ def sessionize_stateful(
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-    )
-
-
-def sessionize_tws(
-    ticks: DataFrame,
-    gap_seconds: int = 1800,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """The same gap sessionizer on Spark 4's ``transformWithStateInPandas``
-    — the successor API to ``applyInPandasWithState`` (named state
-    variables with independent schemas/TTLs, explicit timers instead of a
-    single timeout slot, state readable by the ``statestore`` source).
-
-    Semantics are kept identical to :func:`sessionize_stateful` by
-    construction: a session closes when a later event proves a gap
-    ``> gap_seconds`` (emitted immediately from ``handleInputRows``) or
-    when the event-time watermark fires its registered timer at
-    ``session_end + gap`` (``handleExpiredTimer``). State per key is ONE
-    value-state row plus one timer — O(1) per active user at any scale,
-    and the store is partition-parallel (one state-store instance per
-    shuffle partition), so a 100 TB stream shards its session state
-    across executors with no driver involvement.
-
-    EXECUTION-GATED: pyspark serializes transformWithState state over
-    protobuf, which this container does not ship (no installs allowed),
-    so the runtime path cannot execute here — the unit test
-    ``importorskip``s it and asserts the logical-plan wiring instead.
-    On a cluster with standard pyspark deps (``pip install
-    "pyspark[sql]"`` pulls ``protobuf``) the operator runs as written.
-    """
-    gap_us = gap_seconds * 1_000_000
-
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class _GapSessionizer(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            # epoch-µs session bounds + event count (STATE_SCHEMA twin)
-            self._session = handle.getValueState(
-                "session", "start LONG, end LONG, n LONG"
-            )
-
-        def _timer_ms(self, end_us: int) -> int:
-            return (end_us + gap_us) // 1000
-
-        def handleInputRows(
-            self, key: tuple, rows, timerValues: TimerValues
-        ) -> Iterable[pd.DataFrame]:
-            (user_id,) = key
-            ts_list: list[int] = []
-            for pdf in rows:
-                ts_list.extend(
-                    int(v.value) // 1000 for v in pd.to_datetime(pdf["ts"])
-                )
-            ts_list.sort()
-            closed: list[tuple[int, int, int]] = []
-            cur: list[int] | None = None
-            if self._session.exists():
-                cur = list(self._session.get())
-                # the open session's pending timer moves with its end
-                self._handle.deleteTimer(self._timer_ms(cur[1]))
-            for t in ts_list:
-                if cur is None:
-                    cur = [t, t, 0]
-                elif t - cur[1] > gap_us:
-                    closed.append((cur[0], cur[1], cur[2]))
-                    cur = [t, t, 0]
-                # in-watermark out-of-order event may precede the open
-                # session's start (batch semantics: min(ts) per session)
-                cur[0] = min(cur[0], t)
-                cur[1] = max(cur[1], t)
-                cur[2] += 1
-            if cur is not None:
-                self._session.update(tuple(cur))
-                self._handle.registerTimer(self._timer_ms(cur[1]))
-            if closed:
-                yield _sessions_frame(user_id, closed)
-
-        def handleExpiredTimer(
-            self,
-            key: tuple,
-            timerValues: TimerValues,
-            expiredTimerInfo: ExpiredTimerInfo,
-        ) -> Iterable[pd.DataFrame]:
-            (user_id,) = key
-            # exactly one live timer per key (moved on every input batch),
-            # so any expiry closes the open session
-            if self._session.exists():
-                s, e, n = self._session.get()
-                self._session.clear()
-                yield _sessions_frame(user_id, [(s, e, n)])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        ticks.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_GapSessionizer(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-def _sessions_frame(
-    user_id: int, closed: list[tuple[int, int, int]]
-) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "user_id": [user_id] * len(closed),
-            "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in closed],
-            "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in closed],
-            "n_events": [n for _, _, n in closed],
-        }
     )

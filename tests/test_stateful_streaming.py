@@ -60,78 +60,3 @@ def test_stateful_sessionize_closes_on_gap(spark, tmp_path):
         (1, "2026-01-05 11:00:00", "2026-01-05 11:00:00", 1),
         # user 2's own session stays open in state — not emitted
     }
-
-
-def test_tws_sessionizer_plan_wiring(spark, tmp_path):
-    """transformWithStateInPandas twin (Spark 4 successor API): the
-    operator wires into the streaming plan — TransformWithStateInPySpark
-    node, append mode, event-time time mode, the session's 4-column
-    output schema. Execution needs protobuf (a standard pyspark dep this
-    container doesn't ship), covered by the gated test below."""
-    from etl_end_to_end_airflow_bigquery_spark.streaming.stateful import (
-        sessionize_tws,
-    )
-    from pyspark.sql import functions as F
-
-    src = tmp_path / "events"
-    _write_events(src, "batch1", [(1, "2026-01-05 09:00:00")])
-    ticks = (
-        spark.readStream.schema("user_id long, ts string")
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    sess = sessionize_tws(ticks, gap_seconds=1800, watermark="0 seconds")
-    assert sess.isStreaming
-    assert [f.name for f in sess.schema.fields] == [
-        "user_id", "session_start", "session_end", "n_events",
-    ]
-    plan = sess._jdf.queryExecution().analyzed().toString()
-    assert "TransformWithState" in plan
-    assert "EventTimeWatermark" in plan
-
-
-def test_tws_sessionizer_executes_like_stateful(spark, tmp_path):
-    """Where protobuf exists, the transformWithState twin must emit the
-    exact closed-session set of the applyInPandasWithState test above."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from etl_end_to_end_airflow_bigquery_spark.streaming.stateful import (
-        sessionize_tws,
-    )
-    from pyspark.sql import functions as F
-
-    src = tmp_path / "events"
-    _write_events(
-        src,
-        "batch1",
-        [
-            (1, "2026-01-05 09:00:00"),
-            (1, "2026-01-05 09:10:00"),
-            (1, "2026-01-05 11:00:00"),
-            (2, "2026-01-06 09:00:00"),
-        ],
-    )
-    ticks = (
-        spark.readStream.schema("user_id long, ts string")
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    sessions = sessionize_tws(ticks, gap_seconds=1800, watermark="0 seconds")
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("tws_sess_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in spark.table("tws_sess_out").collect()
-    }
-    assert got == {
-        (1, "2026-01-05 09:00:00", "2026-01-05 09:10:00", 2),
-        (1, "2026-01-05 11:00:00", "2026-01-05 11:00:00", 1),
-    }
