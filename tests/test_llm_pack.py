@@ -476,9 +476,9 @@ def test_substring_dedup_huge_doc_ids_no_overflow(spark):
     assert got[10_000_000_000_001].n_removed == 50
 
 
-def test_bpe_sparse_fold_equals_dense_fold(spark):
-    """_bpe_apply_merge_sparse (match-position fold + rebuild) must be
-    extensionally equal to the dense per-token fold on adversarial and
+def test_bpe_dense_fold_equals_python_merge(spark):
+    """The in-row reference fold _bpe_apply_merge must be extensionally
+    equal to the Python kernel _bpe_py_merge on adversarial and
     randomized inputs — overlapping runs, back-to-back matches, edges."""
     import random
 
@@ -486,7 +486,7 @@ def test_bpe_sparse_fold_equals_dense_fold(spark):
 
     from etl_end_to_end_airflow_bigquery_spark.plans.queries_ext import (
         _bpe_apply_merge,
-        _bpe_apply_merge_sparse,
+        _bpe_py_merge,
     )
 
     rng = random.Random(709)
@@ -503,19 +503,19 @@ def test_bpe_sparse_fold_equals_dense_fold(spark):
     for a, b in [("a", "b"), ("a", "a"), ("b", "x")]:
         rows = df.select(
             _bpe_apply_merge(F.col("t"), a, b).alias("dense"),
-            _bpe_apply_merge_sparse(F.col("t"), a, b).alias("sparse"),
         ).collect()
         for c, r in zip(cases, rows):
-            assert r.dense == r.sparse, (a, b, c, r.dense, r.sparse)
+            py = _bpe_py_merge(c, a, b)
+            assert r.dense == py, (a, b, c, r.dense, py)
 
 
 def test_bpe_py_merge_equals_in_row_folds(spark):
     """The r15 vectorized kernels (_bpe_merge_list_column over a whole
     Arrow list column, and its sequential reference _bpe_py_merge) must
-    be extensionally equal to BOTH in-row folds on the same adversarial
-    + randomized inputs the dense/sparse pin uses — the production
-    trainer/encoder now runs the Arrow kernel, so this pin is what ties
-    it back to the JVM implementations. The Arrow column carries all
+    be extensionally equal to the in-row reference fold on adversarial
+    + randomized inputs — the production trainer/encoder now runs the
+    Arrow kernel, so this pin is what ties it back to the JVM-side
+    reference. The Arrow column carries all
     cases in ONE batch, so cross-document boundary masking (including
     empty lists between documents) is exercised too."""
     import random
@@ -525,7 +525,6 @@ def test_bpe_py_merge_equals_in_row_folds(spark):
 
     from etl_end_to_end_airflow_bigquery_spark.plans.queries_ext import (
         _bpe_apply_merge,
-        _bpe_apply_merge_sparse,
         _bpe_merge_list_column,
         _bpe_py_merge,
     )
@@ -547,16 +546,13 @@ def test_bpe_py_merge_equals_in_row_folds(spark):
     for a, b in [("a", "b"), ("a", "a"), ("b", "x")]:
         rows = df.select(
             _bpe_apply_merge(F.col("t"), a, b).alias("dense"),
-            _bpe_apply_merge_sparse(F.col("t"), a, b).alias("sparse"),
         ).collect()
         arrow = _bpe_merge_list_column(
             pa.array(cases, type=pa.list_(pa.string())), a, b
         ).to_pylist()
         for c, r, ar in zip(cases, rows, arrow):
             py = _bpe_py_merge(c, a, b)
-            assert py == r.dense == r.sparse == ar, (
-                a, b, c, py, r.dense, r.sparse, ar,
-            )
+            assert py == r.dense == ar, (a, b, c, py, r.dense, ar)
 
 
 def test_bpe_encoder_matches_python_reference(spark):
