@@ -14,7 +14,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import TESTDATA_TABLES
 from .session import local_cpus
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -62,17 +61,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one synthetic table. Plain columnar scan; filters push down."""
     _tune(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Scan every synthetic table into a dict of DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for the SQL API."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def read_partition_evolved(

@@ -13,17 +13,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def topk_by_recency(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
-    """``ORDER BY … DESC LIMIT k`` (O1, ``dags/ FXRate_Reporting_Pipeline.py:141``).
-
-    Spark plans this as TakeOrderedAndProject: each partition keeps its
-    local top-k, the driver merges — no global sort, no full shuffle, so
-    it holds at any scale. Callers must pass a total order (include a
-    unique tiebreak column) for deterministic results.
-    """
-    return df.orderBy(*order_cols).limit(k)
-
-
 def latest_per_key(
     df: DataFrame, keys: list[str], order_cols: list[Column]
 ) -> DataFrame:
@@ -39,15 +28,6 @@ def latest_per_key(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def exists_guard(df: DataFrame, predicate: Column) -> DataFrame:
-    """COUNT(*) existence check (A3, ``dags/idempotent_fx_pipeline.py:73-87``).
-
-    Returned as a 1-row frame so it stays lazy/composable; the reference
-    collects the scalar driver-side to branch — callers can ``.first()``.
-    """
-    return df.filter(predicate).agg(F.count(F.lit(1)).alias("n_existing"))
 
 
 def decimal_sum(col: Column, digits: int = 6, wide: bool = False) -> Column:

@@ -69,19 +69,6 @@ def text_stats(df: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def quality_score_expr(
-    n_tokens: Column, stop_ratio: Column, avg_token_len: Column
-) -> Column:
-    """Deterministic quality heuristic in [0,1]: rewards length (up to 100
-    tokens), low stopword density, and informative token length (up to 8
-    chars). Mirrored verbatim in the oracle SQL."""
-    return (
-        0.4 * F.least(n_tokens / 100.0, F.lit(1.0))
-        + 0.4 * (1.0 - stop_ratio)
-        + 0.2 * F.least(avg_token_len / 8.0, F.lit(1.0))
-    )
-
-
 def fingerprint(text: str = "text") -> Column:
     """Document fingerprint: md5 over the lower-cased text. Content-hash
     dedup key; cheap, exact, portable."""
