@@ -23,8 +23,7 @@ The gate is now two explicit tiers:
    NEVER had a green driver row in any prior round's CORRECTNESS file.
    Round 7 (VERDICT r06 item 3) gated ALL remaining never-proven
    names and came back 50/50 green — the registry is 100%
-   driver-proven (union of CORRECTNESS_r01–r07), and
-   ``rotation_candidates()`` is empty.
+   driver-proven (union of CORRECTNESS_r01–r07).
 
    **Round-8+ gate policy (VERDICT r07 item 1)**: with the rotation
    pool exhausted, rotation slots hold exactly the round's NEW queries
@@ -39,7 +38,11 @@ The gate is now two explicit tiers:
 
 Membership invariants are enforced with explicit raises (not bare
 ``assert`` — stripped under ``python -O``, ADVICE r03): every name
-registered, exactly 50 unique, anchors and rotation disjoint.
+registered, no duplicates, exactly 50. The green history itself is not
+restated here: ``tests/test_queries_oracle.py`` derives it from the
+committed ``CORRECTNESS_r*.json`` files (a round's green rows only — red
+rows stay rotation-eligible until a green driver row exists) and checks
+the rotation, backfill and coverage rules against it.
 """
 
 from .oracles import ORACLES as _CORE_ORACLES
@@ -50,217 +53,6 @@ from .queries_ext import EXT_QUERIES
 from .queries_olap import OLAP_QUERIES
 from .queries_stream import STREAM_QUERIES
 from .oracles_stream import STREAM_ORACLES
-
-# Names with a green driver row in some prior round (union of
-# CORRECTNESS_r01–r06; a round contributes its green rows only — red
-# rows stay rotation-eligible until a green driver row exists). Used to
-# pick rotation slots and asserted against by
-# tests/test_queries_oracle.py — append, don't rewrite, when a new
-# round's CORRECTNESS file lands.
-GATED_THROUGH_R06: frozenset[str] = frozenset(
-    {
-        # round-6 rotation rows (CORRECTNESS_r06 greens; the two reds —
-        # mix_sources_tokens and variant_function_pack, the HUGEINT
-        # oracle-type bug — are deliberately absent and re-slotted)
-        "merge_sql_orders", "burst_events_window",
-        "session_concurrency_daily", "overlapping_sessions",
-        "ohlc_daily", "daily_returns_volatility", "max_drawdown_series",
-        "knn_graph", "quality_classifier_docs", "chunk_documents_udtf",
-        "cogroup_asof_pandas", "order_streaks_rcte", "sql_udf_pack",
-        "parameterized_sql_pack", "streaming_burst_pairs",
-        "streaming_ohlc_daily", "quantile_pack", "profile_orders",
-        "unpivot_part_measures", "grouping_sets_sql", "histogram_prices",
-        "richest_customer_per_nation", "conditional_agg_pack",
-        "anomaly_zscore_daily", "unreferenced_parts",
-        "dq_expectations_orders",
-        # round-5 rotation rows (CORRECTNESS_r05 greens; the 28th slot,
-        # mix_sources_tokens, was the round's one hash mismatch and is
-        # deliberately absent)
-        "ivfpq_topk_adc", "pq_topk_adc", "ivfpq_rerank_topk",
-        "bm25_retrieval", "hybrid_rrf_retrieval", "phrase_search_docs",
-        "unigram_logprob_docs", "bigram_logprob_docs",
-        "curated_corpus_v3", "semantic_dedup_kmeans", "pii_scrub_docs",
-        "pagerank_dedup_graph", "leakage_safe_split",
-        "duplicate_spans_docs", "cms_heavy_hitters",
-        "hll_distinct_users", "bloom_join_prune", "streaming_cms_counts",
-        "url_function_pack", "map_function_pack", "json_function_pack",
-        "array_function_pack", "null_function_pack", "try_function_pack",
-        "datetime_function_pack", "string_function_pack2", "stats_pack",
-        # round-4 rotation rows (CORRECTNESS_r04, all green)
-        "ann_lsh_multiprobe", "ann_lsh_multitable", "bitwise_function_pack",
-        "chunk_documents", "dataset_split", "decontaminate_ngrams",
-        "ewma_daily_rates", "hash_sample_docs", "interpolate_daily_rates",
-        "ivf_topk_nprobe", "pack_training_sequences", "q10_returned_revenue",
-        "q13_order_distribution", "q14_promo_share", "q15_top_supplier",
-        "q19_or_pushdown", "q22_idle_customers", "q7_volume_shipping",
-        "q8_market_share", "regex_string_pack", "repetition_ratio_docs",
-        "stratified_sample_docs", "streaming_segment_counts",
-        "streaming_sessionize", "streaming_sliding_avg",
-        "streaming_view_purchase_join", "tfidf_top_terms",
-        "window_function_pack",
-        # rounds 1–3
-        "daily_avg_report", "topk_recent_events", "count_guard_inlist",
-        "json_map_explode", "latest_event_per_key",
-        "window_topk_per_customer", "setops_intersect",
-        "scalar_function_pack", "pricing_summary", "star_join_revenue",
-        "shipping_priority", "distinct_parts_per_supplier", "rollup_qty",
-        "pivot_event_counts", "merge_upsert_orders",
-        "idempotent_append_orders", "sessionize_events",
-        "asof_attribution", "reorder_gap_by_segment",
-        "cumulative_monthly_revenue", "order_priority_exists",
-        "skew_safe_event_counts", "median_price_by_status",
-        "ivf_topk_kmeans", "dedup_exact_docs", "minhash_pairs",
-        "jaccard_near_dups", "dedup_clusters", "simhash_docs",
-        "text_stats_quality", "cosine_topk", "ann_lsh_topk", "ivf_topk",
-        "embedding_near_dups", "multimodal_meta", "curated_corpus_v2",
-        "vocab_top_tokens", "multimodal_decode", "multimodal_resize",
-        "streaming_daily_avg", "streaming_report_merge",
-        "streaming_dedup_events", "grouped_stats_pandas",
-        "q5_local_supplier_volume", "q18_big_orders",
-        "scd2_orders_status", "snapshot_diff_orders",
-        "resample_daily_rates", "incremental_daily_state",
-        "fuzzy_name_pairs",
-        # r01/r02-only rows (demoted from later gates but green there)
-        "avg_last10", "cube_counts", "curated_corpus", "doc_fingerprint",
-        "forecast_revenue", "json_field_extract", "label_centroids",
-        "lang_id_heuristic", "multimodal_features", "report_exists_guard",
-        "session_window_native", "setops_except", "setops_union",
-        "small_qty_revenue", "token_count_bpe", "top_orders_by_date",
-        "views_before_purchase",
-    }
-)
-
-# Round-7 fold (CORRECTNESS_r07: 50/50 green — the whole gate passed).
-# Anchors and the two backfill re-proofs were already in the R06 ledger;
-# the union adds exactly the 26 rotation rows.
-GATED_THROUGH_R07: frozenset[str] = GATED_THROUGH_R06 | frozenset(
-    {
-        "mix_sources_tokens", "variant_function_pack",
-        "variant_shredded_roundtrip", "merge_sql_sync_orders",
-        "time_travel_orders", "frame_sample_assets", "shard_histogram",
-        "weighted_sample_docs", "cap_docs_per_source",
-        "decontaminate_embeddings", "streaming_view_purchase_left",
-        "streaming_state_dedup_keys", "ivm_join_revenue",
-        "ivm_join_revenue_retract", "regression_trend_events",
-        "funnel_view_click_purchase", "cohort_retention_weekly",
-        "basket_part_pairs", "revenue_gini", "session_paths_top",
-        "rfm_segments", "jsonl_commit_roundtrip", "string_agg_pack",
-        "lateral_topk_orders", "bpe_merge_candidates",
-        "token_diversity_docs",
-    }
-)
-
-# Round-8 fold (CORRECTNESS_r08: 50/50 green). Anchors and the 25
-# backfill re-proofs were already in the R07 ledger; the union adds
-# exactly the 3 rotation rows (the r8-new queries).
-GATED_THROUGH_R08: frozenset[str] = GATED_THROUGH_R07 | frozenset(
-    {
-        "ivm_minmax_recompute", "bpe_train_merges",
-        "substring_dedup_spans",
-    }
-)
-
-# Round-9 fold (CORRECTNESS_r09: 50/50 green). Anchors and the 18
-# backfill re-proofs were already in the R08 ledger; the union adds
-# exactly the 10 rotation rows (the r9-new queries).
-GATED_THROUGH_R09: frozenset[str] = GATED_THROUGH_R08 | frozenset(
-    {
-        "bpe_encode_corpus", "phash_near_dup_assets",
-        "streaming_ivm_revenue", "ivm_distinct_support",
-        "streaming_phash_assets", "triangle_count_dedup",
-        "pipe_syntax_pack", "observed_write_metrics",
-        "incremental_dedup_batch", "streaming_incremental_dedup",
-    }
-)
-
-# Round-10 fold (CORRECTNESS_r10: 50/50 green). Anchors and the 5
-# tier-a backfill re-proofs were already in the R09 ledger; the union
-# adds exactly the 23 rotation rows (the r10-new queries).
-GATED_THROUGH_R10: frozenset[str] = GATED_THROUGH_R09 | frozenset(
-    {
-        "trailing_active_users", "rollup_cascade_daily",
-        "streaming_rollup_cascade", "robust_stats_orders",
-        "bucketed_colocated_join", "sql_variables_pack",
-        "containment_near_dups", "bin_pack_nextfit",
-        "corpus_drift_chi2", "time_weighted_avg_daily",
-        "counter_rate_resets", "pmi_collocations",
-        "cdc_out_of_order_apply", "streaming_cdc_apply",
-        "bfs_dedup_distance", "quantile_rollup_cascade",
-        "hll_merge_days", "partition_pruned_scan",
-        "null_semantics_pack", "er_golden_record",
-        "streaming_quantile_cascade", "skyline_pareto_orders",
-        "multi_touch_attribution",
-    }
-)
-
-# Round-11 fold (CORRECTNESS_r11: 50/50 green — the whole gate passed).
-# Anchors were already in the R10 ledger; the union adds exactly the 28
-# rotation rows (the r11-new queries).
-GATED_THROUGH_R11: frozenset[str] = GATED_THROUGH_R10 | frozenset(
-    {
-        "merge_cdf_ivm_roundtrip", "merge_sql_multi_clause",
-        "quarantine_ingest_events", "skew_join_hot_keys",
-        "zorder_skipping_report", "sql_scripting_pack",
-        "bitmap_distinct_users", "streaming_bitmap_distinct",
-        "ngram_novelty_docs", "funnel_time_to_convert",
-        "multimodal_arrow_stats", "schema_evolution_read",
-        "collation_pack", "bitmap_audience_overlap",
-        "merge_cdf_join_ivm", "cdf_squash_roundtrip",
-        "k_anonymity_report", "udf_iter_text_scores",
-        "prefix_filter_near_dups", "weighted_median_prices",
-        "q21_sole_late_supplier", "cep_pattern_funnel",
-        "range_frame_peak_window", "q2_min_cost_supplier",
-        "spatial_grid_knn", "dpp_partitioned_join",
-        "approx_quantile_certified", "streaming_cep_funnel",
-    }
-)
-
-# Round-12 fold (CORRECTNESS_r12: 50/50 green — the whole gate passed).
-# Anchors and the 21 backfill re-proofs were already in the R11 ledger;
-# the union adds exactly the 9 rotation rows (the r12-new queries).
-GATED_THROUGH_R12: frozenset[str] = GATED_THROUGH_R11 | frozenset(
-    {
-        "file_lineage_scan", "misra_gries_heavy_hitters",
-        "mmr_rerank_topk", "cep_kleene_funnel", "streaming_cep_kleene",
-        "history_skip_scan", "table_diff_audit", "streaming_misra_gries",
-        "partition_evolution_read",
-    }
-)
-
-# Round-13 fold (CORRECTNESS_r13: 50/50 green — the whole gate passed).
-# Anchors and the 23 backfill re-proofs were already in the R12 ledger;
-# the union adds exactly the 5 rotation rows (the r13-new queries).
-GATED_THROUGH_R13: frozenset[str] = GATED_THROUGH_R12 | frozenset(
-    {
-        "partition_evolution_history", "mmr_rerank_stored",
-        "streaming_partition_evolution", "manifest_skipping_read",
-        "evolved_merge_cdf",
-    }
-)
-
-# Round-14 fold (CORRECTNESS_r14: 50/50 green — the whole gate passed).
-# Anchors and the 23 backfill re-proofs (incl. the full 9-name r03/r04
-# stale pool, now retired) were already in the R13 ledger; the union
-# adds exactly the 5 rotation rows (the r14-new queries).
-GATED_THROUGH_R14: frozenset[str] = GATED_THROUGH_R13 | frozenset(
-    {
-        "partition_spec_rollback", "sharded_manifest_read",
-        "cdf_retention_feed", "evolved_subject_delete",
-        "evolved_compaction_read",
-    }
-)
-
-# Round-15 fold (CORRECTNESS_r15: 50/50 green — the whole gate passed).
-# Anchors and the 25 backfill re-proofs (the 22-name r05 stale-pool
-# retirement + 3 writer-path re-proofs) were already in the R14 ledger;
-# the union adds exactly the 3 rotation rows (the r15-new queries from
-# the interrupted build round).
-GATED_THROUGH_R15: frozenset[str] = GATED_THROUGH_R14 | frozenset(
-    {
-        "cdf_compacted_feed_ivm", "lakehouse_daily_report",
-        "evolved_layout_pruned_read",
-    }
-)
 
 _GATE_ANCHORS: tuple[str, ...] = (
     "daily_avg_report",        # flagship grouped avg + time bucket (A2)
@@ -344,27 +136,6 @@ if len(_GATE_PRIORITY) != 50:
     raise RuntimeError(
         f"gate priority list must be exactly 50 names, got {len(_GATE_PRIORITY)}"
     )
-_stale = [n for n in _GATE_ROTATION if n in GATED_THROUGH_R15]
-if _stale:
-    raise RuntimeError(
-        f"rotation slots must hold never-gated names, got: {_stale}"
-    )
-# Backfill names are the opposite: each must be a deliberate RE-proof
-# (previously green) — a never-proven name hiding there would dodge the
-# stale-slot bookkeeping.
-_not_reproof = [n for n in _REPROOF_BACKFILL if n not in GATED_THROUGH_R15]
-if _not_reproof:
-    raise RuntimeError(
-        f"backfill slots must hold previously-green names, got: {_not_reproof}"
-    )
-
-
-def rotation_candidates() -> list[str]:
-    """Registered queries that have never had a driver row and are not
-    in the current gate — the pool for next round's rotation slots."""
-    gated = set(_GATE_PRIORITY) | GATED_THROUGH_R15
-    return [n for n in _ALL_QUERIES if n not in gated]
-
 
 QUERIES = {n: _ALL_QUERIES[n] for n in _GATE_PRIORITY}
 QUERIES.update(
@@ -378,10 +149,4 @@ ORACLES = {
     n: ORACLES[n] for n in list(QUERIES) if n in ORACLES
 } | {n: s for n, s in ORACLES.items() if n not in QUERIES}
 
-__all__ = [
-    "QUERIES", "ORACLES", "GATED_THROUGH_R06", "GATED_THROUGH_R07",
-    "GATED_THROUGH_R08", "GATED_THROUGH_R09", "GATED_THROUGH_R10",
-    "GATED_THROUGH_R11", "GATED_THROUGH_R12", "GATED_THROUGH_R13",
-    "GATED_THROUGH_R14", "GATED_THROUGH_R15",
-    "rotation_candidates",
-]
+__all__ = ["QUERIES", "ORACLES"]

@@ -39,6 +39,39 @@ def test_every_query_has_an_oracle():
     assert set(QUERIES) == set(ORACLES)
 
 
+def _green_history() -> frozenset[str]:
+    """Every name with a green driver row in a committed
+    ``CORRECTNESS_r*.json``. Rounds 1–4 had no red rows, so every
+    recorded name counts; from r05 on, only rows whose rows, schema and
+    hash all match with no error enter the union (r05's hash mismatch
+    on mix_sources_tokens and r06's two — mix_sources_tokens,
+    variant_function_pack, the HUGEINT oracle-type bug — stayed
+    rotation-eligible until their green r07 rows)."""
+    import json
+
+    root = Path(__file__).resolve().parent.parent
+    paths = sorted(root.glob("CORRECTNESS_r*.json"))
+    assert paths, "no committed CORRECTNESS_r*.json files"
+    u: set[str] = set()
+    for p in paths:
+        rows = json.loads(p.read_text())
+        if int(p.stem.rsplit("_r", 1)[1]) <= 4:
+            u |= set(rows)
+            continue
+        u |= {
+            n
+            for n, v in rows.items()
+            if v.get("rows_match")
+            and v.get("schema_match")
+            and v.get("hash_match", True)
+            and not v.get("err")
+        }
+    return frozenset(u)
+
+
+GREEN = _green_history()
+
+
 def test_gate_first_50_spans_families_and_rotates():
     """The driver verifies the FIRST 50 queries() entries in dict order.
     Two properties, both load-bearing (VERDICT r02 item 1 + r03 item 2):
@@ -52,7 +85,6 @@ def test_gate_first_50_spans_families_and_rotates():
        re-verifying the same 50 forever.
     """
     from etl_end_to_end_airflow_bigquery_spark.plans import (
-        GATED_THROUGH_R15,
         _GATE_ANCHORS,
         _GATE_ROTATION,
         _REPROOF_BACKFILL,
@@ -69,80 +101,31 @@ def test_gate_first_50_spans_families_and_rotates():
     assert {"cosine_topk", "ivf_topk_kmeans"} <= got         # ANN
     assert {"merge_upsert_orders", "idempotent_append_orders"} <= got
     assert "scd2_orders_status" in got                       # SCD2/CDC
-    # r8+ policy (VERDICT r07 item 1): the registry is 100% driver-proven
-    # through the last folded round, so rotation slots hold exactly the
-    # round's NEW queries and every backfill slot is a deliberate
-    # re-proof of a prior green.
-    assert all(n not in GATED_THROUGH_R15 for n in _GATE_ROTATION)
-    assert all(n in GATED_THROUGH_R15 for n in _REPROOF_BACKFILL)
-    from etl_end_to_end_airflow_bigquery_spark.plans import rotation_candidates
-
-    assert rotation_candidates() == [], (
-        "never-driver-proven queries left outside the gate: "
-        f"{rotation_candidates()}"
-    )
+    assert set(_GATE_ROTATION) | set(_REPROOF_BACKFILL) <= got
 
 
 def test_gated_history_matches_correctness_files():
-    """GATED_THROUGH_R0N is the rotation's ground truth — pin it to the
-    actual driver artifacts so it can't drift. Rounds 1–4 had no red
-    rows, so every recorded name counts; from r05 on, only GREEN rows
-    (rows+schema+hash all matching) enter the ledger — r05's hash
-    mismatch (mix_sources_tokens) and r06's two (mix_sources_tokens,
-    variant_function_pack — the HUGEINT oracle-type bug) stayed
-    rotation-eligible until their green r07 rows."""
-    import json
-
-    root = Path(__file__).resolve().parent.parent
-    u: set[str] = set()
-    for p in sorted(root.glob("CORRECTNESS_r0[1-4].json")):
-        u |= set(json.load(open(p)))
-
-    def greens(path):
-        rows = json.load(open(path))
-        return {
-            n
-            for n, v in rows.items()
-            if v.get("rows_match")
-            and v.get("schema_match")
-            and v.get("hash_match", True)
-            and not v.get("err")
-        }
-
-    for p in sorted(root.glob("CORRECTNESS_r0[56].json")):
-        u |= greens(p)
+    """The gate rules hold against the green history the committed
+    CORRECTNESS files record (r8+ policy, VERDICT r07 item 1): rotation
+    slots hold never-green names (the round's NEW queries), backfill
+    slots hold deliberate re-proofs of prior greens, and no registered
+    query is left both never-green and outside the gate."""
     from etl_end_to_end_airflow_bigquery_spark.plans import (
-        GATED_THROUGH_R06,
-        GATED_THROUGH_R07,
-        GATED_THROUGH_R08,
-        GATED_THROUGH_R09,
-        GATED_THROUGH_R10,
-        GATED_THROUGH_R11,
-        GATED_THROUGH_R12,
-        GATED_THROUGH_R13,
-        GATED_THROUGH_R14,
-        GATED_THROUGH_R15,
+        _GATE_PRIORITY,
+        _GATE_ROTATION,
+        _REPROOF_BACKFILL,
     )
 
-    assert GATED_THROUGH_R06 == frozenset(u)
-    u |= greens(root / "CORRECTNESS_r07.json")
-    assert GATED_THROUGH_R07 == frozenset(u)
-    u |= greens(root / "CORRECTNESS_r08.json")
-    assert GATED_THROUGH_R08 == frozenset(u)
-    u |= greens(root / "CORRECTNESS_r09.json")
-    assert GATED_THROUGH_R09 == frozenset(u)
-    u |= greens(root / "CORRECTNESS_r10.json")
-    assert GATED_THROUGH_R10 == frozenset(u)
-    u |= greens(root / "CORRECTNESS_r11.json")
-    assert GATED_THROUGH_R11 == frozenset(u)
-    u |= greens(root / "CORRECTNESS_r12.json")
-    assert GATED_THROUGH_R12 == frozenset(u)
-    u |= greens(root / "CORRECTNESS_r13.json")
-    assert GATED_THROUGH_R13 == frozenset(u)
-    u |= greens(root / "CORRECTNESS_r14.json")
-    assert GATED_THROUGH_R14 == frozenset(u)
-    u |= greens(root / "CORRECTNESS_r15.json")
-    assert GATED_THROUGH_R15 == frozenset(u)
+    stale = [n for n in _GATE_ROTATION if n in GREEN]
+    assert not stale, f"rotation slots must hold never-green names: {stale}"
+    not_reproof = [n for n in _REPROOF_BACKFILL if n not in GREEN]
+    assert not not_reproof, (
+        f"backfill slots must hold previously-green names: {not_reproof}"
+    )
+    unproven = [n for n in QUERIES if n not in GREEN and n not in _GATE_PRIORITY]
+    assert not unproven, (
+        f"never-driver-proven queries left outside the gate: {unproven}"
+    )
 
 
 def test_entry_smoke(spark):
