@@ -979,6 +979,7 @@ def _write_snapshot_meta(
     layouts: list[dict] | None,
     manifest_shard_files: int | None = None,
     partition_types: dict | None = None,
+    empty_schema: str | None = None,
 ) -> None:
     """COMMIT-TIME STATS MANIFEST + per-snapshot partition spec
     (VERDICT r12 items 3-4): one footer walk at write time persists the
@@ -1006,6 +1007,10 @@ def _write_snapshot_meta(
     the commit wrote) is merged over the previous snapshot's, so every
     commit carries the written type of each partition column forward
     (:func:`_layout_schema` reads directory values back with it).
+    ``empty_schema`` (Spark row-schema JSON of the data columns) is
+    recorded as ``spark_schema`` when the snapshot holds no data file —
+    a partitioned first write of an empty batch — so it reads back as
+    zero rows with the batch's columns; a later empty commit carries it.
 
     Written via temp-file + ``os.replace`` so the sidecar always gets a
     FRESH inode — overwriting in place would mutate the previous
@@ -1091,6 +1096,8 @@ def _write_snapshot_meta(
     only_schema = next(iter(schemas)) if len(schemas) == 1 else None
     if partition_spec == [] and not layouts and only_schema is not None:
         meta["spark_schema"] = only_schema
+    elif not file_stats and not layouts and (empty_schema or prev_schema):
+        meta["spark_schema"] = empty_schema or prev_schema
     if types:
         meta["partition_types"] = types
     threshold = MANIFEST_INLINE_MAX if policy is None else policy
@@ -1552,6 +1559,7 @@ def _commit_version(
     layouts: list[dict] | None = None,
     manifest_shard_files: int | None = None,
     partition_types: dict | None = None,
+    empty_schema: str | None = None,
 ) -> None:
     """Record ``vdir`` in the ledger, flip ``_CURRENT`` to it atomically,
     then retain the newest ``keep_versions`` COMMITTED snapshots and
@@ -1569,7 +1577,7 @@ def _commit_version(
     #    manifest together
     _write_snapshot_meta(
         path, vdir, partition_spec, layouts, manifest_shard_files,
-        partition_types,
+        partition_types, empty_schema,
     )
     # 1. ledger append (before the flip: a crash in between leaves an
     #    extra ledger entry, which merely over-retains — never a pointer
@@ -1608,17 +1616,24 @@ def _sweep_versions(path: str, keep: set[str]) -> list[int]:
     sweep used by both commit-time retention and the explicit
     :func:`expire_versions` VACUUM (code-review r11: the loop was
     duplicated, letting the two deletion paths diverge). Crash orphans
-    (absent from the ledger) are swept like any expired snapshot.
-    Returns the swept sequence numbers (-1 for unparseable names)."""
+    (absent from the ledger) are swept like any expired snapshot, and
+    so are a crashed writer's leftovers at the table root: ``_stage_*``
+    dirs (:func:`merge_upsert`'s staged legacy base) and
+    ``._CURRENT.*.tmp`` pointer temporaries. Both callers hold the
+    write lock, and only a lock holder creates these entries, so none
+    of them belongs to a live writer. Returns the swept snapshot
+    sequence numbers (-1 for unparseable names)."""
     swept: list[int] = []
     for d in os.listdir(path):
-        if (
-            d.startswith("v_")
-            and d not in keep
-            and os.path.isdir(os.path.join(path, d))
-        ):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+        full = os.path.join(path, d)
+        if d.startswith("v_") and d not in keep and os.path.isdir(full):
+            shutil.rmtree(full, ignore_errors=True)
             swept.append(_seq_of(d))
+        elif d.startswith("_stage_") and os.path.isdir(full):
+            shutil.rmtree(full, ignore_errors=True)
+        elif d.startswith(f".{_CURRENT_PTR}.") and d.endswith(".tmp"):
+            with contextlib.suppress(OSError):
+                os.remove(full)
     return sorted(swept)
 
 
@@ -2394,6 +2409,7 @@ def _merge_layouts(
     seq = _seq_of(os.path.basename(vdir))
     cdf_parts: list[DataFrame] = []
     types: dict = {}
+    empty_schema = None
     remaining = source
     for i, lay in enumerate(layouts):
         cols = list(lay["partition_cols"])
@@ -2445,6 +2461,19 @@ def _merge_layouts(
             # only when rows reach it (a table's first write is written
             # even when empty, so it reads back with the batch's schema)
             upd_parts = [()] if upd.limit(1).count() > 0 else []
+        if prev_dir is None and cols and not upd_parts:
+            # a partitioned first write of an empty batch has no leaf
+            # to hold a zero-row file (a root-level one would become a
+            # "." leaf beside the hive leaves): record the batch's
+            # schema instead, so the snapshot reads as zero rows
+            from pyspark.sql.types import StructType
+
+            empty_schema = StructType(
+                [f for f in upd.schema.fields if f.name not in cols]
+            ).json()
+            types.update(
+                {c: upd.schema[c].dataType.jsonValue() for c in cols}
+            )
         if upd_parts:
             if scoped is None:  # empty active layout: its first data
                 merged, cdf = upd, insert_only_cdf(upd, seq)
@@ -2489,6 +2518,7 @@ def _merge_layouts(
         partition_spec=list(layouts[-1]["partition_cols"]),
         manifest_shard_files=manifest_shard_files,
         partition_types=types,
+        empty_schema=empty_schema,
     )
 
 

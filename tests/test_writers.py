@@ -150,6 +150,56 @@ def test_merge_versioned_crash_recovery_orphan_swept(spark, tmp_path, target):
     assert os.path.isdir(os.path.join(path, ptr_before))
 
 
+def test_commit_sweeps_crash_leftovers(spark, tmp_path, target):
+    """A writer killed mid-operation can leave a ``_stage_*`` dir (the
+    staged base of a plain-directory merge) and a ``._CURRENT.*.tmp``
+    pointer temporary at the table root; the next commit, which holds
+    the write lock, sweeps both and keeps the live pointer."""
+    import os
+
+    path = str(tmp_path / "leftovers")
+    merge_upsert(spark, path, target, keys=["k"])
+    stage = os.path.join(path, "_stage_x")
+    os.makedirs(os.path.join(stage, "day=d1"))
+    open(os.path.join(stage, "day=d1", "part-0.parquet"), "wb").close()
+    tmp_ptr = os.path.join(path, "._CURRENT.deadbeef.tmp")
+    with open(tmp_ptr, "w") as f:
+        f.write("v_999999_deadbeef")
+    merge_upsert(spark, path, _frame(spark, [(9, "d9", 9.0)]), keys=["k"])
+    assert not os.path.exists(stage)
+    assert not os.path.exists(tmp_ptr)
+    assert os.path.isfile(os.path.join(path, "_CURRENT"))
+    assert len(_sorted(read_table(spark, path))) == 4
+
+
+def test_empty_partitioned_first_write_reads_as_zero_rows(spark, tmp_path):
+    """A partitioned first write of an empty batch commits a snapshot
+    with no data file; it reads back as zero rows with the batch's
+    columns and types (starting no Spark job), and the next merge of
+    rows writes only hive leaves — no root-level zero-row file."""
+    import os
+
+    path = str(tmp_path / "empty_part")
+    merge_upsert(spark, path, _frame(spark, []), keys=["k", "day"],
+                 partition_col="day")
+    got = {}
+    assert _jobs_in_group(
+        spark, lambda: got.setdefault("df", read_table(spark, path))
+    ) == 0
+    df = got["df"]
+    assert df.schema.simpleString() == "struct<k:int,v:double,day:string>"
+    assert df.count() == 0
+
+    rows = [(1, "d1", 1.0), (2, "d2", 2.0)]
+    merge_upsert(spark, path, _frame(spark, rows), keys=["k", "day"])
+    back = read_table(spark, path)
+    assert back.schema.simpleString() == "struct<k:int,v:double,day:string>"
+    assert _sorted(back.select("k", "day", "v")) == rows
+    cur = os.path.join(path, open(os.path.join(path, "_CURRENT")).read().strip())
+    assert not [f for f in os.listdir(cur) if f.endswith(".parquet")]
+    assert sorted(d for d in os.listdir(cur) if "=" in d) == ["day=d1", "day=d2"]
+
+
 def test_read_table_time_travel(spark, tmp_path, target):
     """read_table(version=N) reads a retained snapshot; swept snapshots
     raise listing what is still available."""
