@@ -189,6 +189,11 @@ def test_empty_partitioned_first_write_reads_as_zero_rows(spark, tmp_path):
     df = got["df"]
     assert df.schema.simpleString() == "struct<k:int,v:double,day:string>"
     assert df.count() == 0
+    # a second empty merge carries the recorded schema forward
+    merge_upsert(spark, path, _frame(spark, []), keys=["k", "day"])
+    again = read_table(spark, path)
+    assert again.schema.simpleString() == "struct<k:int,v:double,day:string>"
+    assert again.count() == 0
 
     rows = [(1, "d1", 1.0), (2, "d2", 2.0)]
     merge_upsert(spark, path, _frame(spark, rows), keys=["k", "day"])
