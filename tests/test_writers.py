@@ -687,6 +687,29 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert read_table(spark, path).columns == ["k", "v"]
 
 
+def test_zorder_rejects_null_cluster_values(spark, tmp_path):
+    """NULL in a cluster column would NULL the Morton key (one unbounded
+    file, no skipping) and an all-NULL column has no min/max to
+    normalize against: both reject loudly, and nothing is written."""
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        zorder_write_grid,
+    )
+
+    some_null = spark.createDataFrame(
+        [(1, 1), (2, None), (3, 3)], "x long, y long"
+    )
+    with pytest.raises(ValueError, match="'y' contains NULLs"):
+        zorder_write_grid(some_null, str(tmp_path / "z1"), "x", "y")
+
+    all_null = spark.createDataFrame(
+        [(1, None), (2, None)], "x long, y long"
+    )
+    with pytest.raises(ValueError, match="'y' contains NULLs"):
+        zorder_write_grid(all_null, str(tmp_path / "z2"), "x", "y")
+    assert not (tmp_path / "z1").exists()
+    assert not (tmp_path / "z2").exists()
+
+
 def test_table_versions_and_time_travel_read(spark, tmp_path, target):
     """table_versions lists retained committed sequences oldest-first;
     read_table(version=...) reproduces each retained snapshot exactly,

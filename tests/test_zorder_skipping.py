@@ -79,15 +79,4 @@ def test_grid_writers_reject_bad_inputs(spark, tmp_path):
         zorder_write_grid(df, str(tmp_path / "p2"), "a", "b", n_files=6)
     with pytest.raises(ValueError, match="NULL"):
         cluster_write_grid(df.select("b"), str(tmp_path / "c"), "b")
-    # NULL in a cluster column would NULL the Morton key (one unbounded
-    # file, no skipping) and an all-NULL column has no min/max to
-    # normalize against: both reject, and nothing is written
-    some_null = spark.createDataFrame(
-        [(1, 1), (2, None), (3, 3)], "x long, y long"
-    )
-    with pytest.raises(ValueError, match="'y' contains NULLs"):
-        zorder_write_grid(some_null, str(tmp_path / "z1"), "x", "y")
-    all_null = spark.createDataFrame([(1, None), (2, None)], "x long, y long")
-    with pytest.raises(ValueError, match="'y' contains NULLs"):
-        zorder_write_grid(all_null, str(tmp_path / "z2"), "x", "y")
-    assert not any((tmp_path / d).exists() for d in ("p2", "c", "z1", "z2"))
+    assert not any((tmp_path / d).exists() for d in ("p2", "c"))
