@@ -34,14 +34,16 @@ directory doesn't exist):
       v_000001_<uuid>/…parquet          (unpartitioned)
       v_000002_<uuid>/day=d1/…parquet   (partitioned; untouched leaves
                                          hardlink the previous snapshot)
-      v_*/_snapshot_meta.json           ← commit-time sidecar: per-file
-                                         stats, partition spec and
-                                         column types, layouts, and
+      v_*/_snapshot_meta.json           ← commit-time sidecar: the
+                                         inline per-file stats census,
+                                         partition spec and column
+                                         types, layouts, and
                                          (unpartitioned) the Spark row
                                          schema
 
 A commit writes a fresh ``v_*`` directory, records it in ``_COMMITS``,
-then flips ``_CURRENT`` with ``os.replace`` (atomic on POSIX; on an
+then flips ``_CURRENT`` with ``os.replace`` and fsyncs the table
+directory so the flip survives a power loss (atomic on POSIX; on an
 object store the pointer PUT is the commit and "hardlink" becomes a
 manifest entry — the same reuse trick Iceberg/Delta manifests express).
 Each operation has ONE path form — :func:`merge_upsert`,
@@ -57,6 +59,9 @@ copied from the data files' footers at commit, or the layout's footer
 schema, plus the recorded partition column types) and so skips Spark's
 schema-inference job — the way Delta keeps the table schema in its
 log; a snapshot without a sidecar falls back to the inferred read.
+Range-bounded reads go through :func:`read_table_skipping`, which plans
+every table the same way: one keep/skip decision per file from the
+sidecar's inline census.
 A reader that resolved the previous pointer keeps a fully-intact
 directory — the last ``keep_versions`` **committed** versions are
 retained (the Delta/Iceberg snapshot-retention trade: shrink it and a
@@ -362,20 +367,13 @@ def _nonempty_layout_dirs(vdir: str, meta: dict, layouts: list[dict]):
     contradicted the manifest's one-metadata-read story (ADVICE r13).
     Census relpaths are vdir-relative, so a layout has data iff any
     entry sits under its dir. Sidecars without a census (``file_stats``
-    key absent — never written by these writers, but a hand-edited or
-    future-variant sidecar must not silently drop layouts) fall back to
-    the walk. An EMPTY census dict is trusted: snapshot trees are
-    immutable after commit, so zero census entries means zero data
-    files."""
+    key absent — an older commit's sharded census, or a hand-edited
+    sidecar, must not silently drop layouts) fall back to the walk. An
+    EMPTY census dict is trusted: snapshot trees are immutable after
+    commit, so zero census entries means zero data files."""
     stats = meta.get("file_stats")
     prefixes = {lay["dir"] for lay in layouts}
     if stats is None:
-        if meta.get("census_shards"):
-            # sharded census: the sidecar carries the top-level data
-            # dirs, so evolved reads stay one-metadata-read
-            return {
-                d for d in meta.get("census_dirs", []) if d in prefixes
-            }
         return {
             lay["dir"]
             for lay in layouts
@@ -397,10 +395,13 @@ def read_table_skipping(
     """MANIFEST-DRIVEN SCAN PLANNING — the read path the commit-time
     stats manifest exists for: resolve the snapshot like
     :func:`read_table`, decide per data file from the manifest's
-    min/max census (:func:`history_file_stats` — one JSON read; footer
-    fallback for pre-manifest snapshots) whether the file can possibly
-    hold a row satisfying the conjunctive range predicate ``bounds``
-    (col → (lo, hi) inclusive), and scan ONLY the kept files. Skip
+    min/max census (:func:`history_file_stats` — one JSON read of the
+    inline census, checked against the live file listing; footer
+    fallback for pre-manifest snapshots, for older commits whose census
+    was sharded parquet, and for a census missing a live file) whether
+    the file can possibly hold a row satisfying the conjunctive range
+    predicate ``bounds`` (col → (lo, hi) inclusive), and scan ONLY the
+    kept files. Every table plans through this one per-file loop. Skip
     rule: drop iff some bounded column has complete stats and
     ``min > hi or max < lo`` — a column with any stats-less row group
     reports None bounds and can never justify a skip, so the read is
@@ -412,7 +413,8 @@ def read_table_skipping(
     snapshot is one layout) with ``basePath`` pinned to the layout dir
     and the layout's recorded schema (:func:`_layout_schema`), so hive
     directory columns come back exactly as :func:`read_table` returns
-    them; a spec-evolved snapshot's layouts union by name.
+    them; a spec-evolved snapshot's layouts union by name. A layout
+    whose files the predicate all excludes contributes no scan at all.
 
     At 100 TB this is the manifest-planned scan every lakehouse query
     starts with: O(#files) driver-side decisions from one metadata
@@ -439,76 +441,18 @@ def read_table_skipping(
     vdir = os.path.join(path, avail[version])
     meta = _load_snapshot_meta(vdir) or {}
 
-    kept_all: list[str] | None = None
-    if meta.get("census_shards"):
-        # SHARDED manifest: evaluate keep/skip as a DISTRIBUTED job
-        # over the census rows (VERDICT r13 item 3) — at millions of
-        # files the decision loop itself is the read-planning
-        # bottleneck, so it runs where the manifest rows are. The kept
-        # list is collected because it IS the scan's file list (bounded
-        # by the predicate's true footprint, same as the inline path).
-        # Guarantee parity with the inline path (ADVICE r14): the
-        # census must EQUAL the live file set — pinned by comparing
-        # the commit-time sha256 over the sorted relpaths against one
-        # names-only live listing (a count alone would pass a
-        # same-count swap and silently drop the uncensused file's
-        # rows). A mismatch (hand-restored file, partial recovery)
-        # degrades to the validated stats path below. The listing is
-        # O(#files) driver-side directory metadata — names only, no
-        # footer reads — and runs ONCE per (snapshot, manifest) per
-        # process: snapshots are immutable, so the verdict is cached.
-        # Digest equality makes a separate live-set filter of the kept
-        # paths redundant (census set == live set exactly).
-        if _census_live_parity_ok(
-            vdir,
-            meta.get("manifest_id", ""),
-            meta.get("census_digest"),
-            meta.get("census_files"),
-        ):
-            # Per-layout shard pruning (VERDICT r14 item 2): a layout
-            # whose census-wide column bounds already exclude the
-            # predicate contributes no kept files — skip its shard
-            # subdir entirely, so the distributed decide never reads
-            # its manifest rows (Iceberg's manifest-list partition
-            # summaries). Conservative rule is identical to the
-            # per-file one: both bounds present and disjoint.
-            subdirs: list[str] | None = None
-            lay_stats = meta.get("census_layout_stats")
-            if lay_stats:
-                subdirs = []
-                for d in sorted(lay_stats):
-                    st = lay_stats[d]
-                    lskip = False
-                    for c, (lo, hi) in bounds.items():
-                        mn = _stat_from_json(st["mins"].get(c))
-                        mx = _stat_from_json(st["maxs"].get(c))
-                        if (
-                            mn is not None
-                            and mx is not None
-                            and (mn > hi or mx < lo)
-                        ):
-                            lskip = True
-                            break
-                    if not lskip:
-                        subdirs.append(d)
-            kept_all = _kept_files_distributed(
-                spark, vdir, bounds, subdirs=subdirs
-            )
-    if kept_all is None:
-        # inline fast path: one JSON read (footer fallback inside,
-        # also the sharded path's degradation target), validated
-        # against the live listing by history_file_stats
-        stats = history_file_stats(path, list(bounds), version=version)
-        kept_all = []
-        for s in stats:
-            skip = False
-            for c, (lo, hi) in bounds.items():
-                mn, mx = s["mins"].get(c), s["maxs"].get(c)
-                if mn is not None and mx is not None and (mn > hi or mx < lo):
-                    skip = True
-                    break
-            if not skip:
-                kept_all.append(s["path"])
+    # one JSON read (footer fallback inside), validated against the
+    # live listing by history_file_stats
+    kept_all = []
+    for s in history_file_stats(path, list(bounds), version=version):
+        skip = False
+        for c, (lo, hi) in bounds.items():
+            mn, mx = s["mins"].get(c), s["maxs"].get(c)
+            if mn is not None and mx is not None and (mn > hi or mx < lo):
+                skip = True
+                break
+        if not skip:
+            kept_all.append(s["path"])
     parts, labels = [], []
     for lay in _snapshot_layouts(vdir, meta):
         lay_dir = os.path.normpath(os.path.join(vdir, lay["dir"]))
@@ -532,100 +476,6 @@ def read_table_skipping(
     return union_layouts(spark, parts, labels)
 
 
-@_functools.lru_cache(maxsize=64)
-def _census_live_parity_ok(
-    vdir: str, manifest_id: str, digest: str | None, count: int | None
-) -> bool:
-    """Sharded-census ⇔ live-file-set parity (ADVICE r14): compare the
-    commit-time ``census_digest`` (sha256 over newline-joined sorted
-    relpaths) against a names-only live listing. Digest equality pins
-    SET equality — a same-count swap (one censused file gone, one
-    uncensused file hand-restored) fails here, where a bare count
-    check would pass and the planner would silently drop the
-    uncensused file's rows. Pre-digest sidecars (older commits) fall
-    back to the count check those rounds shipped with.
-
-    Cached per (snapshot dir, manifest_id): snapshots are immutable
-    once committed, so one O(#files) names-only walk per process
-    settles the verdict — repeated planning calls on the same snapshot
-    skip the listing entirely (the per-read walk ADVICE r14 flagged).
-    Out-of-contract mutation of a committed snapshot AFTER a read
-    validated it is not re-detected in the same process."""
-    import hashlib
-
-    rels = sorted(rel for rel, _p in _iter_data_files(vdir))
-    if digest is not None:
-        h = hashlib.sha256("\n".join(rels).encode("utf-8")).hexdigest()
-        return h == digest
-    return len(rels) == count
-
-
-def _kept_files_distributed(
-    spark: SparkSession,
-    vdir: str,
-    bounds: dict[str, tuple],
-    subdirs: list[str] | None = None,
-) -> list[str]:
-    """Distributed keep/skip over a SHARDED census: scan the
-    ``_manifest`` parquet shards as a DataFrame and decide per row in
-    an Arrow-batched ``mapInPandas`` stage applying the IDENTICAL rule
-    as the inline path (decode the type-tagged min/max via
-    ``_stat_from_json``; a None bound can never justify a skip). The
-    sharded and inline paths are pytest-pinned to identical decisions.
-
-    ``subdirs`` (VERDICT r14 item 2) restricts the scan to the named
-    layout shard groups (plus the ungrouped root shards, which carry
-    any file outside a layout dir): a spec-evolved snapshot's census is
-    sharded PER LAYOUT, so a layout excluded by its census-wide column
-    bounds costs zero shard-file reads here. ``None`` reads every
-    shard (single-layout tables, or no layout stats recorded).
-
-    Returns kept files as absolute paths (relpath-sorted, matching the
-    inline path's order). Scale: the manifest scan parallelizes over
-    shards; only kept RELPATHS come back to the driver — the list the
-    scan needs anyway. Cluster note: the ``decide`` closure calls the
-    module-level ``_stat_from_json``, which cloudpickle serializes BY
-    REFERENCE — correct in local[*] (one JVM, shared interpreter
-    state) and on any cluster that ships this package to executors
-    (``--py-files`` / a site install); the planner assumes the package
-    is importable on executors, as every pandas-UDF operator here
-    already does."""
-    import json
-
-    bounds_local = dict(bounds)
-
-    def decide(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            keep = []
-            for mj, xj in zip(pdf["mins"], pdf["maxs"]):
-                mins = json.loads(mj)
-                maxs = json.loads(xj)
-                skip = False
-                for c, (lo, hi) in bounds_local.items():
-                    mn = _stat_from_json(mins.get(c))
-                    mx = _stat_from_json(maxs.get(c))
-                    if (
-                        mn is not None
-                        and mx is not None
-                        and (mn > hi or mx < lo)
-                    ):
-                        skip = True
-                        break
-                keep.append(not skip)
-            yield pd.DataFrame({"rel": pdf["rel"][pd.Series(keep).values]})
-
-    shard_paths = _census_shard_paths(vdir, subdirs=subdirs)
-    if not shard_paths:
-        return []
-    mdf = spark.read.parquet(*shard_paths)
-    kept_rels = sorted(
-        r.rel for r in mdf.mapInPandas(decide, "rel string").collect()
-    )
-    return [os.path.join(vdir, rel) for rel in kept_rels]
-
-
 def table_versions(path: str) -> list[int]:
     """Committed snapshot sequence numbers retained under ``path``,
     oldest first — the public face of the ledger for time travel
@@ -633,64 +483,6 @@ def table_versions(path: str) -> list[int]:
     if not os.path.isdir(path):
         return []
     return sorted(_seq_of(d) for d in _committed_versions(path))
-
-
-def describe_history(spark: SparkSession, path: str) -> DataFrame:
-    """Commit-history introspection — the ``DESCRIBE HISTORY`` audit
-    surface next to :func:`table_versions` (time travel),
-    :func:`read_table_changes` (the change feed) and
-    :func:`expire_versions` (retention): one row per RETAINED committed
-    snapshot, newest first, with is_current, file count, data bytes,
-    and whether the snapshot recorded a change-data feed. Swept
-    snapshots keep their ledger line but have no directory, so they —
-    correctly — don't appear (their sequence numbers are recoverable
-    from the ledger if forensics ever need them). Driver-side directory
-    walk over the retained snapshots only; bounded metadata, no data
-    read."""
-    cur = _current_version_name(path)
-    if cur is None:
-        raise ValueError(
-            f"{path!r} is not a versioned table (no {_CURRENT_PTR})"
-        )
-    rows = []
-    for vname in _committed_versions(path):
-        vdir = os.path.join(path, vname)
-        n_files, n_bytes = 0, 0
-        for root, _dirs, files in os.walk(vdir):
-            # os.sep-aware containment, not basename equality: a future
-            # partitioned CDF write (subdirs under _change_data) must
-            # still be excluded from the data-file census (ADVICE r11).
-            rel = os.path.relpath(root, vdir)
-            parts_rel = rel.split(os.sep)
-            in_cdf = "_change_data" in parts_rel or _MANIFEST_DIR in parts_rel
-            for f in files:
-                if f.endswith(".parquet") and not in_cdf:
-                    try:
-                        n_bytes += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        # reader-safe-concurrent-merge mode: a retention
-                        # sweep may delete a file between os.walk and
-                        # getsize — skip it, mirroring how
-                        # _committed_versions tolerates swept dirs
-                        # (ADVICE r11).
-                        continue
-                    n_files += 1
-        rows.append(
-            (
-                _seq_of(vname),
-                vname,
-                vname == cur,
-                n_files,
-                n_bytes,
-                os.path.isdir(os.path.join(vdir, "_change_data")),
-            )
-        )
-    rows.sort(key=lambda r: -r[0])
-    return spark.createDataFrame(
-        rows,
-        "version bigint, snapshot string, is_current boolean, "
-        "n_data_files bigint, data_bytes bigint, has_change_feed boolean",
-    )
 
 
 def _footer_minmax(fpath, cols: list[str] | None = None):
@@ -743,16 +535,9 @@ _SNAPSHOT_META = "_snapshot_meta.json"
 # Footer key under which Spark's parquet writer stores the row schema as
 # JSON; Spark's own schema inference reads the same key.
 _SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
-_MANIFEST_DIR = "_manifest"  # sharded census parquet (underscore: hidden
-                             # from Spark scans like _change_data)
-# Census entries above which the commit-time stats manifest is written
-# as SHARDED PARQUET under v_*/_manifest instead of inline JSON
-# (VERDICT r13 item 3): one JSON blob and a driver-side Python loop are
-# right for small tables, but at 100 TB file counts (millions of
-# entries) the manifest itself must be columnar/sharded and the skip
-# predicate evaluated as a distributed job. Writers accept an explicit
-# override (tests and the gated query use a low one).
-MANIFEST_INLINE_MAX = 2048
+# Older commits could store the census as parquet shards under
+# v_*/_manifest; those files are metadata, never table data.
+_MANIFEST_DIR = "_manifest"
 
 
 def _stat_to_json(v):
@@ -810,12 +595,13 @@ def _parse_snapshot_meta(
 ) -> dict | None:
     """stat+content-keyed parse cache: snapshot sidecars are immutable
     once committed (written via temp + os.replace, fresh inode), and
-    ``read_table`` checks the meta on EVERY read — re-parsing an
-    O(#files x #cols) census per call was a hot-path tax (code-review
-    r13). ``head`` is the sidecar's first bytes — sidecars lead with a
-    per-write ``manifest_id`` uuid, so a table torn down and recreated
-    at the same path within one mtime tick with a same-size sidecar
-    still misses the cache (ADVICE r13: (path, mtime_ns, size) alone
+    ``read_table`` checks the meta on EVERY read — the sidecar holds
+    the whole census inline, and re-parsing that O(#files x #cols)
+    blob per call was a hot-path tax (code-review r13). ``head`` is
+    the sidecar's first bytes — sidecars lead with a per-write
+    ``manifest_id`` uuid, so a table torn down and recreated at the
+    same path within one mtime tick with a same-size sidecar still
+    misses the cache (ADVICE r13: (path, mtime_ns, size) alone
     could serve a stale census on coarse-mtime filesystems)."""
     import json
 
@@ -848,8 +634,9 @@ def _load_snapshot_meta(vdir: str) -> dict | None:
 
 def _iter_data_files(vdir: str):
     """Yield (relpath, abspath) for every data parquet file under a
-    snapshot dir — change-feed files excluded with the same
-    os.sep-aware containment as describe_history. Directories are
+    snapshot dir — change-feed files and an older commit's sharded
+    census (``_manifest``) excluded by os.sep-aware containment, so a
+    partitioned feed's subdirs stay excluded too. Directories are
     walked SORTED (ADVICE r13: os.walk's native dir order is
     filesystem-dependent, so footer-fallback consumers returned a
     nondeterministic, mode-dependent ordering next to the manifest's
@@ -868,108 +655,14 @@ def _iter_data_files(vdir: str):
                 yield os.path.relpath(fpath, vdir), fpath
 
 
-def _census_shard_paths(
-    vdir: str, subdirs: list[str] | None = None
-) -> list[str]:
-    """Shard files of a sharded census. Flat tables keep every shard
-    directly under ``_manifest/``; spec-evolved snapshots group shards
-    per layout under ``_manifest/<layout_dir>/`` (VERDICT r14 item 2)
-    so planning can skip a whole layout's shards. ``subdirs`` limits
-    the walk to those layout groups (root-level shards — files outside
-    any layout dir — are always included); ``None`` returns all."""
-    d = os.path.join(vdir, _MANIFEST_DIR)
-    if not os.path.isdir(d):
-        return []
-    out = [
-        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-    ]
-    for sub in sorted(os.listdir(d)) if subdirs is None else sorted(subdirs):
-        sd = os.path.join(d, sub)
-        if os.path.isdir(sd):
-            out.extend(
-                os.path.join(sd, f)
-                for f in os.listdir(sd)
-                if f.endswith(".parquet")
-            )
-    return sorted(out)
-
-
-@_functools.lru_cache(maxsize=8)
-def _load_census_shards(vdir: str, manifest_id: str) -> dict:
-    """Reconstruct the {rel: entry} census from a snapshot's sharded
-    parquet manifest — the driver-side face of the sharded layout, used
-    by audit surfaces (:func:`history_file_stats`,
-    :func:`file_skip_report`) and the commit-time entry-reuse pass.
-    Cached per manifest_id (a per-write uuid, so path reuse can't serve
-    stale entries). The SCAN-PLANNING path never calls this —
-    :func:`read_table_skipping` evaluates the skip predicate as a
-    distributed job over the shard rows instead."""
-    import json
-
-    import pyarrow.parquet as pq
-
-    out: dict = {}
-    for sp in _census_shard_paths(vdir):
-        t = pq.read_table(sp)
-        for rel, n_rows, ino, nbytes, mins, maxs in zip(
-            t["rel"].to_pylist(),
-            t["n_rows"].to_pylist(),
-            t["ino"].to_pylist(),
-            t["bytes"].to_pylist(),
-            t["mins"].to_pylist(),
-            t["maxs"].to_pylist(),
-        ):
-            out[rel] = {
-                "n_rows": n_rows,
-                "ino": ino,
-                "bytes": nbytes,
-                "mins": json.loads(mins),
-                "maxs": json.loads(maxs),
-            }
-    return out
-
-
 def _load_census(vdir: str) -> dict | None:
-    """The snapshot's per-file stats census as {rel: entry}, whatever
-    its physical layout — inline in the JSON sidecar (small tables) or
-    sharded parquet under ``_manifest`` (large file counts). None when
-    the snapshot predates the manifest."""
+    """The snapshot's per-file stats census as {rel: entry}, read from
+    its JSON sidecar. None when the snapshot predates the manifest, or
+    when an older commit stored the census as parquet shards under
+    ``_manifest`` (no ``file_stats`` key): every consumer then takes
+    the live footer walk."""
     meta = _load_snapshot_meta(vdir)
-    if meta is None:
-        return None
-    stats = meta.get("file_stats")
-    if stats is not None:
-        return stats
-    if meta.get("census_shards"):
-        return _load_census_shards(vdir, meta.get("manifest_id", ""))
-    return None
-
-
-def _layout_bounds(entries: list[dict]) -> dict:
-    """Census-wide column bounds for one layout's file entries —
-    {"mins": {col: json-stat}, "maxs": {col: json-stat}} where a column
-    appears ONLY if every file in the layout has both stats for it (a
-    file with an unknown bound makes the layout's bound unknown, so the
-    conservative skip rule can never exclude rows it hasn't seen).
-    Values stay in the census's type-tagged JSON encoding; comparisons
-    decode through ``_stat_from_json`` — the same codec planning uses,
-    so layout-level and file-level decisions can't diverge on type."""
-    common: set[str] | None = None
-    for e in entries:
-        cols = {
-            c
-            for c in set(e.get("mins", {})) & set(e.get("maxs", {}))
-            if _stat_from_json(e["mins"][c]) is not None
-            and _stat_from_json(e["maxs"][c]) is not None
-        }
-        common = cols if common is None else (common & cols)
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    for c in common or set():
-        lo = min((e["mins"][c] for e in entries), key=_stat_from_json)
-        hi = max((e["maxs"][c] for e in entries), key=_stat_from_json)
-        mins[c], maxs[c] = lo, hi
-    return {"mins": mins, "maxs": maxs}
+    return None if meta is None else meta.get("file_stats")
 
 
 def _write_snapshot_meta(
@@ -977,16 +670,16 @@ def _write_snapshot_meta(
     vdir: str,
     partition_spec: list[str] | None,
     layouts: list[dict] | None,
-    manifest_shard_files: int | None = None,
     partition_types: dict | None = None,
     empty_schema: str | None = None,
 ) -> None:
     """COMMIT-TIME STATS MANIFEST + per-snapshot partition spec
     (VERDICT r12 items 3-4): one footer walk at write time persists the
-    per-file census — n_rows and every column's min/max — as a
+    per-file census — n_rows and every column's min/max — inline in a
     ``_snapshot_meta.json`` sidecar INSIDE the snapshot, so
-    :func:`history_file_stats` / :func:`file_skip_report` read a single
-    manifest instead of re-walking O(#files) footers per planning call.
+    :func:`history_file_stats`, :func:`file_skip_report` and
+    :func:`read_table_skipping` read one JSON file instead of
+    re-walking O(#files) footers per planning call.
     That is what makes footer-skipping real at 100 TB: the walk happens
     once, at the commit that created the files, exactly as Iceberg/
     Delta write manifests.
@@ -1018,12 +711,6 @@ def _write_snapshot_meta(
     """
     import json
 
-    if manifest_shard_files is not None and manifest_shard_files < 1:
-        raise ValueError(
-            f"manifest_shard_files must be >= 1 or None, got "
-            f"{manifest_shard_files}"
-        )
-    policy = manifest_shard_files
     prev_stats: dict = {}
     prev_schema = None
     types = dict(partition_types or {})
@@ -1032,21 +719,13 @@ def _write_snapshot_meta(
         prev_vdir = os.path.join(path, cur)
         prev_meta = _load_snapshot_meta(prev_vdir)
         if prev_meta:
-            prev_stats = _load_census(prev_vdir) or {}
+            prev_stats = prev_meta.get("file_stats") or {}
             prev_schema = prev_meta.get("spark_schema")
             types = {**prev_meta.get("partition_types", {}), **types}
             if partition_spec is None:
                 partition_spec = prev_meta.get("partition_spec")
             if layouts is None:
                 layouts = prev_meta.get("layouts")
-            if policy is None:
-                # the sharding threshold is a TABLE PROPERTY
-                # (code-review r14): set once at any commit, inherited
-                # by every later commit — evolved merges, compaction,
-                # deletes, retention — so a table's census serving
-                # mode can't silently revert to inline JSON on its
-                # next maintenance commit
-                policy = prev_meta.get("manifest_shard_files")
     import pyarrow.parquet as pq
 
     file_stats: dict = {}
@@ -1084,9 +763,7 @@ def _write_snapshot_meta(
         "manifest_id": uuid.uuid4().hex,
         "partition_spec": partition_spec,
         "layouts": layouts,
-        # None = module default; an explicit value persists as the
-        # table's sharding policy (inherited above)
-        "manifest_shard_files": policy,
+        "file_stats": file_stats,
     }
     # The row schema every data file was written with, so read_table can
     # skip Spark's schema-inference job. Recorded only when it is
@@ -1100,88 +777,6 @@ def _write_snapshot_meta(
         meta["spark_schema"] = empty_schema or prev_schema
     if types:
         meta["partition_types"] = types
-    threshold = MANIFEST_INLINE_MAX if policy is None else policy
-    # No writer carries _manifest between snapshots (census is
-    # per-snapshot), but remove any stray copy before (re)writing:
-    # overwriting a hardlinked shard in place would mutate another
-    # snapshot's census.
-    shutil.rmtree(os.path.join(vdir, _MANIFEST_DIR), ignore_errors=True)
-    if len(file_stats) > threshold:
-        # SHARDED census (VERDICT r13 item 3): columnar parquet under
-        # v_*/_manifest, contiguous relpath-sorted shards of <=
-        # threshold entries each — read planning scans these rows as a
-        # distributed job instead of parsing one giant JSON on the
-        # driver. The sidecar keeps only the summary (+ the top-level
-        # dirs holding data, so evolved reads resolve layout emptiness
-        # without touching the census). Spec-evolved snapshots shard
-        # PER LAYOUT (``_manifest/<layout_dir>/``) and record each
-        # layout's census-wide column bounds in the sidecar (VERDICT
-        # r14 item 2, Iceberg's manifest-list partition summaries) so
-        # planning can drop a whole layout's shards from one bounded
-        # sidecar check. The digest over the sorted relpaths is the
-        # read-side parity gate (ADVICE r14): set equality with the
-        # live tree, not just count equality.
-        import hashlib
-
-        import pyarrow as pa
-
-        rels = sorted(file_stats)
-        mdir = os.path.join(vdir, _MANIFEST_DIR)
-        os.makedirs(mdir, exist_ok=True)
-        lay_dirs = {lay["dir"] for lay in layouts} if layouts else set()
-        groups: list[tuple[str | None, list[str]]] = []
-        if lay_dirs:
-            by_dir: dict[str | None, list[str]] = {}
-            for r in rels:
-                top = r.split(os.sep, 1)[0]
-                by_dir.setdefault(top if top in lay_dirs else None, []).append(r)
-            groups = sorted(
-                by_dir.items(), key=lambda kv: (kv[0] is not None, kv[0] or "")
-            )
-        else:
-            groups = [(None, rels)]
-        n_shards = 0
-        layout_stats: dict[str, dict] = {}
-        for gdir, grels in groups:
-            gdir_abs = mdir if gdir is None else os.path.join(mdir, gdir)
-            os.makedirs(gdir_abs, exist_ok=True)
-            for i in range(0, len(grels), threshold):
-                chunk = grels[i : i + threshold]
-                tbl = pa.table(
-                    {
-                        "rel": chunk,
-                        "n_rows": [file_stats[r]["n_rows"] for r in chunk],
-                        "ino": [file_stats[r]["ino"] for r in chunk],
-                        "bytes": [file_stats[r]["bytes"] for r in chunk],
-                        "mins": [
-                            json.dumps(file_stats[r]["mins"]) for r in chunk
-                        ],
-                        "maxs": [
-                            json.dumps(file_stats[r]["maxs"]) for r in chunk
-                        ],
-                    }
-                )
-                pq.write_table(
-                    tbl,
-                    os.path.join(gdir_abs, f"census-{n_shards:05d}.parquet"),
-                )
-                n_shards += 1
-            if gdir is not None:
-                layout_stats[gdir] = _layout_bounds(
-                    [file_stats[r] for r in grels]
-                )
-        meta["census_shards"] = n_shards
-        meta["census_files"] = len(file_stats)
-        meta["census_digest"] = hashlib.sha256(
-            "\n".join(rels).encode("utf-8")
-        ).hexdigest()
-        if layout_stats:
-            meta["census_layout_stats"] = layout_stats
-        meta["census_dirs"] = sorted(
-            {r.split(os.sep, 1)[0] for r in rels if os.sep in r}
-        )
-    else:
-        meta["file_stats"] = file_stats
     tmp = os.path.join(vdir, f".{_SNAPSHOT_META}.{uuid.uuid4().hex[:8]}.tmp")
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump(meta, f)
@@ -1212,13 +807,10 @@ def history_file_stats(
     path: str, cols: list[str], version: int | None = None
 ) -> list[dict]:
     """Per-data-file column statistics for one retained snapshot — the
-    bridge between the snapshot audit surface (:func:`describe_history`)
-    and file-skip planning (:func:`file_skip_report`) (VERDICT r11
-    item 7): scoped to a committed snapshot's data files (change-feed
-    files excluded with the same os.sep-aware containment as
-    describe_history), so audit and skipping share one metadata
-    surface. One dict per file: version, path, n_rows, mins/maxs for
-    ``cols``.
+    input of file-skip planning (:func:`read_table_skipping`,
+    :func:`file_skip_report`), scoped to a committed snapshot's data
+    files (:func:`_iter_data_files`: change-feed files excluded). One
+    dict per file: version, path, n_rows, mins/maxs for ``cols``.
 
     Served from the snapshot's COMMIT-TIME STATS MANIFEST
     (``_snapshot_meta.json``, VERDICT r12 item 4) when it exists and
@@ -1230,7 +822,7 @@ def history_file_stats(
     no data pages touched.
 
     ``version=None`` means the current snapshot. Vanished files
-    (concurrent retention sweep) are skipped like describe_history.
+    (concurrent retention sweep) are skipped.
     """
     if version is None:
         vname = _current_version_name(path)
@@ -1557,14 +1149,14 @@ def _commit_version(
     keep_versions: int,
     partition_spec: list[str] | None = None,
     layouts: list[dict] | None = None,
-    manifest_shard_files: int | None = None,
     partition_types: dict | None = None,
     empty_schema: str | None = None,
 ) -> None:
-    """Record ``vdir`` in the ledger, flip ``_CURRENT`` to it atomically,
-    then retain the newest ``keep_versions`` COMMITTED snapshots and
-    sweep everything else — including crash orphans, which (being absent
-    from the ledger) can never occupy a retention slot (ADVICE r03).
+    """Record ``vdir`` in the ledger, flip ``_CURRENT`` to it atomically
+    and durably, then retain the newest ``keep_versions`` COMMITTED
+    snapshots and sweep everything else — including crash orphans,
+    which (being absent from the ledger) can never occupy a retention
+    slot (ADVICE r03).
 
     Before the ledger append, the snapshot's ``_snapshot_meta.json``
     sidecar is written (:func:`_write_snapshot_meta`): the commit-time
@@ -1576,8 +1168,7 @@ def _commit_version(
     #    v_* dir: a crash before the ledger append orphans data and
     #    manifest together
     _write_snapshot_meta(
-        path, vdir, partition_spec, layouts, manifest_shard_files,
-        partition_types, empty_schema,
+        path, vdir, partition_spec, layouts, partition_types, empty_schema
     )
     # 1. ledger append (before the flip: a crash in between leaves an
     #    extra ledger entry, which merely over-retains — never a pointer
@@ -1593,6 +1184,13 @@ def _commit_version(
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp_ptr, os.path.join(path, _CURRENT_PTR))
+    # the rename lives in the table dir's entries: sync the dir so a
+    # power loss cannot roll the pointer back behind the ledger
+    dfd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
     # 3. retention over committed snapshots only (numeric seq order —
     #    lexicographic breaks once sequence digits differ)
     committed = sorted(_committed_versions(path), key=_seq_of)
@@ -1672,9 +1270,9 @@ def _link_file(src: str, dst: str) -> None:
 def _link_leaf(src: str, dst: str) -> None:
     """Carry one hive leaf into a new snapshot: hardlink the data files
     directly inside ``src``, nothing else — a ``"."`` leaf is the
-    layout root, whose subdirs are other leaves (or ``_change_data`` /
-    ``_manifest``) and whose ``_snapshot_meta.json`` belongs to the old
-    snapshot."""
+    layout root, whose subdirs are other leaves (or ``_change_data``,
+    or an older commit's ``_manifest`` shards) and whose
+    ``_snapshot_meta.json`` belongs to the old snapshot."""
     os.makedirs(dst, exist_ok=True)
     for f in os.listdir(src):
         if f.endswith(".parquet"):
@@ -2092,7 +1690,6 @@ def merge_upsert(
     partition_col: str | None = None,
     keep_versions: int = 2,
     emit_cdf: bool = False,
-    manifest_shard_files: int | None = None,
 ) -> None:
     """MERGE a source batch into a Parquet directory table.
 
@@ -2143,11 +1740,6 @@ def merge_upsert(
     if a crashed merge is re-run. Each layout's scoped merge emits its
     own slice, so on a partitioned table the feed is bounded by the
     same partition footprint as the rewrite.
-
-    ``manifest_shard_files`` overrides :data:`MANIFEST_INLINE_MAX` for
-    this commit: census entries above it are written as SHARDED parquet
-    under ``v_*/_manifest`` (read planning then evaluates keep/skip as
-    a distributed job — VERDICT r13 item 3) instead of inline JSON.
     """
     source = source.dropDuplicates(keys)
     with _write_lock(target_path):
@@ -2190,7 +1782,7 @@ def merge_upsert(
                     )
             _merge_layouts(
                 spark, target_path, prev_dir, meta, layouts, source, keys,
-                keep_versions, emit_cdf, manifest_shard_files,
+                keep_versions, emit_cdf,
             )
         finally:
             if legacy:
@@ -2369,7 +1961,6 @@ def _merge_layouts(
     keys: list[str],
     keep_versions: int,
     emit_cdf: bool,
-    manifest_shard_files: int | None,
 ) -> None:
     """:func:`merge_upsert`'s one body, called under the table's write
     lock with the current snapshot dir (None on the first write), its
@@ -2516,7 +2107,6 @@ def _merge_layouts(
         vdir,
         keep_versions,
         partition_spec=list(layouts[-1]["partition_cols"]),
-        manifest_shard_files=manifest_shard_files,
         partition_types=types,
         empty_schema=empty_schema,
     )

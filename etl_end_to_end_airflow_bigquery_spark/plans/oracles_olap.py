@@ -2391,7 +2391,7 @@ from .queries_olap import SMR_BUCKET_WIDTH as _SMR_W
 # sharded_manifest_read: recompute the merged state (the %7 merge only
 # flips o_orderstatus; keys unchanged so membership is the full table)
 # and the band x status aggregates relationally; a hash match
-# certifies the DISTRIBUTED manifest decisions dropped no matching
+# certifies the census-served skip decisions dropped no matching
 # file and the basePath read kept partition values exact. price_bucket
 # itself is folded into the engine's scan (partition dirs), so the
 # oracle needs only the flip + bands.
@@ -2581,8 +2581,8 @@ OLAP_ORACLES["cdf_compacted_feed_ivm"] = f"""
 
 # lakehouse_daily_report: the identical daily report computed straight
 # off the raw events parquet with the ts band as a WHERE clause — the
-# Spark side routes through a versioned day-partitioned table with a
-# SHARDED census and the distributed skipping planner, so a hash match
+# Spark side routes through a versioned day-partitioned table, its
+# inline census and the skipping planner, so a hash match
 # certifies the whole lakehouse read path end-to-end.
 from .queries_olap import LDR_TS_HI as _LDR_HI  # noqa: E402
 from .queries_olap import LDR_TS_LO as _LDR_LO  # noqa: E402
@@ -2598,9 +2598,10 @@ OLAP_ORACLES["lakehouse_daily_report"] = f"""
     ORDER BY 1, 2
 """
 
-# evolved_layout_pruned_read: the evolved landing + per-layout census
-# pruning must be value-invisible — the oracle is the identical report
-# straight off the raw events parquet with the band as a WHERE clause.
+# evolved_layout_pruned_read: the evolved landing + census pruning of
+# the whole pre-cutover layout must be value-invisible — the oracle is
+# the identical report straight off the raw events parquet with the
+# band as a WHERE clause.
 from .queries_olap import ELP_TS_HI as _ELP_HI  # noqa: E402
 from .queries_olap import ELP_TS_LO as _ELP_LO  # noqa: E402
 

@@ -4990,8 +4990,8 @@ def history_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 7): after two MERGE commits on a versioned orders table (the
     ``time_travel_orders`` fixture shape), the current snapshot's
     per-file column stats come from ``writers.history_file_stats`` —
-    the describe_history-scoped footer walk, change-feed files excluded
-    — and each price band's scan reads ONLY the files whose
+    the snapshot's data files, change-feed files excluded — and each
+    price band's scan reads ONLY the files whose
     [min, max] intersects the band. Output per band: the snapshot row
     count summed from footers, the matched row count, and the exact
     cents price sum of the matches.
@@ -5602,37 +5602,26 @@ OLAP_QUERIES["partition_spec_rollback"] = partition_spec_rollback
 
 
 SMR_BUCKET_WIDTH = 20000.0   # ~25 price-bucket leaves at sf0.01
-SMR_SHARD_FILES = 8          # census entries per manifest shard
 SMR_BANDS = ((40000.0, 90000.0), (350000.0, 420000.0))
 
 
 def sharded_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SHARDED stats manifest + DISTRIBUTED scan planning (VERDICT r13
-    item 3: at 100 TB file counts — millions of census entries — a
-    single JSON manifest and a driver-side keep/skip loop are
-    themselves the read-planning bottleneck): the versioned orders
-    table, partitioned by a derived ``price_bucket``
-    (width {w:.0f} → ~25 hive leaves), commits with
-    ``manifest_shard_files={k}`` so its census lands as columnar
-    parquet shards under ``v_*/_manifest``; ``read_table_skipping``
-    then evaluates the skip predicate as an Arrow-batched
-    ``mapInPandas`` job OVER THE MANIFEST ROWS — decisions identical
-    to the inline rule (pytest-pinned), work distributed over shards,
-    only kept relpaths returned to the driver (the list the scan needs
-    anyway). Two merge commits (create, then a %7 status flip — keys
-    unchanged, so no row changes bucket; the second commit re-reads
-    footers ONLY for rewritten leaves, reusing hardlinked entries from
-    the SHARDED previous census). Per price band × order status:
-    matched rows and the exact cents sum.
+    """Census-planned reads of a many-leaf partitioned table (the
+    registry name predates the single inline census): the versioned
+    orders table, partitioned by a derived ``price_bucket`` (width
+    {w:.0f} → ~25 hive leaves), records every file's min/max in its
+    snapshot sidecar at commit, and ``read_table_skipping`` decides
+    keep/skip per file from that one JSON read. Two merge commits
+    (create, then a %7 status flip — keys unchanged, so no row changes
+    bucket; the second commit re-reads footers ONLY for rewritten
+    leaves, reusing the previous census's entries for hardlinked
+    files). Per price band × order status: matched rows and the exact
+    cents sum.
 
     The oracle recomputes the merged state and band×status aggregates
-    relationally, so a hash match certifies the distributed decisions
-    dropped no matching file and the basePath read kept partition
-    values exact — through the sharded planning path end to end.
-
-    Scale: manifest scan parallelizes over shards (O(#files / shard)
-    per task), driver holds only kept paths; the inline single-JSON
-    fast path remains for small tables.
+    relationally, so a hash match certifies the census-served
+    decisions dropped no matching file and the basePath read kept
+    partition values exact.
     """
     import os
 
@@ -5647,10 +5636,9 @@ def sharded_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") / SMR_BUCKET_WIDTH).cast("bigint"),
     )
     keys = ["o_orderkey", "price_bucket"]
-    path = os.path.join(session_tmpdir("sharded_manifest_"), "orders_tbl")
+    path = os.path.join(session_tmpdir("bucketed_census_"), "orders_tbl")
     merge_upsert(
         spark, path, base, keys=keys, partition_col="price_bucket",
-        manifest_shard_files=SMR_SHARD_FILES,
     )
     merge_upsert(
         spark, path,
@@ -5658,7 +5646,6 @@ def sharded_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderstatus", F.lit("S")
         ),
         keys=keys, partition_col="price_bucket",
-        manifest_shard_files=SMR_SHARD_FILES,
     )
 
     parts = []
@@ -5689,7 +5676,7 @@ def sharded_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 sharded_manifest_read.__doc__ = sharded_manifest_read.__doc__.format(
-    w=SMR_BUCKET_WIDTH, k=SMR_SHARD_FILES
+    w=SMR_BUCKET_WIDTH
 )
 OLAP_QUERIES["sharded_manifest_read"] = sharded_manifest_read
 
@@ -6086,7 +6073,6 @@ OLAP_QUERIES["cdf_compacted_feed_ivm"] = cdf_compacted_feed_ivm
 
 LDR_TS_LO = "2024-01-08 00:00:00"
 LDR_TS_HI = "2024-01-19 23:59:59.999999"
-LDR_SHARD_FILES = 4  # force the sharded census at every SF (~30 leaves)
 
 
 def lakehouse_daily_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6094,25 +6080,24 @@ def lakehouse_daily_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lakehouse read path (VERDICT r14 item 5 — the manifest planner
     existed but the reporting surface still scanned raw dirs): events
     land in a VERSIONED table partitioned by day
-    (``merge_upsert(partition_col="day", manifest_shard_files=
-    {shards})`` — ~30 day leaves, so the commit-time census shards to
-    parquet under ``v_*/_manifest``), then the report reads it with
-    ``read_table_skipping`` on a {days}-day ``ts`` band: the keep/skip
-    decision runs as the distributed mapInPandas job over the census
-    rows (digest-parity-gated against the live tree), day leaves
+    (``merge_upsert(partition_col="day")`` — ~30 day leaves, each
+    file's min/max recorded inline in the snapshot sidecar at commit),
+    then the report reads it with ``read_table_skipping`` on a
+    {days}-day ``ts`` band: the keep/skip decision runs per file over
+    the census (checked against the live file listing), day leaves
     outside the band never reach the scan, and the surviving files
     feed the same grouped daily AVG as ``daily_avg_report``
     (README.md:50-64 — per-day per-type mean, 4 dp).
 
     The oracle computes the identical report straight off the raw
     events parquet with the band as a WHERE clause — a hash match
-    certifies the landed table, the sharded census, the distributed
-    planner, and the pruned scan TOGETHER reproduce the direct
+    certifies the landed table, the census, the planner, and the
+    pruned scan TOGETHER reproduce the direct
     answer: nothing skipped that matters, nothing double-served.
 
     Scale: this is the shape every 100 TB reporting query should take
     — one commit-time footer walk amortized into the census, then
-    per-query planning that reads manifest rows (not footers) and a
+    per-query planning that reads the census (not footers) and a
     scan proportional to the band's true file footprint. The ts
     bounds prune at FILE level because the day-partitioned writer
     makes per-file ts ranges tight; the filter inside still finishes
@@ -6134,7 +6119,7 @@ def lakehouse_daily_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(session_tmpdir("lakerep_"), "events_tbl")
     merge_upsert(
         spark, path, base, keys=["event_id", "day"],
-        partition_col="day", manifest_shard_files=LDR_SHARD_FILES,
+        partition_col="day",
     )
     lo = datetime.datetime.fromisoformat(LDR_TS_LO)
     hi = datetime.datetime.fromisoformat(LDR_TS_HI)
@@ -6154,7 +6139,7 @@ def lakehouse_daily_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 lakehouse_daily_report.__doc__ = lakehouse_daily_report.__doc__.format(
-    shards=LDR_SHARD_FILES, days=12
+    days=12
 )
 OLAP_QUERIES["lakehouse_daily_report"] = lakehouse_daily_report
 
@@ -6163,34 +6148,25 @@ ELP_TS_LO = "2024-01-03 00:00:00"
 ELP_TS_HI = "2024-01-09 23:59:59.999999"
 ELP_CUT_DAY = "2024-01-16"   # spec-evolution cutover: later days land
                              # in the (day, event_type) layout
-ELP_SHARD_FILES = 3
 
 
 def evolved_layout_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WHOLE-LAYOUT shard pruning on a spec-evolved, sharded-manifest
-    table (VERDICT r14 item 2 end-to-end): events before {cut} land
-    under a (day)-partitioned layout (``manifest_shard_files={shards}``
-    → sharded census), the spec then evolves to (day, event_type), and
-    the post-cutover days land under the new layout via
-    ``merge_upsert``. The census is sharded PER LAYOUT with
-    census-wide per-layout column bounds in the sidecar, so the
-    {band}-day ``ts`` band — entirely pre-cutover — excludes
-    ``layout_001`` from ONE sidecar check: its manifest shards are
-    never read, let alone its data files
-    (``tests/test_writers.py::test_layout_sharded_census_prunes_whole_
-    layout`` pins the zero-shard-read claim; this gated twin pins the
-    VALUES). Within the surviving layout the distributed decide keeps
-    only the band's day files.
+    """WHOLE-LAYOUT pruning on a spec-evolved table: events before
+    {cut} land under a (day)-partitioned layout, the spec then evolves
+    to (day, event_type), and the post-cutover days land under the new
+    layout via ``merge_upsert``. The {band}-day ``ts`` band lies
+    entirely before the cutover, so the census's per-file rule skips
+    every file of ``layout_001`` and the read never opens that layout;
+    within the surviving layout only the band's day files are kept.
 
     The oracle computes the identical per-day report straight off the
     raw events parquet — a hash match certifies the evolved landing,
-    the per-layout census, the layout-level prune, and the in-layout
-    file prune together lose and double nothing.
+    the census, and the per-file prune across both layouts together
+    lose and double nothing.
 
     Scale: at 100 TB a spec evolution's historical layout is most of
-    the table; pruning it from one O(#layouts) sidecar check — before
-    touching manifest rows — is Iceberg's manifest-list partition
-    summary, rebuilt on the census. Reference basis: the reference's
+    the table; a predicate outside its range costs one census decision
+    per file and no data read. Reference basis: the reference's
     date-partitioned reporting table (``dags/fx_pipeline_with_merge
     .py:70-88``) after the second partition dimension earns its keep.
     """
@@ -6214,8 +6190,7 @@ def evolved_layout_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(session_tmpdir("evolprune_"), "events_tbl")
     merge_upsert(
         spark, path, base.filter(F.col("day") < ELP_CUT_DAY),
-        keys=keys, partition_col="day",
-        manifest_shard_files=ELP_SHARD_FILES, keep_versions=3,
+        keys=keys, partition_col="day", keep_versions=3,
     )
     evolve_partition_spec(
         spark, path, ["day", "event_type"], keep_versions=3
@@ -6242,6 +6217,6 @@ def evolved_layout_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 evolved_layout_pruned_read.__doc__ = evolved_layout_pruned_read.__doc__.format(
-    cut=ELP_CUT_DAY, shards=ELP_SHARD_FILES, band=7
+    cut=ELP_CUT_DAY, band=7
 )
 OLAP_QUERIES["evolved_layout_pruned_read"] = evolved_layout_pruned_read

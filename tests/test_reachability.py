@@ -43,7 +43,6 @@ ALLOWED = {
     "operators.similarity.add_to_ivfpq_index": "serving path: incremental adds against stored quantizers, on build's encode",
     "plans.queries_ext._bpe_apply_merge": "reference: the JVM-side BPE fold the Arrow kernel tests compare against",
     # test-only operators with no registry query, left for a later change
-    "operators.writers.describe_history": "test-only operator, left for a later deletion",
     "operators.skew.salted_join": "test-only operator, left for a later deletion",
     "pipelines.corpus.build_training_corpus": "test-only operator, left for a later deletion",
     "operators.variant_io.variant_shredding_schema": "test-only operator, left for a later deletion",

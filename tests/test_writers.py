@@ -171,6 +171,39 @@ def test_commit_sweeps_crash_leftovers(spark, tmp_path, target):
     assert os.path.isfile(os.path.join(path, "_CURRENT"))
     assert len(_sorted(read_table(spark, path))) == 4
 
+def test_commit_fsyncs_table_dir_after_pointer_flip(
+    spark, tmp_path, target, monkeypatch
+):
+    """The ``_CURRENT`` flip is a rename inside the table dir, so it is
+    durable only once that dir is fsynced: the commit must sync a
+    directory fd for the table dir, after the pointer names the new
+    snapshot."""
+    import os
+    import stat
+
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        _current_version_name,
+    )
+
+    path = str(tmp_path / "durable")
+    merge_upsert(spark, path, target, keys=["k"])
+    before = _current_version_name(path)
+    table_ino = os.stat(path).st_ino
+    real_fsync = os.fsync
+    synced_dirs = []
+
+    def recording_fsync(fd):
+        st = os.fstat(fd)
+        if stat.S_ISDIR(st.st_mode):
+            synced_dirs.append((st.st_ino, _current_version_name(path)))
+        return real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    merge_upsert(spark, path, _frame(spark, [(9, "d9", 9.0)]), keys=["k"])
+    after = _current_version_name(path)
+    assert after != before
+    assert (table_ino, after) in synced_dirs, synced_dirs
+
 
 def test_empty_partitioned_first_write_reads_as_zero_rows(spark, tmp_path):
     """A partitioned first write of an empty batch commits a snapshot
@@ -815,46 +848,6 @@ def test_expire_versions_rejects_bad_args_and_plain_dirs(
     with pytest.raises(ValueError, match="not a versioned table"):
         expire_versions(missing, keep_last=1)
     assert not os.path.exists(missing)
-
-
-def test_describe_history_rows_current_flag_and_cdf_marker(
-    spark, tmp_path, target
-):
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        describe_history,
-        expire_versions,
-        table_versions,
-    )
-
-    path = str(tmp_path / "hist")
-    merge_upsert(spark, path, target, keys=["k"], keep_versions=10)
-    merge_upsert(
-        spark, path, _frame(spark, [(42, "dh", 4.0)]), keys=["k"],
-        keep_versions=10, emit_cdf=True,
-    )
-    hist = describe_history(spark, path).collect()
-    vers = table_versions(path)
-    assert [r.version for r in hist] == sorted(vers, reverse=True)
-    assert [r.is_current for r in hist] == [True, False]
-    assert all(r.n_data_files >= 1 and r.data_bytes > 0 for r in hist)
-    # the CDF commit marks has_change_feed; its _change_data files are
-    # excluded from the data-file census
-    assert [r.has_change_feed for r in hist] == [True, False]
-    # after expiry, history shows only the survivor
-    expire_versions(path, keep_last=1)
-    hist2 = describe_history(spark, path).collect()
-    assert [(r.version, r.is_current) for r in hist2] == [(vers[-1], True)]
-
-
-def test_describe_history_rejects_plain_dir(spark, tmp_path, target):
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        describe_history,
-    )
-
-    plain = str(tmp_path / "plainh")
-    target.write.parquet(plain)
-    with pytest.raises(ValueError, match="not a versioned table"):
-        describe_history(spark, plain)
 
 
 def test_snapshot_stats_manifest_matches_footers(spark, tmp_path, target):
@@ -1512,7 +1505,9 @@ def test_manifest_incomplete_census_falls_back_to_footers(spark, tmp_path):
     """Code-review r13: a live data file missing from the manifest
     census must force the footer fallback (else skip planning treats
     the file as nonexistent and DROPS its rows); entries for swept
-    files are dropped instead of crashing the scan."""
+    files are dropped instead of crashing the scan; a same-count swap
+    (one entry dropped, one phantom added) still falls back, since the
+    check is per live file, not a count."""
     import json
     import os
 
@@ -1558,6 +1553,22 @@ def test_manifest_incomplete_census_falls_back_to_footers(spark, tmp_path):
     got2 = history_file_stats(path, ["v"])
     assert {s["path"] for s in got2} == {s["path"] for s in complete}
     assert read_table_skipping(spark, path, {"v": (100.0, 300.0)}).count() == 1
+
+    # (c) same-count swap: the victim's entry is gone and a phantom
+    # takes its place, so the census still has one entry per live file
+    swapped = dict(meta)
+    swapped["file_stats"] = dict(meta["file_stats"])
+    swapped["file_stats"]["day=gone/xx.parquet"] = (
+        swapped["file_stats"].pop(victim)
+    )
+    assert len(swapped["file_stats"]) == len(complete)
+    json.dump(swapped, open(sidecar + ".tmp", "w"))
+    os.replace(sidecar + ".tmp", sidecar)
+    got3 = history_file_stats(path, ["v"])
+    assert {s["path"]: s["n_rows"] for s in got3} == {
+        s["path"]: s["n_rows"] for s in complete
+    }
+    assert read_table_skipping(spark, path, {"v": (0.0, 1e9)}).count() == 2
 
 
 def test_append_landing_batch_replay_fewer_files_no_stale_ordinals(
@@ -1840,117 +1851,15 @@ def test_drop_partition_field_rollback_lifecycle(spark, tmp_path):
     assert got2 == want + [(5, "d5", "view", 5.0)]
 
 
-def test_sharded_manifest_decisions_match_inline(spark, tmp_path):
-    """VERDICT r13 item 3: above the shard threshold the commit-time
-    census is written as SHARDED PARQUET under v_*/_manifest and
-    read_table_skipping evaluates keep/skip as a DISTRIBUTED job — the
-    decisions must be IDENTICAL to the inline/driver-side rule, the
-    pruned read must equal the unpruned table, and commit-time
-    hardlink-entry reuse must work from a sharded previous census."""
-    import json
-    import os
-
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        _SNAPSHOT_META,
-        _census_shard_paths,
-        _kept_files_distributed,
-        _resolve_data_dir,
-        file_skip_report,
-        history_file_stats,
-        merge_upsert,
-        read_table,
-        read_table_skipping,
-    )
-
-    rows = [
-        (i, f"d{i // 8}", float(i)) for i in range(64)
-    ]  # 8 day-leaves (v ranges segregate by leaf), threshold 4 -> sharded
-    path = str(tmp_path / "tbl")
-    merge_upsert(
-        spark, path, _frame(spark, rows), keys=["k", "day"],
-        partition_col="day", manifest_shard_files=4, keep_versions=5,
-    )
-    vdir = _resolve_data_dir(path)
-    meta = json.load(open(os.path.join(vdir, _SNAPSHOT_META)))
-    assert "file_stats" not in meta
-    assert meta["census_shards"] >= 2
-    shards = _census_shard_paths(vdir)
-    assert len(shards) == meta["census_shards"]
-
-    # distributed decisions == the driver-side rule (file_skip_report
-    # serves the same census via _load_census and applies the inline
-    # rule)
-    bounds = {"v": (10.0, 30.0)}
-    kept_dist = set(_kept_files_distributed(spark, vdir, bounds))
-    rep = file_skip_report(vdir, bounds)
-    kept_inline = {r["path"] for r in rep if not r["skip"]}
-    assert kept_dist == kept_inline
-    assert 0 < len(kept_dist) < len(rep), "bounds must be selective"
-
-    # pruned read == unpruned, partition column preserved
-    pruned = read_table_skipping(spark, path, bounds).filter(
-        F.col("v").between(10.0, 30.0)
-    )
-    want = sorted(
-        (k, d, v) for (k, d, v) in rows if 10.0 <= v <= 30.0
-    )
-    got = sorted(
-        tuple(r) for r in pruned.select("k", "day", "v").collect()
-    )
-    assert got == want
-
-    # audit surface serves from shards and equals the footer walk
-    stats_m = history_file_stats(path, ["v"])
-    sidecar = os.path.join(vdir, _SNAPSHOT_META)
-    os.rename(sidecar, sidecar + ".hidden")
-    try:
-        stats_f = history_file_stats(path, ["v"])
-    finally:
-        os.rename(sidecar + ".hidden", sidecar)
-    key = lambda s: (s["path"], s["n_rows"], s["mins"], s["maxs"])  # noqa: E731
-    assert [key(s) for s in stats_m] == [key(s) for s in stats_f]
-
-    # second commit: entry reuse from the SHARDED previous census —
-    # untouched leaves keep their entries verbatim (same ino+bytes)
-    import pyarrow.parquet as pq
-
-    def census_of(vd):
-        out = {}
-        for sp in _census_shard_paths(vd):
-            t = pq.read_table(sp)
-            for rel, ino, nb in zip(
-                t["rel"].to_pylist(), t["ino"].to_pylist(),
-                t["bytes"].to_pylist(),
-            ):
-                out[rel] = (ino, nb)
-        return out
-
-    c1 = census_of(vdir)
-    merge_upsert(
-        spark, path, _frame(spark, [(0, "d0", 99.0)]), keys=["k", "day"],
-        partition_col="day", manifest_shard_files=4, keep_versions=5,
-    )
-    vdir2 = _resolve_data_dir(path)
-    c2 = census_of(vdir2)
-    untouched = {r for r in c2 if not r.startswith("day=d0")}
-    assert untouched
-    for r in untouched:
-        assert c2[r] == c1[r], "hardlinked entry must be reused verbatim"
-
-    # unpruned read still clean (census shards invisible to table scans)
-    assert read_table(spark, path).count() == 64
-
-
-def test_sharded_manifest_spec_evolved_read(spark, tmp_path, monkeypatch):
-    """Sharded census + spec-evolved snapshot: layout emptiness comes
-    from the sidecar's census_dirs summary (one metadata read) and the
-    per-layout pruned union still equals the unpruned read."""
+def test_census_spec_evolved_read(spark, tmp_path, monkeypatch):
+    """Inline census + spec-evolved snapshot: layout emptiness comes
+    from the census (one metadata read) and the per-layout pruned union
+    still equals the unpruned read."""
     import json
     import os
 
     from etl_end_to_end_airflow_bigquery_spark.operators import writers
 
-    monkeypatch.setattr(writers, "MANIFEST_INLINE_MAX", 2)
     schema = "id bigint, day string, typ string, v double"
     keys = ["id", "day", "typ"]
     path = str(tmp_path / "tbl")
@@ -1969,12 +1878,13 @@ def test_sharded_manifest_spec_evolved_read(spark, tmp_path, monkeypatch):
     )
     vdir = writers._resolve_data_dir(path)
     meta = json.load(open(os.path.join(vdir, writers._SNAPSHOT_META)))
-    assert meta.get("census_shards"), "evolved commit must shard too"
-    assert set(meta["census_dirs"]) == {"layout_000", "layout_001"}
+    assert {r.split(os.sep, 1)[0] for r in meta["file_stats"]} == {
+        "layout_000", "layout_001"
+    }
 
-    # census-dirs-served emptiness: no walk needed
+    # census-served emptiness: no walk needed
     def boom(_d):
-        raise AssertionError("sharded+evolved read must not walk layouts")
+        raise AssertionError("evolved read must not walk layouts")
 
     monkeypatch.setattr(writers, "_layout_has_data", boom)
     want = sorted(
@@ -1988,7 +1898,7 @@ def test_sharded_manifest_spec_evolved_read(spark, tmp_path, monkeypatch):
     )
     assert got == want
 
-    # pruned evolved read through the distributed path == filter
+    # pruned evolved read == filter
     pruned = writers.read_table_skipping(spark, path, {"v": (3.0, 9.0)})
     got2 = sorted(
         tuple(r)
@@ -2273,13 +2183,13 @@ def test_compact_parquet_evolved_per_leaf(spark, tmp_path):
     assert read_table(spark, path).count() == len(want) + 1
 
 
-def test_sharded_census_type_tags_roundtrip_exotic_types(spark, tmp_path):
-    """The sharded census serializes min/max as type-tagged JSON TEXT
-    inside parquet shards — date/timestamp/decimal/binary stats must
-    round-trip exactly through that extra encode hop, serve
-    value-identical to the footer walk, and drive correct DISTRIBUTED
-    skip decisions on a non-numeric (date) bound."""
+def test_census_type_tags_roundtrip_exotic_types(spark, tmp_path):
+    """The census stores min/max as type-tagged JSON in the sidecar —
+    date/timestamp/decimal/binary stats must round-trip exactly through
+    that encoding, serve value-identical to the footer walk, and drive
+    correct skip decisions on a non-numeric (date) bound."""
     import datetime
+    import decimal
     import os
 
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
@@ -2296,6 +2206,8 @@ def test_sharded_census_type_tags_roundtrip_exotic_types(spark, tmp_path):
             f"d{i // 4}",
             datetime.date(2024, 1, 1 + i),
             datetime.datetime(2024, 1, 1, i, 0, 0),
+            datetime.datetime(2024, 1, 1, i, 30, 0),
+            decimal.Decimal(f"{i}.2500"),
             float(i),
             f"s{i:03d}",
             bytes([i, 255 - i]),
@@ -2303,23 +2215,22 @@ def test_sharded_census_type_tags_roundtrip_exotic_types(spark, tmp_path):
         for i in range(16)
     ]
     schema = (
-        "k bigint, day string, d date, ts timestamp, v double, "
-        "s string, b binary"
+        "k bigint, day string, d date, ts timestamp, tsn timestamp_ntz, "
+        "dec decimal(20,4), v double, s string, b binary"
     )
     path = str(tmp_path / "tbl")
     merge_upsert(
         spark, path, spark.createDataFrame(rows, schema),
-        keys=["k", "day"], partition_col="day",
-        manifest_shard_files=2, keep_versions=5,
+        keys=["k", "day"], partition_col="day", keep_versions=5,
     )
     vdir = _resolve_data_dir(path)
     import json
 
     meta = json.load(open(os.path.join(vdir, _SNAPSHOT_META)))
-    assert meta.get("census_shards", 0) >= 2
+    assert len(meta["file_stats"]) >= 4
 
-    cols = ["d", "ts", "v", "s", "b"]
-    from_shards = history_file_stats(path, cols)
+    cols = ["d", "ts", "tsn", "dec", "v", "s", "b"]
+    from_census = history_file_stats(path, cols)
     sidecar = os.path.join(vdir, _SNAPSHOT_META)
     os.rename(sidecar, sidecar + ".hidden")
     try:
@@ -2328,18 +2239,22 @@ def test_sharded_census_type_tags_roundtrip_exotic_types(spark, tmp_path):
         os.rename(sidecar + ".hidden", sidecar)
     assert [
         (e["path"], e["n_rows"], e["mins"], e["maxs"])
-        for e in from_shards
+        for e in from_census
     ] == [
         (e["path"], e["n_rows"], e["mins"], e["maxs"])
         for e in from_footers
-    ], "tagged values must round-trip exactly through parquet shards"
+    ], "tagged values must round-trip exactly through the census"
     # types survived (not stringified); ts is None in BOTH modes when
     # Spark writes INT96 (no footer min/max — the conservative
     # must-scan value), which the equality above already pins
-    assert isinstance(from_shards[0]["mins"]["d"], datetime.date)
-    assert isinstance(from_shards[0]["mins"]["b"], bytes)
+    first = from_census[0]["mins"]
+    assert isinstance(first["d"], datetime.date)
+    assert first["tsn"] == datetime.datetime(2024, 1, 1, 0, 30, 0)
+    assert first["dec"] == decimal.Decimal("0.2500")
+    assert isinstance(first["dec"], decimal.Decimal)
+    assert isinstance(first["b"], bytes)
 
-    # DATE bound through the distributed decide: day=d0 holds Jan 1-4,
+    # DATE bound through the census decide: day=d0 holds Jan 1-4,
     # so a Jan 9-12 band must skip it and keep day=d2 exactly
     pruned = read_table_skipping(
         spark, path,
@@ -2396,278 +2311,12 @@ def test_delete_semantics_null_predicate_rows_kept(spark, tmp_path):
     )
 
 
-def test_manifest_shard_files_validated_and_inherited(spark, tmp_path):
-    """Code-review r14: manifest_shard_files < 1 raises loudly (0 used
-    to crash mid-commit with an opaque range() error), and an explicit
-    value persists as a TABLE PROPERTY — later commits that cannot
-    pass the knob (evolved merges, compaction, deletes) inherit it
-    instead of silently reverting the census to inline JSON."""
-    import json
-    import os
-
+def test_layout_all_layouts_excluded_returns_empty(spark, tmp_path):
+    """Bounds disjoint from EVERY file of every layout: no layout
+    survives, zero data files are scanned, and the read returns an
+    empty frame with the table schema."""
     from etl_end_to_end_airflow_bigquery_spark.operators import writers
 
-    schema = "id bigint, day string, typ string, v double"
-    keys = ["id", "day", "typ"]
-    path = str(tmp_path / "tbl")
-    rows = [(i, f"d{i % 5}", "view", float(i)) for i in range(20)]
-    df = spark.createDataFrame(rows, schema)
-
-    with pytest.raises(ValueError, match="manifest_shard_files"):
-        writers.merge_upsert(
-            spark, path, df, keys=keys, partition_col="day",
-            manifest_shard_files=0,
-        )
-
-    writers.merge_upsert(
-        spark, path, df, keys=keys, partition_col="day",
-        manifest_shard_files=2, keep_versions=10,
-    )
-
-    def meta_of():
-        vdir = writers._resolve_data_dir(path)
-        return json.load(
-            open(os.path.join(vdir, writers._SNAPSHOT_META))
-        )
-
-    assert meta_of()["census_shards"] >= 2
-    assert meta_of()["manifest_shard_files"] == 2
-
-    # maintenance commits WITHOUT the knob keep the sharded policy
-    writers.evolve_partition_spec(spark, path, ["day", "typ"],
-                                  keep_versions=10)
-    assert meta_of().get("census_shards"), "evolve must inherit policy"
-    writers.merge_upsert(
-        spark, path,
-        spark.createDataFrame([(99, "d9", "view", 9.0)], schema),
-        keys=keys, keep_versions=10,
-    )
-    m = meta_of()
-    assert m.get("census_shards") and m["manifest_shard_files"] == 2
-    writers.compact_parquet(spark, path)
-    assert meta_of().get("census_shards"), "compaction must inherit"
-    writers.delete_rows(spark, path, "id = 99")
-    assert meta_of().get("census_shards"), "delete must inherit"
-
-
-def test_sharded_planning_degrades_on_uncensused_live_file(
-    spark, tmp_path
-):
-    """Code-review r14: the sharded fast path must give the SAME
-    superset guarantee as the inline path — a live data file with no
-    census row (count mismatch against one live walk) degrades
-    planning to the validated stats path instead of silently treating
-    the file as nonexistent."""
-    import shutil as _sh
-    import os
-
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        _resolve_data_dir,
-        merge_upsert,
-        read_table_skipping,
-    )
-
-    rows = [(i, f"d{i // 8}", float(i)) for i in range(32)]
-    path = str(tmp_path / "tbl")
-    merge_upsert(
-        spark, path, _frame(spark, rows), keys=["k", "day"],
-        partition_col="day", manifest_shard_files=2, keep_versions=5,
-    )
-    vdir = _resolve_data_dir(path)
-    # hand-restore an extra data file the census never saw: duplicate
-    # an existing leaf file under a new name with DIFFERENT rows
-    leaf = os.path.join(vdir, "day=d0")
-    extra = _frame(spark, [(100, "d0", 100.0)]).coalesce(1)
-    tmp_out = str(tmp_path / "extra")
-    extra.write.parquet(tmp_out)
-    extra_file = [
-        f for f in os.listdir(tmp_out) if f.endswith(".parquet")
-    ][0]
-    _sh.copy(
-        os.path.join(tmp_out, extra_file),
-        os.path.join(leaf, "zz-restored.parquet"),
-    )
-    # bounds that keep d0: the restored row MUST be served (superset
-    # guarantee) — the stale sharded census alone would drop it
-    pruned = read_table_skipping(spark, path, {"v": (90.0, 110.0)})
-    got = sorted(
-        tuple(r)
-        for r in pruned.filter(F.col("v") >= 90.0)
-        .select("k", "day", "v").collect()
-    )
-    assert got == [(100, "d0", 100.0)], (
-        "uncensused live file dropped by sharded planning"
-    )
-
-
-def test_sharded_planning_degrades_on_same_count_swap(spark, tmp_path):
-    """ADVICE r14 (medium): a SAME-COUNT swap — one censused file
-    removed, one uncensused file hand-restored under a different name —
-    must fail the parity gate. The old count-only check passed it and
-    silently dropped the uncensused file's rows; the sha256 relpath
-    digest pins set equality, so planning degrades to the validated
-    stats path and the restored row is served."""
-    import os
-
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        _resolve_data_dir,
-        merge_upsert,
-        read_table_skipping,
-    )
-
-    rows = [(i, f"d{i // 8}", float(i)) for i in range(32)]
-    path = str(tmp_path / "tbl")
-    merge_upsert(
-        spark, path, _frame(spark, rows), keys=["k", "day"],
-        partition_col="day", manifest_shard_files=2, keep_versions=5,
-    )
-    vdir = _resolve_data_dir(path)
-    leaf = os.path.join(vdir, "day=d0")
-    victim = sorted(
-        f for f in os.listdir(leaf) if f.endswith(".parquet")
-    )[0]
-    # swap: remove a censused file, add an uncensused one — count of
-    # live files is unchanged
-    os.remove(os.path.join(leaf, victim))
-    extra = _frame(spark, [(100, "d0", 100.0)]).coalesce(1)
-    tmp_out = str(tmp_path / "extra")
-    extra.write.parquet(tmp_out)
-    extra_file = [
-        f for f in os.listdir(tmp_out) if f.endswith(".parquet")
-    ][0]
-    import shutil as _sh
-
-    _sh.copy(
-        os.path.join(tmp_out, extra_file),
-        os.path.join(leaf, "zz-swapped.parquet"),
-    )
-    pruned = read_table_skipping(spark, path, {"v": (90.0, 110.0)})
-    got = sorted(
-        tuple(r)
-        for r in pruned.filter(F.col("v") >= 90.0)
-        .select("k", "day", "v").collect()
-    )
-    assert got == [(100, "d0", 100.0)], (
-        "same-count swap passed the parity gate — uncensused file "
-        "dropped by sharded planning"
-    )
-
-
-def test_layout_sharded_census_prunes_whole_layout(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r14 item 2: a spec-evolved snapshot's census is sharded
-    PER LAYOUT and the sidecar records each layout's census-wide column
-    bounds — a bound that excludes a layout outright must cost ZERO
-    shard-file reads for that layout (its `_manifest/<layout>/` subdir
-    never appears in the planned shard list), while the pruned read
-    stays value-identical to a plain filter."""
-    import json
-    import os
-
-    from etl_end_to_end_airflow_bigquery_spark.operators import writers
-
-    monkeypatch.setattr(writers, "MANIFEST_INLINE_MAX", 2)
-    schema = "id bigint, day string, typ string, v double"
-    keys = ["id", "day", "typ"]
-    path = str(tmp_path / "tbl")
-    # layout_000: v in [0, 11]; layout_001 (post-evolution batch):
-    # v in [500, 520] — disjoint, so a low-v bound excludes it wholesale
-    pre = [(i, f"d{i % 3}", "view" if i % 2 else "click", float(i))
-           for i in range(12)]
-    writers.merge_upsert(
-        spark, path, spark.createDataFrame(pre, schema),
-        keys=keys, partition_col="day", keep_versions=5,
-    )
-    writers.evolve_partition_spec(spark, path, ["day", "typ"],
-                                  keep_versions=5)
-    batch = [(20, "d9", "view", 500.0), (21, "d9", "click", 520.0)]
-    writers.merge_upsert(
-        spark, path, spark.createDataFrame(batch, schema),
-        keys=keys, keep_versions=5,
-    )
-    vdir = writers._resolve_data_dir(path)
-    meta = json.load(open(os.path.join(vdir, writers._SNAPSHOT_META)))
-    assert meta.get("census_shards")
-    lay_stats = meta.get("census_layout_stats")
-    assert set(lay_stats) == {"layout_000", "layout_001"}
-    assert writers._stat_from_json(
-        lay_stats["layout_001"]["mins"]["v"]
-    ) == 500.0
-    # shards are grouped per layout on disk
-    mdir = os.path.join(vdir, writers._MANIFEST_DIR)
-    assert os.path.isdir(os.path.join(mdir, "layout_000"))
-    assert os.path.isdir(os.path.join(mdir, "layout_001"))
-
-    planned: list[str] = []
-    real = writers._census_shard_paths
-
-    def record(vd, subdirs=None):
-        out = real(vd, subdirs=subdirs)
-        planned.extend(out)
-        return out
-
-    monkeypatch.setattr(writers, "_census_shard_paths", record)
-    pruned = writers.read_table_skipping(spark, path, {"v": (3.0, 9.0)})
-    got = sorted(
-        tuple(r)
-        for r in pruned.filter(F.col("v").between(3.0, 9.0))
-        .select("id", "day", "typ", "v").collect()
-    )
-    want = sorted(
-        (i, d, t, v) for i, d, t, v in pre if 3.0 <= v <= 9.0
-    )
-    assert got == want
-    assert planned, "distributed planner must have selected shards"
-    assert all("layout_001" not in p for p in planned), (
-        "excluded layout's shards were read: "
-        f"{[p for p in planned if 'layout_001' in p]}"
-    )
-    assert any("layout_000" in p for p in planned)
-
-    # and a bound excluding NOTHING reads both layouts' shards
-    planned.clear()
-    allkept = writers.read_table_skipping(spark, path, {"v": (0.0, 600.0)})
-    assert allkept.count() == 14
-    assert any("layout_001" in p for p in planned)
-
-
-def test_layout_bounds_drops_columns_with_missing_stats():
-    """_layout_bounds: a column qualifies only when EVERY file entry in
-    the layout carries both decoded stats — one unknown bound makes the
-    layout's bound unknown (conservative: can never exclude unseen
-    rows). Values stay in the type-tagged JSON encoding."""
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        _layout_bounds,
-        _stat_from_json,
-        _stat_to_json,
-    )
-
-    e = lambda lo, hi: {  # noqa: E731
-        "mins": {"v": _stat_to_json(lo), "w": _stat_to_json(1.0)},
-        "maxs": {"v": _stat_to_json(hi), "w": _stat_to_json(2.0)},
-    }
-    partial = {
-        "mins": {"v": _stat_to_json(5.0)},   # w missing entirely
-        "maxs": {"v": _stat_to_json(9.0), "w": _stat_to_json(None)},
-    }
-    out = _layout_bounds([e(0.0, 4.0), e(2.0, 7.0), partial])
-    assert set(out["mins"]) == {"v"}, "w must be dropped (partial stats)"
-    assert _stat_from_json(out["mins"]["v"]) == 0.0
-    assert _stat_from_json(out["maxs"]["v"]) == 9.0
-    # empty entry list -> empty bounds, not a crash
-    assert _layout_bounds([]) == {"mins": {}, "maxs": {}}
-
-
-def test_layout_sharded_all_layouts_excluded_returns_empty(
-    spark, tmp_path, monkeypatch
-):
-    """Bounds disjoint from EVERY layout's census-wide range: zero
-    layout shard groups survive, zero data files are scanned, and the
-    read returns an empty frame with the table schema."""
-    from etl_end_to_end_airflow_bigquery_spark.operators import writers
-
-    monkeypatch.setattr(writers, "MANIFEST_INLINE_MAX", 2)
     schema = "id bigint, day string, typ string, v double"
     keys = ["id", "day", "typ"]
     path = str(tmp_path / "tbl")
@@ -2686,6 +2335,81 @@ def test_layout_sharded_all_layouts_excluded_returns_empty(
     out = writers.read_table_skipping(spark, path, {"v": (2000.0, 3000.0)})
     assert out.count() == 0
     assert set(out.columns) == {"id", "day", "typ", "v"}
+
+
+def test_old_format_census_snapshot_reads(spark, tmp_path):
+    """A snapshot committed when large censuses were stored as parquet
+    shards: its sidecar has ``census_shards`` and no ``file_stats``,
+    and a shard file sits under ``v_*/_manifest``. Readers take the
+    footer walk and count only the data files — never the shard."""
+    import hashlib
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+        history_file_stats,
+        read_table_skipping,
+    )
+
+    rows = [(1, "d1", 1.0), (2, "d1", 2.0), (3, "d2", 300.0)]
+    path = str(tmp_path / "old")
+    vname = "v_000001_0ld0f0rm"
+    vdir = os.path.join(path, vname)
+    _frame(spark, rows).coalesce(1).write.partitionBy("day").parquet(vdir)
+    data = sorted(
+        os.path.relpath(os.path.join(root, f), vdir)
+        for root, _d, files in os.walk(vdir)
+        for f in files
+        if f.endswith(".parquet")
+    )
+    assert len(data) == 2
+    mdir = os.path.join(vdir, "_manifest")
+    os.makedirs(mdir)
+    pq.write_table(
+        pa.table({
+            "rel": data,
+            "n_rows": [2, 1],
+            "ino": [0, 0],
+            "bytes": [0, 0],
+            "mins": ['{"v": {"t": "f", "v": 1.0}}'] * 2,
+            "maxs": ['{"v": {"t": "f", "v": 300.0}}'] * 2,
+        }),
+        os.path.join(mdir, "census-00000.parquet"),
+    )
+    with open(os.path.join(vdir, "_snapshot_meta.json"), "w") as f:
+        json.dump({
+            "manifest_id": "0" * 32,
+            "partition_spec": ["day"],
+            "layouts": None,
+            "manifest_shard_files": 1,
+            "partition_types": {"day": "string"},
+            "census_shards": 1,
+            "census_files": 2,
+            "census_digest": hashlib.sha256(
+                "\n".join(data).encode("utf-8")
+            ).hexdigest(),
+            "census_dirs": ["day=d1", "day=d2"],
+        }, f)
+    with open(os.path.join(path, "_COMMITS"), "w") as f:
+        f.write(vname + "\n")
+    with open(os.path.join(path, "_CURRENT"), "w") as f:
+        f.write(vname)
+
+    assert _sorted(read_table(spark, path).select("k", "day", "v")) == rows
+    stats = history_file_stats(path, ["v"])
+    assert [s["path"] for s in stats] == [
+        os.path.join(vdir, r) for r in data
+    ]
+    assert [s["n_rows"] for s in stats] == [2, 1]
+    # planning uses the footers' tight bounds, not the shard's wide
+    # ones, so the day=d1 file is skipped
+    pruned = read_table_skipping(spark, path, {"v": (100.0, 400.0)})
+    assert _sorted(pruned.select("k", "day", "v")) == [(3, "d2", 300.0)]
+    everything = read_table_skipping(spark, path, {"v": (0.0, 1e9)})
+    assert _sorted(everything.select("k", "day", "v")) == rows
 
 
 def test_cdf_compact_before_zero_squashes_everything(spark, tmp_path):

@@ -193,11 +193,12 @@ def _manifest_filecount(spark, sf_dir):
     SCALING probe over file count, not just row count'): the versioned
     table is committed with a file count scaling 100x across the ramp
     (32 -> 3200 via range-repartition on event_id, so files segregate
-    the skipped column), census sharded at 256 entries/shard, then
-    read_table_skipping plans a narrow event_id band. Times the whole
-    commit+plan+scan path; what must stay sublinear is planning as
-    #files grows — the walk and the distributed decide are both
-    O(#files) with small constants, never O(rows)."""
+    the skipped column), every file's min/max recorded inline in the
+    snapshot sidecar, then read_table_skipping plans a narrow event_id
+    band from that census. Times the whole commit+plan+scan path; what
+    must stay sublinear is planning as #files grows — the commit-time
+    footer walk and the per-file keep/skip loop are both O(#files)
+    with small constants, never O(rows)."""
     import os
 
     from pyspark.sql import functions as F
@@ -212,10 +213,7 @@ def _manifest_filecount(spark, sf_dir):
     path = os.path.join(session_tmpdir("mfc_"), "tbl")
     vdir = writers._next_version_dir(path)
     ev.repartitionByRange(n_files, "event_id").write.parquet(vdir)
-    writers._commit_version(
-        path, vdir, keep_versions=1, partition_spec=[],
-        manifest_shard_files=256,
-    )
+    writers._commit_version(path, vdir, keep_versions=1, partition_spec=[])
     hi = int(ev.count() * 0.02)
     pruned = writers.read_table_skipping(
         spark, path, {"event_id": (0, hi)}
