@@ -67,8 +67,10 @@ from etl_end_to_end_airflow_bigquery_spark.session import get_spark, local_cpus
 #               overhead (the original canary, kept for continuity);
 #   shuffle   — star_join_revenue: broadcast star join + wide groupBy,
 #               exchange-bound;
-#   barrier   — ivf_topk_kmeans: iterative k-means training, collect
-#               barriers + repeated stage launches.
+#   barrier   — bfs_dedup_distance: a fixed-depth BFS driver loop,
+#               collect barriers + repeated stage launches; kept off
+#               the ANN quantizer code so a trainer change cannot move
+#               the normalizer it is judged by.
 # Each regime gets a stored healthy-machine reference (this machine's
 # r10 raw mins — the r10/r9 common set ran 0.94× raw, i.e. the r10
 # machine was healthy; refs are re-stampable when hardware changes).
@@ -79,7 +81,7 @@ CANARY = "topk_recent_events"  # retained key: latency regime
 CANARY_BASKET = {
     "topk_recent_events": 0.223,   # latency  (r10 min)
     "star_join_revenue": 0.898,    # shuffle  (r10 min)
-    "ivf_topk_kmeans": 1.960,      # barrier  (r10 min)
+    "bfs_dedup_distance": 2.234,   # barrier  (r10 min)
 }
 
 # Headliners: the reference-surface aggregate/join/window core plus the

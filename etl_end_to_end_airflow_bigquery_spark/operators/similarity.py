@@ -19,12 +19,20 @@ associative, so partitioning-independent — folds in-row via
 the same scaled-integer arithmetic; sqrt/divide then operate on
 identical doubles. Hyperplanes come from a fixed numpy seed and are
 embedded as literals in both engines.
+
+The k-means and PQ quantizers train on a bounded, deterministic sample
+inside ONE ``mapInArrow`` task each (:func:`_lloyd_train_arrow`): the
+Lloyd rounds run in numpy with the same fixed-point folds, replicated
+term for term (:func:`_np_dot_fold`, :func:`_exact_group_sums`), so the
+trained centroids and codebooks are bit-identical to the SQL spelling.
+Assignment and encoding of the full corpus stay in-row projections over
+the trained rows as literals.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import spread_small_scan as _spread  # guide §2.5
@@ -32,7 +40,6 @@ from ..io import spread_small_scan as _spread  # guide §2.5
 N_PLANES = 8
 PLANE_SEED = 7
 EMB_DIM = 64
-DEC = "decimal(25,12)"  # exact accumulator for grouped vector averages
 # Fixed-point scale for exact dot products: |x|<0.6, d=64 ⇒ |dot·1e12| ≲
 # 2e13 ≪ 2^53, so the BIGINT sum converts to double exactly.
 DOT_SCALE = "1000000000000.0"
@@ -380,11 +387,10 @@ def _sql_double(x: float) -> str:
 
 
 def _cents_arr(cent_rows) -> "F.Column":
-    """Literal ``array<struct<cell,ce,cn>>`` from collected centroid
-    rows — the K-row driver-side centroid state every Lloyd round
-    already materializes (:func:`_kmeans_state`), re-entered into the
-    plan as a literal so assignment can run IN-ROW (guide §2.4: the
-    crossJoin + argmax-aggregate exchange disappears; see
+    """Literal ``array<struct<cell,ce,cn>>`` from centroid rows — the
+    K-row driver-side state the trainer returns (:func:`_kmeans_state`),
+    re-entered into the plan as a literal so assignment can run IN-ROW
+    (guide §2.4: the crossJoin + argmax-aggregate exchange disappears; see
     :func:`_with_cells_lit`). Doubles round-trip driver↔plan
     bit-exactly (same IEEE values), so results are unchanged.
 
@@ -486,26 +492,197 @@ MEAN_SCALE = "1000000000000.0"  # fixed-point scale for exact centroid means
 # The sample is a pure function of vec_id (same md5-bucket scheme as
 # operators.sampling.hash_bucket), so membership is identical across
 # engines, partitionings, and re-runs, and the DuckDB oracles apply the
-# same predicate. At 100 TB this turns the n_iters training scans from
-# full-corpus passes into sample passes; assignment and encoding still
-# see every vector.
+# same predicate. At 100 TB training reads the sample, not the corpus;
+# assignment and encoding still see every vector.
 TRAIN_FRACTION = 0.5
 TRAIN_SALT = "qtrain"
 _TRAIN_BUCKETS = 10_000
 
 
-def _train_sample(df: DataFrame, fraction: float = TRAIN_FRACTION) -> DataFrame:
-    """Deterministic Bernoulli training sample keyed on vec_id."""
+def _train_pred(fraction: float = TRAIN_FRACTION) -> "F.Column":
+    """Deterministic Bernoulli training-sample predicate keyed on vec_id."""
     if not 0.0 < fraction <= 1.0:
         raise ValueError(f"train fraction must be in (0,1], got {fraction}")
     if fraction >= 1.0:
-        return df
+        return F.lit(True)
     cutoff = int(round(fraction * _TRAIN_BUCKETS))
     h = F.expr(
         f"conv(substring(md5(concat('{TRAIN_SALT}|', "
         f"CAST(vec_id AS STRING))), 1, 8), 16, 10)"
     ).cast("bigint")
-    return df.filter((h % _TRAIN_BUCKETS) < cutoff)
+    return (h % _TRAIN_BUCKETS) < cutoff
+
+
+def _np_dot_fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """numpy twin of :func:`dot_fold` over the last axis:
+    ``floor((x*y)*1e12)`` per term, an exact int64 sum, then a cast to
+    double and one divide by 1e12 — the same IEEE operations in the
+    same order, so every dot is bit-identical to the SQL fold."""
+    scale = float(DOT_SCALE)
+    terms = np.floor((a * b) * scale).astype(np.int64)
+    return terms.sum(axis=-1).astype(np.float64) / scale
+
+
+def _exact_group_sums(
+    terms: np.ndarray, group: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, list]:
+    """Exact per-group column sums of int64 ``terms`` (n, d): returns
+    (group ids present, member counts, sums as Python ints, one list per
+    group). Each term is split into a signed high limb (``>> 32``) and
+    an unsigned 32-bit low limb; below 2^31 rows neither limb's int64
+    sum can overflow, and the two are recombined as Python ints — the
+    exact decimal(38,0) sum the SQL means take, at any member count."""
+    if len(terms) >= 2**31:
+        raise ValueError("exact group sums take fewer than 2^31 rows")
+    if not len(terms):
+        return group[:0], group[:0], []
+    order = np.argsort(group, kind="stable")
+    g, t = group[order], terms[order]
+    starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+    hi = np.add.reduceat(t >> 32, starts, axis=0)
+    lo = np.add.reduceat(t & 0xFFFFFFFF, starts, axis=0)
+    sums = [
+        [(int(h) << 32) + int(l) for h, l in zip(hr, lr)]
+        for hr, lr in zip(hi, lo)
+    ]
+    return g[starts], np.diff(np.r_[starts, len(g)]), sums
+
+
+_TRAIN_CHUNK_TERMS = 1 << 20  # rows × codewords × dims per scoring block
+
+
+def _lloyd_train_arrow(n_iters: int, metric: str):
+    """``mapInArrow`` kernel: every Lloyd round of one quantizer in ONE
+    task (the caller coalesces its input to one partition).
+
+    Input rows (vec_id, s, x, xn, __seed, __train): sub-quantizer ``s``
+    (always 0 for the k-means coarse quantizer), the (sub)vector ``x``
+    and its exact squared norm ``xn``, both computed in Spark. Seed rows
+    (``__seed``) initialise codeword ``vec_id`` of subspace ``s`` as
+    (x, xn); training rows (``__train``, the md5 sample evaluated in
+    Spark) are reassigned and averaged ``n_iters`` times. Emits the
+    trained (s, code, ce, cn) rows.
+
+    Arithmetic is the SQL spelling's, replicated term for term:
+    - scores use :func:`_np_dot_fold`; ``metric="cosine"`` is
+      ``dot / (sqrt(xn) * sqrt(cn))`` (k-means cells), ``"l2"`` is
+      ``-((xn - 2.0*dot) + cn)`` (PQ codes);
+    - the argmax takes the first maximum over codewords sorted by id, so
+      ties go to the lowest id, and ``np.argmax`` ranks NaN above every
+      number, as Spark's ordering does;
+    - means are ``floor(v*1e12)`` summed exactly
+      (:func:`_exact_group_sums`), then ``(double(sum)/1e12)/n``, and
+      ``cn`` is the dot fold of the new codeword with itself;
+    - a codeword that loses every member drops out (an absent codeword
+      scores ``-inf``; present scores are finite or NaN).
+
+    Memory: the task holds the training rows (sample rows × 64 doubles,
+    ~0.5 MB at sf0.1) plus one scoring block of at most
+    ``_TRAIN_CHUNK_TERMS`` doubles; no option sizes it."""
+
+    def fn(it):
+        import pyarrow as pa
+
+        batches = [b for b in it if b.num_rows]
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches).combine_chunks()
+        col = {n: t.column(n).chunk(0) for n in t.column_names}
+        n = t.num_rows
+        vec_id = col["vec_id"].to_numpy()
+        sub = col["s"].to_numpy().astype(np.int64)
+        x = col["x"].flatten().to_numpy().reshape(n, -1)
+        xn = col["xn"].to_numpy()
+        seed = col["__seed"].to_numpy(zero_copy_only=False)
+        train = col["__train"].to_numpy(zero_copy_only=False)
+
+        codes = np.unique(vec_id[seed])  # codeword ids, ascending
+        n_sub = int(sub.max()) + 1
+        cb = np.zeros((n_sub, len(codes), x.shape[1]))
+        cn = np.zeros((n_sub, len(codes)))
+        live = np.zeros((n_sub, len(codes)), dtype=bool)
+        si, ki = sub[seed], np.searchsorted(codes, vec_id[seed])
+        cb[si, ki], cn[si, ki], live[si, ki] = x[seed], xn[seed], True
+
+        tx, txn, tsub = x[train], xn[train], sub[train]
+        terms = np.floor(tx * float(MEAN_SCALE)).astype(np.int64)
+        step = max(1, _TRAIN_CHUNK_TERMS // max(1, cb[0].size))
+        for _ in range(n_iters):
+            best = np.empty(len(tx), dtype=np.int64)
+            for lo in range(0, len(tx), step):
+                hi = lo + step
+                ss = tsub[lo:hi]
+                dot = _np_dot_fold(tx[lo:hi, None, :], cb[ss])
+                if metric == "cosine":
+                    score = dot / (
+                        np.sqrt(txn[lo:hi])[:, None] * np.sqrt(cn[ss])
+                    )
+                else:
+                    score = -((txn[lo:hi, None] - 2.0 * dot) + cn[ss])
+                best[lo:hi] = np.argmax(
+                    np.where(live[ss], score, -np.inf), axis=1
+                )
+            gid, cnt, sums = _exact_group_sums(
+                terms, tsub * len(codes) + best
+            )
+            mean = (
+                np.array([[float(v) for v in r] for r in sums]).reshape(
+                    len(gid), x.shape[1]
+                )
+                / float(MEAN_SCALE)
+                / cnt[:, None]
+            )
+            si, ki = np.divmod(gid, len(codes))
+            cb[:], cn[:], live[:] = 0.0, 0.0, False
+            cb[si, ki], cn[si, ki], live[si, ki] = (
+                mean, _np_dot_fold(mean, mean), True
+            )
+        si, ki = np.nonzero(live)
+        ce = cb[si, ki]
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(si, pa.int32()),
+                pa.array(codes[ki], pa.int64()),
+                pa.ListArray.from_arrays(
+                    pa.array(np.arange(len(ce) + 1) * ce.shape[1], pa.int32()),
+                    pa.array(ce.ravel(), pa.float64()),
+                ),
+                pa.array(cn[si, ki], pa.float64()),
+            ],
+            names=["s", "code", "ce", "cn"],
+        )
+
+    return fn
+
+
+def _lloyd_train(
+    rows: DataFrame, n_seeds: int, n_iters: int, fraction: float,
+    metric: str, job: str,
+) -> list:
+    """Run :func:`_lloyd_train_arrow` over ``rows`` (vec_id, s, x, xn):
+    seeds are the rows with ``vec_id < n_seeds``, the training sample is
+    :func:`_train_pred`, both selected in Spark in one scan; the kernel
+    runs in one task, so training is ONE Spark job, described ``job``
+    (``<op>:<phase>``) for the status store and restored afterwards."""
+    feed = rows.select(
+        "vec_id", "s", "x", "xn",
+        (F.col("vec_id") < n_seeds).alias("__seed"),
+        _train_pred(fraction).alias("__train"),
+    ).filter("__seed OR __train")
+    sc = rows.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(job)
+    try:
+        return (
+            feed.coalesce(1)
+            .mapInArrow(
+                _lloyd_train_arrow(n_iters, metric),
+                "s int, code bigint, ce array<double>, cn double",
+            )
+            .collect()
+        )
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def kmeans_vectors(
@@ -523,17 +700,15 @@ def kmeans_vectors(
     Init = the first ``n_seeds`` vectors by vec_id (same deterministic
     seeding as :func:`ivf_cells`); each Lloyd round reassigns the
     TRAINING SAMPLE (``train_fraction`` of the corpus by deterministic
-    vec_id hash — see :func:`_train_sample`) to the nearest centroid
-    and recomputes centroids as the per-cell, per-dimension mean:
-    exact fixed-point SUMs keyed (cell, dim) with map-side partial
-    aggregation, overflow-proof via a decimal(38,0) accumulator.
-    Engine-exact: scaled-int sums and a pinned divide order make every
-    centroid component bit-identical in the DuckDB oracle, so cell
-    assignments — and therefore search results — hash-match. Cells
-    that lose all sampled members drop out (deterministically, in both
-    engines). Each round's K-row centroid table is collected and
-    re-entered as a literal (see :func:`_kmeans_state`), so the
-    unrolled Lloyd lineage does not grow with ``n_iters``.
+    vec_id hash — see :func:`_train_pred`) to the nearest centroid by
+    cosine and recomputes centroids as the per-cell, per-dimension mean
+    of exact fixed-point sums. All rounds run in one Arrow task
+    (:func:`_kmeans_state`), so training is one Spark job whatever
+    ``n_iters`` is. Engine-exact: scaled-int sums and a pinned divide
+    order make every centroid component bit-identical in the DuckDB
+    oracle, so cell assignments — and therefore search results —
+    hash-match. Cells that lose all sampled members drop out
+    (deterministically, in both engines).
 
     The final assignment is ONE in-row projection over the literal
     centroids (r15, guide §2.4), so callers that need (e, norm2, cell)
@@ -553,70 +728,27 @@ def _kmeans_state(
     dim: int = EMB_DIM,
     train_fraction: float = TRAIN_FRACTION,
 ) -> tuple[DataFrame, list]:
-    """(va, cent_rows): the Lloyd trainer returning the collected
-    centroid ROWS (the driver-side state each round materializes
-    anyway) so in-row consumers skip re-collecting the literal frame."""
+    """(va, cent_rows): the Lloyd trainer returning the centroid ROWS
+    (cell, ce, cn), so in-row consumers take them as literals.
+
+    The seed vectors and the training sample are selected in Spark in
+    one scan, and every Lloyd round runs in numpy inside one
+    ``mapInArrow`` task (:func:`_lloyd_train_arrow`, cosine argmax):
+    ONE Spark job, described ``kmeans:train``, in place of a grouped
+    means job and a driver collect per round. Only the FINAL assignment
+    scans the full corpus, as an in-row projection over the literal
+    centroids."""
     v = _vectors(embeddings)
-    # Lloyd refinement runs on the deterministic training sample (see
-    # _train_sample); only the FINAL assignment scans the full corpus.
-    # The sample is persisted across rounds — n_iters re-scans of the
-    # source would otherwise re-read parquet and recompute norms per
-    # round, and at 100 TB the training set is the bounded piece you
-    # want resident, exactly like FAISS keeping its train matrix in RAM.
-    tv = _spread(_train_sample(v, train_fraction)).persist()
-    # Seed centroids collected up front (n_seeds rows — the same bounded
-    # driver state every later round keeps anyway): with literal
-    # centroids, EVERY round's assignment is an in-row projection
-    # (guide §2.4) — the per-round crossJoin + struct-max exchange of
-    # the r14 spelling is gone, and each Lloyd round is exactly one
-    # grouped-means job over (cell, dim).
-    cent_rows = (
-        v.filter(F.col("vec_id") < n_seeds)
-        .select(
-            F.col("vec_id").alias("cell"),
-            F.col("e").alias("ce"),
-            F.col("norm2").alias("cn"),
-        )
-        .collect()
+    rows = v.select(
+        "vec_id", F.lit(0).alias("s"), F.col("e").alias("x"),
+        F.col("norm2").alias("xn"),
     )
-    scale = F.lit(float(MEAN_SCALE))
-    for _ in range(n_iters):
-        member = _with_cells_lit(tv, cent_rows)
-        # Per-cell per-dimension exact fixed-point means, keyed
-        # (cell, dim) after a posexplode rather than as `dim` separate
-        # wide aggregates: hash partial aggregation combines map-side,
-        # so the exchange still carries only K·d pre-aggregated rows,
-        # and the narrow plan codegens ~4× faster than the 64-column
-        # decimal aggregate it replaces (measured 1.07 s vs 4.02 s
-        # first-compile, 0.07 s vs 0.18 s warm, bit-identical output).
-        # decimal(38,0) accumulator (ADVICE r03): each member
-        # contributes up to ~1e12 per dimension, so a BIGINT sum
-        # overflows past ~9.2M members per cell under ANSI mode;
-        # decimal(38,0) holds ~1e26 members.
-        ex = member.select("cell", F.posexplode("e").alias("__p", "__v"))
-        sums = ex.groupBy("cell", "__p").agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(
-                F.floor(F.col("__v") * scale).cast("decimal(38,0)")
-            ).alias("__s"),
+    cent_rows = [
+        Row(cell=r["code"], ce=r["ce"], cn=r["cn"])
+        for r in _lloyd_train(
+            rows, n_seeds, n_iters, train_fraction, "cosine", "kmeans:train"
         )
-        comp = sums.select(
-            "cell",
-            "__p",
-            (F.col("__s").cast("double") / scale / F.col("__n")).alias("__c"),
-        )
-        cents = (
-            comp.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__p", "__c"))),
-                    lambda s: s["__c"],
-                ).alias("ce")
-            )
-            .withColumn("cn", F.expr(dot_fold("ce", "ce")))
-        )
-        cent_rows = cents.collect()
-    tv.unpersist()
+    ]
     return _with_cells_lit(_spread(v), cent_rows), cent_rows
 
 
@@ -640,8 +772,7 @@ def ivf_topk_kmeans(
     # probe ranking is the in-row sorted-slice over literal centroids
     # instead of a broadcast cross + row_number window. Search results
     # are bit-identical (same dots, same tie order).
-    va, cents = kmeans_vectors(embeddings, n_seeds, n_iters)
-    cent_rows = cents.collect()
+    va, cent_rows = _kmeans_state(embeddings, n_seeds, n_iters)
     vc = va.select("vec_id", "e", "norm2", "cell")
     q = _probe_cells_lit(
         va.filter(query_pred).select(
@@ -891,64 +1022,22 @@ def _pq_train_rows(
 
     Init = the subvectors of the first ``n_codes`` vectors by vec_id
     (deterministic, mirroring :func:`kmeans_vectors` seeding), refined
-    by ``n_iters`` Lloyd rounds run for ALL subspaces at once: the
-    centroid update is ONE grouped pass keyed (s, code) with
-    PQ_SUBDIM exact fixed-point decimal sums — M sub-quantizers never
-    cost M separate shuffles. Codewords that lose all members drop out
-    deterministically in both engines. Refinement runs on the
-    deterministic training sample (:func:`_train_sample`), persisted
-    across rounds; only code ASSIGNMENT (done by callers) sees the
-    full corpus. Returns the collected codebook ROWS (s, code, ce, cn)
-    — the same bounded M·K driver state every round materialized —
-    so callers assign codes IN-ROW over the literal codebook (r15,
-    guide §2.4): each round is ONE grouped-means job; the per-round
-    assignment crossJoin + argmin exchange of the r14 spelling is
-    gone. Arithmetic unchanged — codebooks are bit-identical."""
-    cb_rows = (
-        sv.filter(F.col("vec_id") < n_codes)
-        .select(
-            "s",
-            F.col("vec_id").alias("code"),
-            F.col("x").alias("ce"),
-            F.col("xn").alias("cn"),
-        )
-        .collect()
+    by ``n_iters`` Lloyd rounds for ALL subspaces at once, on the
+    deterministic training sample (:func:`_train_pred`): each
+    subvector goes to its nearest codeword by the exact fixed-point
+    squared distance (ties → lowest code), and each (s, code) becomes
+    the mean of its members' exact fixed-point sums. Codewords that
+    lose all members drop out deterministically in both engines. Every
+    round runs in numpy inside one ``mapInArrow`` task
+    (:func:`_lloyd_train_arrow`, vectorized over subspaces): ONE Spark
+    job, described ``pq:train``. Only code ASSIGNMENT (done by callers,
+    in-row over the literal codebook) sees the full corpus. Returns the
+    codebook ROWS (s, code, ce, cn); the arithmetic is the SQL
+    spelling's, so codebooks are bit-identical to the oracle's."""
+    return _lloyd_train(
+        sv.select("vec_id", "s", "x", "xn"),
+        n_codes, n_iters, train_fraction, "l2", "pq:train",
     )
-    tsv = _spread(_train_sample(sv, train_fraction)).persist()
-    scale = F.lit(float(MEAN_SCALE))
-    for _ in range(n_iters):
-        member = _assign_codes_member(tsv, cb_rows)
-        sums = member.groupBy("s", "code").agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[
-                F.sum(
-                    F.floor(F.col("x")[i] * scale).cast("decimal(38,0)")
-                ).alias(f"__s{i}")
-                for i in range(PQ_SUBDIM)
-            ],
-        )
-        cb = sums.select(
-            "s",
-            "code",
-            F.array(
-                *[
-                    F.col(f"__s{i}").cast("double") / scale / F.col("__n")
-                    for i in range(PQ_SUBDIM)
-                ]
-            ).alias("ce"),
-        ).withColumn("cn", F.expr(dot_fold("ce", "ce")))
-        cb_rows = cb.collect()
-    tsv.unpersist()
-    return cb_rows
-
-
-def _assign_codes_member(sv: DataFrame, cb_rows) -> DataFrame:
-    """``sv`` + its in-row ``code`` column (projection — the join-free
-    member frame the Lloyd means pass consumes)."""
-    code = F.expr(
-        _code_argmin_sql("x", "xn", "element_at(__cb, s + 1)")
-    )
-    return _cb_attach(sv, cb_rows).withColumn("code", code)
 
 
 def pq_topk(
@@ -1031,6 +1120,18 @@ def _ivf_residuals(v: DataFrame, cent_rows) -> DataFrame:
     )
 
 
+def _train_residual_codebooks(
+    embeddings: DataFrame, cent_rows, n_codes: int, n_iters: int
+) -> list:
+    """The IVF-PQ residual codebook rows: :func:`_pq_train_rows` over the
+    residual subvectors. Its input is the unspread scan, so training
+    stays one Spark job (a spread would add a shuffle stage)."""
+    res = _ivf_residuals(_vectors(embeddings), cent_rows)
+    return _pq_train_rows(
+        _subvectors(res.select("vec_id", "e")), n_codes, n_iters
+    )
+
+
 def _ivfpq_code_rows(res: DataFrame, cb_rows) -> DataFrame:
     """The stored IVF-PQ code grain (vec_id, s, code, cell) of a
     residual frame (:func:`_ivf_residuals`): all ``PQ_M`` sub-codes
@@ -1077,35 +1178,28 @@ def ivfpq_topk(
     broadcast), and the score aggregation partial-aggregates to
     ≤ |probed candidates| rows before its exchange.
 
-    The coarse-assignment and residual frames stay persisted for the
-    life of the returned lazy plan (the plan reads them; unpersisting
-    here would recompute the argmax cross per pass). A long-lived
-    session issuing many calls can pass ``cache_registry=[]`` — the
-    frames left cached are appended to it, to ``unpersist()`` once the
-    result is consumed (ADVICE r05; the serving path,
-    ``build_ivfpq_index``, already unpersists eagerly).
+    Both quantizers train in one Arrow task each (``kmeans:train`` and
+    ``pq:train``, one Spark job apiece); nothing is persisted, so
+    ``cache_registry`` (ADVICE r05) is accepted and left untouched.
     """
     if nprobe < 1 or nprobe > n_seeds:
         raise ValueError("nprobe must be in 1..n_seeds")
     # r15 (guide §2.4/§8): the whole index side — coarse assignment,
     # residual, PQ encode — is ONE in-row projection over the literal
-    # centroid/codebook state (both already materialize to the driver
-    # per training round): the r14 spelling's persisted cells frame,
-    # its two vec_id re-joins, the posexplode'd residual frame, the
-    # probe window, and the (cell, s, code) LUT join + grouped ADC
-    # exchange are all gone — the only exchanges left are the rank
-    # window and the caller's output sort. Training still runs on the
-    # persisted deterministic sample; every arithmetic step is
-    # unchanged, so the index and search results are bit-identical
-    # (oracle-verified). ``cache_registry`` is kept for API
-    # compatibility — nothing outlives the call anymore (training
-    # samples unpersist inside their loops).
+    # centroid/codebook rows (driver-side state the trainers return):
+    # the r14 spelling's persisted cells frame, its two vec_id
+    # re-joins, the posexplode'd residual frame, the probe window, and
+    # the (cell, s, code) LUT join + grouped ADC exchange are all gone —
+    # the only exchanges left are the rank window and the caller's
+    # output sort. Training reads the
+    # deterministic sample inside one Arrow task per quantizer; every
+    # arithmetic step is unchanged, so the index and search results are
+    # bit-identical (oracle-verified). ``cache_registry`` is kept for
+    # API compatibility — nothing outlives the call.
     del cache_registry
     va, cent_rows = _kmeans_state(embeddings, n_seeds, kmeans_iters)
+    cb_rows = _train_residual_codebooks(embeddings, cent_rows, n_codes, pq_iters)
     res = _ivf_residuals(_spread(_vectors(embeddings)), cent_rows)
-    cb_rows = _pq_train_rows(
-        _subvectors(res.select("vec_id", "e")), n_codes, pq_iters
-    )
     codes = (
         _cb_attach(res, cb_rows)
         .withColumn("codes", F.expr(_codes_arr_sql("e")))
@@ -1189,12 +1283,11 @@ def build_ivfpq_index(
     # r15: same in-row build as ivfpq_topk (guide §2.4) — assignment,
     # residual and encode are one projection; the stored layout and
     # every stored value are byte-identical to the r14 build (doubles
-    # round-trip parquet bit-exactly; asserted in tests).
+    # round-trip parquet bit-exactly; asserted in tests). Each quantizer
+    # trains in one Arrow task over the sample (one Spark job apiece).
     _, cent_rows = _kmeans_state(embeddings, n_seeds, kmeans_iters)
+    cb_rows = _train_residual_codebooks(embeddings, cent_rows, n_codes, pq_iters)
     res = _ivf_residuals(_spread(_vectors(embeddings)), cent_rows)
-    cb_rows = _pq_train_rows(
-        _subvectors(res.select("vec_id", "e")), n_codes, pq_iters
-    )
     cents = spark.createDataFrame(
         cent_rows, schema="cell bigint, ce array<double>, cn double"
     )

@@ -442,17 +442,12 @@ def read_table_skipping(
     meta = _load_snapshot_meta(vdir) or {}
 
     # one JSON read (footer fallback inside), validated against the
-    # live listing by history_file_stats
-    kept_all = []
-    for s in history_file_stats(path, list(bounds), version=version):
-        skip = False
-        for c, (lo, hi) in bounds.items():
-            mn, mx = s["mins"].get(c), s["maxs"].get(c)
-            if mn is not None and mx is not None and (mn > hi or mx < lo):
-                skip = True
-                break
-        if not skip:
-            kept_all.append(s["path"])
+    # live listing by _dir_file_stats
+    kept_all = [
+        fpath
+        for fpath, _n, mins, maxs in _dir_file_stats(vdir, list(bounds))
+        if not _bounds_exclude(mins, maxs, bounds)
+    ]
     parts, labels = [], []
     for lay in _snapshot_layouts(vdir, meta):
         lay_dir = os.path.normpath(os.path.join(vdir, lay["dir"]))
@@ -838,58 +833,71 @@ def history_file_stats(
             f"retained sequences: {sorted(avail) or 'none'}"
         )
     vdir = os.path.join(path, avail[version])
+    return [
+        {
+            "version": version,
+            "path": fpath,
+            "n_rows": n_rows,
+            "mins": mins,
+            "maxs": maxs,
+        }
+        for fpath, n_rows, mins, maxs in _dir_file_stats(vdir, cols)
+    ]
+
+
+def _dir_file_stats(vdir: str, cols) -> list[tuple]:
+    """(path, n_rows, mins, maxs) for ``cols`` of every data file under
+    one snapshot (or plain parquet) directory, relpath-sorted — the one
+    census read behind :func:`history_file_stats` and
+    :func:`file_skip_report`.
+
+    Served from the inline census (:func:`_load_census`) when it is
+    complete against a live listing (cheap metadata walk, still zero
+    footer opens — code-review r13), checked both ways: every LIVE data
+    file must have an entry covering ``cols``, or skip planning would
+    silently treat the uncensused file as nonexistent and drop its rows
+    — breaking the superset guarantee; conversely, entries whose file a
+    concurrent retention sweep removed are dropped. Otherwise (no
+    census, an older sharded census, a missing file or column) every
+    live file's footer is read (:func:`_footer_minmax`), skipping files
+    that vanish mid-walk. Both branches list the same DATA-file universe
+    (:func:`_iter_data_files`: change-feed files excluded) in relpath
+    order (ADVICE r13: walk order puts root files before subdirs, which
+    is not string order)."""
+    live = dict(_iter_data_files(vdir))
     entries = _load_census(vdir)
-    if entries is not None:
-        # Completeness is checked BOTH ways against a live listing
-        # (cheap metadata walk, still zero footer opens — code-review
-        # r13): every LIVE data file must have a census entry covering
-        # the requested columns, or skip planning would silently treat
-        # the uncensused file as nonexistent and drop its rows —
-        # breaking the superset guarantee; conversely, entries whose
-        # file a concurrent retention sweep removed are dropped, the
-        # vanished-file tolerance the footer walk always had.
-        live = {rel for rel, _p in _iter_data_files(vdir)}
-        if all(
-            rel in entries
-            and set(cols) <= set(entries[rel].get("mins", {}))
-            for rel in live
-        ):
-            return [
-                {
-                    "version": version,
-                    "path": os.path.join(vdir, rel),
-                    "n_rows": e["n_rows"],
-                    "mins": {c: _stat_from_json(e["mins"][c]) for c in cols},
-                    "maxs": {c: _stat_from_json(e["maxs"][c]) for c in cols},
-                }
-                for rel, e in sorted(entries.items())
-                if rel in live
-            ]
-        # a live file is missing from the census, or a requested column
-        # is — degrade to live footers
+    if entries is not None and all(
+        rel in entries and set(cols) <= set(entries[rel].get("mins", {}))
+        for rel in live
+    ):
+        return [
+            (
+                live[rel],
+                e["n_rows"],
+                {c: _stat_from_json(e["mins"][c]) for c in cols},
+                {c: _stat_from_json(e["maxs"][c]) for c in cols},
+            )
+            for rel, e in sorted(entries.items())
+            if rel in live
+        ]
     out = []
-    for rel, fpath in _iter_data_files(vdir):
+    for rel in sorted(live):
         try:
-            n_rows, mins, maxs = _footer_minmax(fpath, cols)
+            n_rows, mins, maxs = _footer_minmax(live[rel], list(cols))
         except OSError:
             continue
-        out.append(
-            (
-                rel,
-                {
-                    "version": version,
-                    "path": fpath,
-                    "n_rows": n_rows,
-                    "mins": mins,
-                    "maxs": maxs,
-                },
-            )
-        )
-    # relpath order, matching the manifest-served branch (ADVICE r13:
-    # the 'pinned identical' equivalence must hold by LIST order, not
-    # just keyed by path — walk order puts root files before subdirs,
-    # which is not string order)
-    return [e for _rel, e in sorted(out)]
+        out.append((live[rel], n_rows, mins, maxs))
+    return out
+
+
+def _bounds_exclude(mins: dict, maxs: dict, bounds: dict) -> bool:
+    """The file-skip rule: True iff some bounded column has complete
+    stats and ``min > hi or max < lo`` (None bounds never skip)."""
+    for c, (lo, hi) in bounds.items():
+        mn, mx = mins.get(c), maxs.get(c)
+        if mn is not None and mx is not None and (mn > hi or mx < lo):
+            return True
+    return False
 
 
 _CDF_RETAINED = "_cdf"  # table-level home for feeds preserved past
@@ -2503,56 +2511,13 @@ def file_skip_report(
     cluster output, driver testdata) fall back to the footer walk —
     the manifest derived from the files themselves.
     """
-    def _decide(n_rows, mins, maxs, fpath):
-        skip = False
-        for c, (lo, hi) in bounds.items():
-            if (
-                mins.get(c) is not None
-                and maxs.get(c) is not None
-                and (mins[c] > hi or maxs[c] < lo)
-            ):
-                skip = True
-                break
-        return {
+    return [
+        {
             "path": fpath,
             "n_rows": n_rows,
             "mins": mins,
             "maxs": maxs,
-            "skip": skip,
+            "skip": _bounds_exclude(mins, maxs, bounds),
         }
-
-    entries = _load_census(path)
-    if entries is not None:
-        # both-ways completeness vs a live listing (code-review r13):
-        # an uncensused live file must force the footer fallback, and
-        # swept files' entries are dropped — same rules as
-        # history_file_stats
-        live = {rel for rel, _p in _iter_data_files(path)}
-        if all(
-            rel in entries
-            and set(bounds) <= set(entries[rel].get("mins", {}))
-            for rel in live
-        ):
-            return [
-                _decide(
-                    e["n_rows"],
-                    {c: _stat_from_json(e["mins"][c]) for c in bounds},
-                    {c: _stat_from_json(e["maxs"][c]) for c in bounds},
-                    os.path.join(path, rel),
-                )
-                for rel, e in sorted(entries.items())
-                if rel in live
-            ]
-    out = []
-    # _iter_data_files, not a raw glob (ADVICE r13): the fallback must
-    # report the same DATA-file universe as the manifest-served branch
-    # — a glob would include parquet under _change_data, giving a
-    # snapshot with a CDF extra, meaningless skip rows only in fallback
-    # mode. Sorted by relpath to match the manifest branch's order.
-    for _rel, f in sorted(_iter_data_files(path)):
-        # shared footer walk (code-review r12) — a column with ANY
-        # stats-less row group comes back None and can never justify a
-        # skip (the falsely-narrow-bounds hole)
-        n_rows, mins, maxs = _footer_minmax(f, list(bounds))
-        out.append(_decide(n_rows, mins, maxs, f))
-    return out
+        for fpath, n_rows, mins, maxs in _dir_file_stats(path, list(bounds))
+    ]

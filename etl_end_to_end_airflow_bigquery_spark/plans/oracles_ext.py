@@ -95,7 +95,7 @@ _PAIRS_CTE = f"""
 _SCALE = "1000000000000.0"
 
 # Quantizer training-sample predicate — mirrors
-# similarity._train_sample (deterministic md5 bucket of vec_id), so
+# similarity._train_pred (deterministic md5 bucket of vec_id), so
 # Lloyd refinement sees the identical training rows in both engines.
 from ..operators.similarity import (  # noqa: E402
     TRAIN_FRACTION as _TRAIN_FRACTION,
@@ -957,11 +957,12 @@ def _kmeans_ivf_oracle(
     """Generated oracle for ``ivf_topk_kmeans``: unrolls the fixed Lloyd
     rounds as CTE layers. Per round: assignment (argmax cosine over the
     current centroids, ties → lowest cell) then per-cell per-dimension
-    exact fixed-point means — the same scaled-int BIGINT arithmetic and
-    pinned divide order as ``similarity.kmeans_vectors``, so centroid
+    exact fixed-point means — the same scaled-int arithmetic and pinned
+    divide order as the numpy Lloyd kernel behind
+    ``similarity.kmeans_vectors`` (``_lloyd_train_arrow``), so centroid
     components (and therefore cells and search results) are
     bit-identical across engines. Lloyd rounds read only the ``vns``
-    training sample (similarity._train_sample's md5-bucket predicate);
+    training sample (similarity._train_pred's md5-bucket predicate);
     the final assignment and search read the full corpus."""
 
     def assign(
@@ -981,9 +982,9 @@ def _kmeans_ivf_oracle(
 
     def means(a_cte: str, m_name: str, c_name: str) -> str:
         # DECIMAL(38,0) accumulator mirrors the Spark side's
-        # overflow-proof sum (DuckDB would promote to HUGEINT anyway;
-        # the explicit cast keeps both engines' arithmetic declared
-        # identical).
+        # overflow-proof exact sum (similarity._exact_group_sums;
+        # DuckDB would promote to HUGEINT anyway — the explicit cast
+        # keeps both engines' arithmetic declared identical).
         sums = ",\n                   ".join(
             f"SUM(CAST(FLOOR(vns.e[{i + 1}] * {_SCALE}) AS DECIMAL(38,0)))"
             f" AS s{i}"
@@ -1359,7 +1360,8 @@ def _pq_oracle(
     """Generated oracle for ``pq_topk_adc``: per-subspace Lloyd rounds
     unrolled as CTE layers, then ADC scoring — the same exact
     fixed-point dots, scaled-int centroid means, and pinned tie rules
-    as ``similarity._pq_train_rows``/``pq_topk``, so codebooks, code
+    as ``similarity._pq_train_rows`` (its numpy Lloyd kernel) and
+    ``pq_topk``'s in-row encode, so codebooks, code
     assignments, and ADC scores are bit-identical across engines.
     Lloyd rounds read only the ``svns`` training sample; the final
     code assignment and search read the full corpus."""

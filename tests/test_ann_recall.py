@@ -196,24 +196,83 @@ def test_ivf_nprobe_validation(spark):
         S.ann_lsh_topk(spark, emb, probe_hamming=2)
 
 
-def test_kmeans_centroid_sum_survives_past_int64(spark):
-    # The centroid-mean accumulator shape from kmeans_vectors: each
-    # member contributes floor(e_i * 1e12) ~ 1e12, so a BIGINT sum
-    # overflows past ~9.2M members per cell (ARITHMETIC_OVERFLOW under
-    # the session's ANSI mode). 10M members sits past that boundary —
-    # the decimal(38,0) accumulator must come back exact (ADVICE r03).
+def test_kmeans_centroid_sum_survives_past_int64():
+    # The centroid-mean accumulator of the Lloyd kernel: each member
+    # contributes floor(e_i * 1e12) ~ 1e12, so an int64 sum overflows
+    # past ~9.2M members per cell. 10M members sits past that boundary —
+    # the exact-sum helper must come back exact (ADVICE r03).
     n = 10_000_000
-    scale = F.lit(float(S.MEAN_SCALE))
-    out = (
-        spark.range(n)
-        .select(F.lit(0).alias("cell"), F.lit(1.0).alias("v"))
-        .groupBy("cell")
-        .agg(
-            F.sum(F.floor(F.col("v") * scale).cast("decimal(38,0)")).alias("s")
-        )
-        .collect()
+    terms = np.full((n, 1), int(float(S.MEAN_SCALE)), dtype=np.int64)
+    ids, counts, sums = S._exact_group_sums(terms, np.zeros(n, np.int64))
+    assert list(ids) == [0] and list(counts) == [n]
+    assert sums[0][0] == n * 10**12
+
+
+def _train_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group: (result, job ids), counted
+    once the listener bus has delivered every job start."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"train_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "trainer job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _job_description(spark, job_id):
+    job = spark.sparkContext._jsc.sc().statusStore().job(job_id)
+    return job.description().get() if job.description().isDefined() else None
+
+
+def test_trainers_run_one_named_job_and_restore_description(spark, clustered):
+    """Each quantizer trains in ONE Spark job (the whole Lloyd loop runs
+    in one Arrow task), named by its job description, and the caller's
+    own description is back in place afterwards."""
+    sc = spark.sparkContext
+    _, km_jobs = _train_jobs(spark, lambda: S._kmeans_state(clustered))
+    assert len(km_jobs) == 1
+    assert _job_description(spark, km_jobs[0]) == "kmeans:train"
+    sv = S._subvectors(S._vectors(clustered))
+    _, pq_jobs = _train_jobs(
+        spark, lambda: S._pq_train_rows(sv, S.PQ_K, S.PQ_ITERS)
     )
-    assert int(out[0]["s"]) == n * 10**12
+    assert len(pq_jobs) == 1
+    assert _job_description(spark, pq_jobs[0]) == "pq:train"
+    sc.setJobDescription("caller")
+    try:
+        S._pq_train_rows(sv, S.PQ_K, S.PQ_ITERS)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_tied_seeds_send_every_member_to_the_lower_cell(spark):
+    """Two identical seeds tie on every score: every member goes to the
+    lower cell / code, and the higher one drops out — k-means (cosine
+    argmax) and PQ (squared-distance argmin) alike."""
+    rng = np.random.RandomState(3)
+    base = [float(x) for x in np.float32(rng.randn(S.EMB_DIM) * 0.1)]
+    rows = [(0, base, 0), (1, base, 0)] + [
+        (i, [float(x) for x in np.float32(rng.randn(S.EMB_DIM) * 0.1)], 0)
+        for i in range(2, 40)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    _, cents = S._kmeans_state(emb, n_seeds=2, n_iters=1, train_fraction=1.0)
+    assert [r["cell"] for r in cents] == [0]
+    # the surviving centroid is the exact mean of every vector
+    e = np.array([r[1] for r in rows], dtype=np.float64)
+    terms = np.floor(e * float(S.MEAN_SCALE)).astype(np.int64)
+    want = [(float(int(t)) / float(S.MEAN_SCALE)) / len(rows) for t in terms.sum(0)]
+    assert list(cents[0]["ce"]) == want
+    sv = S._subvectors(S._vectors(emb))
+    cb = S._pq_train_rows(sv, n_codes=2, n_iters=1, train_fraction=1.0)
+    assert sorted((r["s"], r["code"]) for r in cb) == [(s, 0) for s in range(S.PQ_M)]
 
 
 def test_pq_adc_recall(spark, clustered, cluster_truth):
@@ -243,11 +302,14 @@ def test_pq_codebook_shape_and_code_range(spark, clustered):
     assert {r.s for r in rows} == set(range(S.PQ_M))
     assert all(0 <= r.code < S.PQ_K for r in rows)
     assert all(len(r.ce) == S.PQ_SUBDIM for r in rows)
-    codes = S._assign_codes_member(sv, rows)
+    codes = (
+        S._cb_attach(S._vectors(clustered), rows)
+        .select(F.posexplode(F.expr(S._codes_arr_sql("e"))).alias("s", "code"))
+    )
     n = clustered.count()
     assert codes.count() == n * S.PQ_M  # every vector fully encoded
     trained = {(r.s, r.code) for r in rows}
-    assert {(r.s, r.code) for r in codes.select("s", "code").collect()} <= trained
+    assert {(r.s, r.code) for r in codes.collect()} <= trained
 
 
 def test_ivfpq_recall_on_clustered(spark, clustered, cluster_truth):

@@ -77,7 +77,6 @@ BNLJ_OK = {
     "ann_lsh_multitable",
     "ivf_topk",
     "ivf_topk_nprobe",
-    "ivf_topk_kmeans",  # K-centroid broadcast per Lloyd round + probe rank
     "embedding_near_dups",
     "knn_graph",  # same 8-row hyperplane broadcast as ann_lsh_topk
     "decontaminate_embeddings",  # same 8-row hyperplane broadcast
@@ -88,7 +87,6 @@ BNLJ_OK = {
     "curated_corpus_v3",  # same 1-row LM-normalizer broadcast as unigram
     "bigram_logprob_docs",  # 1-row (T, V) LM-normalizer scalar broadcast
     "mix_sources_tokens",  # 1-row (total, n_sources) scalar broadcast
-    "semantic_dedup_kmeans",  # K-centroid broadcast per Lloyd round
     "ivfpq_topk_adc",  # K-centroid + M*K-codebook broadcasts + probe rank
     # r15 in-row ADC: the one-row codebook broadcast (_cb_attach) and
     # the 5-row query-LUT broadcast cross replace the (s, code) join +
@@ -138,10 +136,6 @@ EXCHANGES_OK = {
     # near_dups' pipeline with the bucketed frame filtered into train /
     # eval sides (one extra keyed exchange); fixed depth, no blowup.
     "decontaminate_embeddings",
-    # fixed-depth iterative quantizer: each Lloyd round is one bounded
-    # K-cell groupBy + one per-vector rank window; exchanges scale with
-    # the (constant) iteration count, never with data size.
-    "ivf_topk_kmeans",
     # fixed pipeline depth: tf agg, df agg, token join, per-doc rank —
     # four keyed shuffles regardless of corpus size.
     "tfidf_top_terms",
@@ -177,10 +171,6 @@ EXCHANGES_OK = {
     # under 6 exchanges alone) + the dedup window; fixed pipeline
     # depth, not data-size amplification.
     "curated_corpus_v3",
-    # fixed-depth Lloyd quantizer (exempted above as ivf_topk_kmeans)
-    # + one cell-keyed self-join; exchanges scale with the constant
-    # iteration count.
-    "semantic_dedup_kmeans",
     # two inherent corpus passes (per-source totals, then the bucket
     # cut) + the bounded checkpointed rates table; fixed depth.
     "mix_sources_tokens",
@@ -197,18 +187,10 @@ EXCHANGES_OK = {
     # relational.global_cumsum) executes it once; the deduplicated
     # depth is ~4 keyed shuffles, fixed.
     "session_concurrency_daily",
-    # coarse quantizer (exempted as ivf_topk_kmeans) + residual PQ
-    # round + ADC aggregation; exchanges scale with the constant
-    # iteration counts, never with data size.
-    "ivfpq_topk_adc",
     # demo query reports sketch estimate NEXT TO the exact distinct
     # count: the exact branch's expand+shuffle exists only for the
     # side-by-side; the sketch itself is two bounded-state aggregates.
     "hll_distinct_users",
-    # the two-stage retrieval composes the full IVF-PQ build (exempted
-    # as ivfpq_topk_adc) + a bounded k*fanout re-rank join; fixed
-    # pipeline depth.
-    "ivfpq_rerank_topk",
     # r13 serving path: stored-index probe search (reads the persisted
     # centroids/codebooks/codes — the training exchanges happen at
     # BUILD time inside the same gated fixture) + exact rerank of the
