@@ -5,18 +5,45 @@ Reference analog: the BigQuery table scan (`client.query(sql)`,
 ``spark.read.parquet`` — Catalyst handles predicate pushdown and column
 pruning, so callers should express filters/projections on the returned
 DataFrame rather than pre-materializing.
+
+Like the BigQuery scan, a table scan starts no Spark job once its schema
+is known: :func:`read_parquet` plans every single-path read with an
+explicit schema — the caller's, Spark's row schema from the first data
+file's footer, or Spark's own inferred schema cached per process — so
+only the first read of a non-Spark-written file pays the one-task
+schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import local_cpus
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Footer key under which Spark's parquet writer stores the row schema as
+# JSON; Spark's own schema inference reads the same key.
+SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
+# The session confs that change the schema Spark infers for a parquet
+# path; mergeSchema first, because it also rules out the footer source.
+_INFER_CONFS = (
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# Inferred schemas by (real path, listing, confs); oldest evicted first.
+_INFERRED: dict[tuple, StructType] = {}
+_INFERRED_MAX = 256
+_INFERRED_LOCK = threading.Lock()
 
 
 def _tune(spark: SparkSession) -> None:
@@ -60,7 +87,90 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one synthetic table. Plain columnar scan; filters push down."""
     _tune(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` for one path, planned with a known
+    schema so building the DataFrame starts no Spark job. The schema is,
+    in order: ``schema`` (a write-then-read-back site passes the frame
+    it just wrote); Spark's row schema from the footer of the first data
+    file (:func:`footer_schema`); Spark's own inferred schema, cached
+    per process under the real path, the size and mtime_ns of every
+    listed file, and the :data:`_INFER_CONFS` values — so a rewritten
+    table or a flipped conf infers again. Only inferred schemas are
+    cached. A path ``os`` cannot stat (missing, or a non-local URI)
+    goes to Spark as is, which reports it."""
+    if schema is None:
+        confs = tuple(spark.conf.get(k) for k in _INFER_CONFS)
+        try:
+            if confs[0] != "true":
+                schema = footer_schema(path)
+            if schema is None:
+                key = (os.path.realpath(path), tuple(_listing(path)), confs)
+        except OSError:
+            return spark.read.parquet(path)
+        if schema is None:
+            schema = _INFERRED.get(key)
+        if schema is None:
+            df = spark.read.parquet(path)
+            # a copy: StructType.add mutates, and df.schema is the caller's
+            inferred = StructType.fromJson(df.schema.jsonValue())
+            with _INFERRED_LOCK:
+                if len(_INFERRED) >= _INFERRED_MAX:
+                    del _INFERRED[next(iter(_INFERRED))]
+                _INFERRED[key] = inferred
+            return df
+    return spark.read.schema(schema).parquet(path)
+
+
+def footer_schema(path: str) -> StructType | None:
+    """Spark's row schema (:data:`SPARK_ROW_META`) from the footer of
+    the first ``.parquet`` data file under ``path`` (the file itself, or
+    a directory walked sorted), read on the driver with pyarrow; None
+    when there is no such file or it was not written by Spark. Hive
+    partition columns are not in footers: a read with this schema gets
+    them from the directory names, as an inferred read does."""
+    for fpath in _spark_files(path):
+        if fpath.endswith(".parquet"):
+            import pyarrow.parquet as pq
+
+            raw = (pq.ParquetFile(fpath).metadata.metadata or {}).get(
+                SPARK_ROW_META
+            )
+            return None if raw is None else StructType.fromJson(
+                json.loads(raw.decode("utf-8"))
+            )
+    return None
+
+
+def _spark_files(path: str):
+    """Yield every file Spark's file index lists under ``path`` (the
+    path itself when it is a file), directories walked sorted: names
+    starting with ``.``, or with ``_`` and holding no ``=`` (``_SUCCESS``,
+    ``_change_data``), are skipped."""
+    if not os.path.isdir(path):
+        yield path
+        return
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        for f in sorted(files):
+            if not _hidden(f):
+                yield os.path.join(root, f)
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _listing(path: str):
+    """(file, size, mtime_ns) of each file :func:`_spark_files` lists —
+    the inferred-schema cache's view of the table's contents."""
+    for fpath in _spark_files(path):
+        st = os.stat(fpath)
+        yield fpath, st.st_size, st.st_mtime_ns
 
 
 def read_partition_evolved(

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import read_parquet
 from .relational import round_half_up
 
 
@@ -149,7 +150,7 @@ def fold_signed_batch_versioned(
     replay-idempotent BY CONSTRUCTION, the same guarantee
     ``report_merge_batch`` proves for the merge sink (pytest-verified
     in ``tests/test_incremental.py``)."""
-    stored = spark.read.parquet(prev_path)
+    stored = read_parquet(spark, prev_path)
     merge_avg_state(stored, batch_state, keys).write.mode(
         "overwrite"
     ).parquet(next_path)

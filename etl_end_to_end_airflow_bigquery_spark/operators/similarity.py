@@ -35,6 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..io import read_parquet
 from ..io import spread_small_scan as _spread  # guide §2.5
 
 N_PLANES = 8
@@ -1326,9 +1327,9 @@ def search_ivfpq_index(
     # the posexplode'd LUT frame disappear from the search plan. The
     # code-table scan and its (cell, s, code) scoring join are
     # unchanged (the stored grain IS (vec_id, s, code)).
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    codes = spark.read.parquet(f"{path}/codes")
+    cent_rows = read_parquet(spark, f"{path}/centroids").collect()
+    cb_rows = read_parquet(spark, f"{path}/codebooks").collect()
+    codes = read_parquet(spark, f"{path}/codes")
 
     v = _vectors(embeddings)
     q = v.filter(query_pred).select(
@@ -1413,8 +1414,8 @@ def add_to_ivfpq_index(
     :func:`build_ivfpq_index` runs, so a vector added here stores the
     same (vec_id, s, code, cell) rows a build over it would.
     """
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
+    cent_rows = read_parquet(spark, f"{path}/centroids").collect()
+    cb_rows = read_parquet(spark, f"{path}/codebooks").collect()
     res = _ivf_residuals(_vectors(new_embeddings), cent_rows)
     codes = _ivfpq_code_rows(res, cb_rows)
     codes.write.mode("append").partitionBy("cell").parquet(f"{path}/codes")

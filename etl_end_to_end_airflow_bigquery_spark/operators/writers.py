@@ -90,6 +90,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..io import SPARK_ROW_META, footer_schema, union_layouts
 
 _CURRENT_PTR = "_CURRENT"
 _LEDGER = "_COMMITS"
@@ -269,8 +272,6 @@ def read_table(
     ]
     if not meta.get("layouts"):
         return frames[0]
-    from ..io import union_layouts
-
     return union_layouts(spark, frames, lay_dirs)
 
 
@@ -279,11 +280,11 @@ def _layout_schema(lay_dir: str, meta: dict | None, cols=()):
     or None for Spark's inferred read. Data columns come from the
     sidecar's ``spark_schema`` (flat, unpartitioned snapshots), else
     from the Spark row schema in the footer of the layout's first data
-    file (hive writes keep partition columns out of footers). Partition
-    columns ``cols`` take the types the sidecar recorded from the frame
-    that wrote them (``partition_types``) — never re-inferred from
-    directory names, so ``"007"`` stays a string and a bigint key stays
-    bigint. No sidecar, a file without Spark's footer key, or an
+    file (``io.footer_schema``; hive writes keep partition columns out
+    of footers). Partition columns ``cols`` take the types the sidecar
+    recorded from the frame that wrote them (``partition_types``) —
+    never re-inferred from directory names, so ``"007"`` stays a string
+    and a bigint key stays bigint. No sidecar, a file without Spark's footer key, or an
     untyped partition column: inference."""
     if not meta:
         return None
@@ -292,22 +293,13 @@ def _layout_schema(lay_dir: str, meta: dict | None, cols=()):
         return None
     recorded = meta.get("spark_schema")
     if recorded is None:
-        first = next(_iter_data_files(lay_dir), None)
-        if first is None:
+        schema = footer_schema(lay_dir)
+        if schema is None:
             return None
-        import pyarrow.parquet as pq
+    else:
+        import json
 
-        raw = (pq.ParquetFile(first[1]).metadata.metadata or {}).get(
-            _SPARK_ROW_META
-        )
-        if raw is None:
-            return None
-        recorded = raw.decode("utf-8")
-    import json
-
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType.fromJson(json.loads(recorded))
+        schema = StructType.fromJson(json.loads(recorded))
     for c in cols:
         schema = schema.add(StructField.fromJson(
             {"name": c, "type": types[c], "nullable": True, "metadata": {}}
@@ -466,8 +458,6 @@ def read_table_skipping(
     # same name+type union guard as the unpruned evolved read
     # (code-review r13: the pruned path must not silently coerce the
     # drift read_table raises on)
-    from ..io import union_layouts
-
     return union_layouts(spark, parts, labels)
 
 
@@ -527,9 +517,6 @@ def _footer_minmax(fpath, cols: list[str] | None = None):
 
 
 _SNAPSHOT_META = "_snapshot_meta.json"
-# Footer key under which Spark's parquet writer stores the row schema as
-# JSON; Spark's own schema inference reads the same key.
-_SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
 # Older commits could store the census as parquet shards under
 # v_*/_manifest; those files are metadata, never table data.
 _MANIFEST_DIR = "_manifest"
@@ -740,7 +727,7 @@ def _write_snapshot_meta(
             schemas.add(prev_schema)
             continue
         pf = pq.ParquetFile(fpath)
-        raw_schema = (pf.metadata.metadata or {}).get(_SPARK_ROW_META)
+        raw_schema = (pf.metadata.metadata or {}).get(SPARK_ROW_META)
         schemas.add(raw_schema.decode("utf-8") if raw_schema else None)
         n_rows, mins, maxs = _footer_minmax(pf)
         file_stats[rel] = {
@@ -2065,8 +2052,6 @@ def _merge_layouts(
             # to hold a zero-row file (a root-level one would become a
             # "." leaf beside the hive leaves): record the batch's
             # schema instead, so the snapshot reads as zero rows
-            from pyspark.sql.types import StructType
-
             empty_schema = StructType(
                 [f for f in upd.schema.fields if f.name not in cols]
             ).json()

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, read_parquet
 from ..sources.events import load_events
 from ..operators.relational import decimal_avg, decimal_sum, round_half_up
 from .queries import QueryFn
@@ -940,10 +940,9 @@ def ivm_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_path = os.path.join(
         session_tmpdir("ivm_state_"), "segment_state"
     )
-    seg_state(orders.filter(F.col("o_orderkey") % 7 != 0)).write.parquet(
-        state_path
-    )
-    stored = spark.read.parquet(state_path)
+    state = seg_state(orders.filter(F.col("o_orderkey") % 7 != 0))
+    state.write.parquet(state_path)
+    stored = read_parquet(spark, state_path, state.schema)
     delta = orders.filter(F.col("o_orderkey") % 7 == 0)
     merged = merge_avg_state(stored, seg_state(delta), ["c_mktsegment"])
     return (
@@ -988,12 +987,13 @@ def ivm_join_revenue_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stored view: the full base, materialized (the "100 TB" side)
     state_path = os.path.join(session_tmpdir("ivm_retract_"), "segment_state")
-    partial_avg_state(
+    state = partial_avg_state(
         orders.join(dim, orders["o_custkey"] == dim["c_custkey"]),
         ["c_mktsegment"],
         "o_totalprice",
-    ).write.parquet(state_path)
-    stored = spark.read.parquet(state_path)
+    )
+    state.write.parquet(state_path)
+    stored = read_parquet(spark, state_path, state.schema)
 
     # CDC batch → signed delta rows (the shared recipe — the contract
     # every IVM twin's oracle mirrors; see incremental.signed_cdc_batch)
@@ -1071,10 +1071,11 @@ def ivm_minmax_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stored view: per-group extremes over the full base, materialized
     state_path = os.path.join(session_tmpdir("ivm_minmax_"), "extrema_state")
-    base.groupBy("c_mktsegment").agg(
+    state = base.groupBy("c_mktsegment").agg(
         F.min("price").alias("min_price"), F.max("price").alias("max_price")
-    ).write.parquet(state_path)
-    stored = spark.read.parquet(state_path)
+    )
+    state.write.parquet(state_path)
+    stored = read_parquet(spark, state_path, state.schema)
 
     # CDC: delete %13; update %11 = delete-old + insert-new (+1000.00).
     # Both predicates are pure functions of o_orderkey, so the delete
@@ -1173,10 +1174,11 @@ def ivm_distinct_support(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stored state: support counts per (segment, custkey), materialized
     state_path = os.path.join(session_tmpdir("ivm_distinct_"), "support")
-    base.groupBy("c_mktsegment", "o_custkey").agg(
+    state = base.groupBy("c_mktsegment", "o_custkey").agg(
         F.count(F.lit(1)).alias("cnt")
-    ).write.parquet(state_path)
-    stored = spark.read.parquet(state_path)
+    )
+    state.write.parquet(state_path)
+    stored = read_parquet(spark, state_path, state.schema)
 
     # CDC batch → signed support deltas via the shared recipe; no value
     # column, so the reprice legs re-emit the key and must net to zero

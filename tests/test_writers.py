@@ -1456,12 +1456,14 @@ def test_delete_rows_job_count(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert n == 100
     assert read_table(spark, path).count() == 900
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 3, jobs
 
 
 def _jobs_in_group(spark, fn):
-    """Run ``fn`` under a fresh job group; return the group's job count."""
+    """Run ``fn`` under a fresh job group; return the group's job count,
+    read once the listener bus has delivered every job start."""
     import uuid
 
     sc = spark.sparkContext
@@ -1472,6 +1474,7 @@ def _jobs_in_group(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
