@@ -8,10 +8,10 @@ DataFrame rather than pre-materializing.
 
 Like the BigQuery scan, a table scan starts no Spark job once its schema
 is known: :func:`read_parquet` plans every single-path read with an
-explicit schema — the caller's, Spark's row schema from the first data
-file's footer, or Spark's own inferred schema cached per process — so
-only the first read of a non-Spark-written file pays the one-task
-schema-inference job.
+explicit schema — Spark's row schema from the first data file's footer,
+or Spark's own inferred schema cached per process — so only the first
+read of a non-Spark-written file pays the one-task schema-inference
+job.
 """
 
 from __future__ import annotations
@@ -90,87 +90,95 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def read_parquet(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` for one path, planned with a known
-    schema so building the DataFrame starts no Spark job. The schema is,
-    in order: ``schema`` (a write-then-read-back site passes the frame
-    it just wrote); Spark's row schema from the footer of the first data
-    file (:func:`footer_schema`); Spark's own inferred schema, cached
-    per process under the real path, the size and mtime_ns of every
-    listed file, and the :data:`_INFER_CONFS` values — so a rewritten
-    table or a flipped conf infers again. Only inferred schemas are
-    cached. A path ``os`` cannot stat (missing, or a non-local URI)
-    goes to Spark as is, which reports it."""
+    schema so building the DataFrame starts no Spark job. The schema is
+    Spark's row schema from the footer of the first data file
+    (:func:`footer_schema`), which covers every Spark-written path,
+    write-then-read-back sites included; else Spark's own inferred
+    schema, cached per process under the real path, the
+    :func:`_listing` of its data files and the :data:`_INFER_CONFS`
+    values — so a rewritten table or a flipped conf infers again. Only
+    inferred schemas are cached. A path ``os`` cannot stat (missing, or
+    a non-local URI) goes to Spark as is, which reports it."""
+    confs = tuple(spark.conf.get(k) for k in _INFER_CONFS)
+    try:
+        schema = footer_schema(path) if confs[0] != "true" else None
+        if schema is None:
+            key = (os.path.realpath(path), _listing(path), confs)
+    except OSError:
+        return spark.read.parquet(path)
     if schema is None:
-        confs = tuple(spark.conf.get(k) for k in _INFER_CONFS)
-        try:
-            if confs[0] != "true":
-                schema = footer_schema(path)
-            if schema is None:
-                key = (os.path.realpath(path), tuple(_listing(path)), confs)
-        except OSError:
-            return spark.read.parquet(path)
-        if schema is None:
-            schema = _INFERRED.get(key)
-        if schema is None:
-            df = spark.read.parquet(path)
-            # a copy: StructType.add mutates, and df.schema is the caller's
-            inferred = StructType.fromJson(df.schema.jsonValue())
-            with _INFERRED_LOCK:
-                if len(_INFERRED) >= _INFERRED_MAX:
-                    del _INFERRED[next(iter(_INFERRED))]
-                _INFERRED[key] = inferred
-            return df
+        schema = _INFERRED.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        # a copy: StructType.add mutates, and df.schema is the caller's
+        inferred = StructType.fromJson(df.schema.jsonValue())
+        with _INFERRED_LOCK:
+            if len(_INFERRED) >= _INFERRED_MAX:
+                del _INFERRED[next(iter(_INFERRED))]
+            _INFERRED[key] = inferred
+        return df
     return spark.read.schema(schema).parquet(path)
 
 
 def footer_schema(path: str) -> StructType | None:
     """Spark's row schema (:data:`SPARK_ROW_META`) from the footer of
-    the first ``.parquet`` data file under ``path`` (the file itself, or
-    a directory walked sorted), read on the driver with pyarrow; None
-    when there is no such file or it was not written by Spark. Hive
-    partition columns are not in footers: a read with this schema gets
-    them from the directory names, as an inferred read does."""
-    for fpath in _spark_files(path):
-        if fpath.endswith(".parquet"):
-            import pyarrow.parquet as pq
+    the first data file :func:`iter_data_files` lists under ``path``,
+    read on the driver with pyarrow; None when there is no such file or
+    it was not written by Spark. Hive partition columns are not in
+    footers: a read with this schema gets them from the directory
+    names, as an inferred read does."""
+    for _rel, fpath in iter_data_files(path):
+        import pyarrow.parquet as pq
 
-            raw = (pq.ParquetFile(fpath).metadata.metadata or {}).get(
-                SPARK_ROW_META
-            )
-            return None if raw is None else StructType.fromJson(
-                json.loads(raw.decode("utf-8"))
-            )
+        raw = (pq.ParquetFile(fpath).metadata.metadata or {}).get(
+            SPARK_ROW_META
+        )
+        return None if raw is None else StructType.fromJson(
+            json.loads(raw.decode("utf-8"))
+        )
     return None
 
 
-def _spark_files(path: str):
-    """Yield every file Spark's file index lists under ``path`` (the
-    path itself when it is a file), directories walked sorted: names
-    starting with ``.``, or with ``_`` and holding no ``=`` (``_SUCCESS``,
-    ``_change_data``), are skipped."""
-    if not os.path.isdir(path):
-        yield path
+def iter_data_files(path: str):
+    """Yield (relpath, abspath) for every parquet data file Spark's file
+    index reads under ``path`` (a file path yields itself). Directories
+    are walked SORTED (os.walk's native order is filesystem-dependent);
+    names starting with ``.``, or with ``_`` and holding no ``=``, are
+    hidden, as they are to Spark: ``_SUCCESS``, the change feed
+    ``_change_data``, an older commit's sharded census ``_manifest``,
+    ``_temporary``, ``.crc`` files. Walk order (root files before
+    subdir files) is not string order: callers that compare against a
+    relpath-sorted list sort their output."""
+    if os.path.isfile(path):
+        yield os.path.basename(path), path
         return
     for root, dirs, files in os.walk(path):
         dirs[:] = sorted(d for d in dirs if not _hidden(d))
-        for f in sorted(files):
-            if not _hidden(f):
-                yield os.path.join(root, f)
+        for fname in sorted(files):
+            if fname.endswith(".parquet") and not _hidden(fname):
+                fpath = os.path.join(root, fname)
+                yield os.path.relpath(fpath, path), fpath
 
 
 def _hidden(name: str) -> bool:
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
-def _listing(path: str):
-    """(file, size, mtime_ns) of each file :func:`_spark_files` lists —
-    the inferred-schema cache's view of the table's contents."""
-    for fpath in _spark_files(path):
+def _listing(path: str) -> tuple:
+    """(relpath, size, mtime_ns, ctime_ns, inode) of each data file
+    under ``path`` — the inferred-schema cache's view of its contents:
+    a rewrite, a replace by rename or a restored mtime changes it. A
+    same-size in-place rewrite within one filesystem timestamp tick
+    does not; Spark-written paths never reach the cache (their footer
+    is read instead). Raises OSError for a path ``os`` cannot stat."""
+    os.stat(path)
+    out = []
+    for rel, fpath in iter_data_files(path):
         st = os.stat(fpath)
-        yield fpath, st.st_size, st.st_mtime_ns
+        out.append((rel, st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino))
+    return tuple(out)
 
 
 def read_partition_evolved(

@@ -92,7 +92,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..io import SPARK_ROW_META, footer_schema, union_layouts
+from ..io import (
+    SPARK_ROW_META,
+    footer_schema,
+    iter_data_files,
+    union_layouts,
+)
 
 _CURRENT_PTR = "_CURRENT"
 _LEDGER = "_COMMITS"
@@ -348,7 +353,7 @@ def _layout_has_data(lay_dir: str) -> bool:
     """True iff any data file exists under the layout dir — a freshly
     evolved spec has an empty active layout until its first merge, and
     an empty dir would fail the parquet scan."""
-    return next(_iter_data_files(lay_dir), None) is not None
+    return next(iter_data_files(lay_dir), None) is not None
 
 
 def _nonempty_layout_dirs(vdir: str, meta: dict, layouts: list[dict]):
@@ -517,9 +522,6 @@ def _footer_minmax(fpath, cols: list[str] | None = None):
 
 
 _SNAPSHOT_META = "_snapshot_meta.json"
-# Older commits could store the census as parquet shards under
-# v_*/_manifest; those files are metadata, never table data.
-_MANIFEST_DIR = "_manifest"
 
 
 def _stat_to_json(v):
@@ -614,29 +616,6 @@ def _load_snapshot_meta(vdir: str) -> dict | None:
     return _parse_snapshot_meta(p, st.st_mtime_ns, st.st_size, head)
 
 
-def _iter_data_files(vdir: str):
-    """Yield (relpath, abspath) for every data parquet file under a
-    snapshot dir — change-feed files and an older commit's sharded
-    census (``_manifest``) excluded by os.sep-aware containment, so a
-    partitioned feed's subdirs stay excluded too. Directories are
-    walked SORTED (ADVICE r13: os.walk's native dir order is
-    filesystem-dependent, so footer-fallback consumers returned a
-    nondeterministic, mode-dependent ordering next to the manifest's
-    relpath-sorted entries); consumers that pin 'identical to the
-    manifest-served list' additionally sort their output by relpath —
-    walk order (root files before subdir files) is not string order."""
-    for root, dirs, files in os.walk(vdir):
-        dirs.sort()
-        rel = os.path.relpath(root, vdir)
-        parts = rel.split(os.sep)
-        if "_change_data" in parts or _MANIFEST_DIR in parts:
-            continue
-        for fname in sorted(files):
-            if fname.endswith(".parquet"):
-                fpath = os.path.join(root, fname)
-                yield os.path.relpath(fpath, vdir), fpath
-
-
 def _load_census(vdir: str) -> dict | None:
     """The snapshot's per-file stats census as {rel: entry}, read from
     its JSON sidecar. None when the snapshot predates the manifest, or
@@ -712,7 +691,7 @@ def _write_snapshot_meta(
 
     file_stats: dict = {}
     schemas: set = set()  # Spark row schema per data file; None = absent
-    for rel, fpath in _iter_data_files(vdir):
+    for rel, fpath in iter_data_files(vdir):
         try:
             st = os.stat(fpath)
         except OSError:
@@ -791,7 +770,7 @@ def history_file_stats(
     """Per-data-file column statistics for one retained snapshot — the
     input of file-skip planning (:func:`read_table_skipping`,
     :func:`file_skip_report`), scoped to a committed snapshot's data
-    files (:func:`_iter_data_files`: change-feed files excluded). One
+    files (:func:`io.iter_data_files`: change-feed files excluded). One
     dict per file: version, path, n_rows, mins/maxs for ``cols``.
 
     Served from the snapshot's COMMIT-TIME STATS MANIFEST
@@ -848,10 +827,10 @@ def _dir_file_stats(vdir: str, cols) -> list[tuple]:
     census, an older sharded census, a missing file or column) every
     live file's footer is read (:func:`_footer_minmax`), skipping files
     that vanish mid-walk. Both branches list the same DATA-file universe
-    (:func:`_iter_data_files`: change-feed files excluded) in relpath
+    (:func:`io.iter_data_files`: change-feed files excluded) in relpath
     order (ADVICE r13: walk order puts root files before subdirs, which
     is not string order)."""
-    live = dict(_iter_data_files(vdir))
+    live = dict(iter_data_files(vdir))
     entries = _load_census(vdir)
     if entries is not None and all(
         rel in entries and set(cols) <= set(entries[rel].get("mins", {}))
@@ -1799,8 +1778,8 @@ def _leaf_dirs(root: str) -> set[str]:
     written type= leaf next to an untouched one, and linking at day
     grain would duplicate the written one. ``_change_data`` and
     ``_manifest`` (parquet too, under a flat snapshot's root) are
-    skipped by :func:`_iter_data_files`' rule."""
-    return {os.path.dirname(rel) or "." for rel, _p in _iter_data_files(root)}
+    skipped by :func:`io.iter_data_files`' rule."""
+    return {os.path.dirname(rel) or "." for rel, _p in iter_data_files(root)}
 
 
 def _partition_tuple_filter(cols: list[str], tuples: list[tuple]):
@@ -2359,7 +2338,7 @@ def delete_rows(
                 _link_leaf(
                     os.path.join(lay_src, leaf), os.path.join(dst, leaf)
                 )
-        if emptied and next(_iter_data_files(vdir), None) is None:
+        if emptied and next(iter_data_files(vdir), None) is None:
             # every row deleted: a partitioned write of no rows leaves
             # no file, and a snapshot without one has no schema to read
             df, cols, leaf_dir = emptied

@@ -940,9 +940,10 @@ def ivm_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_path = os.path.join(
         session_tmpdir("ivm_state_"), "segment_state"
     )
-    state = seg_state(orders.filter(F.col("o_orderkey") % 7 != 0))
-    state.write.parquet(state_path)
-    stored = read_parquet(spark, state_path, state.schema)
+    seg_state(orders.filter(F.col("o_orderkey") % 7 != 0)).write.parquet(
+        state_path
+    )
+    stored = read_parquet(spark, state_path)
     delta = orders.filter(F.col("o_orderkey") % 7 == 0)
     merged = merge_avg_state(stored, seg_state(delta), ["c_mktsegment"])
     return (
@@ -987,13 +988,12 @@ def ivm_join_revenue_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stored view: the full base, materialized (the "100 TB" side)
     state_path = os.path.join(session_tmpdir("ivm_retract_"), "segment_state")
-    state = partial_avg_state(
+    partial_avg_state(
         orders.join(dim, orders["o_custkey"] == dim["c_custkey"]),
         ["c_mktsegment"],
         "o_totalprice",
-    )
-    state.write.parquet(state_path)
-    stored = read_parquet(spark, state_path, state.schema)
+    ).write.parquet(state_path)
+    stored = read_parquet(spark, state_path)
 
     # CDC batch → signed delta rows (the shared recipe — the contract
     # every IVM twin's oracle mirrors; see incremental.signed_cdc_batch)
@@ -1071,11 +1071,10 @@ def ivm_minmax_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stored view: per-group extremes over the full base, materialized
     state_path = os.path.join(session_tmpdir("ivm_minmax_"), "extrema_state")
-    state = base.groupBy("c_mktsegment").agg(
+    base.groupBy("c_mktsegment").agg(
         F.min("price").alias("min_price"), F.max("price").alias("max_price")
-    )
-    state.write.parquet(state_path)
-    stored = read_parquet(spark, state_path, state.schema)
+    ).write.parquet(state_path)
+    stored = read_parquet(spark, state_path)
 
     # CDC: delete %13; update %11 = delete-old + insert-new (+1000.00).
     # Both predicates are pure functions of o_orderkey, so the delete
@@ -1174,11 +1173,10 @@ def ivm_distinct_support(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stored state: support counts per (segment, custkey), materialized
     state_path = os.path.join(session_tmpdir("ivm_distinct_"), "support")
-    state = base.groupBy("c_mktsegment", "o_custkey").agg(
+    base.groupBy("c_mktsegment", "o_custkey").agg(
         F.count(F.lit(1)).alias("cnt")
-    )
-    state.write.parquet(state_path)
-    stored = read_parquet(spark, state_path, state.schema)
+    ).write.parquet(state_path)
+    stored = read_parquet(spark, state_path)
 
     # CDC batch → signed support deltas via the shared recipe; no value
     # column, so the reprice legs re-emit the key and must net to zero

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import os
 import uuid
 
 import pyarrow as pa
@@ -14,7 +15,9 @@ import pytest
 from pyspark.errors import AnalysisException
 
 from etl_end_to_end_airflow_bigquery_spark.io import (
+    _listing,
     footer_schema,
+    iter_data_files,
     load_table,
     read_parquet,
 )
@@ -78,6 +81,8 @@ def test_binary_as_string_flip_infers_again(spark, tmp_path):
 
 
 def test_spark_written_dir_reads_through_its_footer(spark, tmp_path):
+    """Also the IVM state read-backs' case: a frame written, then read
+    back at once, plans from the footer with no job."""
     frame = spark.range(20).selectExpr(
         "id AS k",
         "CAST(id * 1.25 AS DECIMAL(12, 2)) AS amount",
@@ -114,13 +119,41 @@ def test_arrow_written_dir_falls_back_to_inference(spark, tmp_path):
     assert second.schema == first.schema == spark.read.parquet(str(d)).schema
 
 
-def test_caller_schema_plans_with_no_job(spark, tmp_path):
-    path = str(tmp_path / "state")
-    state = spark.range(5).selectExpr("id AS g", "CAST(id AS DECIMAL(20, 0)) AS s")
-    state.write.parquet(path)
-    df, n = _jobs(spark, lambda: read_parquet(spark, path, state.schema))
-    assert n == 0
-    assert df.schema == spark.read.parquet(path).schema
+def test_data_files_skip_what_spark_hides(tmp_path):
+    for rel in (
+        "part-1.parquet",
+        "k=1/part-2.parquet",
+        "_k=2/part-3.parquet",
+        "_SUCCESS",
+        ".part-1.parquet.crc",
+        "_change_data/part-4.parquet",
+        "_manifest/shard.parquet",
+        ".hidden/part-5.parquet",
+        "notes.txt",
+    ):
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"")
+    rels = [rel for rel, _p in iter_data_files(str(tmp_path))]
+    assert rels == [
+        "part-1.parquet",
+        os.path.join("_k=2", "part-3.parquet"),
+        os.path.join("k=1", "part-2.parquet"),
+    ]
+    one = str(tmp_path / "part-1.parquet")
+    assert list(iter_data_files(one)) == [("part-1.parquet", one)]
+
+
+def test_listing_sees_a_replace_that_keeps_size_and_mtime(tmp_path):
+    path = tmp_path / "t.parquet"
+    _write_arrow(path, {"k": [1, 2]})
+    before = _listing(str(path))
+    st = os.stat(path)
+    _write_arrow(tmp_path / "u.parquet", {"j": [3, 4]})
+    os.replace(tmp_path / "u.parquet", path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    after = _listing(str(path))
+    assert after != before
+    assert after[0][2] == before[0][2]  # same mtime: the inode tells
 
 
 def test_missing_path_is_reported_by_spark(spark, tmp_path):

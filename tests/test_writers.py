@@ -1271,8 +1271,8 @@ def test_delete_then_compact_every_table_shape(spark, tmp_path, shape):
     import os
     from collections import Counter
 
+    from etl_end_to_end_airflow_bigquery_spark.io import iter_data_files
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        _iter_data_files,
         _resolve_data_dir,
         compact_parquet,
         delete_rows,
@@ -1286,7 +1286,7 @@ def test_delete_then_compact_every_table_shape(spark, tmp_path, shape):
 
     def inodes():
         vdir = _resolve_data_dir(path)
-        return {rel: os.stat(p).st_ino for rel, p in _iter_data_files(vdir)}
+        return {rel: os.stat(p).st_ino for rel, p in iter_data_files(vdir)}
 
     def files_per_leaf(files):
         return Counter(os.path.dirname(rel) for rel in files)
@@ -1367,8 +1367,8 @@ def test_delete_rows_pre_sidecar_partitioned_snapshot(spark, tmp_path):
     only the touched leaf under day= and carries the other one."""
     import os
 
+    from etl_end_to_end_airflow_bigquery_spark.io import iter_data_files
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        _iter_data_files,
         _resolve_data_dir,
         delete_rows,
     )
@@ -1384,7 +1384,7 @@ def test_delete_rows_pre_sidecar_partitioned_snapshot(spark, tmp_path):
         f.write("v_000001_fixture\n")
     d0 = {
         rel: os.stat(p).st_ino
-        for rel, p in _iter_data_files(_resolve_data_dir(path))
+        for rel, p in iter_data_files(_resolve_data_dir(path))
         if rel.startswith("day=d0")
     }
     assert delete_rows(spark, path, "k = 3") == 1
@@ -1393,7 +1393,7 @@ def test_delete_rows_pre_sidecar_partitioned_snapshot(spark, tmp_path):
     )
     after = {
         rel: os.stat(p).st_ino
-        for rel, p in _iter_data_files(_resolve_data_dir(path))
+        for rel, p in iter_data_files(_resolve_data_dir(path))
     }
     assert all(rel.startswith("day=") for rel in after), sorted(after)
     assert {rel: after[rel] for rel in d0} == d0
