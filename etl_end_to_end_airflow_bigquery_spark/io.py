@@ -77,6 +77,16 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     partitioning-independent computations (exact/associative
     aggregates, per-row projections); round-robin repartition is
     retry-safe (sort-before-repartition stays on).
+
+    The spread holds only for projections. Catalyst pushes every
+    deterministic filter through the round-robin exchange, the ones it
+    infers included (``isnotnull`` from a join key, ``size(..) > 0``
+    from an explode), with each alias replaced by its expression. A
+    filter on a fold's output therefore runs the fold on the one scan
+    task, and the projection above runs it again. Callers keep such
+    columns non-nullable and explode the fold itself, not its column;
+    ``tools/plan_audit.py`` flags a plan that does not as
+    SPREAD_BYPASSED.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

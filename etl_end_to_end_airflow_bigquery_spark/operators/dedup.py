@@ -53,6 +53,13 @@ SHINGLES_EXPR = """
 """
 
 
+def _shingle_input(docs: DataFrame) -> DataFrame:
+    """The spread scan of docs the shingle fold accepts (≥3 tokens)."""
+    return spread_small_scan(docs).filter(
+        F.expr("size(split(text, ' ')) >= 3")
+    )
+
+
 def shingle_docs(docs: DataFrame) -> DataFrame:
     """doc_id + distinct 3-word shingle set (docs with ≥3 tokens).
 
@@ -61,12 +68,24 @@ def shingle_docs(docs: DataFrame) -> DataFrame:
     single-file scan that is ONE task, serializing the whole dedup
     family's tokenization on one core. Spread first (r15, guide §2.5;
     no-op once the scan carries ≥ parallelism splits); the fold then
-    runs wide, still once, still below the doc_id/shingle barriers
-    callers pin above it."""
-    return (
-        spread_small_scan(docs)
-        .filter(F.expr("size(split(text, ' ')) >= 3"))
-        .select("doc_id", F.expr(SHINGLES_EXPR).alias("shingles"))
+    runs wide, once, as long as no filter on ``shingles`` reaches the
+    spread. An ``explode("shingles")`` infers one (``size(shingles) >
+    0``), which Catalyst pushes, fold and all, through the exchange
+    onto the scan: explode behind a barrier (the dedup pipelines
+    checkpoint first) or use :func:`shingle_rows`."""
+    return _shingle_input(docs).select(
+        "doc_id", F.expr(SHINGLES_EXPR).alias("shingles")
+    )
+
+
+def shingle_rows(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle): one row per distinct shingle of
+    :func:`shingle_docs`. The fold is exploded directly, not through a
+    ``shingles`` column, so no filter is inferred from the explode
+    (Catalyst infers one only for a column input) and the fold runs
+    once, above the spread."""
+    return _shingle_input(docs).select(
+        "doc_id", F.explode(F.expr(SHINGLES_EXPR)).alias("shingle")
     )
 
 

@@ -433,7 +433,18 @@ def _with_cells_lit(
     ``ce``/``cn`` (rides in the same struct; the comparator never
     reaches those fields because ``neg_cell`` is unique) so residual
     computation needs no join back to the centroid table.
+
+    ``cell`` is NON-NULLABLE: the centroid literal is never empty
+    (checked here), so the argmax struct is never null, and the
+    ``coalesce`` fallback is unreachable — it only tells Catalyst so.
+    A nullable ``cell`` would make every join on it infer
+    ``isnotnull(cell)``, which Catalyst pushes, with the whole argmax
+    substituted for the alias, through the :func:`_spread` exchange
+    onto the one-task scan: the assignment would run twice, once
+    serially.
     """
+    if not cent_rows:
+        raise ValueError("cell assignment needs at least one centroid")
     dot = dot_fold("e", "c.ce")
     best = F.expr(
         "array_max(transform(__cents, c -> struct("
@@ -443,7 +454,9 @@ def _with_cells_lit(
     out = (
         v.withColumn("__cents", _cents_arr(cent_rows))
         .withColumn("__best", best)
-        .withColumn("cell", -F.col("__best.neg_cell"))
+        .withColumn(
+            "cell", F.coalesce(-F.col("__best.neg_cell"), F.lit(0).cast("bigint"))
+        )
     )
     if keep_centroid:
         out = out.withColumn("__ce", F.col("__best.ce")).withColumn(

@@ -1200,13 +1200,17 @@ def substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = spread_small_scan(docs).select(
         "doc_id", F.filter(F.split("text", " "), lambda x: x != "").alias("t")
     )
-    grams = toks.filter(F.size("t") >= SPAN_W).select(
+    # The length guard sits inside the explode, not in a filter on t:
+    # Catalyst would push that filter, token fold and all, through the
+    # spread exchange onto the one-task scan.
+    grams = toks.select(
         "doc_id",
         F.explode(
             F.expr(
-                f"transform(sequence(1, size(t) - {SPAN_W} + 1),"
+                f"IF(size(t) >= {SPAN_W},"
+                f" transform(sequence(1, size(t) - {SPAN_W} + 1),"
                 f" i -> named_struct('i', i, 'h',"
-                f" md5(array_join(slice(t, i, {SPAN_W}), ' '))))"
+                f" md5(array_join(slice(t, i, {SPAN_W}), ' ')))), array())"
             )
         ).alias("g"),
     ).select("doc_id", F.col("g.i").alias("i"), F.col("g.h").alias("h"))
@@ -1558,7 +1562,14 @@ def semantic_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartitions keeps AQE from re-collapsing them. Pair set, cosine
     # arithmetic and tie order are unchanged.
     va, _ = S.kmeans_vectors(emb)
-    v = va.select("vec_id", "e", "norm2", "cell")
+    # norm2 is null only where e is null or holds a null, and then the
+    # pair's dot fold is null too, so the 0.0 fallback never reaches a
+    # cosine. It makes norm2 non-nullable: the cosine filter then infers
+    # no isnotnull(norm2) for Catalyst to push, norm fold and all,
+    # below the spread.
+    v = va.select(
+        "vec_id", "e", F.coalesce("norm2", F.lit(0.0)).alias("norm2"), "cell"
+    )
     n_part = spark.sparkContext.defaultParallelism
     salt_b = 8
     a = v.select(
@@ -2997,9 +3008,10 @@ def ngram_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     down-weighted or dropped; genuinely new text scores near 1 — the
     standard freshness gate in front of a training mix.
 
-    Mechanism: tokenize once (the shared ``dedup.shingle_docs`` scan),
-    explode, first-occurrence via MIN(doc_id) windowed over the shingle
-    — one shuffle on the shingle key, no self-join, no timeline loop;
+    Mechanism: tokenize once (``dedup.shingle_rows``: the shared
+    shingle fold, exploded as it is computed, so it runs once and wide
+    above the spread), first-occurrence via MIN(doc_id) windowed over
+    the shingle — one shuffle on the shingle key, no self-join, no timeline loop;
     then one doc-grain rollup. The ratio is the half-up integer
     rational ((2·novel·10⁶ + n) div (2n)), engine-exact. The oracle
     recomputes first-occurrence relationally over the same shingle
@@ -3010,11 +3022,11 @@ def ngram_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency (stopword shingles are the hot keys; cap with a DF filter
     if a corpus makes them pathological).
     """
-    from ..operators.dedup import shingle_docs
+    from ..operators.dedup import shingle_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    ex = shingle_docs(docs).select("doc_id", F.explode("shingles").alias("s"))
-    w = Window.partitionBy("s")
+    ex = shingle_rows(docs)
+    w = Window.partitionBy("shingle")
     per = (
         ex.withColumn("first_doc", F.min("doc_id").over(w))
         .groupBy("doc_id")

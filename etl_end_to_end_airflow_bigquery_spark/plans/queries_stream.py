@@ -334,9 +334,10 @@ def streaming_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sink = _sink_name("stream_segments")
     raw = _stream_events(spark, sf_dir)
-    cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .select("c_custkey", "c_mktsegment")
+    from ..io import load_table
+
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
     )
     from ..operators.relational import round_half_up
 

@@ -17,7 +17,9 @@ only when the footer genuinely says nanos — and must then stay set for
 the session, because Spark resolves it lazily at scan time and the
 returned frame is lazy; it is harmless for µs files (the conf only
 changes how NANOS columns surface). On current data the session conf
-is never touched (no cross-query side effects).
+is never touched (no cross-query side effects). The scan goes through
+``io.read_parquet``, so only the first load of a file infers its schema
+(one Spark job); later loads start none.
 
 Reference analog: the raw tick table scan (S2,
 ``dags/ FXRate_Reporting_Pipeline.py:141-144``) — `events` is the
@@ -30,6 +32,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..io import read_parquet
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -67,9 +71,10 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ([PARQUET_TYPE_ILLEGAL]) unless nanosAsLong surfaces the column
         # as raw long ns. The conf is resolved lazily at scan time, so it
         # must remain set while the returned frame is alive; it is inert
-        # for µs files.
+        # for µs files. Set before planning: the conf is part of
+        # read_parquet's inferred-schema cache key.
         spark.conf.set(_NANOS_CONF, "true")
-    raw = spark.read.parquet(path)
+    raw = read_parquet(spark, path)
     ts_type = dict(raw.dtypes)["ts"]
     if ts_type == "bigint":
         # Raw long nanoseconds (legacy nanos parquet via nanosAsLong).

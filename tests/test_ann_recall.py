@@ -275,6 +275,21 @@ def test_tied_seeds_send_every_member_to_the_lower_cell(spark):
     assert sorted((r["s"], r["code"]) for r in cb) == [(s, 0) for s in range(S.PQ_M)]
 
 
+def test_cell_is_non_nullable_and_needs_a_centroid(spark):
+    """A nullable cell makes a join on it infer isnotnull(cell), which
+    Catalyst pushes, argmax and all, below the spread exchange."""
+    emb = spark.createDataFrame(
+        [(0, [0.5] * S.EMB_DIM, 0)], "vec_id long, embedding array<float>, label int"
+    )
+    v = S._vectors(emb)
+    cent = {"cell": 3, "ce": [0.5] * S.EMB_DIM, "cn": 0.25 * S.EMB_DIM}
+    out = S._with_cells_lit(v, [cent])
+    assert not out.schema["cell"].nullable
+    assert [r["cell"] for r in out.collect()] == [3]
+    with pytest.raises(ValueError, match="at least one centroid"):
+        S._with_cells_lit(v, [])
+
+
 def test_pq_adc_recall(spark, clustered, cluster_truth):
     """PQ/ADC on planted clusters: quantization error is tiny relative
     to inter-cluster distances, so ADC must retrieve cluster siblings.

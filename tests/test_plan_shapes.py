@@ -195,3 +195,66 @@ def test_pq_adc_no_cartesian_and_partial_aggs(spark):
     assert "BroadcastNestedLoopJoin" in plan
     assert "hashpartitioning(q_id" in plan  # the rank window's exchange
     assert "HashAggregate" not in plan  # score-sum aggregation gone
+
+
+# Every registry query whose plan spreads a one-file scan with
+# io.spread_small_scan at sf0.001 (the round-robin exchange the test
+# checks for is that spread).
+SPREAD_QUERIES = [
+    "duplicate_spans_docs",
+    "incremental_dedup_batch",
+    "ivf_topk_kmeans",
+    "ivfpq_rerank_topk",
+    "ivfpq_topk_adc",
+    "jaccard_near_dups",
+    "minhash_pairs",
+    "ngram_novelty_docs",
+    "pq_topk_adc",
+    "repetition_ratio_docs",
+    "semantic_dedup_kmeans",
+    "simhash_docs",
+    "substring_dedup_spans",
+]
+
+
+@pytest.mark.parametrize("name", SPREAD_QUERIES)
+def test_spread_runs_the_fold_only_above_the_exchange(spark, name):
+    """No inferred or pushed filter carries an in-row fold below the
+    spread exchange onto the one-task scan (tools/plan_audit.py flag
+    SPREAD_BYPASSED), unless the query is allowlisted in SPREAD_OK."""
+    from tools.plan_audit import SPREAD_OK, spread_bypassed
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one core: spread_small_scan adds no exchange")
+    plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange RoundRobinPartitioning" in plan
+    assert name in SPREAD_OK or not spread_bypassed(plan), (
+        f"{name}: a filter runs an in-row fold below the spread exchange"
+    )
+
+
+def test_spread_bypassed_reads_the_tree_depth():
+    from tools.plan_audit import spread_bypassed
+
+    fold = "Filter (size(filter(t#1, lambdafunction(NOT (lambda x#2 = ), lambda x#2, false))) >= 50)"
+    below = (
+        "Project [t#1]\n"
+        "+- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=1]\n"
+        f"   +- *(1) {fold}\n"
+        "      +- FileScan parquet [t#1]\n"
+    )
+    above = (
+        f"{fold}\n"
+        "+- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=1]\n"
+        "   +- FileScan parquet [t#1]\n"
+    )
+    beside = (
+        "BroadcastHashJoin [k#1], [k#3], Inner, BuildRight\n"
+        ":- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=1]\n"
+        ":  +- FileScan parquet [k#1]\n"
+        f"+- {fold}\n"
+        "   +- FileScan parquet [k#3,t#1]\n"
+    )
+    assert spread_bypassed(below)
+    assert not spread_bypassed(above)
+    assert not spread_bypassed(beside)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -21,6 +22,7 @@ from etl_end_to_end_airflow_bigquery_spark.io import (
     load_table,
     read_parquet,
 )
+from etl_end_to_end_airflow_bigquery_spark.sources.events import load_events
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -174,3 +176,36 @@ def test_ivm_join_revenue_job_count_after_warm_up(spark):
     _, n = _jobs(spark, run)
     sweep_tmpdirs()
     assert n == 9
+
+
+def test_second_load_events_starts_no_job(spark, tmp_path):
+    shutil.copy(f"{SF_SMALL}/events.parquet", tmp_path / "events.parquet")
+    first, n1 = _jobs(spark, lambda: load_events(spark, str(tmp_path)))
+    second, n2 = _jobs(spark, lambda: load_events(spark, str(tmp_path)))
+    assert (n1, n2) == (1, 0)
+    assert first.schema == second.schema
+    assert dict(second.dtypes)["ts"] == "timestamp_ntz"
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_legacy_nanos_events_infer_once_under_nanos_as_long(spark, tmp_path):
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    _write_arrow(
+        tmp_path / "events.parquet",
+        {"event_id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))},
+    )
+    before = spark.conf.get(conf, None)
+    try:
+        first, n1 = _jobs(spark, lambda: load_events(spark, str(tmp_path)))
+        second, n2 = _jobs(spark, lambda: load_events(spark, str(tmp_path)))
+        assert (n1, n2) == (1, 0)
+        assert dict(second.dtypes)["ts"] == "timestamp_ntz"
+        got = [r["ts"] for r in second.orderBy("event_id").collect()]
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
+    epoch = datetime.datetime(1970, 1, 1)
+    assert got == [epoch + datetime.timedelta(microseconds=t // 1000) for t in ns]
