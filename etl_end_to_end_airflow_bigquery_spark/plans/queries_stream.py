@@ -22,6 +22,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# MICROBATCH_PLANS is re-exported: tools/plan_audit.py reads it here
+from ..operators.incremental import (  # noqa: F401
+    MICROBATCH_PLANS,
+    await_stream,
+    versioned_stream_fold,
+)
 from .queries import QueryFn
 
 
@@ -39,27 +45,6 @@ def _utc_session(spark: SparkSession):
         yield
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
-
-
-# Executed micro-batch physical plans, keyed by registry query name —
-# captured after each availableNow run so tools/plan_audit.py can audit
-# streaming queries' REAL execution plans (StateStoreSave, streaming
-# joins, session windows) instead of skipping them (VERDICT r07 item 3).
-MICROBATCH_PLANS: dict[str, str] = {}
-
-
-def _capture_plan(q, name: str) -> None:
-    """Record the terminated query's last-execution physical plan under
-    the EXPLICIT registry name (ADVICE r8: the earlier
-    ``inspect.stack()`` caller lookup silently mis-keyed the plan if a
-    helper wrapped the call or a function was renamed). Bounded driver
-    metadata (one plan string); failures are non-fatal — the audit
-    clears the slot before each run, so a capture failure surfaces as
-    NO_CAPTURED_PLAN instead of being masked by a stale entry."""
-    try:
-        MICROBATCH_PLANS[name] = q._jsq.explainInternal(False)
-    except Exception:
-        pass
 
 
 def _sink_name(prefix: str) -> str:
@@ -127,8 +112,7 @@ def streaming_daily_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_daily_avg")
+    await_stream(q, "streaming_daily_avg")
     return spark.table(sink).orderBy("report_date", "event_type")
 
 
@@ -210,8 +194,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        _capture_plan(q, "streaming_dedup_events")
+        await_stream(q, "streaming_dedup_events")
     return spark.table(sink).orderBy("user_id", "event_type")
 
 
@@ -274,8 +257,7 @@ def streaming_report_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        _capture_plan(q, "streaming_report_merge")
+        await_stream(q, "streaming_report_merge")
     from ..operators.writers import read_table
 
     return read_table(spark, report_path).orderBy("report_date", "event_type")
@@ -320,8 +302,7 @@ def streaming_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_sliding_avg")
+    await_stream(q, "streaming_sliding_avg")
     return spark.table(sink).orderBy("win_start", "event_type")
 
 
@@ -364,8 +345,7 @@ def streaming_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_segment_counts")
+    await_stream(q, "streaming_segment_counts")
     return spark.table(sink).orderBy("c_mktsegment")
 
 
@@ -413,8 +393,7 @@ def streaming_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        _capture_plan(q, "streaming_view_purchase_join")
+        await_stream(q, "streaming_view_purchase_join")
     return spark.table(sink).orderBy("purchase_id", "view_id")
 
 
@@ -477,8 +456,7 @@ def streaming_view_purchase_left(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        _capture_plan(q, "streaming_view_purchase_left")
+        await_stream(q, "streaming_view_purchase_left")
         from ..sources.events import load_events
 
         cutoff = (
@@ -554,8 +532,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        _capture_plan(q, "streaming_sessionize")
+        await_stream(q, "streaming_sessionize")
     return spark.table(sink).orderBy("user_id", "session_start")
 
 
@@ -601,8 +578,7 @@ def streaming_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_cms_counts")
+    await_stream(q, "streaming_cms_counts")
     return spark.table(sink).orderBy("r", "pos")
 
 
@@ -679,8 +655,7 @@ def streaming_burst_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        _capture_plan(q, "streaming_burst_pairs")
+        await_stream(q, "streaming_burst_pairs")
     return spark.table(sink).orderBy("a_id", "b_id")
 
 
@@ -724,8 +699,7 @@ def streaming_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        _capture_plan(q, "streaming_ohlc_daily")
+        await_stream(q, "streaming_ohlc_daily")
     return spark.table(sink).select(
         "day", "event_type", "open", "high", "low", "close", "n_ticks"
     ).orderBy("day", "event_type")
@@ -769,8 +743,7 @@ def streaming_state_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        _capture_plan(q, "streaming_state_dedup_keys")
+        await_stream(q, "streaming_state_dedup_keys")
     # the watermark horizon covers the whole bounded replay, so no key
     # expired: state keys == distinct keys
     return state_keys(spark, ckpt).orderBy("user_id", "event_type")
@@ -783,117 +756,58 @@ def streaming_ivm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming IVM maintenance (VERDICT r08 item 7) — the streaming
     twin of :func:`..queries_olap.ivm_join_revenue_retract`: the same
     signed-retraction CDC batch (delete ``%13``, reprice ``%11`` as
-    delete-old + insert-new) arrives as a FILE STREAM in multiple
-    micro-batches (``maxFilesPerTrigger=1``), and ``foreachBatch``
-    folds each one through ``signed_partial_state`` ⊕
-    ``merge_avg_state`` into a parquet state table — the reference's
-    recompute-every-run report (`dags/ FXRate_Reporting_Pipeline.py`
-    rescan) replaced by bounded per-batch maintenance on the streaming
-    engine.
-
-    State evolves through BATCH-ID-KEYED versioned directories
-    (``incremental.fold_signed_batch_versioned``): version k is
-    computed only from (version k−1, batch k) and written with
-    overwrite, so a redelivered batch — foreachBatch's at-least-once
-    window — recomputes its version identically instead of folding
-    twice; replay-idempotent by construction, pytest-proven. The
-    previous version is resolved FROM DISK per fold (``_SUCCESS``
-    commit markers, ``incremental.latest_committed_state``), never an
-    in-memory map, so the guarantee holds across driver restarts too —
-    a replay in a fresh process folds onto the same committed version
-    its first delivery saw (ADVICE r9). The
-    final report filters fully-retracted groups (n > 0) and SHARES THE
-    BATCH TWIN'S ORACLE VERBATIM (the full post-CDC recompute): the
-    gate proves the ⊕ algebra lands bit-identically no matter how the
-    engine slices the CDC feed into micro-batches — associativity,
+    delete-old + insert-new) arrives as a 4-file stream, and each
+    micro-batch folds through ``signed_partial_state`` ⊕
+    ``merge_avg_state`` into the versioned per-segment state
+    (:func:`..operators.incremental.versioned_stream_fold`). The final
+    report filters fully-retracted groups (n > 0) and SHARES THE BATCH
+    TWIN'S ORACLE VERBATIM (the full post-CDC recompute): the gate
+    proves the ⊕ algebra lands bit-identically no matter how the engine
+    slices the CDC feed into micro-batches — associativity,
     driver-checked.
 
     Scale: each micro-batch touches the CDC slice (broadcast dim join,
     one grouped partial) plus the |segments|-row state; the base join
-    is never re-read after the initial state build. The micro-batch
-    plan is deliberately stateless (per-batch fold; durable state
-    lives in the parquet table, not the state store) — exempted in
-    ``plan_audit.STREAM_STATELESS_OK``.
+    is never re-read after the initial state build.
     """
+    from ..io import load_table
     from ..operators.incremental import (
         finish_avg,
+        merge_avg_state,
         partial_avg_state,
+        signed_cdc_batch,
         signed_partial_state,
     )
-    from ..io import load_table
-    from ..tmputil import session_tmpdir
 
-    from ..operators.incremental import fold_signed_batch_versioned
-
-    from ..operators.incremental import latest_committed_state
-
-    base_dir = session_tmpdir("stream_ivm_")
-    cdc_dir = os.path.join(base_dir, "cdc")
-    ckpt = os.path.join(base_dir, "ckpt")
-    init_path = os.path.join(base_dir, "state_init")
-
+    keys = ["c_mktsegment"]
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     dim = F.broadcast(customer.select("c_custkey", "c_mktsegment"))
-
-    # stored view: the full base, materialized (the "100 TB" side)
-    partial_avg_state(
-        orders.join(dim, orders["o_custkey"] == dim["c_custkey"]),
-        ["c_mktsegment"],
-        "o_totalprice",
-    ).write.parquet(init_path)
-
-    # CDC feed: the shared signed-delta recipe, deliberately split
-    # across 4 files so availableNow + maxFilesPerTrigger=1 yields 4
-    # real micro-batches
-    from ..operators.incremental import signed_cdc_batch
-
     fact = orders.select("o_orderkey", "o_custkey", "o_totalprice")
     cdc = signed_cdc_batch(fact, "o_totalprice").select(
         "o_custkey", "o_totalprice", "__w"
     )
-    cdc.repartition(4).write.parquet(cdc_dir)
 
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def step(prev, batch):
         delta = signed_partial_state(
             batch.join(dim, batch["o_custkey"] == dim["c_custkey"]),
-            ["c_mktsegment"],
+            keys,
             "o_totalprice",
         )
-        # previous committed version = the greatest COMMITTED id below
-        # this batch, resolved FROM DISK (_SUCCESS markers) so a replay
-        # after driver restart folds onto the same version its first
-        # delivery saw (ADVICE r9); gaps from empty batches are fine
-        prev = latest_committed_state(base_dir, init_path, below=batch_id)
-        nxt = os.path.join(base_dir, f"state_b{batch_id}")
-        fold_signed_batch_versioned(
-            spark, delta, ["c_mktsegment"], prev, nxt
-        )
+        return {"seg": merge_avg_state(prev["seg"], delta, keys)}
 
-    stream = (
-        spark.readStream.schema(
-            "o_custkey long, o_totalprice double, __w int"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(cdc_dir)
+    # stored view: the full base, materialized (the "100 TB" side)
+    stored = partial_avg_state(
+        orders.join(dim, orders["o_custkey"] == dim["c_custkey"]),
+        keys,
+        "o_totalprice",
     )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_ivm_revenue")
-
-    final = spark.read.parquet(
-        latest_committed_state(base_dir, init_path)
-    ).filter(F.col("n") > 0)
+    final = versioned_stream_fold(
+        spark, "streaming_ivm_revenue", cdc.repartition(4), {"seg": stored},
+        step,
+    )["seg"]
     return (
-        finish_avg(final, round_to=2, out="avg_price")
+        finish_avg(final.filter(F.col("n") > 0), round_to=2, out="avg_price")
         .select("c_mktsegment", "n", "sum_u", "avg_price")
         .orderBy("c_mktsegment")
     )
@@ -938,8 +852,7 @@ def streaming_phash_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_phash_assets")
+    await_stream(q, "streaming_phash_assets")
     return spark.table(sink).orderBy("asset_id")
 
 
@@ -948,64 +861,45 @@ STREAM_QUERIES["streaming_phash_assets"] = streaming_phash_assets
 
 def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ingest-tick dedup LIVE: the arriving-doc feed streams in
-    micro-batches and ``foreachBatch`` runs
-    ``operators.dedup.incremental_dedup`` — exact-hash probe +
-    asymmetric MinHash band join + Jaccard verify — against the static
-    accumulated corpus, admitting/rejecting each doc the moment it
-    lands. Per-doc verdicts depend ONLY on the base corpus, so any
-    micro-batch slicing yields identical rows; the query SHARES THE
-    BATCH TWIN'S ORACLE VERBATIM and the gate proves exactly that.
-    Per-batch results land in batch-id-keyed overwrite directories
-    (the ``streaming_ivm_revenue`` idempotency scheme), so an
-    at-least-once redelivery recomputes its directory instead of
-    duplicating rows.
+    micro-batches and each runs ``operators.dedup.incremental_dedup`` —
+    exact-hash probe + asymmetric MinHash band join + Jaccard verify —
+    against the static accumulated corpus, admitting/rejecting each doc
+    the moment it lands. Per-doc verdicts depend ONLY on the base
+    corpus, so any micro-batch slicing yields identical rows; the query
+    SHARES THE BATCH TWIN'S ORACLE VERBATIM and the gate proves exactly
+    that. The verdicts accumulate as a versioned state
+    (:func:`..operators.incremental.versioned_stream_fold`: version k =
+    version k−1 ∪ batch k's verdicts), so an at-least-once redelivery
+    recomputes its version instead of duplicating rows.
 
     Scale: each tick streams the base side once through the broadcast
     probes (the asymmetric plan); the stream itself carries only the
-    batch. This and the batch twin are the admit-time/backfill pair a
-    production corpus runs.
+    batch; each tick rewrites the verdict state, one row per doc
+    arrived so far. This and the batch twin are the admit-time/backfill
+    pair a production corpus runs.
     """
-    from ..operators.dedup import incremental_dedup
     from ..io import load_table
-    from ..tmputil import session_tmpdir
-
-    base_dir = session_tmpdir("stream_incdedup_")
-    feed_dir = os.path.join(base_dir, "feed")
-    ckpt = os.path.join(base_dir, "ckpt")
-    out_dirs: dict[int, str] = {}
+    from ..operators.dedup import incremental_dedup
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 5 != 0)
-    docs.filter(F.col("doc_id") % 5 == 0).repartition(4).write.parquet(
-        feed_dir
-    )
 
-    def _tick(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        out = os.path.join(base_dir, f"out_b{batch_id}")
-        incremental_dedup(base, batch).write.mode("overwrite").parquet(out)
-        out_dirs[batch_id] = out
+    def step(prev, batch):
+        return {
+            "verdicts": prev["verdicts"].unionByName(
+                incremental_dedup(base, batch)
+            )
+        }
 
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    init = spark.createDataFrame(
+        [], "doc_id long, is_exact_dup boolean, n_near_base bigint, keep boolean"
     )
-    q = (
-        stream.writeStream.foreachBatch(_tick)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    state = versioned_stream_fold(
+        spark, "streaming_incremental_dedup",
+        docs.filter(F.col("doc_id") % 5 == 0).repartition(4),
+        {"verdicts": init}, step,
     )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_incremental_dedup")
-
-    return spark.read.parquet(*out_dirs.values()).orderBy("doc_id")
+    return state["verdicts"].orderBy("doc_id")
 
 
 STREAM_QUERIES["streaming_incremental_dedup"] = streaming_incremental_dedup
@@ -1013,55 +907,33 @@ STREAM_QUERIES["streaming_incremental_dedup"] = streaming_incremental_dedup
 
 def streaming_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming twin of :func:`..queries_olap.rollup_cascade_daily`
-    — the HOURLY rollup maintained BY THE STREAM as events land,
-    the daily report a projection of that state: events arrive as a
-    file stream in 4 real micro-batches (``maxFilesPerTrigger=1``);
-    ``foreachBatch`` folds each batch's hourly partials (count +
-    fixed-point sum + min/max — all mergeable) into a versioned
-    parquet state table via disk-resolved committed versions
-    (``incremental.latest_committed_state``, replay-idempotent across
-    driver restarts like ``streaming_ivm_revenue``). SHARES THE BATCH
-    CASCADE'S ORACLE VERBATIM (direct day-grain recompute from raw):
-    hash-equality proves the ⊕ algebra lands bit-identically no matter
-    how the engine slices events into micro-batches — and since min/max
-    ride alongside sum/count, this is the non-invertible-aggregate
-    streaming twin (insert-only stream: no retraction boundary to
-    recompute).
+    — the HOURLY rollup maintained BY THE STREAM as events land, the
+    daily report a projection of that state: each of 4 micro-batches
+    folds its hourly partials (count + fixed-point sum + min/max — all
+    mergeable) into the versioned state
+    (:func:`..operators.incremental.versioned_stream_fold`). SHARES THE
+    BATCH CASCADE'S ORACLE VERBATIM (direct day-grain recompute from
+    raw): hash-equality proves the ⊕ algebra lands bit-identically no
+    matter how the engine slices events into micro-batches — and since
+    min/max ride alongside sum/count, this is the non-invertible-
+    aggregate streaming twin (insert-only stream: no retraction
+    boundary to recompute).
 
     Scale: per batch, one grouped partial over the batch slice ⊕ the
     24×|types|-rows/day state — the fact table is never rescanned; the
-    daily projection reads only the hourly state. Stateless micro-batch
-    plan (durable state in parquet, not the state store) — exempted in
-    ``plan_audit.STREAM_STATELESS_OK``.
+    daily projection reads only the hourly state.
     """
     from ..io import load_table
-    from ..operators.incremental import latest_committed_state
-    from ..operators.relational import round_half_up
-    from ..tmputil import session_tmpdir
-
-    base_dir = session_tmpdir("stream_rollup_")
-    feed_dir = os.path.join(base_dir, "feed")
-    ckpt = os.path.join(base_dir, "ckpt")
-    init_path = os.path.join(base_dir, "state_init")
+    from .queries_olap import daily_rollup_report, hourly_rollup_state
 
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "event_type", "value"
     )
-    ev.repartition(4).write.parquet(feed_dir)
 
-    from .queries_olap import hourly_rollup_state as _hourly
-
-    # empty initial state with the right schema
-    _hourly(ev.limit(0)).write.parquet(init_path)
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        prev = latest_committed_state(base_dir, init_path, below=batch_id)
-        nxt = os.path.join(base_dir, f"state_b{batch_id}")
-        merged = (
-            spark.read.parquet(prev)
-            .unionByName(_hourly(batch))
+    def step(prev, batch):
+        return {
+            "hourly": prev["hourly"]
+            .unionByName(hourly_rollup_state(batch))
             .groupBy("h", "event_type")
             .agg(
                 F.sum("n").alias("n"),
@@ -1069,30 +941,13 @@ def streaming_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("min_v").alias("min_v"),
                 F.max("max_v").alias("max_v"),
             )
-        )
-        merged.write.mode("overwrite").parquet(nxt)
+        }
 
-    stream = (
-        spark.readStream.schema(
-            "ts timestamp_ntz, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    state = versioned_stream_fold(
+        spark, "streaming_rollup_cascade", ev.repartition(4),
+        {"hourly": hourly_rollup_state(ev.limit(0))}, step,
     )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_rollup_cascade")
-
-    from .queries_olap import daily_rollup_report
-
-    hourly = spark.read.parquet(latest_committed_state(base_dir, init_path))
-    return daily_rollup_report(hourly)
+    return daily_rollup_report(state["hourly"])
 
 
 STREAM_QUERIES["streaming_rollup_cascade"] = streaming_rollup_cascade
@@ -1102,91 +957,49 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming out-of-order CDC apply — the streaming twin of
     :func:`..queries_olap.cdc_out_of_order_apply`: the SAME seq-tagged
     version stream (``queries_olap.cdc_version_stream``, single shared
-    definition) arrives as a file stream in 4 micro-batches, and
-    ``foreachBatch`` folds each one into a keyed latest-wins state
-    table. The ⊕ is ``max_by(version, seq)`` plus a version counter —
-    associative and commutative, so ANY slicing of the stream lands on
-    the same state; the gate proves it by SHARING THE BATCH TWIN'S
-    ORACLE VERBATIM. Because seq order is independent of arrival
-    order, a version delivered batches late (the transport reorder the
-    batch twin simulates in one pass) still loses to the higher seq
-    already in state — log compaction semantics on the streaming
-    engine.
+    definition) arrives in 4 micro-batches, and each folds into a keyed
+    latest-wins state. The ⊕ is ``max_by(version, seq)`` plus a version
+    counter (``incremental.latest_wins_merge``) — associative and
+    commutative, so ANY slicing of the stream lands on the same state;
+    the gate proves it by SHARING THE BATCH TWIN'S ORACLE VERBATIM.
+    Because seq order is independent of arrival order, a version
+    delivered batches late (the transport reorder the batch twin
+    simulates in one pass) still loses to the higher seq already in
+    state — log compaction semantics on the streaming engine.
 
-    State evolves through batch-id-keyed versioned directories with
-    the previous version resolved FROM DISK (``_SUCCESS`` markers,
-    ``incremental.latest_committed_state``) — replay-idempotent across
-    driver restarts, the ADVICE-r9 contract every foreachBatch fold in
-    this repo honors. Scale: each fold shuffles only the micro-batch's
-    per-key winners plus the |live keys|-row state; deletes stay IN
-    state as tombstones (filtered at serve time) so a late lower-seq
-    update can never resurrect a newer delete.
+    Scale: each fold shuffles only the micro-batch's per-key winners
+    plus the |live keys|-row state; deletes stay IN state as tombstones
+    (filtered at serve time) so a late lower-seq update can never
+    resurrect a newer delete.
     """
     from ..io import load_table
-    from ..operators.incremental import latest_committed_state
-    from ..tmputil import session_tmpdir
+    from ..operators.incremental import latest_wins_merge
     from .queries_olap import cdc_version_stream
 
-    base_dir = session_tmpdir("stream_cdc_")
-    cdc_dir = os.path.join(base_dir, "cdc")
-    ckpt = os.path.join(base_dir, "ckpt")
-    init_path = os.path.join(base_dir, "state_init")
-
-    orders = load_table(spark, sf_dir, "orders")
-    flat = cdc_version_stream(orders).select(
+    flat = cdc_version_stream(load_table(spark, sf_dir, "orders")).select(
         "o_orderkey",
         F.col("v.seq").alias("seq"),
         F.col("v.op").alias("op"),
         F.col("v.status").alias("status"),
         F.col("v.price").alias("price"),
     )
-    flat.repartition(4).write.parquet(cdc_dir)
 
-    state_schema = (
-        "o_orderkey long,"
-        " win struct<seq:bigint,op:string,status:string,price:double>,"
-        " n_versions bigint"
-    )
-    spark.createDataFrame([], state_schema).write.parquet(init_path)
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        delta = batch.groupBy("o_orderkey").agg(
+    def winners(versions):
+        return versions.groupBy("o_orderkey").agg(
             F.expr(
                 "max_by(named_struct('seq', seq, 'op', op,"
                 " 'status', status, 'price', price), seq)"
             ).alias("win"),
             F.count(F.lit(1)).alias("n_versions"),
         )
-        from ..operators.incremental import latest_wins_merge
 
-        prev = latest_committed_state(base_dir, init_path, below=batch_id)
-        latest_wins_merge(
-            batch.sparkSession.read.parquet(prev), delta
-        ).write.mode("overwrite").parquet(
-            os.path.join(base_dir, f"state_b{batch_id}")
-        )
+    def step(prev, batch):
+        return {"latest": latest_wins_merge(prev["latest"], winners(batch))}
 
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey long, seq long, op string,"
-            " status string, price double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(cdc_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_cdc_apply")
-
-    state = spark.read.parquet(latest_committed_state(base_dir, init_path))
+    state = versioned_stream_fold(
+        spark, "streaming_cdc_apply", flat.repartition(4),
+        {"latest": winners(flat.limit(0))}, step,
+    )["latest"]
     return (
         state.filter(F.col("win.op") != "D")
         .select(
@@ -1208,72 +1021,37 @@ def streaming_quantile_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`..queries_olap.quantile_rollup_cascade` — EXACT percentiles
     maintained by the stream: each micro-batch's value-grain histogram
     partials ((hour, type, cent) → n, the mergeable form that makes
-    exact quantiles possible on a 2-dp measure) fold into versioned
-    parquet state via disk-resolved committed versions, and the daily
-    p50/p90/p99 report is a projection of that state — the cumulative
-    rank walk never touches raw events. SHARES THE BATCH CASCADE'S
-    ORACLE VERBATIM (direct-from-raw ranked cuts): hash-equality
-    proves histogram merging commutes with ANY micro-batch slicing —
-    the sketch-free streaming-percentiles story (where engines
-    normally reach for t-digest and give up exactness).
+    exact quantiles possible on a 2-dp measure) fold into the versioned
+    state, and the daily p50/p90/p99 report is a projection of that
+    state — the cumulative rank walk never touches raw events. SHARES
+    THE BATCH CASCADE'S ORACLE VERBATIM (direct-from-raw ranked cuts):
+    hash-equality proves histogram merging commutes with ANY
+    micro-batch slicing — the sketch-free streaming-percentiles story
+    (where engines normally reach for t-digest and give up exactness).
 
     Scale: per batch, one grouped partial over the slice ⊕ the
     |cents-present| state rows; serving cost is the histogram walk.
-    Stateless micro-batch plan (durable state in parquet) — exempted
-    in ``plan_audit.STREAM_STATELESS_OK``.
     """
     from ..io import load_table
-    from ..operators.incremental import latest_committed_state
-    from ..tmputil import session_tmpdir
-
-    base_dir = session_tmpdir("stream_quant_")
-    feed_dir = os.path.join(base_dir, "feed")
-    ckpt = os.path.join(base_dir, "ckpt")
-    init_path = os.path.join(base_dir, "state_init")
+    from .queries_olap import daily_quantile_report, hourly_hist_state
 
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "event_type", "value"
     )
-    ev.repartition(4).write.parquet(feed_dir)
 
-    from .queries_olap import hourly_hist_state as _hist
-
-    _hist(ev.limit(0)).write.parquet(init_path)
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        prev = latest_committed_state(base_dir, init_path, below=batch_id)
-        nxt = os.path.join(base_dir, f"state_b{batch_id}")
-        merged = (
-            spark.read.parquet(prev)
-            .unionByName(_hist(batch))
+    def step(prev, batch):
+        return {
+            "hist": prev["hist"]
+            .unionByName(hourly_hist_state(batch))
             .groupBy("h", "event_type", "cent")
             .agg(F.sum("n").alias("n"))
-        )
-        merged.write.mode("overwrite").parquet(nxt)
+        }
 
-    stream = (
-        spark.readStream.schema(
-            "ts timestamp_ntz, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    state = versioned_stream_fold(
+        spark, "streaming_quantile_cascade", ev.repartition(4),
+        {"hist": hourly_hist_state(ev.limit(0))}, step,
     )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_quantile_cascade")
-
-    from .queries_olap import daily_quantile_report
-
-    hourly = spark.read.parquet(latest_committed_state(base_dir, init_path))
-    return daily_quantile_report(hourly)
+    return daily_quantile_report(state["hist"])
 
 
 STREAM_QUERIES["streaming_quantile_cascade"] = streaming_quantile_cascade
@@ -1283,70 +1061,36 @@ def streaming_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming twin of
     :func:`..queries_olap.bitmap_distinct_users` — EXACT distinct
     counts maintained by the stream: each micro-batch's (type, day,
-    bucket) membership masks OR-fold into versioned parquet state via
-    disk-resolved committed versions, and the month report is a
-    popcount projection of that state — raw events are never rescanned
-    and re-delivered users are no-ops BY ALGEBRA (OR is idempotent),
-    so the fold is replay-safe without any dedup bookkeeping. SHARES
-    THE BATCH TWIN'S ORACLE VERBATIM (direct COUNT(DISTINCT) from
-    raw): hash-equality proves mask merging commutes with any
-    micro-batch slicing.
+    bucket) membership masks OR-fold into the versioned state, and the
+    month report is a popcount projection of that state — raw events
+    are never rescanned and re-delivered users are no-ops BY ALGEBRA
+    (OR is idempotent). SHARES THE BATCH TWIN'S ORACLE VERBATIM (direct
+    COUNT(DISTINCT) from raw): hash-equality proves mask merging
+    commutes with any micro-batch slicing.
 
     Scale: per batch, one grouped partial over the slice ⊕ the
     mask-grain state rows; serving cost is a popcount scan of state.
-    Stateless micro-batch plan (durable state in parquet) — exempted
-    in ``plan_audit.STREAM_STATELESS_OK``.
     """
     from ..io import load_table
-    from ..operators.incremental import latest_committed_state
-    from ..tmputil import session_tmpdir
-
-    base_dir = session_tmpdir("stream_bitmap_")
-    feed_dir = os.path.join(base_dir, "feed")
-    ckpt = os.path.join(base_dir, "ckpt")
-    init_path = os.path.join(base_dir, "state_init")
+    from .queries_olap import bitmap_distinct_report, daily_bitmap_state
 
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "event_type", "user_id"
     )
-    ev.repartition(4).write.parquet(feed_dir)
 
-    from .queries_olap import bitmap_distinct_report, daily_bitmap_state
-
-    daily_bitmap_state(ev.limit(0)).write.parquet(init_path)
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        prev = latest_committed_state(base_dir, init_path, below=batch_id)
-        nxt = os.path.join(base_dir, f"state_b{batch_id}")
-        merged = (
-            spark.read.parquet(prev)
+    def step(prev, batch):
+        return {
+            "masks": prev["masks"]
             .unionByName(daily_bitmap_state(batch))
             .groupBy("event_type", "d", "bucket")
             .agg(F.expr("bit_or(mask)").alias("mask"))
-        )
-        merged.write.mode("overwrite").parquet(nxt)
+        }
 
-    stream = (
-        spark.readStream.schema(
-            "ts timestamp_ntz, event_type string, user_id bigint"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
+    state = versioned_stream_fold(
+        spark, "streaming_bitmap_distinct", ev.repartition(4),
+        {"masks": daily_bitmap_state(ev.limit(0))}, step,
     )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_bitmap_distinct")
-
-    day_states = spark.read.parquet(latest_committed_state(base_dir, init_path))
-    return bitmap_distinct_report(day_states)
+    return bitmap_distinct_report(state["masks"])
 
 
 STREAM_QUERIES["streaming_bitmap_distinct"] = streaming_bitmap_distinct
@@ -1355,15 +1099,19 @@ STREAM_QUERIES["streaming_bitmap_distinct"] = streaming_bitmap_distinct
 # --- wave 6 (round 11): incremental CEP ------------------------------------
 
 
-def _cep_match_partials(work: DataFrame) -> DataFrame:
-    """Per-user CEP match partials over one work set (boundary tails +
-    new batch) — LITERALLY the batch twin's matcher
-    (:func:`..queries_olap.cep_match_partials`), re-exported so the
-    shared-oracle contract can't be broken by the two copies drifting
-    (code-review r11: the matcher used to be duplicated here)."""
-    from .queries_olap import cep_match_partials
+def _cep_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The CEP twins' feed: (user_id, ts, event_id, e) events as 6
+    range-partitioned chronological files, which the fold replays in
+    partition order — the in-order delivery a per-partition-ordered
+    Kafka source gives. Equal-ts rows never split across files (range
+    partitioning keeps equal keys together), so the (ts, event_id)
+    tiebreak stays batch-local."""
+    from ..sources.events import load_events
 
-    return cep_match_partials(work)
+    return load_events(spark, sf_dir).select(
+        "user_id", "ts", "event_id",
+        F.substring("event_type", 1, 1).alias("e"),
+    ).repartitionByRange(6, "ts")
 
 
 def _cep_tails(work: DataFrame, k: int = 2) -> DataFrame:
@@ -1382,7 +1130,7 @@ def _cep_tails(work: DataFrame, k: int = 2) -> DataFrame:
     )
 
 
-def _assert_time_contiguous(tails: DataFrame, batch: DataFrame, batch_id) -> None:
+def _assert_time_contiguous(tails: DataFrame, batch: DataFrame) -> None:
     """LOUD in-order guard for the boundary-tail CEP fold: the algebra
     is only sound for in-order delivery (the per-partition-ordered
     Kafka contract). The range-partitioned feed + pinned mtimes provide
@@ -1402,10 +1150,10 @@ def _assert_time_contiguous(tails: DataFrame, batch: DataFrame, batch_id) -> Non
         and tuple(batch_min) < tuple(tail_max)
     ):
         raise RuntimeError(
-            f"out-of-order micro-batch delivery: batch {batch_id} "
-            f"starts at {tuple(batch_min)}, before the folded stream's "
-            f"tail at {tuple(tail_max)} — the boundary-tail CEP fold "
-            "requires time-contiguous batches"
+            f"out-of-order micro-batch delivery: the batch starts at "
+            f"{tuple(batch_min)}, before the folded stream's tail at "
+            f"{tuple(tail_max)} — the boundary-tail CEP fold requires "
+            "time-contiguous batches"
         )
 
 
@@ -1418,122 +1166,47 @@ def streaming_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Flink CEP's NFA state for a fixed pattern, made explicit). Each
     micro-batch unions the persisted tails with the new slice, runs
     the batch twin's lead()-window matcher, folds the per-user match
-    partials (count sum / first-ts min — mergeable) into versioned
-    parquet state, and rewrites the tails. No match is ever counted
-    twice (a previously-counted v-row has >= 2 successors, so it can't
-    be in the 2-row tail) and none is missed (any triple completing in
-    batch k lies inside tails ∪ batch_k) — provided batches are
-    time-contiguous per user, the per-partition-ordered delivery
-    contract a Kafka source gives; the feed replays the events table
-    as 6 range-partitioned chronological files with explicitly
-    increasing mtimes so the file source (which orders by timestamp)
-    delivers them in order. Equal-ts rows never split across files
-    (range partitioning keeps equal keys together), so the (ts,
-    event_id) tiebreak stays batch-local. SHARES THE BATCH TWIN'S
-    ORACLE VERBATIM: hash-equality proves the boundary-state fold
-    commutes with the slicing.
+    partials (count sum / first-ts min — mergeable) into the counts
+    state, and rewrites the tails. No match is ever counted twice (a
+    previously-counted v-row has >= 2 successors, so it can't be in
+    the 2-row tail) and none is missed (any triple completing in batch
+    k lies inside tails ∪ batch_k) — provided batches are
+    time-contiguous per user (:func:`_cep_feed`, guarded by
+    :func:`_assert_time_contiguous`). SHARES THE BATCH TWIN'S ORACLE
+    VERBATIM: hash-equality proves the boundary-state fold commutes
+    with the slicing; ``tests/test_wave6_ops.py`` proves slicing
+    invariance of this step on adversarial cut points (hypothesis).
 
     Scale: state is <= 2 event rows + 1 count row per user; per batch
-    the matcher shuffles tails+slice once on user. Stateless
-    micro-batch plan (durable state in parquet) — exempted in
-    ``plan_audit.STREAM_STATELESS_OK``; restart safety comes from
-    disk-resolved committed versions (both state families resolve
-    below the replayed batch id, so a half-committed pair heals).
-    ``tests/test_wave6_ops.py`` proves slicing invariance on
-    adversarial cut points (hypothesis).
+    the matcher shuffles tails+slice once on user.
     """
-    from ..operators.incremental import latest_committed_state
-    from ..tmputil import session_tmpdir
+    from .queries_olap import cep_match_partials
 
-    base_dir = session_tmpdir("stream_cep_")
-    feed_dir = os.path.join(base_dir, "feed")
-    ckpt = os.path.join(base_dir, "ckpt")
-    tail_dir = os.path.join(base_dir, "tails")
-    cnt_dir = os.path.join(base_dir, "counts")
-    tail_init = os.path.join(base_dir, "tails_init")
-    cnt_init = os.path.join(base_dir, "counts_init")
-    os.makedirs(tail_dir, exist_ok=True)
-    os.makedirs(cnt_dir, exist_ok=True)
+    feed = _cep_feed(spark, sf_dir)
 
-    from ..sources.events import load_events
+    def step(prev, batch):
+        _assert_time_contiguous(prev["tails"], batch)
+        work = prev["tails"].unionByName(batch)
+        return {
+            "counts": prev["counts"]
+            .unionByName(cep_match_partials(work))
+            .groupBy("user_id")
+            .agg(
+                F.sum("n_matches").alias("n_matches"),
+                F.min("first_match_ts").alias("first_match_ts"),
+            ),
+            "tails": _cep_tails(work),
+        }
 
-    ev = load_events(spark, sf_dir).select(
-        "user_id", "ts", "event_id",
-        F.substring("event_type", 1, 1).alias("e"),
-    )
-    ev.repartitionByRange(6, "ts").write.parquet(feed_dir)
-    # File sources order by modification time; pin it to the range
-    # order (part-00000 holds the earliest ts range) explicitly instead
-    # of trusting write-time granularity.
-    import time as _time
-
-    parts = sorted(
-        f for f in os.listdir(feed_dir) if f.endswith(".parquet")
-    )
-    t0 = _time.time()
-    for i, fname in enumerate(parts):
-        os.utime(os.path.join(feed_dir, fname), (t0 + 10 * i, t0 + 10 * i))
-
-    ev.limit(0).write.parquet(tail_init)
-    _cep_match_partials(ev.limit(0)).write.parquet(cnt_init)
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        prev_tail = latest_committed_state(
-            tail_dir, tail_init, below=batch_id
-        )
-        prev_cnt = latest_committed_state(cnt_dir, cnt_init, below=batch_id)
-        # persist: `tails` feeds the guard aggregate AND the work union
-        # (one parquet read, not two); `work` feeds BOTH the matcher and
-        # the tail rewrite (code-review r11, twice)
-        tails = spark.read.parquet(prev_tail).persist()
-        _assert_time_contiguous(tails, batch, batch_id)
-        work = (
-            tails.unionByName(batch.select("user_id", "ts", "event_id", "e"))
-            .persist()
-        )
-        try:
-            merged = (
-                spark.read.parquet(prev_cnt)
-                .unionByName(_cep_match_partials(work))
-                .groupBy("user_id")
-                .agg(
-                    F.sum("n_matches").alias("n_matches"),
-                    F.min("first_match_ts").alias("first_match_ts"),
-                )
-            )
-            merged.write.mode("overwrite").parquet(
-                os.path.join(cnt_dir, f"state_b{batch_id}")
-            )
-            _cep_tails(work).write.mode("overwrite").parquet(
-                os.path.join(tail_dir, f"state_b{batch_id}")
-            )
-        finally:
-            work.unpersist()
-            tails.unpersist()
-
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp_ntz, event_id bigint, e string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_cep_funnel")
-
-    return (
-        spark.read.parquet(latest_committed_state(cnt_dir, cnt_init))
-        .select("user_id", "n_matches", "first_match_ts")
-        .orderBy("user_id")
+    init = {
+        "counts": cep_match_partials(feed.limit(0)),
+        "tails": feed.limit(0),
+    }
+    counts = versioned_stream_fold(
+        spark, "streaming_cep_funnel", feed, init, step
+    )["counts"]
+    return counts.select("user_id", "n_matches", "first_match_ts").orderBy(
+        "user_id"
     )
 
 
@@ -1541,16 +1214,6 @@ STREAM_QUERIES["streaming_cep_funnel"] = streaming_cep_funnel
 
 
 # --- wave (round 12): Kleene-closure incremental CEP ------------------------
-
-
-def _cep_kleene_matches(work: DataFrame) -> DataFrame:
-    """Kleene match rows over one work set — LITERALLY the batch twin's
-    matcher (:func:`..queries_olap.cep_kleene_matches`), re-exported
-    under the same single-implementation contract as
-    :func:`_cep_match_partials`."""
-    from .queries_olap import cep_kleene_matches
-
-    return cep_kleene_matches(work)
 
 
 def _kleene_tails(work: DataFrame) -> DataFrame:
@@ -1580,114 +1243,51 @@ def streaming_cep_kleene(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch (a broadcast semi-join against the slice), which is exactly
     the "emit on the closing event" discipline an NFA runtime uses.
     SHARES THE BATCH TWIN'S ORACLE VERBATIM: hash-equality proves the
-    tail+filter fold commutes with micro-batch slicing.
+    tail+filter fold commutes with micro-batch slicing
+    (``tests/test_wave7_ops.py`` proves it of this step on adversarial
+    cut points).
 
     Scale: state is <= cap+1 event rows + 1 count row per user; per
     batch the matcher shuffles tails+slice once on user; the purchase
-    filter broadcasts the batch's event ids. Stateless micro-batch
-    plan (durable state in versioned parquet), restart-safe via
-    disk-resolved committed versions.
+    filter broadcasts the batch's event ids.
     """
-    from ..operators.incremental import latest_committed_state
-    from ..tmputil import session_tmpdir
+    from .queries_olap import cep_kleene_matches
 
-    base_dir = session_tmpdir("stream_kleene_")
-    feed_dir = os.path.join(base_dir, "feed")
-    ckpt = os.path.join(base_dir, "ckpt")
-    tail_dir = os.path.join(base_dir, "tails")
-    cnt_dir = os.path.join(base_dir, "counts")
-    tail_init = os.path.join(base_dir, "tails_init")
-    cnt_init = os.path.join(base_dir, "counts_init")
-    os.makedirs(tail_dir, exist_ok=True)
-    os.makedirs(cnt_dir, exist_ok=True)
+    feed = _cep_feed(spark, sf_dir)
 
-    from ..sources.events import load_events
-
-    ev = load_events(spark, sf_dir).select(
-        "user_id", "ts", "event_id",
-        F.substring("event_type", 1, 1).alias("e"),
-    )
-    ev.repartitionByRange(6, "ts").write.parquet(feed_dir)
-    import time as _time
-
-    parts = sorted(
-        f for f in os.listdir(feed_dir) if f.endswith(".parquet")
-    )
-    t0 = _time.time()
-    for i, fname in enumerate(parts):
-        os.utime(os.path.join(feed_dir, fname), (t0 + 10 * i, t0 + 10 * i))
-
-    ev.limit(0).write.parquet(tail_init)
-    _kleene_partials(_cep_kleene_matches(ev.limit(0))).write.parquet(cnt_init)
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        prev_tail = latest_committed_state(
-            tail_dir, tail_init, below=batch_id
+    def step(prev, batch):
+        _assert_time_contiguous(prev["tails"], batch)
+        work = prev["tails"].unionByName(batch)
+        # only purchases can close a match — broadcasting the whole
+        # batch's ids wastes its non-purchase fraction (code-review r12)
+        closing = F.broadcast(
+            batch.filter(F.col("e") == "p").select(
+                F.col("event_id").alias("p_event_id")
+            )
         )
-        prev_cnt = latest_committed_state(cnt_dir, cnt_init, below=batch_id)
-        tails = spark.read.parquet(prev_tail).persist()
-        _assert_time_contiguous(tails, batch, batch_id)
-        work = (
-            tails.unionByName(batch.select("user_id", "ts", "event_id", "e"))
-            .persist()
-        )
-        try:
-            # only purchases can close a match — broadcasting the whole
-            # batch's ids wastes p's non-purchase fraction (code-review
-            # r12)
-            new_matches = _cep_kleene_matches(work).join(
-                F.broadcast(
-                    batch.filter(F.col("e") == "p").select(
-                        F.col("event_id").alias("p_event_id")
-                    )
-                ),
-                "p_event_id",
-                "semi",
-            )
-            merged = (
-                spark.read.parquet(prev_cnt)
-                .unionByName(_kleene_partials(new_matches))
-                .groupBy("user_id")
-                .agg(
-                    F.sum("n_matches").alias("n_matches"),
-                    F.min("first_match_ts").alias("first_match_ts"),
-                    F.max("longest_run").alias("longest_run"),
-                )
-            )
-            merged.write.mode("overwrite").parquet(
-                os.path.join(cnt_dir, f"state_b{batch_id}")
-            )
-            _kleene_tails(work).write.mode("overwrite").parquet(
-                os.path.join(tail_dir, f"state_b{batch_id}")
-            )
-        finally:
-            work.unpersist()
-            tails.unpersist()
+        new = cep_kleene_matches(work).join(closing, "p_event_id", "semi")
+        return {
+            "counts": prev["counts"]
+            .unionByName(_kleene_partials(new))
+            .groupBy("user_id")
+            .agg(
+                F.sum("n_matches").alias("n_matches"),
+                F.min("first_match_ts").alias("first_match_ts"),
+                F.max("longest_run").alias("longest_run"),
+            ),
+            "tails": _kleene_tails(work),
+        }
 
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp_ntz, event_id bigint, e string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_cep_kleene")
-
-    return (
-        spark.read.parquet(latest_committed_state(cnt_dir, cnt_init))
-        .select("user_id", "n_matches", "first_match_ts", "longest_run")
-        .orderBy("user_id")
-    )
+    init = {
+        "counts": _kleene_partials(cep_kleene_matches(feed.limit(0))),
+        "tails": feed.limit(0),
+    }
+    counts = versioned_stream_fold(
+        spark, "streaming_cep_kleene", feed, init, step
+    )["counts"]
+    return counts.select(
+        "user_id", "n_matches", "first_match_ts", "longest_run"
+    ).orderBy("user_id")
 
 
 def _kleene_partials(matches: DataFrame) -> DataFrame:
@@ -1723,58 +1323,28 @@ def streaming_misra_gries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is <= k summary rows total (not per key); per batch
     the work is one map-side summarize + a state-sized merge/prune.
-    Stateless micro-batch plan (durable state in versioned parquet).
     """
-    from ..operators.incremental import latest_committed_state
+    from ..io import load_table
     from ..operators.sketch import mg_candidates, mg_prune_df
-    from ..tmputil import session_tmpdir
     from .queries_ext import MG_K, _mg_exact_recount, _mg_tokens
 
-    base_dir = session_tmpdir("stream_mg_")
-    feed_dir = os.path.join(base_dir, "feed")
-    ckpt = os.path.join(base_dir, "ckpt")
-    init_path = os.path.join(base_dir, "state_init")
-
-    from ..io import load_table
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.repartition(4).write.parquet(feed_dir)
 
-    spark.createDataFrame([], "token string, mg_weight bigint").write.parquet(
-        init_path
-    )
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        prev = latest_committed_state(base_dir, init_path, below=batch_id)
+    def step(prev, batch):
         toks = batch.select(F.explode(F.split("text", " ")).alias("token"))
         merged = (
-            spark.read.parquet(prev)
+            prev["summary"]
             .unionByName(mg_candidates(toks, "token", MG_K))
             .groupBy("token")
             .agg(F.sum("mg_weight").alias("mg_weight"))
         )
-        mg_prune_df(merged, "token", MG_K).write.mode("overwrite").parquet(
-            os.path.join(base_dir, f"state_b{batch_id}")
-        )
+        return {"summary": mg_prune_df(merged, "token", MG_K)}
 
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_misra_gries")
-
-    summary = spark.read.parquet(latest_committed_state(base_dir, init_path))
+    init = spark.createDataFrame([], "token string, mg_weight bigint")
+    summary = versioned_stream_fold(
+        spark, "streaming_misra_gries", docs.repartition(4),
+        {"summary": init}, step,
+    )["summary"]
     return _mg_exact_recount(_mg_tokens(spark, sf_dir), summary)
 
 
@@ -1878,8 +1448,7 @@ def streaming_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    _capture_plan(q, "streaming_partition_evolution")
+    await_stream(q, "streaming_partition_evolution")
 
     from ..io import read_partition_evolved
     from ..operators.relational import decimal_sum, round_half_up

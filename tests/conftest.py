@@ -29,3 +29,40 @@ def fx_payload():
         "date": "2026-01-05",
         "rates": {"USD": 1.1664, "GBP": 0.8421, "JPY": 170.34},
     }
+
+
+def stream_fold_args(spark, name: str, sf_dir: str = SF_SMALL):
+    """(feed, init, step) exactly as the registry query ``name`` hands
+    them to ``incremental.versioned_stream_fold``: the query runs with
+    the fold replaced by a recorder, so no stream starts and the test
+    holds the production step itself."""
+    from etl_end_to_end_airflow_bigquery_spark.plans import queries_stream as qs
+
+    got = []
+
+    def record(_spark, _name, feed, init, step):
+        got.append((feed, init, step))
+        return init
+
+    real = qs.versioned_stream_fold
+    qs.versioned_stream_fold = record
+    try:
+        qs.STREAM_QUERIES[name](spark, sf_dir)
+    finally:
+        qs.versioned_stream_fold = real
+    (args,) = got
+    return args
+
+
+def fold_batches(base: str, name: str, init, step, batches) -> dict:
+    """Write ``init`` under ``base`` and fold ``batches`` (ids 0, 1, …)
+    through the stream's own per-batch body; returns the state dirs."""
+    from etl_end_to_end_airflow_bigquery_spark.operators.incremental import (
+        fold_stream_batch,
+        write_initial_states,
+    )
+
+    dirs = write_initial_states(base, init)
+    for i, batch in enumerate(batches):
+        fold_stream_batch(name, dirs, step, batch, i)
+    return dirs

@@ -44,41 +44,46 @@ def _mk_events(spark, rows):
 
 
 def _single_shot(spark, rows):
-    from etl_end_to_end_airflow_bigquery_spark.plans.queries_stream import (
-        _cep_match_partials,
+    from etl_end_to_end_airflow_bigquery_spark.plans.queries_olap import (
+        cep_match_partials,
     )
 
     return {
         (r.user_id, r.n_matches, r.first_match_ts)
-        for r in _cep_match_partials(_mk_events(spark, rows)).collect()
+        for r in cep_match_partials(_mk_events(spark, rows)).collect()
     }
 
 
-def _folded(spark, rows, cuts):
-    """Replay `rows` (chronologically sorted) through the boundary-tail
-    fold with batch edges at the given cut indices."""
-    from etl_end_to_end_airflow_bigquery_spark.plans.queries_stream import (
-        _cep_match_partials,
-        _cep_tails,
+def _fold_slices(spark, name, rows, cuts):
+    """Replay `rows` (chronologically sorted) through the query
+    ``name``'s own fold step — the per-batch body its stream runs — one
+    micro-batch per non-empty slice between the cut indices; returns
+    the final counts rows."""
+    import tempfile
+
+    from tests.conftest import fold_batches, stream_fold_args
+
+    from etl_end_to_end_airflow_bigquery_spark.operators.incremental import (
+        committed_states,
     )
 
+    _, init, step = stream_fold_args(spark, name)
     bounds = [0, *sorted(cuts), len(rows)]
-    tails = _mk_events(spark, []).limit(0)
-    counts: dict[int, tuple[int, dt.datetime]] = {}
-    for lo, hi in zip(bounds, bounds[1:]):
-        batch = rows[lo:hi]
-        if not batch:
-            continue
-        work = tails.unionByName(_mk_events(spark, batch))
-        for r in _cep_match_partials(work).collect():
-            n, first = counts.get(r.user_id, (0, None))
-            counts[r.user_id] = (
-                n + r.n_matches,
-                r.first_match_ts if first is None
-                else min(first, r.first_match_ts),
-            )
-        tails = _cep_tails(work)
-    return {(u, n, f) for u, (n, f) in counts.items()}
+    batches = [
+        _mk_events(spark, rows[lo:hi])
+        for lo, hi in zip(bounds, bounds[1:])
+        if hi > lo
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        dirs = fold_batches(d, name, init, step, batches)
+        return committed_states(spark, dirs)["counts"].collect()
+
+
+def _folded(spark, rows, cuts):
+    return {
+        (r.user_id, r.n_matches, r.first_match_ts)
+        for r in _fold_slices(spark, "streaming_cep_funnel", rows, cuts)
+    }
 
 
 @settings(
@@ -88,8 +93,9 @@ def _folded(spark, rows, cuts):
 )
 @given(data=st.data())
 def test_cep_fold_is_slicing_invariant(spark, data):
-    """Single-shot CEP == boundary-tail fold for ANY chronological
-    slicing, including cuts straight through a match window."""
+    """Single-shot CEP == streaming_cep_funnel's boundary-tail fold
+    step for ANY chronological slicing, including cuts straight through
+    a match window."""
     n = data.draw(st.integers(min_value=0, max_value=18))
     base = dt.datetime(2024, 1, 1)
     rows = []
@@ -175,21 +181,30 @@ def test_cep_fold_rejects_out_of_order_batches(spark):
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
     h = dt.timedelta(hours=1)
     tails = _mk_events(spark, [(1, t, 5, "v")])
-    _assert_time_contiguous(tails, _mk_events(spark, [(1, t + h, 2, "c")]), 1)
-    _assert_time_contiguous(tails, _mk_events(spark, [(1, t, 6, "c")]), 1)
+    _assert_time_contiguous(tails, _mk_events(spark, [(1, t + h, 2, "c")]))
+    _assert_time_contiguous(tails, _mk_events(spark, [(1, t, 6, "c")]))
     _assert_time_contiguous(
-        _mk_events(spark, []), _mk_events(spark, [(1, t - h, 2, "c")]), 0
+        _mk_events(spark, []), _mk_events(spark, [(1, t - h, 2, "c")])
     )  # empty tail state: any batch is fine
-    _assert_time_contiguous(tails, _mk_events(spark, []), 1)  # empty batch
+    _assert_time_contiguous(tails, _mk_events(spark, []))  # empty batch
     with pytest.raises(RuntimeError, match="out-of-order"):
         _assert_time_contiguous(
-            tails, _mk_events(spark, [(1, t - h, 2, "c")]), 1
+            tails, _mk_events(spark, [(1, t - h, 2, "c")])
         )
     with pytest.raises(RuntimeError, match="out-of-order"):
         # equal ts, smaller event_id — the tiebreak-order violation
         _assert_time_contiguous(
-            tails, _mk_events(spark, [(1, t, 4, "c")]), 1
+            tails, _mk_events(spark, [(1, t, 4, "c")])
         )
+
+
+def test_cep_fold_counts_a_match_across_the_batch_edge(spark):
+    """A v->c->p match split v | c | p completes only through the tail
+    carried across both edges: the fold counts it exactly once."""
+    t = dt.datetime(2024, 1, 1)
+    h = dt.timedelta(hours=1)
+    rows = [(1, t, 0, "v"), (1, t + h, 1, "c"), (1, t + 2 * h, 2, "p")]
+    assert _folded(spark, rows, [1, 2]) == _single_shot(spark, rows) == {(1, 1, t)}
 
 
 def test_cep_tails_keep_exactly_last_two_per_user(spark):

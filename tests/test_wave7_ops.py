@@ -228,55 +228,31 @@ def _mk_events(spark, rows):
 
 
 def _kleene_single_shot(spark, rows):
+    from etl_end_to_end_airflow_bigquery_spark.plans.queries_olap import (
+        cep_kleene_matches,
+    )
     from etl_end_to_end_airflow_bigquery_spark.plans.queries_stream import (
-        _cep_kleene_matches,
         _kleene_partials,
     )
 
     return {
         (r.user_id, r.n_matches, r.first_match_ts, r.longest_run)
         for r in _kleene_partials(
-            _cep_kleene_matches(_mk_events(spark, rows))
+            cep_kleene_matches(_mk_events(spark, rows))
         ).collect()
     }
 
 
 def _kleene_folded(spark, rows, cuts):
-    """Replay chronological `rows` through the cap+1-tail fold with
-    batch edges at the cut indices, counting only matches whose
-    purchase id is in the batch — the streaming twin's exact algebra."""
-    from pyspark.sql import functions as F
+    """Replay chronological `rows` through streaming_cep_kleene's own
+    fold step (cap+1 tails, matches counted only when their purchase is
+    in the batch), with batch edges at the cut indices."""
+    from tests.test_wave6_ops import _fold_slices
 
-    from etl_end_to_end_airflow_bigquery_spark.plans.queries_stream import (
-        _cep_kleene_matches,
-        _kleene_partials,
-        _kleene_tails,
-    )
-
-    bounds = [0, *sorted(cuts), len(rows)]
-    tails = _mk_events(spark, []).limit(0)
-    acc: dict = {}
-    for lo, hi in zip(bounds, bounds[1:]):
-        batch = rows[lo:hi]
-        if not batch:
-            continue
-        bdf = _mk_events(spark, batch)
-        work = tails.unionByName(bdf)
-        new = _cep_kleene_matches(work).join(
-            F.broadcast(bdf.select(F.col("event_id").alias("p_event_id"))),
-            "p_event_id",
-            "semi",
-        )
-        for r in _kleene_partials(new).collect():
-            n, first, run = acc.get(r.user_id, (0, None, 0))
-            acc[r.user_id] = (
-                n + r.n_matches,
-                r.first_match_ts if first is None
-                else min(first, r.first_match_ts),
-                max(run, r.longest_run),
-            )
-        tails = _kleene_tails(work)
-    return {(u, n, f, m) for u, (n, f, m) in acc.items()}
+    return {
+        (r.user_id, r.n_matches, r.first_match_ts, r.longest_run)
+        for r in _fold_slices(spark, "streaming_cep_kleene", rows, cuts)
+    }
 
 
 def _seq(spark, letters, gap_hours=1):
@@ -332,6 +308,16 @@ def test_kleene_tail_truncation_is_sound(spark):
     assert _kleene_single_shot(spark, rows) == set()
 
 
+def test_kleene_match_left_in_the_tail_is_counted_once(spark):
+    """A whole match can sit in the cap+1 tail when the next batch
+    arrives; the fold counts it only in the batch holding its
+    purchase, never again from the tail."""
+    rows = _seq(spark, "vcpee")
+    got = _kleene_folded(spark, rows, [3])
+    assert got == _kleene_single_shot(spark, rows)
+    assert [n for _, n, _, _ in got] == [1]
+
+
 @settings(
     max_examples=10,
     deadline=None,
@@ -339,8 +325,9 @@ def test_kleene_tail_truncation_is_sound(spark):
 )
 @given(data=st.data())
 def test_kleene_fold_is_slicing_invariant(spark, data):
-    """Single-shot Kleene CEP == cap+1-tail fold for ANY chronological
-    slicing, including cuts through the middle of a click run."""
+    """Single-shot Kleene CEP == streaming_cep_kleene's cap+1-tail fold
+    step for ANY chronological slicing, including cuts through the
+    middle of a click run."""
     n = data.draw(st.integers(min_value=0, max_value=18))
     base = dt.datetime(2024, 1, 1)
     rows = []
