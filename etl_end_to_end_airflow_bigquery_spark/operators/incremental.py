@@ -94,8 +94,8 @@ def signed_partial_state(
 
 
 def cdf_to_signed(cdf: DataFrame, weight: str = "__w") -> DataFrame:
-    """Adapt a merge change data feed (``writers.merge_upsert_cdf_df``
-    / ``read_table_changes``) to the signed-weight convention
+    """Adapt a merge change data feed (``merge_sql.lower_merge`` /
+    ``writers.read_table_changes``) to the signed-weight convention
     :func:`signed_partial_state` folds: post-images add (+1), pre-images
     and deletes retract (−1). An update is exactly its pre (−1) + post
     (+1) pair, so a group-key or value change moves mass between groups

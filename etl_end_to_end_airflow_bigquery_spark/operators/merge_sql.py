@@ -11,10 +11,14 @@ The reference expresses idempotent upserts as a BigQuery MERGE statement
 Spark's own ``MERGE INTO`` requires a DSv2 catalog with row-level
 operation support, which plain temp views / parquet paths don't have —
 so this module accepts the SAME statement text against the session's
-temp-view catalog and lowers it onto the repo's join-based merge plan
-(the one :func:`writers.merge_upsert_df` uses: one full-outer equi-join,
-sentinel-tracked row presence, per-column winners). Capability parity
-with the reference's spelling, executed Spark-first.
+temp-view catalog and lowers it with :func:`lower_merge`: one
+full-outer equi-join, sentinel-tracked row presence, per-column CASE
+ladders, and the change data feed derived from the same joined rows.
+That lowering is the only MERGE plan in the package:
+``writers.merge_upsert_df`` and the versioned writer's scoped merges
+are its "UPDATE SET every non-key source column / INSERT every source
+column" spec. Capability parity with the reference's spelling,
+executed Spark-first.
 
 Supported grammar (the reference's shape plus the BigQuery/Delta
 conditional multi-clause surface one step past it — VERDICT r10 item 4;
@@ -37,19 +41,23 @@ rather than silently mis-evaluated, and so are unqualified column
 references (ambiguity) and arbitrary right-hand expressions in SET /
 VALUES (identity copies only). Backtick-quoted table names are accepted
 (the reference quotes its BigQuery ids). Multiple source rows matching
-one target row raise SQL MERGE's cardinality-violation error by default
-(``validate_source_keys``, ADVICE r05) instead of silently duplicating
-target rows through the join.
+one target row raise SQL MERGE's cardinality-violation error (ADVICE
+r05) instead of silently duplicating target rows through the join.
 
 The BY SOURCE DELETE clause (full-sync form) drops target rows with no
-source match — when unconditional, lowered as a right-outer join so
-deleted rows never materialize.
+source match (those the condition holds for, when it has one); the
+feed records each as a ``delete``. Unconditional, its filter rejects
+every target-only row, so Catalyst narrows the merged rows' join to
+right outer and the deleted rows never materialize.
 """
 
 from __future__ import annotations
 
+import operator
 import re
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,6 +95,8 @@ _BY_SOURCE_RE = re.compile(
     re.I | re.X | re.S,
 )
 
+CDF_TYPE = "_change_type"
+
 _EQ_RE = re.compile(r"^\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*$")
 _COL_RE = re.compile(r"^\s*(?:(\w+)\.)?(\w+)\s*$")
 
@@ -118,29 +128,22 @@ class MatchedClause:
 
 @dataclass(frozen=True)
 class MergeSpec:
-    """Parsed MERGE statement: table names, key columns, the ordered
-    matched clauses, the optional conditional insert, and the optional
-    (conditional) BY SOURCE delete — the BigQuery/Delta multi-clause
-    surface. ``update_cols`` survives as a view of the first UPDATE
-    clause (the reference's single-clause shape)."""
+    """A MERGE's clauses: key columns, the ordered matched clauses, the
+    optional conditional insert, and the optional (conditional) BY
+    SOURCE delete — the BigQuery/Delta multi-clause surface. Parsed
+    statements also carry their table names and aliases (predicates
+    are alias-qualified text)."""
 
-    target: str
-    source: str
     keys: tuple[str, ...]
     matched_clauses: tuple[MatchedClause, ...] = ()
     insert_cols: tuple[str, ...] | None = None
     insert_condition: str | None = None
-    delete_unmatched_target: bool = False
-    delete_unmatched_condition: str | None = None
+    by_source_delete: bool = False
+    by_source_condition: str | None = None
+    target: str = ""
+    source: str = ""
     t_alias: str = "T"
     s_alias: str = "S"
-
-    @property
-    def update_cols(self) -> tuple[str, ...]:
-        for cl in self.matched_clauses:
-            if cl.action == "update":
-                return cl.set_cols
-        return ()
 
 
 def _unquote(name: str) -> str:
@@ -152,7 +155,7 @@ def _validate_pred(
 ) -> None:
     """Reject predicates outside the supported subset LOUDLY. Checks
     are lexical (column existence is checked later against the real
-    frames in :func:`merge_into`): every word must be a quoted string,
+    frames in :func:`lower_merge`): every word must be a quoted string,
     a number, a keyword, TRUE/FALSE, or an alias-qualified column of
     one of the two MERGE aliases. Unqualified columns are ambiguous by
     construction and rejected."""
@@ -264,22 +267,22 @@ def parse_merge(sql: str) -> MergeSpec:
     matched: list[MatchedClause] = []
     insert_cols: tuple[str, ...] | None = None
     insert_condition: str | None = None
-    delete_unmatched = False
-    delete_unmatched_cond: str | None = None
+    by_source = False
+    by_source_cond: str | None = None
     for part in parts:
         bs = _BY_SOURCE_RE.match(part)
         if bs:
-            if delete_unmatched:
+            if by_source:
                 raise ValueError("duplicate WHEN NOT MATCHED BY SOURCE clause")
-            delete_unmatched = True
-            delete_unmatched_cond = bs.group("pred")
-            if delete_unmatched_cond:
-                _validate_pred(delete_unmatched_cond, t_alias, s_alias)
-                if _pred_columns(delete_unmatched_cond, s_alias):
+            by_source = True
+            by_source_cond = bs.group("pred")
+            if by_source_cond:
+                _validate_pred(by_source_cond, t_alias, s_alias)
+                if _pred_columns(by_source_cond, s_alias):
                     raise ValueError(
                         "BY SOURCE predicates see only target rows; "
                         f"{s_alias}.<col> references are meaningless there: "
-                        f"{delete_unmatched_cond.strip()!r}"
+                        f"{by_source_cond.strip()!r}"
                     )
             continue
         nm = _NOT_MATCHED_RE.match(part)
@@ -325,7 +328,7 @@ def parse_merge(sql: str) -> MergeSpec:
             continue
         raise ValueError(f"unsupported MERGE clause: {part[:80]!r}")
 
-    if not matched and insert_cols is None and not delete_unmatched:
+    if not matched and insert_cols is None and not by_source:
         raise ValueError("MERGE statement has no WHEN clauses")
     # standard MERGE rule: only the LAST matched clause may be
     # unconditional (later clauses would be unreachable)
@@ -343,50 +346,26 @@ def parse_merge(sql: str) -> MergeSpec:
         matched_clauses=tuple(matched),
         insert_cols=insert_cols,
         insert_condition=insert_condition,
-        delete_unmatched_target=delete_unmatched,
-        delete_unmatched_condition=delete_unmatched_cond,
+        by_source_delete=by_source,
+        by_source_condition=by_source_cond,
         t_alias=t_alias,
         s_alias=s_alias,
     )
 
 
-def merge_into(
-    spark: SparkSession, sql: str, validate_source_keys: bool = True
-) -> DataFrame:
+def merge_into(spark: SparkSession, sql: str) -> DataFrame:
     """Execute a MERGE statement against the session's temp-view
     catalog and return the merged frame (also re-registered under the
     target view name, mirroring MERGE's in-place table semantics).
 
-    Lowering: ONE full-outer equi-join on the key columns (eqNullSafe —
-    NULL keys merge like values, as in writers.merge_upsert_df), row
-    presence tracked by sentinel columns on each side (never by key
-    nullability — ADVICE r04), then ordered-clause CASE ladders:
-
-    - key:                          COALESCE(source, target)
-    - matched row:                  the FIRST matched clause whose
-                                    predicate holds (NULL = doesn't
-                                    hold, SQL 3VL) applies — UPDATE
-                                    takes its SET columns from the
-                                    source, DELETE filters the row out,
-                                    no applying clause = row unchanged
-    - source-only row:              kept iff an INSERT clause exists
-                                    and its predicate holds;
-                                    INSERT-listed columns, else NULL
-    - target-only row:              kept unless a (conditional)
-                                    BY SOURCE DELETE applies
-
-    Clause count adds CASE branches and one filter — never joins or
-    extra passes. The plan is broadcast-friendly (Catalyst broadcasts a
-    small batch side) and AQE-skew-safe — identical physical shape to
-    the gated ``merge_upsert_orders`` path.
-
-    ``validate_source_keys=True`` (default) enforces SQL MERGE's
-    cardinality rule: a staging batch with duplicate key tuples would
-    otherwise silently duplicate target rows through the full-outer
-    join, where BigQuery raises "UPDATE/MERGE must match at most one
-    source row" (ADVICE r05). The guard is one bounded job — a grouped
-    count with LIMIT 1 — on the (small) batch side; pass ``False`` only
-    when the batch is dedup'd upstream and the extra job matters.
+    Parse, look the two views up, lower (:func:`lower_merge`, which
+    checks the statement's columns against both schemas), then enforce
+    SQL MERGE's cardinality rule before the result is registered: a
+    staging batch with duplicate key tuples would otherwise silently
+    duplicate target rows through the full-outer join, where BigQuery
+    raises "UPDATE/MERGE must match at most one source row" (ADVICE
+    r05). The guard is one bounded job — a grouped count with LIMIT 1 —
+    on the (small) batch side.
 
     Targets must be UNDOTTED temp-view names: the lowering reads and
     re-registers through the session temp-view catalog, and qualified
@@ -404,65 +383,106 @@ def merge_into(
             "and qualified names are illegal temp-view names — register "
             "the target as an undotted temp view and merge into that"
         )
-    target = spark.table(spec.target)
     source = spark.table(spec.source)
-    set_cols = {c for cl in spec.matched_clauses for c in cl.set_cols}
-    for k in (*spec.keys, *sorted(set_cols)):
-        if k not in target.columns or k not in source.columns:
-            raise ValueError(f"column {k!r} missing from target or source")
+    merged, _ = lower_merge(spark.table(spec.target), source, spec)
+    # Reserved-prefix alias, not .count(): a key column literally named
+    # "count" would make the bare filter ambiguous and die with an
+    # opaque AnalysisException (ADVICE r6).
+    dup = (
+        source.groupBy(*spec.keys)
+        .agg(F.count(F.lit(1)).alias("__merge_dup_n"))
+        .filter(F.col("__merge_dup_n") > 1)
+        .limit(1)
+        .collect()
+    )
+    if dup:
+        key_vals = {k: dup[0][k] for k in spec.keys}
+        raise ValueError(
+            "MERGE source has duplicate rows for key "
+            f"{key_vals} (SQL MERGE cardinality violation: each "
+            "target row must match at most one source row); "
+            "dropDuplicates the batch first"
+        )
+    merged.createOrReplaceTempView(spec.target)
+    return merged
+
+
+def _check_columns(target: DataFrame, source: DataFrame, spec: MergeSpec) -> None:
+    """Every column the spec names must exist where it is read from —
+    loud ValueErrors instead of opaque AnalysisExceptions later."""
     insert_cols = spec.insert_cols or ()
     unknown = [c for c in insert_cols if c not in target.columns]
     if unknown:
         raise ValueError(f"INSERT columns not in target schema: {unknown}")
     missing_src = [c for c in insert_cols if c not in source.columns]
     if missing_src:
-        # without this, S.<col> surfaces later as an opaque
-        # AnalysisException instead of the module's loud contract error
-        raise ValueError(
-            f"INSERT columns not in source frame: {missing_src}"
-        )
+        raise ValueError(f"INSERT columns not in source frame: {missing_src}")
+    set_cols = {c for cl in spec.matched_clauses for c in cl.set_cols}
+    for k in (*spec.keys, *sorted(set_cols)):
+        if k not in target.columns or k not in source.columns:
+            raise ValueError(f"column {k!r} missing from target or source")
     # predicate columns were validated lexically at parse time; check
-    # them against the real schemas here, same loud contract
-    t_al, s_al = spec.t_alias, spec.s_alias
-    for pred in [
-        *[cl.condition for cl in spec.matched_clauses if cl.condition],
-        spec.insert_condition,
-        spec.delete_unmatched_condition,
-    ]:
-        if not pred:
-            continue
-        for c in _pred_columns(pred, t_al):
-            if c not in target.columns:
-                raise ValueError(
-                    f"predicate column {t_al}.{c} not in target schema"
-                )
-        for c in _pred_columns(pred, s_al):
-            if c not in source.columns:
-                raise ValueError(
-                    f"predicate column {s_al}.{c} not in source schema"
-                )
-    if validate_source_keys:
-        # Reserved-prefix alias, not .count(): a key column literally
-        # named "count" would make the bare filter ambiguous and die
-        # with an opaque AnalysisException (ADVICE r6), consistent with
-        # the __merge_tgt_present naming below.
-        dup = (
-            source.groupBy(*spec.keys)
-            .agg(F.count(F.lit(1)).alias("__merge_dup_n"))
-            .filter(F.col("__merge_dup_n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            key_vals = {k: dup[0][k] for k in spec.keys}
-            raise ValueError(
-                "MERGE source has duplicate rows for key "
-                f"{key_vals} (SQL MERGE cardinality violation: each "
-                "target row must match at most one source row); "
-                "dropDuplicates the batch or pass "
-                "validate_source_keys=False"
-            )
+    # them against the real schemas here
+    preds = [cl.condition for cl in spec.matched_clauses]
+    preds += [spec.insert_condition, spec.by_source_condition]
+    sides = ((spec.t_alias, target, "target"), (spec.s_alias, source, "source"))
+    for pred in filter(None, preds):
+        for alias, frame, side in sides:
+            for c in _pred_columns(pred, alias):
+                if c not in frame.columns:
+                    raise ValueError(
+                        f"predicate column {alias}.{c} not in {side} schema"
+                    )
 
+
+def lower_merge(
+    target: DataFrame, source: DataFrame, spec: MergeSpec
+) -> tuple[DataFrame, Callable[[], DataFrame]]:
+    """MERGE ``source`` into ``target`` as a pure transform: returns
+    ``(merged, changes)``, where ``changes()`` builds the change feed.
+    The one lowering every MERGE runs through — :func:`merge_into`'s
+    SQL text, ``writers.merge_upsert_df`` and the versioned writer's
+    scoped merges (with or without a change feed).
+
+    ONE full-outer equi-join on the key columns (eqNullSafe — NULL keys
+    merge like values), row presence tracked by sentinel columns on
+    each side (never by key nullability — ADVICE r04), then
+    ordered-clause CASE ladders:
+
+    - key:                          COALESCE(source, target)
+    - matched row:                  the FIRST matched clause whose
+                                    predicate holds (NULL = doesn't
+                                    hold, SQL 3VL) applies — UPDATE
+                                    takes its SET columns from the
+                                    source, DELETE drops the row, no
+                                    applying clause = row unchanged
+    - source-only row:              kept iff an INSERT clause exists
+                                    and its predicate holds;
+                                    INSERT-listed columns, else NULL
+    - target-only row:              kept unless a (conditional)
+                                    BY SOURCE DELETE applies
+
+    Clause count adds CASE branches and one filter — never joins or
+    extra passes; with no clause that can drop a row (the writer's
+    upsert, the reference's statement) there is no filter. Column
+    order follows the target schema.
+
+    ``changes`` is the change data feed those same joined rows induce,
+    in Delta/BigQuery shape: the target's columns plus ``_change_type``
+    ∈ {``insert`` (each kept source-only row), ``update_preimage`` +
+    ``update_postimage`` (each matched row an UPDATE clause applies to,
+    even when no value changes — Delta's ``UPDATE SET *`` contract,
+    which keeps the feed self-inverse under ⊕), ``delete`` (each
+    target row the clauses drop)}. Folding it through
+    ``incremental.signed_partial_state`` maintains any downstream
+    aggregate without rescanning the table. ``changes`` is a function
+    because PySpark builds every Column and frame through the JVM: a
+    caller that never calls it pays neither the feed's planning nor its
+    run. Executing both frames runs the join twice (each one scan). The
+    feed is not stamped with a commit version and does not reserve
+    ``_change_type``: the writer that persists it does both.
+    """
+    _check_columns(target, source, spec)
     t_mark, s_mark = "__merge_tgt_present", "__merge_src_present"
     for reserved in (t_mark, s_mark):
         if reserved in target.columns or reserved in source.columns:
@@ -474,10 +494,11 @@ def merge_into(
     for k in spec.keys:
         c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
         cond = c if cond is None else (cond & c)
-    matched = F.col(f"t.{t_mark}").isNotNull() & F.col(f"s.{s_mark}").isNotNull()
     src_only = F.col(f"t.{t_mark}").isNull()
+    matched = ~src_only & F.col(f"s.{s_mark}").isNotNull()
+    t_al, s_al = spec.t_alias, spec.s_alias
 
-    def _pred_col(pred: str | None) -> Column:
+    def _pred_col(pred: str) -> Column:
         """Predicate text → boolean Column against the join aliases.
         SQL three-valued logic: a NULL predicate means the clause does
         NOT apply (standard MERGE), hence the coalesce to false.
@@ -488,8 +509,6 @@ def merge_into(
         literally 't' (or the aliases were swapped), rewrote target
         references into source references — silently evaluating the
         predicate against the wrong join side."""
-        if pred is None:
-            return F.lit(True)
         out: list[str] = []
         for tok in _PRED_TOKEN_RE.findall(pred):
             if tok.startswith("'"):
@@ -506,69 +525,87 @@ def merge_into(
         return F.coalesce(F.expr(rewritten).cast("boolean"), F.lit(False))
 
     # Ordered MATCHED clause precedence: clause i applies to a matched
-    # row iff its predicate holds and no earlier clause's did.
+    # row iff its predicate holds and no earlier clause's did. Each
+    # Column operation is a JVM call, so an absent predicate adds none.
     applies: list[Column] = []
-    prior = F.lit(False)
+    prior = None
     for cl in spec.matched_clauses:
-        p = matched & _pred_col(cl.condition)
-        applies.append(p & ~prior)
-        prior = prior | p
+        p = matched if cl.condition is None else matched & _pred_col(cl.condition)
+        applies.append(p if prior is None else p & ~prior)
+        prior = p if prior is None else prior | p
 
     # Row survival: matched rows die on an applying DELETE clause;
     # source-only rows live iff an INSERT clause exists and its
     # predicate holds; target-only rows die on a (conditional)
     # BY SOURCE DELETE.
-    delete_applies = F.lit(False)
-    for cl, ap in zip(spec.matched_clauses, applies):
-        if cl.action == "delete":
-            delete_applies = delete_applies | ap
-    keep_src_only = (
-        _pred_col(spec.insert_condition)
-        if spec.insert_cols is not None
-        else F.lit(False)
-    )
-    keep_tgt_only = (
-        ~_pred_col(spec.delete_unmatched_condition)
-        if spec.delete_unmatched_target
-        else F.lit(True)
-    )
-    keep = (
-        F.when(matched, ~delete_applies)
-        .when(src_only, keep_src_only)
-        .otherwise(keep_tgt_only)
-    )
+    drops = [ap for cl, ap in zip(spec.matched_clauses, applies)
+             if cl.action == "delete"]
+    if spec.insert_cols is None:
+        drops.append(src_only)
+    elif spec.insert_condition:
+        drops.append(src_only & ~_pred_col(spec.insert_condition))
+    if spec.by_source_delete:
+        tgt_only = F.col(f"s.{s_mark}").isNull()
+        if spec.by_source_condition:
+            tgt_only = tgt_only & _pred_col(spec.by_source_condition)
+        drops.append(tgt_only)
 
+    # A column takes the source value on the rows an INSERT or UPDATE
+    # clause writes it on, else keeps the target's. A source-only row's
+    # target side is all NULL, so a column no INSERT lists reads NULL
+    # there without a branch of its own.
     cols = []
     for name in target.columns:
+        s_col, t_col = F.col(f"s.{name}"), F.col(f"t.{name}")
         if name in spec.keys:
-            cols.append(
-                F.coalesce(F.col(f"s.{name}"), F.col(f"t.{name}")).alias(name)
-            )
+            cols.append(F.coalesce(s_col, t_col).alias(name))
             continue
-        ins = (
-            F.col(f"s.{name}")
-            if name in (spec.insert_cols or ())
-            else F.lit(None).cast(target.schema[name].dataType)
-        )
-        col = F.when(src_only, ins)
-        for cl, ap in zip(spec.matched_clauses, applies):
-            if cl.action == "update" and name in cl.set_cols:
-                col = col.when(ap, F.col(f"s.{name}"))
-        cols.append(col.otherwise(F.col(f"t.{name}")).alias(name))
+        writes = [src_only] if name in (spec.insert_cols or ()) else []
+        writes += [
+            ap for cl, ap in zip(spec.matched_clauses, applies)
+            if cl.action == "update" and name in cl.set_cols
+        ]
+        value = t_col
+        if writes:
+            value = F.when(reduce(operator.or_, writes), s_col).otherwise(t_col)
+        cols.append(value.alias(name))
 
-    # An unconditional WHEN NOT MATCHED BY SOURCE THEN DELETE drops
-    # exactly the target-only rows — i.e. every surviving row HAS a
-    # source row, so the lowering tightens full-outer to right-outer
-    # (source side preserved): the deleted rows never materialize,
-    # instead of being joined and then filtered. A CONDITIONAL by-source
-    # delete must keep the full outer join (surviving target-only rows
-    # pass through) and filter. Same exchanges either way.
-    how = (
-        "right_outer"
-        if spec.delete_unmatched_target
-        and spec.delete_unmatched_condition is None
-        else "full_outer"
-    )
-    merged = t.join(s, cond, how).filter(keep).select(*cols)
-    merged.createOrReplaceTempView(spec.target)
-    return merged
+    joined = t.join(s, cond, "full_outer")
+    merged = joined
+    if drops:
+        merged = joined.filter(~reduce(operator.or_, drops))
+    merged = merged.select(*cols)
+
+    def changes() -> DataFrame:
+        """The feed: 1–2 change rows per changed joined row, through one
+        in-row array + explode — never a second join or a union that
+        would re-derive the scan."""
+        post = F.struct(*cols)
+        pre = F.struct(*[F.col(f"t.{c}").alias(c) for c in target.columns])
+
+        def _tag(change_type: str, image: Column) -> Column:
+            return F.struct(
+                F.lit(change_type).alias(CDF_TYPE), image.alias("_row")
+            )
+
+        updated = reduce(operator.or_, [
+            ap for cl, ap in zip(spec.matched_clauses, applies)
+            if cl.action == "update"
+        ], F.lit(False))
+        dropped = reduce(operator.or_, drops, F.lit(False))
+        inserted = src_only & ~dropped
+        deleted = ~src_only & dropped
+        change_arr = (
+            F.when(updated, F.array(
+                _tag("update_preimage", pre), _tag("update_postimage", post)
+            ))
+            .when(inserted, F.array(_tag("insert", post)))
+            .otherwise(F.array(_tag("delete", pre)))
+        )
+        return (
+            joined.filter(updated | inserted | deleted)
+            .select(F.explode(change_arr).alias("c"))
+            .select("c._row.*", F.col(f"c.{CDF_TYPE}").alias(CDF_TYPE))
+        )
+
+    return merged, changes

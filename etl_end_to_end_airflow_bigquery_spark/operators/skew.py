@@ -1,17 +1,10 @@
-"""Skew-handling helpers for 100 TB joins (SURVEY.md §4 item 3).
+"""Skew handling for hot-key aggregates at 100 TB (SURVEY.md §4 item 3).
 
 First line of defense is AQE (``spark.sql.adaptive.skewJoin.enabled``,
-on in the session factory) which splits oversized partitions at runtime.
-``salted_join`` is the manual fallback for the pathological case AQE
-can't fix: a single hot key whose *build side* row group must be
-replicated — e.g. joining a click log against a dimension where 30% of
-rows share one key.
-
-Mechanics: the skewed (large) side gets a random salt in [0, buckets);
-the small side is exploded ``buckets``× so every salted key finds its
-match; the join key becomes (key, salt). Fan-out cost: small side
-× buckets — keep the small side genuinely small or pass an explicit
-``hot_keys`` list to salt only the hot subset.
+on in the session factory), which splits oversized join partitions at
+runtime. What AQE cannot split is the final stage of an aggregate whose
+grouping keys are few and hot; :func:`salted_count_sum` spreads that
+over salted reducers and stays bit-exact.
 """
 
 from __future__ import annotations
@@ -59,64 +52,3 @@ def salted_count_sum(
         (F.sum("__s").cast("double") / F.lit(p)).alias("sum_value"),
     )
 
-
-def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    buckets: int = 16,
-    how: str = "inner",
-    hot_keys: DataFrame | None = None,
-) -> DataFrame:
-    """Equi-join with salting to spread a skewed key across ``buckets``
-    reducers.
-
-    With ``hot_keys`` (a 1-column-per-key frame of the skewed values,
-    e.g. from a pre-pass ``large.groupBy(on).count().filter(...)``),
-    only hot rows are salted and the rest join normally — the replicate
-    cost then scales with |hot_keys|·buckets, not |small|·buckets.
-
-    Only ``inner`` and ``left`` joins are supported: with right/full
-    outer, each unmatched exploded small-side row would surface once per
-    salt bucket (``buckets``× duplicate null-extended rows), so those
-    modes are rejected rather than silently wrong.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how in ('inner', 'left'); got {how!r} — "
-            "outer modes would emit unmatched small-side rows once per salt bucket"
-        )
-    salt = (F.rand(seed=42) * buckets).cast("int")
-    if hot_keys is None:
-        salted_large = large.withColumn("__salt", salt)
-        exploded_small = small.withColumn(
-            "__salt", F.explode(F.array([F.lit(i) for i in range(buckets)]))
-        )
-        return salted_large.join(exploded_small, [*on, "__salt"], how).drop("__salt")
-
-    # Exchange-reuse barrier (same trick as dedup.py's minhash self-join):
-    # `marked` feeds both the hot and cold branches; without a common
-    # exchange under the two filters, each branch re-scans `large` and
-    # re-runs the broadcast mark join — and the per-row rand() salt would
-    # not even be stable across the two computations. Repartitioning on
-    # the join key makes the subtree below both filters identical, so the
-    # second branch becomes a ReusedExchange of the first.
-    marked = large.join(
-        F.broadcast(hot_keys.withColumn("__hot", F.lit(1))), on, "left"
-    ).repartition(*on)
-    hot = marked.filter(F.col("__hot").isNotNull()).drop("__hot")
-    cold = marked.filter(F.col("__hot").isNull()).drop("__hot")
-    small_hot = small.join(F.broadcast(hot_keys), on, "left_semi")
-    small_cold = small.join(F.broadcast(hot_keys), on, "left_anti")
-    joined_hot = (
-        hot.withColumn("__salt", salt)
-        .join(
-            small_hot.withColumn(
-                "__salt", F.explode(F.array([F.lit(i) for i in range(buckets)]))
-            ),
-            [*on, "__salt"],
-            how,
-        )
-        .drop("__salt")
-    )
-    return joined_hot.unionByName(cold.join(small_cold, on, how))

@@ -14,9 +14,8 @@ What Spark 4.1 gives us, and what this module pins down:
 - **Shredded write** is ON by default
   (``spark.sql.variant.writeShredding.enabled``): writing a variant
   column produces a parquet group ``(metadata, value, typed_value)``
-  where ``typed_value`` holds one typed subcolumn per inferred field —
-  verify with :func:`variant_shredding_schema`, which reads the actual
-  parquet footer.
+  where ``typed_value`` holds one typed subcolumn per inferred field
+  (``tests/test_variant_io.py`` reads the footer to check it).
 - **Pruned read**: the ``PushVariantIntoScan`` optimizer rule rewrites
   a scan under typed ``variant_get`` extractions into a struct of just
   the requested paths — ``.explain`` shows
@@ -63,41 +62,3 @@ def read_variant_table(spark: SparkSession, path: str) -> DataFrame:
     reader auto-detects via the file schema)."""
     return spark.read.parquet(path)
 
-
-def variant_shredding_schema(
-    spark: SparkSession, file_path: str, column: str
-) -> dict[str, str] | None:
-    """Introspect one parquet FILE's footer: the shredded field →
-    parquet primitive type map of ``column``'s ``typed_value`` group,
-    or None if the column was written binary-only (no shredding).
-
-    This reads the real footer through parquet-mr (the writer's own
-    library), so tests assert the on-disk layout, not Spark's opinion
-    of it. Bounded driver work: one footer, no data pages.
-    """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(file_path)
-    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        conf, hpath
-    )
-    schema = footer.getFileMetaData().getSchema()
-    try:
-        group = schema.getType(column)
-    except Exception:
-        return None
-    fields = {}
-    try:
-        typed = group.asGroupType().getType("typed_value")
-    except Exception:
-        return None
-    for f in typed.asGroupType().getFields():
-        fg = f.asGroupType()
-        try:
-            tv = fg.getType("typed_value")
-            fields[f.getName()] = str(
-                tv.asPrimitiveType().getPrimitiveTypeName()
-            )
-        except Exception:
-            fields[f.getName()] = "group"
-    return fields

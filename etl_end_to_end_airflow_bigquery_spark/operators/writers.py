@@ -8,8 +8,11 @@ engine-level writers (SURVEY.md §2.1, §2.3, §7 step 2):
 - **merge_upsert** — BigQuery ``MERGE target USING source ON <keys>
   WHEN MATCHED THEN UPDATE … WHEN NOT MATCHED THEN INSERT``
   (``dags/fx_pipeline_with_merge.py:90-103,173-189``; README.md:50-64).
-  Plain Parquet has no row-level ops, so MERGE = full-outer join with
-  source-wins coalesce + an atomic snapshot commit. At 100 TB you never
+  Plain Parquet has no row-level ops, so MERGE = the package's one
+  MERGE lowering (:func:`merge_sql.lower_merge`: a full-outer join and
+  its change feed from the same joined rows) under the "update every
+  source column, insert every source row" spec + an atomic snapshot
+  commit. At 100 TB you never
   rewrite the whole table: on a partitioned table (its spec is named
   by the first write's ``partition_col`` and recorded with the
   snapshot) only the partitions present in the source batch are read
@@ -96,8 +99,10 @@ from ..io import (
     SPARK_ROW_META,
     footer_schema,
     iter_data_files,
+    read_parquet,
     union_layouts,
 )
+from .merge_sql import CDF_TYPE, MatchedClause, MergeSpec, lower_merge
 
 _CURRENT_PTR = "_CURRENT"
 _LEDGER = "_COMMITS"
@@ -258,7 +263,7 @@ def read_table(
         vdir = os.path.join(path, avail[version])
     meta = _load_snapshot_meta(vdir)
     if meta is None:
-        return spark.read.parquet(vdir)
+        return read_parquet(spark, vdir)
     layouts = _snapshot_layouts(vdir, meta)
     if meta.get("layouts"):
         nonempty = _nonempty_layout_dirs(vdir, meta, layouts)
@@ -1259,197 +1264,43 @@ def _validate_keys(df: DataFrame, keys: list[str]) -> None:
         raise ValueError(f"key columns missing from frame: {missing}")
 
 
+def _upsert_spec(source: DataFrame, keys: list[str]) -> MergeSpec:
+    """The reference's MERGE (``dags/fx_pipeline_with_merge.py:96-101``)
+    as a spec: UPDATE SET every non-key source column, INSERT every
+    source column."""
+    return MergeSpec(
+        keys=tuple(keys),
+        matched_clauses=(
+            MatchedClause(
+                "update", tuple(c for c in source.columns if c not in keys)
+            ),
+        ),
+        insert_cols=tuple(source.columns),
+    )
+
+
 def merge_upsert_df(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    evolve_schema: bool = False,
+    target: DataFrame, source: DataFrame, keys: list[str]
 ) -> DataFrame:
     """MERGE semantics as a pure transform: source wins on key match.
 
     Equi-join on the composite key (J1); matched rows take every source
-    column (the reference's MERGE updates all non-key columns,
-    ``dags/fx_pipeline_with_merge.py:96-101``), unmatched target rows pass
-    through, unmatched source rows are inserted. Column order follows the
-    target schema. The join is a plain full-outer equi-join — Catalyst
-    broadcasts the source side when it is small (the reference's batches
-    are 1 row/currency), and AQE handles skew at scale.
+    column (the reference's MERGE updates all non-key columns), target
+    columns the batch lacks pass through, unmatched target rows pass
+    through, unmatched source rows are inserted. Column order follows
+    the target schema. This is :func:`merge_sql.lower_merge` over
+    :func:`_upsert_spec`: one full-outer equi-join — Catalyst
+    broadcasts the source side when it is small (the reference's
+    batches are 1 row/currency), and AQE handles skew at scale.
 
-    Columns present only in the SOURCE are rejected by default (a typo'd
-    batch column must not vanish silently); pass ``evolve_schema=True``
-    to widen the result instead — new columns append after the target
-    schema, NULL for rows the batch didn't touch (the lakehouse
-    add-column evolution path).
+    Columns present only in the SOURCE raise (a typo'd batch column
+    must not vanish silently): widen the target first.
     """
-    _validate_keys(target, keys)
-    _validate_keys(source, keys)
-    extra = [c for c in source.columns if c not in target.columns]
-    if extra and not evolve_schema:
-        raise ValueError(
-            f"source columns {extra} are not in the target schema; pass "
-            "evolve_schema=True to add them (NULL-backfilled), or drop "
-            "them from the batch"
-        )
-    t = target.alias("t")
-    # Source presence is marked with a sentinel column, NOT by probing
-    # key nullability (ADVICE r04): the join supports NULL key values
-    # via eqNullSafe, so a source row with NULL in the first key is
-    # still a real update/insert — `s.key IS NOT NULL` would silently
-    # drop its values. After the full outer join the sentinel is NULL
-    # exactly on target-only rows.
-    sentinel = "__merge_src_present"
-    if sentinel in target.columns or sentinel in source.columns:
-        raise ValueError(f"column name {sentinel!r} is reserved by merge")
-    s = source.withColumn(sentinel, F.lit(True)).alias("s")
-    cond = None
-    for k in keys:
-        c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-        cond = c if cond is None else (cond & c)
-    matched = F.col(f"s.{sentinel}").isNotNull()
-    cols = []
-    for name in target.columns:
-        if name in keys:
-            cols.append(F.coalesce(F.col(f"s.{name}"), F.col(f"t.{name}")).alias(name))
-        elif name in source.columns:
-            # source wins when the key matched, even if the new value is null
-            cols.append(
-                F.when(matched, F.col(f"s.{name}")).otherwise(F.col(f"t.{name}")).alias(name)
-            )
-        else:
-            cols.append(F.col(f"t.{name}").alias(name))
-    for name in extra:
-        cols.append(
-            F.when(matched, F.col(f"s.{name}"))
-            .otherwise(F.lit(None))
-            .alias(name)
-        )
-    return t.join(s, cond, "full_outer").select(*cols)
+    return lower_merge(target, source, _upsert_spec(source, keys))[0]
 
 
-CDF_TYPE = "_change_type"
 CDF_VERSION = "_commit_version"
 CDF_DIR = "_change_data"  # underscore prefix: invisible to table scans
-
-
-def merge_upsert_cdf_df(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    commit_version: int = 1,
-    delete_unmatched_target: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """MERGE as a pure transform that ALSO emits its change data feed —
-    the rows the merge *induces*, in Delta/BigQuery "change data feed"
-    shape (the engine-side feature behind the reference's MERGE,
-    ``dags/fx_pipeline_with_merge.py:90-103``).
-
-    Returns ``(merged, changes)``. ``merged`` is exactly
-    :func:`merge_upsert_df`'s output (source wins on key match,
-    unmatched source inserts; with ``delete_unmatched_target`` the
-    full-sync variant — unmatched target rows are deleted, the
-    ``WHEN NOT MATCHED BY SOURCE THEN DELETE`` semantics). ``changes``
-    carries the target schema plus ``_change_type`` ∈ {``insert``,
-    ``update_preimage``, ``update_postimage``, ``delete``} and
-    ``_commit_version`` — the exact signed delta between the old and
-    new table state, so folding it through
-    ``incremental.signed_partial_state`` maintains any downstream
-    aggregate without rescanning the table (the producer side of the
-    IVM story; VERDICT r10 item 2). Matched rows emit pre+post pairs
-    even when every value is unchanged — same contract as Delta's
-    ``UPDATE SET *``, and what makes the feed self-inverse under ⊕.
-
-    Plan shape: ONE full-outer equi-join (null-safe on composite keys,
-    broadcast-eligible small source, AQE skew-split at scale) feeding a
-    single generator — 0–2 change rows per joined row via an in-row
-    array + explode, never a second join or a union that would
-    re-derive the scan. The two returned frames share that lineage;
-    executing both runs the join twice (each one scan) — at 100 TB use
-    the partition-scoped writer path so both jobs read only the touched
-    partitions, or persist the base if the table is small.
-
-    CDF pins the target schema: source columns absent from the target
-    raise (schema evolution and change feeds don't mix mid-commit —
-    evolve first, then merge).
-    """
-    _validate_keys(target, keys)
-    _validate_keys(source, keys)
-    extra = [c for c in source.columns if c not in target.columns]
-    if extra:
-        raise ValueError(
-            f"source columns {extra} are not in the target schema; the "
-            "change-feed path does not evolve schemas mid-commit"
-        )
-    s_flag, t_flag = "__merge_src_present", "__merge_tgt_present"
-    reserved = {s_flag, t_flag, CDF_TYPE, CDF_VERSION}
-    clash = reserved & (set(target.columns) | set(source.columns))
-    if clash:
-        raise ValueError(f"column names {sorted(clash)} are reserved by merge CDF")
-    t = target.withColumn(t_flag, F.lit(True)).alias("t")
-    s = source.withColumn(s_flag, F.lit(True)).alias("s")
-    cond = None
-    for k in keys:
-        c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-        cond = c if cond is None else (cond & c)
-    joined = t.join(s, cond, "full_outer")
-    s_present = F.col(f"s.{s_flag}").isNotNull()
-    t_present = F.col(f"t.{t_flag}").isNotNull()
-    matched = s_present & t_present
-
-    post_cols = []
-    for name in target.columns:
-        if name in keys:
-            post_cols.append(
-                F.coalesce(F.col(f"s.{name}"), F.col(f"t.{name}")).alias(name)
-            )
-        elif name in source.columns:
-            post_cols.append(
-                F.when(s_present, F.col(f"s.{name}"))
-                .otherwise(F.col(f"t.{name}"))
-                .alias(name)
-            )
-        else:
-            post_cols.append(F.col(f"t.{name}").alias(name))
-    post = F.struct(*post_cols)
-    pre = F.struct(*[F.col(f"t.{c}").alias(c) for c in target.columns])
-
-    def _tag(ct: str, img):
-        return F.struct(F.lit(ct).alias(CDF_TYPE), img.alias("_row"))
-
-    # 'none' placeholder keeps the array element type resolvable for
-    # untouched target rows; filtered out right after the explode.
-    change_arr = (
-        F.when(
-            matched,
-            F.array(_tag("update_preimage", pre), _tag("update_postimage", post)),
-        )
-        .when(s_present, F.array(_tag("insert", post)))
-        .when(F.lit(delete_unmatched_target), F.array(_tag("delete", pre)))
-        .otherwise(F.array(_tag("none", pre)))
-    )
-    changes = (
-        joined.select(F.explode(change_arr).alias("c"))
-        .filter(F.col(f"c.{CDF_TYPE}") != "none")
-        .select(
-            "c._row.*",
-            F.col(f"c.{CDF_TYPE}").alias(CDF_TYPE),
-            F.lit(commit_version).cast("bigint").alias(CDF_VERSION),
-        )
-    )
-    merged = joined
-    if delete_unmatched_target:
-        merged = merged.filter(s_present)
-    merged = merged.select(*post_cols)
-    return merged, changes
-
-
-def insert_only_cdf(df: DataFrame, commit_version: int) -> DataFrame:
-    """Change feed for a table-creating (or blind-append) commit: every
-    row is an ``insert`` post-image."""
-    return df.select(
-        "*",
-        F.lit("insert").alias(CDF_TYPE),
-        F.lit(commit_version).cast("bigint").alias(CDF_VERSION),
-    )
 
 
 def read_table_changes(
@@ -1479,7 +1330,7 @@ def read_table_changes(
         return spark.read.parquet(*dirs)
     by_seq = {_seq_of(n): d for n, d in feeds.items()}
     if version in by_seq:
-        return spark.read.parquet(by_seq[version])
+        return read_parquet(spark, by_seq[version])
     for lo, hi, _p in nets:
         if lo <= version <= hi:
             raise ValueError(
@@ -1560,9 +1411,9 @@ def scd2_apply(
     cur = target.filter(F.col(flag_col))
     b = batch.dropDuplicates(keys).alias("b")
     # Current-row presence via sentinel, not key nullability (same
-    # ADVICE-r04 fix as merge_upsert_df): the join below is eqNullSafe,
-    # so a NULL key value is a real match — probing `c.key IS NULL`
-    # would misread a matched NULL-keyed row as brand-new.
+    # ADVICE-r04 fix as merge_sql.lower_merge): the join below is
+    # eqNullSafe, so a NULL key value is a real match — probing
+    # `c.key IS NULL` would misread a matched NULL-keyed row as new.
     sentinel = "__scd2_cur_present"
     if sentinel in target.columns or sentinel in batch.columns:
         raise ValueError(f"column name {sentinel!r} is reserved by scd2_apply")
@@ -1704,8 +1555,12 @@ def merge_upsert(
     :class:`ConcurrentWriteError` (lost-update protection).
 
     ``emit_cdf=True`` additionally records the commit's change data
-    feed (insert / update_preimage / update_postimage rows stamped with
-    the snapshot's sequence number) under ``v_*/_change_data`` — read
+    feed under ``v_*/_change_data``: the insert / update_preimage /
+    update_postimage rows the merge's own join induces
+    (:func:`merge_sql.lower_merge` derives them beside the merged rows,
+    so the flag changes what is written, not the plan), stamped with
+    the snapshot's sequence number; ``_change_type`` and
+    ``_commit_version`` are then reserved column names. Read
     it back with :func:`read_table_changes` and fold it through
     ``incremental.signed_partial_state`` to maintain downstream
     aggregates without rescanning the table. The feed is part of the
@@ -1957,10 +1812,12 @@ def _merge_layouts(
     first splits off the rows whose keys it holds and rewrites only the
     leaves they touch. Everything else is hardlinked through.
 
-    ``emit_cdf=True``: each layout's scoped merge emits its own slice
-    via :func:`merge_upsert_cdf_df` (an empty active layout's inserts
-    via :func:`insert_only_cdf`); slices union by NAME, since layout
-    reads put partition columns last, differently per spec.
+    Each layout's scoped merge is one :func:`merge_sql.lower_merge`
+    call, whatever ``emit_cdf`` says; with ``emit_cdf=True`` its feed
+    slice is kept (an empty active layout's slice: every row an
+    ``insert``). Slices union by NAME, since layout reads put partition
+    columns last, differently per spec, and the union is stamped with
+    the commit's sequence number as it is written.
     """
     _validate_keys(source, keys)
     for lay in layouts:
@@ -2039,13 +1896,17 @@ def _merge_layouts(
             )
         if upd_parts:
             if scoped is None:  # empty active layout: its first data
-                merged, cdf = upd, insert_only_cdf(upd, seq)
-            elif emit_cdf:
-                merged, cdf = merge_upsert_cdf_df(
-                    scoped, upd, keys, commit_version=seq
-                )
+                merged, changes = upd, None
             else:
-                merged = merge_upsert_df(scoped, upd, keys)
+                merged, changes = lower_merge(
+                    scoped, upd, _upsert_spec(upd, keys)
+                )
+            clash = emit_cdf and {CDF_TYPE, CDF_VERSION} & set(merged.columns)
+            if clash:
+                raise ValueError(
+                    f"column names {sorted(clash)} are reserved by the "
+                    "change data feed"
+                )
             w = merged.write.mode("overwrite")
             if cols:
                 w = w.partitionBy(*cols)
@@ -2054,7 +1915,10 @@ def _merge_layouts(
                 {c: merged.schema[c].dataType.jsonValue() for c in cols}
             )
             if emit_cdf:
-                cdf_parts.append(cdf)
+                cdf_parts.append(
+                    changes() if changes
+                    else upd.select("*", F.lit("insert").alias(CDF_TYPE))
+                )
         # carry untouched leaves of this layout through as hardlinks
         written = _leaf_dirs(dst) if os.path.isdir(dst) else set()
         if has_data:
@@ -2071,7 +1935,9 @@ def _merge_layouts(
         # layout's write replaces vdir) but before the pointer flip —
         # a crash orphans data and feed together, and the underscore
         # dir never shows up in snapshot table scans
-        feed.write.mode("overwrite").parquet(os.path.join(vdir, CDF_DIR))
+        feed.select(
+            "*", F.lit(seq).cast("bigint").alias(CDF_VERSION)
+        ).write.mode("overwrite").parquet(os.path.join(vdir, CDF_DIR))
     # the layout map is carried from the previous sidecar: a flat table
     # records none, so read_table keeps the recorded-schema read
     _commit_version(
@@ -2102,7 +1968,7 @@ def idempotent_append(
                 target_path
             )
             return
-        target = spark.read.parquet(target_path)
+        target = read_parquet(spark, target_path)
         fresh = batch.dropDuplicates(keys).join(target, on=keys, how="left_anti")
         fresh.select(*target.columns).write.mode("append").parquet(target_path)
 

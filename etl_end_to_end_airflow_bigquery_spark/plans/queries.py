@@ -510,8 +510,9 @@ def merge_sql_sync_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta/BigQuery users add to make the target mirror the source; the
     reference's own MERGE, ``dags/fx_pipeline_with_merge.py:90-103``,
     stops at upsert). Target rows with no staging match are deleted —
-    lowered as a right-outer join, so the deleted rows never
-    materialize in the join output. Result: exactly the even order keys
+    a filter over the one join every MERGE lowers to, which Catalyst
+    narrows to right outer, so the deleted rows never materialize.
+    Result: exactly the even order keys
     (matched updates + the %6==0 inserts); every odd target row is
     gone.
     """

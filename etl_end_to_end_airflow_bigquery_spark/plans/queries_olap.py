@@ -3934,9 +3934,8 @@ OLAP_QUERIES["funnel_time_to_convert"] = funnel_time_to_convert
 
 
 def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolution READ path (the other half of
-    ``merge_upsert_df(evolve_schema=True)``'s write story): two append
-    batches land in one table directory with DIFFERENT schemas — the
+    """Schema-evolution READ path: two append batches land in one
+    table directory with DIFFERENT schemas — the
     second adds ``o_orderstatus`` — and the scan reconciles them with
     ``mergeSchema``, NULL-backfilling the column for old files (the
     Delta/BigQuery add-column contract on plain parquet). The report

@@ -10,6 +10,7 @@ the sentinel-tracked full-outer merge plan."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,11 +21,14 @@ from etl_end_to_end_airflow_bigquery_spark.operators.incremental import (
     partial_avg_state,
     signed_partial_state,
 )
+from etl_end_to_end_airflow_bigquery_spark.operators.merge_sql import (
+    lower_merge,
+    parse_merge,
+)
 from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
     CDF_DIR,
+    _upsert_spec,
     merge_upsert,
-    merge_upsert_cdf_df,
-    merge_upsert_df,
     read_table,
     read_table_changes,
     table_versions,
@@ -39,6 +43,17 @@ def _sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _lower(target, source, spec):
+    """One lowering's merged rows and change feed."""
+    merged, changes = lower_merge(target, source, spec)
+    return merged, changes()
+
+
+def _upsert(target, source):
+    """The writer's merge: (merged, feed) of the all-columns spec."""
+    return _lower(target, source, _upsert_spec(source, ["k"]))
+
+
 @pytest.fixture()
 def target(spark):
     return _frame(spark, [(1, "d1", 1.0), (2, "d1", 2.0), (3, "d2", 3.0)])
@@ -49,18 +64,13 @@ def source(spark):
     return _frame(spark, [(2, "d1", 20.0), (4, "d2", 40.0)])
 
 
-def test_merged_output_identical_to_plain_merge(spark, target, source):
-    merged, _ = merge_upsert_cdf_df(target, source, keys=["k"])
-    assert _sorted(merged) == _sorted(merge_upsert_df(target, source, keys=["k"]))
-
-
 def test_change_rows_are_the_exact_delta(spark, target, source):
-    _, cdf = merge_upsert_cdf_df(target, source, keys=["k"], commit_version=7)
-    rows = {(r.k, r._change_type): (r.day, r.v, r._commit_version) for r in cdf.collect()}
+    _, cdf = _upsert(target, source)
+    rows = {(r.k, r._change_type): (r.day, r.v) for r in cdf.collect()}
     assert rows == {
-        (2, "update_preimage"): ("d1", 2.0, 7),
-        (2, "update_postimage"): ("d1", 20.0, 7),
-        (4, "insert"): ("d2", 40.0, 7),
+        (2, "update_preimage"): ("d1", 2.0),
+        (2, "update_postimage"): ("d1", 20.0),
+        (4, "insert"): ("d2", 40.0),
     }
 
 
@@ -68,44 +78,114 @@ def test_unchanged_value_update_still_emits_pre_post(spark, target):
     # Delta's UPDATE SET * contract: matched rows emit even when every
     # value is unchanged — this is what keeps the feed self-inverse.
     source = _frame(spark, [(2, "d1", 2.0)])
-    _, cdf = merge_upsert_cdf_df(target, source, keys=["k"])
+    _, cdf = _upsert(target, source)
     types = sorted(r._change_type for r in cdf.collect())
     assert types == ["update_postimage", "update_preimage"]
 
 
 def test_delete_unmatched_target_full_sync(spark, target, source):
-    merged, cdf = merge_upsert_cdf_df(
-        target, source, keys=["k"], delete_unmatched_target=True
+    spec = parse_merge(
+        "MERGE t T USING s S ON T.k = S.k "
+        "WHEN MATCHED THEN UPDATE SET T.day = S.day, T.v = S.v "
+        "WHEN NOT MATCHED THEN INSERT (k, day, v) VALUES (S.k, S.day, S.v) "
+        "WHEN NOT MATCHED BY SOURCE THEN DELETE"
     )
+    merged, cdf = _lower(target, source, spec)
     assert sorted(r.k for r in merged.collect()) == [2, 4]
     deletes = {r.k for r in cdf.filter(F.col("_change_type") == "delete").collect()}
     assert deletes == {1, 3}
 
 
+LADDER = """
+    MERGE t T USING s S ON T.k = S.k
+    WHEN MATCHED AND S.v < 0 THEN DELETE
+    WHEN MATCHED AND T.v > 5 THEN UPDATE SET T.v = S.v
+    WHEN NOT MATCHED AND S.v >= 10 THEN INSERT (k, v) VALUES (S.k, S.v)
+    WHEN NOT MATCHED BY SOURCE AND T.v < 3 THEN DELETE
+"""
+
+
+def _ladder_model(tgt: dict, src: dict):
+    """LADDER in plain Python, SQL 3VL included (a NULL comparison
+    means the clause does not apply): (merged rows, feed rows)."""
+    merged, feed = {}, []
+    for k, tv in tgt.items():
+        if k not in src:
+            if tv is not None and tv < 3:
+                feed.append(("delete", k, tv))
+            else:
+                merged[k] = tv
+            continue
+        sv = src[k]
+        if sv is not None and sv < 0:
+            feed.append(("delete", k, tv))
+        elif tv is not None and tv > 5:
+            merged[k] = sv
+            feed += [("update_preimage", k, tv), ("update_postimage", k, sv)]
+        else:
+            merged[k] = tv
+    for k, sv in src.items():
+        if k not in tgt and sv is not None and sv >= 10:
+            merged[k] = sv
+            feed.append(("insert", k, sv))
+    return merged, feed
+
+
+def test_clause_ladder_feed_matches_model_and_folds_to_merged(spark):
+    """Every clause kind on one statement: the lowering's feed is the
+    model's, row for row, and the old rows plus the signed feed are
+    exactly the merged rows."""
+    tgt = {1: 9.0, 2: 9.0, 3: 1.0, 4: None, 5: 2.0, 6: 4.0, 7: 8.0,
+           11: 7.0, 12: None, None: 6.0}
+    src = {1: -1.0, 2: 7.0, 3: 30.0, 4: 5.0, 8: 12.0, 9: 3.0, 10: None,
+           11: None, None: 60.0}
+
+    def frame(d):
+        return spark.createDataFrame(list(d.items()), "k int, v double")
+
+    def key(row):
+        return tuple((x is None, x) for x in row)
+
+    merged, cdf = _lower(frame(tgt), frame(src), parse_merge(LADDER))
+    want_merged, want_feed = _ladder_model(tgt, src)
+    got_feed = [(r._change_type, r.k, r.v) for r in cdf.collect()]
+    assert sorted(got_feed, key=key) == sorted(want_feed, key=key)
+    got_merged = {r.k: r.v for r in merged.collect()}
+    assert got_merged == want_merged
+    assert {t for t, _k, _v in got_feed} == {
+        "delete", "update_preimage", "update_postimage", "insert"
+    }
+
+    rows = Counter(tgt.items())
+    for change, k, v in got_feed:
+        rows[(k, v)] += 1 if change in ("insert", "update_postimage") else -1
+    assert {r: n for r, n in rows.items() if n} == Counter(got_merged.items())
+
+
 def test_source_subset_columns_post_image_keeps_target_values(spark, target):
     source = spark.createDataFrame([(2, 99.0), (5, 50.0)], "k int, v double")
-    merged, cdf = merge_upsert_cdf_df(target, source, keys=["k"])
+    merged, cdf = _upsert(target, source)
     post = {r.k: (r.day, r.v) for r in
             cdf.filter(F.col("_change_type") == "update_postimage").collect()}
     assert post == {2: ("d1", 99.0)}  # day passes through from target
     ins = {r.k: (r.day, r.v) for r in
            cdf.filter(F.col("_change_type") == "insert").collect()}
     assert ins == {5: (None, 50.0)}
-    assert _sorted(merged) == _sorted(
-        merge_upsert_df(target, source, keys=["k"])
-    )
+    assert _sorted(merged) == [
+        (1, "d1", 1.0), (2, "d1", 99.0), (3, "d2", 3.0), (5, None, 50.0)
+    ]
 
 
 def test_source_extra_columns_rejected(spark, target):
     source = spark.createDataFrame([(2, "x")], "k int, extra string")
-    with pytest.raises(ValueError, match="not in the target schema"):
-        merge_upsert_cdf_df(target, source, keys=["k"])
+    with pytest.raises(ValueError, match="not in target schema"):
+        _upsert(target, source)
 
 
 def test_null_key_rows_flow_the_update_path(spark):
     target = _frame(spark, [(None, "d1", 1.0), (2, "d1", 2.0)])
     source = _frame(spark, [(None, "d1", 10.0)])
-    merged, cdf = merge_upsert_cdf_df(target, source, keys=["k"])
+    merged, cdf = _upsert(target, source)
     # eqNullSafe: the NULL-keyed source row is an UPDATE, not an insert
     types = sorted(r._change_type for r in cdf.collect())
     assert types == ["update_postimage", "update_preimage"]
@@ -115,7 +195,7 @@ def test_null_key_rows_flow_the_update_path(spark):
 def test_fold_invariant_state_plus_feed_equals_new_state(spark, target, source):
     """The load-bearing identity: state(target) ⊕ signed(feed) ==
     state(merged) — per group, exactly."""
-    merged, cdf = merge_upsert_cdf_df(target, source, keys=["k"])
+    merged, cdf = _upsert(target, source)
     before = partial_avg_state(target, ["day"], "v")
     folded = merge_avg_state(
         before,
@@ -202,10 +282,12 @@ def test_squash_preserves_the_signed_fold(spark, target, source):
         cdf_compact_net_changes,
     )
 
-    m1, c1 = merge_upsert_cdf_df(target, source, keys=["k"], commit_version=1)
+    m1, c1 = _upsert(target, source)
     batch2 = _frame(spark, [(2, "d1", 200.0), (9, "d3", 9.0)])
-    m2, c2 = merge_upsert_cdf_df(m1, batch2, keys=["k"], commit_version=2)
-    full = c1.unionByName(c2)
+    _, c2 = _upsert(m1, batch2)
+    full = c1.withColumn("_commit_version", F.lit(1)).unionByName(
+        c2.withColumn("_commit_version", F.lit(2))
+    )
     net = cdf_compact_net_changes(full, ["k"])
 
     # expand the net rows back to signed pre/post rows and fold both

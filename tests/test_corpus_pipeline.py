@@ -1,66 +1,9 @@
-"""The capstone corpus build: curation → dedup → split → chunk → sharded
-write, end to end on the real testdata."""
+"""The curated corpus: the v3 cuts compose the individually gated
+signals, on the real testdata."""
 
 from __future__ import annotations
 
-import glob
-
-from pyspark.sql import functions as F
-
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def test_build_training_corpus_end_to_end(spark, tmp_path):
-    from etl_end_to_end_airflow_bigquery_spark.pipelines.corpus import (
-        build_training_corpus,
-    )
-
-    out = str(tmp_path / "corpus")
-    build_training_corpus(spark, SF_DIR, out, n_shards=4)
-    back = spark.read.parquet(out)
-
-    # physical layout: split=<name>/shard=<id> leaf dirs the trainer addresses
-    leaves = glob.glob(out + "/split=*/shard=*")
-    assert leaves, "partitioned layout missing"
-    assert all("/split=" in p and "/shard=" in p for p in leaves)
-    splits = {p.split("split=")[1].split("/")[0] for p in leaves}
-    assert splits <= {"train", "val", "test"} and "train" in splits
-
-    # every chunk row carries the full contract
-    assert {"doc_id", "split", "chunk_idx", "chunk_text",
-            "n_chunk_tokens", "quality", "shard"} <= set(back.columns)
-    # chunks reconstruct: every doc's chunk 0 starts the doc's text
-    n_docs = back.select("doc_id").distinct().count()
-    assert n_docs > 0
-    assert back.filter("chunk_idx = 0").count() == n_docs
-    # all docs passed curation: en + quality floor held after the rebuild
-    assert back.filter("quality < 0.5").count() == 0
-
-    # deterministic: a second build is byte-identical membership
-    out2 = str(tmp_path / "corpus2")
-    build_training_corpus(spark, SF_DIR, out2, n_shards=4)
-    back2 = spark.read.parquet(out2)
-    key = ["doc_id", "chunk_idx", "split", "shard"]
-    a = {tuple(r) for r in back.select(*key).collect()}
-    b = {tuple(r) for r in back2.select(*key).collect()}
-    assert a == b
-
-
-def test_corpus_split_proportions_and_no_dups(spark, tmp_path):
-    from etl_end_to_end_airflow_bigquery_spark.pipelines.corpus import (
-        build_training_corpus,
-    )
-
-    out = str(tmp_path / "c3")
-    build_training_corpus(spark, SF_DIR, out)
-    back = spark.read.parquet(out)
-    docs = back.select("doc_id", "split").distinct()
-    # a doc lives in exactly one split (no leakage)
-    assert docs.count() == docs.select("doc_id").distinct().count()
-    # dedup held: distinct texts only
-    texts = back.filter("chunk_idx = 0").select(F.md5("chunk_text"))
-    # (chunk 0 of near-identical docs can collide; exact-dup doc_ids can't)
-    assert back.select("doc_id").distinct().count() == texts.count()
 
 
 def test_curated_corpus_v3_cuts_compose(spark):

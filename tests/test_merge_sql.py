@@ -38,10 +38,9 @@ def test_parse_reference_statement():
     assert spec.matched_clauses == (
         MatchedClause("update", ("rate", "timestamp"), None),
     )
-    assert spec.update_cols == ("rate", "timestamp")  # compat view
     assert spec.insert_cols == ("date", "from_cur", "to_cur", "rate", "timestamp")
     assert spec.insert_condition is None
-    assert not spec.delete_unmatched_target
+    assert not spec.by_source_delete
 
 
 @pytest.mark.parametrize(
@@ -147,9 +146,6 @@ def test_merge_into_rejects_duplicate_source_keys(spark):
     )
     with pytest.raises(ValueError, match="cardinality violation"):
         merge_into(spark, stmt)
-    # opt-out: the documented raw-join behavior (one output row per
-    # matching source row), for batches dedup'd upstream
-    assert merge_into(spark, stmt, validate_source_keys=False).count() == 2
 
 
 def test_merge_into_key_column_named_count(spark):
@@ -194,8 +190,8 @@ def test_parse_delete_clause():
     spec = parse_merge(
         REFERENCE_SHAPE + " WHEN NOT MATCHED BY SOURCE THEN DELETE"
     )
-    assert spec.delete_unmatched_target is True
-    assert parse_merge(REFERENCE_SHAPE).delete_unmatched_target is False
+    assert spec.by_source_delete is True
+    assert parse_merge(REFERENCE_SHAPE).by_source_delete is False
 
 
 def test_merge_into_delete_unmatched_target(spark):

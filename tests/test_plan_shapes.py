@@ -53,6 +53,31 @@ def test_merge_upsert_no_cartesian(spark):
 
 
 @pytest.mark.parametrize(
+    "name, join",
+    [
+        ("merge_upsert_orders", "FullOuter"),
+        ("merge_sql_orders", "FullOuter"),
+        ("merge_sql_multi_clause", "FullOuter"),
+        # an unconditional BY SOURCE DELETE drops every target-only row,
+        # so Catalyst narrows the join under its filter to right outer
+        ("merge_sql_sync_orders", "RightOuter"),
+    ],
+)
+def test_merge_queries_share_one_null_safe_outer_join(spark, name, join):
+    """Every MERGE front lowers to the same plan: one outer join on
+    null-safe key equality. Where no clause can drop a row there is no
+    filter, so nothing filters the joined rows."""
+    df = QUERIES[name](spark, SF)
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    joins = [i for i, line in enumerate(lines) if "Join " in line]
+    assert len(joins) == 1
+    assert f"Join {join}," in lines[joins[0]] and "<=>" in lines[joins[0]]
+    if name in ("merge_upsert_orders", "merge_sql_orders"):
+        above = [line.lstrip(" :+-") for line in lines[: joins[0]]]
+        assert not any(line.startswith("Filter") for line in above)
+
+
+@pytest.mark.parametrize(
     "name", ["latest_event_per_key", "window_topk_per_customer"]
 )
 def test_window_queries_single_exchange(spark, name):

@@ -388,8 +388,9 @@ def test_cdf_is_the_exact_signed_delta(spark, target, source, delete):
         partial_avg_state,
         signed_partial_state,
     )
-    from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
-        merge_upsert_cdf_df,
+    from etl_end_to_end_airflow_bigquery_spark.operators.merge_sql import (
+        lower_merge,
+        parse_merge,
     )
     from pyspark.sql import functions as F
 
@@ -397,9 +398,14 @@ def test_cdf_is_the_exact_signed_delta(spark, target, source, delete):
     s = _df(spark, {k: v for k, v in source}.items())
     # group by value parity — updates can MOVE rows between groups
     grp = (F.col("v") >= 0).cast("int").alias("g")
-    merged, cdf = merge_upsert_cdf_df(
-        t, s, keys=["k"], delete_unmatched_target=delete
+    spec = parse_merge(
+        "MERGE t T USING s S ON T.k = S.k "
+        "WHEN MATCHED THEN UPDATE SET T.v = S.v "
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (S.k, S.v)"
+        + (" WHEN NOT MATCHED BY SOURCE THEN DELETE" if delete else "")
     )
+    merged, changes = lower_merge(t, s, spec)
+    cdf = changes()
     before = partial_avg_state(t.select(grp, "v"), ["g"], "v")
     folded = merge_avg_state(
         before,

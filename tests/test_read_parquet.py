@@ -22,6 +22,14 @@ from etl_end_to_end_airflow_bigquery_spark.io import (
     load_table,
     read_parquet,
 )
+from etl_end_to_end_airflow_bigquery_spark.operators import writers
+from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
+    _resolve_data_dir,
+    merge_upsert,
+    read_table,
+    read_table_changes,
+    table_versions,
+)
 from etl_end_to_end_airflow_bigquery_spark.sources.events import load_events
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -209,3 +217,52 @@ def test_legacy_nanos_events_infer_once_under_nanos_as_long(spark, tmp_path):
             spark.conf.set(conf, before)
     epoch = datetime.datetime(1970, 1, 1)
     assert got == [epoch + datetime.timedelta(microseconds=t // 1000) for t in ns]
+
+
+def test_writer_single_path_reads_start_no_job(spark, tmp_path):
+    """A snapshot without a sidecar and one commit's change feed are
+    single Spark-written paths: ``read_table`` and
+    ``read_table_changes`` plan them from the footer, so no call starts
+    a job, and a repeated call returns the same schema and rows."""
+    path = str(tmp_path / "t")
+    rows = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k int, v double")
+    for batch in (rows, rows.selectExpr("k + 1 AS k", "v * 2 AS v")):
+        merge_upsert(spark, path, batch, keys=["k"], emit_cdf=True)
+    version = table_versions(path)[-1]
+    os.remove(os.path.join(_resolve_data_dir(path), "_snapshot_meta.json"))
+    for read in (
+        lambda: read_table(spark, path),
+        lambda: read_table_changes(spark, path, version=version),
+    ):
+        first, n1 = _jobs(spark, read)
+        second, n2 = _jobs(spark, read)
+        assert (n1, n2) == (0, 0)
+        assert first.schema == second.schema
+        assert sorted(second.collect()) == sorted(first.collect())
+    assert sorted(tuple(r) for r in read_table(spark, path).collect()) == [
+        (1, 1.0), (2, 2.0), (3, 4.0)
+    ]
+
+
+def test_idempotent_append_reads_its_target_through_read_parquet(
+    spark, tmp_path, monkeypatch
+):
+    seen = []
+
+    def spy(spark_, path_):
+        seen.append(path_)
+        return read_parquet(spark_, path_)
+
+    monkeypatch.setattr(writers, "read_parquet", spy)
+    path = str(tmp_path / "t")
+    schema = "k int, s string"
+    writers.idempotent_append(
+        spark, path, spark.createDataFrame([(1, "a"), (2, "b")], schema), ["k"]
+    )
+    writers.idempotent_append(
+        spark, path, spark.createDataFrame([(2, "x"), (3, "c")], schema), ["k"]
+    )
+    assert seen == [path]
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == [
+        (1, "a"), (2, "b"), (3, "c")
+    ]

@@ -1,70 +1,10 @@
-"""Scale helpers: salted joins and the Spark 4 Python DataSource."""
+"""Scale helpers: the Spark 4 Python DataSource."""
 
 from __future__ import annotations
 
 import json
 
 from pyspark.sql import functions as F
-
-from etl_end_to_end_airflow_bigquery_spark.operators.skew import salted_join
-
-
-def _sorted(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_salted_join_matches_plain_join(spark):
-    large = spark.createDataFrame(
-        [(k, i) for i in range(50) for k in ("hot", f"k{i % 5}")], "k string, v int"
-    )
-    small = spark.createDataFrame(
-        [("hot", 1.0), ("k0", 2.0), ("k3", 3.0)], "k string, w double"
-    )
-    plain = _sorted(large.join(small, ["k"]).select("k", "v", "w"))
-    salted = _sorted(salted_join(large, small, on=["k"], buckets=4).select("k", "v", "w"))
-    assert salted == plain
-
-
-def test_salted_join_hot_keys_path(spark):
-    large = spark.createDataFrame(
-        [(k, i) for i in range(30) for k in ("hot", f"k{i % 3}")], "k string, v int"
-    )
-    small = spark.createDataFrame(
-        [("hot", 1.0), ("k0", 2.0), ("k1", 3.0)], "k string, w double"
-    )
-    hot = spark.createDataFrame([("hot",)], "k string")
-    plain = _sorted(large.join(small, ["k"]).select("k", "v", "w"))
-    salted = _sorted(
-        salted_join(large, small, on=["k"], buckets=4, hot_keys=hot).select("k", "v", "w")
-    )
-    assert salted == plain
-
-
-def test_salted_join_rejects_outer_modes(spark):
-    import pytest
-
-    large = spark.createDataFrame([("a", 1)], "k string, v int")
-    small = spark.createDataFrame([("a", 1.0)], "k string, w double")
-    for how in ("right", "full", "full_outer", "outer"):
-        with pytest.raises(ValueError, match="salted_join supports"):
-            salted_join(large, small, on=["k"], how=how)
-
-
-def test_salted_join_hot_path_scans_large_once(spark):
-    """The hot/cold split must not recompute the marked frame: the cold
-    branch has to be a ReusedExchange of the hot branch's exchange, so
-    the large side is scanned (and the rand salt drawn) exactly once."""
-    large = spark.createDataFrame(
-        [(k, i) for i in range(30) for k in ("hot", f"k{i % 3}")], "k string, v int"
-    )
-    small = spark.createDataFrame(
-        [("hot", 1.0), ("k0", 2.0), ("k1", 3.0)], "k string, w double"
-    )
-    hot = spark.createDataFrame([("hot",)], "k string")
-    df = salted_join(large, small, on=["k"], buckets=4, hot_keys=hot)
-    df.collect()  # AQE finalizes reuse at execution
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan
 
 
 def test_fx_rest_datasource_fixture_dir(spark, tmp_path):

@@ -105,15 +105,17 @@ def test_first_write_and_merge_read_recorded_schema(spark, tmp_path):
 
 
 def test_evolved_schema_merge_reads_recorded_schema(spark, tmp_path):
-    """A table widened by ``merge_upsert_df(evolve_schema=True)`` records
-    the widened schema, and later merges of narrower batches keep it."""
+    """A table widened by a merge into a widened frame records the
+    widened schema, and later merges of narrower batches keep it."""
     base = str(tmp_path / "base")
     merge_upsert(spark, base, _frame(spark, range(10)), keys=["k"])
     batch = _frame(spark, range(5, 15)).withColumn(
         "score", F.col("v") * F.lit(0.5)
     )
     widened = merge_upsert_df(
-        read_table(spark, base), batch, ["k"], evolve_schema=True
+        read_table(spark, base).withColumn("score", F.lit(None).cast("double")),
+        batch,
+        ["k"],
     )
     path = str(tmp_path / "t")
     merge_upsert(spark, path, widened, keys=["k"])

@@ -8,11 +8,11 @@ from __future__ import annotations
 import glob
 import os
 
+import duckdb
 from pyspark.sql import functions as F
 
 from etl_end_to_end_airflow_bigquery_spark.operators.variant_io import (
     read_variant_table,
-    variant_shredding_schema,
     write_variant_table,
 )
 
@@ -28,6 +28,34 @@ def _one_file(path: str) -> str:
     return glob.glob(os.path.join(path, "*.parquet"))[0]
 
 
+def _shredded_fields(file_path: str, column: str) -> dict[str, str] | None:
+    """The footer's field -> physical type map of ``column``'s
+    ``typed_value`` group, or None for a binary-only variant column.
+    DuckDB reads the footer: pyarrow 16 rejects its VARIANT logical
+    type."""
+    nodes = duckdb.sql(
+        f"SELECT name, type, num_children FROM parquet_schema('{file_path}')"
+    ).fetchall()
+
+    def walk(i):
+        """The subtree at pre-order index ``i`` as (name, type,
+        children), and the index after it."""
+        name, typ, n = nodes[i]
+        kids, i = [], i + 1
+        for _ in range(n or 0):
+            kid, i = walk(i)
+            kids.append(kid)
+        return (name, typ, kids), i
+
+    def child(node, name):
+        return next((k for k in node[2] if k[0] == name), None)
+
+    typed = child(child(walk(0)[0], column), "typed_value")
+    if typed is None:
+        return None
+    return {f[0]: child(f, "typed_value")[1] for f in typed[2]}
+
+
 def test_shredded_write_stores_typed_field_chunks(spark, tmp_path):
     """The parquet footer of a shredded write has a typed_value group
     with one typed subcolumn per inferred field; the binary-only write
@@ -41,9 +69,9 @@ def test_shredded_write_stores_typed_field_chunks(spark, tmp_path):
         spark.conf.get("spark.sql.variant.writeShredding.enabled") == before
     )
 
-    fields = variant_shredding_schema(spark, _one_file(shred), "v")
-    assert fields == {"a": "INT64", "b": "BINARY"}
-    assert variant_shredding_schema(spark, _one_file(plain), "v") is None
+    fields = _shredded_fields(_one_file(shred), "v")
+    assert fields == {"a": "INT64", "b": "BYTE_ARRAY"}
+    assert _shredded_fields(_one_file(plain), "v") is None
 
 
 def test_shredded_and_plain_layouts_read_identically(spark, tmp_path):

@@ -58,15 +58,15 @@ def test_merge_upsert_df_null_key_update_and_insert(spark):
 
 
 def test_merge_upsert_df_null_key_evolved_column_kept(spark):
-    """The schema-evolution path must NULL-backfill only rows the batch
-    did NOT touch — a NULL-keyed source row's new-column value sticks."""
-    target = _frame(spark, [(None, "d1", 1.0)])
+    """A widened target's new column is NULL until a batch sets it — a
+    NULL-keyed source row is a match, so its new-column value sticks."""
+    target = _frame(spark, [(None, "d1", 1.0)]).withColumn(
+        "note", F.lit(None).cast("string")
+    )
     source = spark.createDataFrame(
         [(None, "d1", 10.0, "fresh")], "k int, day string, v double, note string"
     )
-    rows = merge_upsert_df(
-        target, source, keys=["k", "day"], evolve_schema=True
-    ).collect()
+    rows = merge_upsert_df(target, source, keys=["k", "day"]).collect()
     assert [(r.k, r.day, r.v, r.note) for r in rows] == [(None, "d1", 10.0, "fresh")]
 
 
@@ -684,9 +684,9 @@ def test_delete_rows_versioned_and_complete(spark, tmp_path):
 
 
 def test_merge_schema_evolution(spark, tmp_path):
-    """New source columns: rejected loudly by default, NULL-backfilled
-    widening with evolve_schema=True, and the evolved table round-trips
-    through the versioned writer."""
+    """New source columns are rejected loudly; a target widened first
+    takes them, NULL-backfilled, and the path writer keeps the same
+    contract."""
     import pytest
     from etl_end_to_end_airflow_bigquery_spark.operators.writers import (
         merge_upsert,
@@ -703,11 +703,10 @@ def test_merge_schema_evolution(spark, tmp_path):
     with pytest.raises(ValueError, match="score"):
         merge_upsert_df(target, batch, ["k"])
 
+    widened = target.withColumn("score", F.lit(None).cast("double"))
     got = {
         r.k: (r.v, r.score)
-        for r in merge_upsert_df(
-            target, batch, ["k"], evolve_schema=True
-        ).collect()
+        for r in merge_upsert_df(widened, batch, ["k"]).collect()
     }
     assert got == {1: ("a", None), 2: ("B", 9.5), 3: ("c", 7.0)}
 

@@ -5,10 +5,13 @@ Wall-clock A/Bs on loop-shaped queries (connected components, BFS,
 pagerank, IVM maintenance) measure scheduler latency under whatever load
 the host carries; the number of Spark jobs a query launches is a
 deterministic property of the code. This tool runs each named query
-twice into the noop sink, each run under its own job group, and reports
-the jobs statusTracker recorded for each group once the listener bus has
-drained — the per-query job count — so loop-fold claims are
-reproducible rather than quoted. The cold run pays the process's
+twice into the noop sink and reports every job that started while the
+query ran — the per-query job count — so loop-fold claims are
+reproducible rather than quoted. The count is taken over the listener's
+job list, not a job group: a streaming query's micro-batches run on the
+stream thread under the stream's own group, and a count by the caller's
+group would miss all of them. So the tool runs one query at a time and
+starts nothing else meanwhile. The cold run pays the process's
 one-time costs (a table's first schema inference); the warm run is what
 every later call of the query costs.
 
@@ -36,7 +39,13 @@ def main() -> int:
 
     spark = get_spark("job_count")
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
+
+    def job_ids() -> set[int]:
+        # the listener bus is asynchronous: drain it so the last job is in
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc._jsc.sc().statusStore().jobsList(None)  # a Scala Seq
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
     # Warmup so JVM/codegen startup jobs don't land in the first query.
     QUERIES["top_orders_by_date"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
@@ -44,17 +53,12 @@ def main() -> int:
     print(" cold  warm  query")
     for name in names:
         counts = []
-        for run in ("cold", "warm"):
-            group = f"job_count:{name}:{run}"
-            sc.setJobGroup(group, name)
-            try:
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            counts.append(len(tracker.getJobIdsForGroup(group)))
+        for _run in ("cold", "warm"):
+            before = job_ids()
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            counts.append(len(job_ids() - before))
             sweep_tmpdirs()
         print(f"{counts[0]:5d} {counts[1]:5d}  {name}")
     return 0
